@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -85,10 +87,19 @@ object Bench {
     // queries' timings (r4: end-of-suite reruns WORSE than first runs).
     // Released here, OUTSIDE the timed window: a query pays for its own
     // checkpoints (they're inside its timing) but never for a previous
-    // query's leftovers.
-    def releaseCheckpoints(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    // query's leftovers. Unpersisting a locally checkpointed RDD warns
+    // that its lineage is gone — the point here — once per RDD, which
+    // buried real warnings at the end of Bench's log: the released
+    // RDDs' own loggers (named after their classes) are quieted for the
+    // release only.
+    def releaseCheckpoints(): Unit = {
+      val rdds = spark.sparkContext.getPersistentRDDs.values
+      val loggers = rdds.map(_.getClass.getName).toSet
+        .map((n: String) => n -> LogManager.getLogger(n).getLevel)
+      loggers.foreach { case (n, _) => Configurator.setLevel(n, Level.ERROR) }
+      try rdds.foreach(_.unpersist(blocking = false))
+      finally loggers.foreach { case (n, level) => Configurator.setLevel(n, level) }
+    }
 
     // warm-up: JVM/codegen/file-index, untimed
     try run("q01_scan_filter") catch { case _: Throwable => () }

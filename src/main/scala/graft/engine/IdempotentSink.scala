@@ -1,7 +1,16 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{col, count, lit, max, min, unix_micros}
+import org.apache.spark.sql.types._
 
 /** Insert-if-absent sink semantics on plain parquet directories.
   *
@@ -25,11 +34,30 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * index (`StreamingPower.dedupStepAgainstIndex`) and
   * `PartitionedSink.compact`'s swap.
   *
+  * COMMIT METADATA: each staged generation also carries a small `_meta`
+  * file — row count, every key column's min and max (timestamps as
+  * epoch-micros, long keys raw) and the schema the generation
+  * reads back with — staged BEFORE the commit rename, so the one
+  * rename commits data and meta together. The values come from an
+  * `Observation` on the staging write itself: no extra job. When
+  * every committed generation carries a readable meta:
+  *  - reads pass the shared schema to the scan instead of paying a
+  *    `mergeSchema` footer job;
+  *  - `Watermark.maxOrEpoch` over the table is a max over the metas;
+  *  - the anti-join of an append with a key bound (`above`) reads only
+  *    the generations whose key max exceeds that bound — none at all
+  *    in the watermark-driven medallion flow, where every layer's
+  *    bound is its own sink's max.
+  * A generation without a meta (legacy tables, a writer killed between
+  * `_SUCCESS` and the meta, a heal roll-forward) sends its table down
+  * the scan path unchanged: a missing meta costs speed, never rows. A
+  * meta is never guessed — it is written only from the observed values.
+  *
   * Scale notes:
-  *  - The anti-join's right side is only the sink's KEY COLUMNS
-  *    (column-pruned parquet scan); with a selective watermark filter on
-  *    the new batch, Catalyst/AQE picks a broadcast anti-join when the
-  *    batch is small — no full-sink shuffle.
+  *  - An append's cost follows its batch, not the sink: without a
+  *    bound, the anti-join's right side is the sink's KEY COLUMNS only
+  *    (column-pruned scan); with one, generations are pruned on the
+  *    `batch` partition column by their meta key ranges.
   *  - `dropDuplicates(keys)` guards intra-batch duplicates, mirroring
   *    the reference's advisory primary key (`bronze_ingest.py:7-11`).
   *  - The read-keys/append pair is still not transactional across
@@ -65,10 +93,14 @@ object IdempotentSink {
     require(missing.isEmpty,
       s"batch is missing key column(s) ${missing.mkString(",")} — " +
         "keys must be present in every append")
+    // nullability is not part of the type here: every generation reads
+    // back nullable, so a batch's non-null array element or struct field
+    // is the same column as the table's nullable one
     val byName = existing.fields.map(f => f.name -> f.dataType).toMap
     val conflicts = incoming.fields.flatMap { f =>
       byName.get(f.name).collect {
-        case t if t != f.dataType => s"${f.name}: table=$t batch=${f.dataType}"
+        case t if nullableType(t) != nullableType(f.dataType) =>
+          s"${f.name}: table=$t batch=${f.dataType}"
       }
     }
     require(conflicts.isEmpty,
@@ -80,40 +112,66 @@ object IdempotentSink {
   /** I/O form: atomically append only-new rows to a batch-partitioned
     * parquet table (see object doc). Read it back with [[read]].
     * Additive schema evolution per [[checkEvolution]].
+    *
+    * `above` is an exclusive lower bound on the incoming keys (single
+    * key column only): rows at or below it are dropped, and the
+    * anti-join reads only the committed generations whose meta key max
+    * exceeds it — none when every generation lies at or below it, in
+    * which case the anti-join is skipped. Callers pass the watermark
+    * their batch was already filtered past.
     */
   def appendIfAbsent(spark: SparkSession, batch: DataFrame, path: String,
-      keys: Seq[String]): Unit = {
+      keys: Seq[String], above: Option[Any] = None): Unit = {
     heal(spark, path)
-    val toWrite =
-      if (exists(spark, path)) {
-        val current = read(spark, path)
-        checkEvolution(current.schema, batch.schema, keys)
-        newRows(batch, current, keys)
-      } else batch.dropDuplicates(keys)
     val p = new Path(path)
     val fs = fsOf(spark, p)
+    require(above.isEmpty || keys.size == 1,
+      s"a key bound needs a single key column, got ${keys.mkString(",")}")
+    def bounded = above.fold(batch)(b => batch.filter(col(keys.head) > lit(b)))
+    val ms = metas(fs, p)
+    val toWrite =
+      if (exists(spark, path)) {
+        val current = scan(spark, path, ms)
+        checkEvolution(current.drop("batch").schema, batch.schema, keys)
+        overlapping(ms, keys, above) match {
+          case Some(Nil) => bounded.dropDuplicates(keys)
+          case Some(ids) =>
+            newRows(bounded, current.filter(col("batch").isin(ids: _*)), keys)
+          case None => newRows(bounded, current, keys)
+        }
+      } else bounded.dropDuplicates(keys)
     val next = nextBatchId(fs, p)
     val staging = new Path(p, s"._staging_batch=$next")
-    toWrite.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // an all-duplicates batch can stage zero part files — nothing to
-    // publish (committing a fileless dir would poison schema inference
-    // on a table whose only batch is empty)
-    if (fs.listStatus(staging).exists(_.getPath.getName.startsWith("part-")))
+    val observation = Observation()
+    observed(toWrite, keys, observation)
+      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    // nothing to publish when an all-duplicates batch staged zero part
+    // files (committing a fileless dir would poison schema inference on
+    // a table whose only batch is empty), or when the meta proves zero
+    // rows under the schema the table already reads with — a no-op
+    // rerun must not accrete an empty generation per call
+    val meta = observedMeta(toWrite.schema, keys, observation)
+    val adds = !meta.exists(m =>
+      m.rows == 0 && ms.map(_.map(_._2.schema).distinct) == Some(Seq(m.schema)))
+    if (adds && fs.listStatus(staging).exists(_.getPath.getName.startsWith("part-"))) {
+      meta.foreach(writeMeta(fs, staging, _))
       renameOrThrow(fs, staging, new Path(p, s"batch=$next"))
-    else fs.delete(staging, true)
+    } else fs.delete(staging, true)
   }
 
   /** The table's rows (batch bookkeeping column dropped), healed
-    * first. `mergeSchema` unions the generations' schemas so a table
-    * that evolved additively reads as ONE schema with NULL backfill on
-    * the generations that predate a column — the other half of the
-    * [[checkEvolution]] contract. (Cost: one footer read per file;
-    * [[compact]] keeps the file count bounded, and re-unifies the
-    * schema while it's at it.)
+    * first. An additively evolved table reads as ONE schema with NULL
+    * backfill on the generations that predate a column — the other half
+    * of the [[checkEvolution]] contract. When every generation's meta
+    * records the same schema it is passed to the scan; otherwise
+    * `mergeSchema` unions the generations' footers (one footer read per
+    * file; [[compact]] keeps the file count bounded and re-unifies the
+    * schema).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     heal(spark, path)
-    spark.read.option("mergeSchema", "true").parquet(path).drop("batch")
+    val p = new Path(path)
+    scan(spark, path, metas(fsOf(spark, p), p)).drop("batch")
   }
 
   /** TIME-TRAVEL read: the table as it stood after batch `maxBatchId`
@@ -130,16 +188,13 @@ object IdempotentSink {
     heal(spark, path)
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    val batches =
-      if (!fs.exists(p)) Seq.empty[Long]
-      else fs.listStatus(p).map(_.getPath.getName).toSeq
-        .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
+    val batches = batchIds(fs, p)
     require(batches.nonEmpty && maxBatchId >= batches.min,
       s"as-of $maxBatchId predates the oldest retained generation " +
         s"(${batches.sorted.mkString(",")}) at $path — that history was " +
         "folded away by compaction; the state cannot be reconstructed")
-    spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(org.apache.spark.sql.functions.col("batch") <= maxBatchId)
+    scan(spark, path, metas(fs, p))
+      .filter(col("batch") <= maxBatchId)
       .drop("batch")
   }
 
@@ -157,15 +212,16 @@ object IdempotentSink {
     * renames; [[heal]] — which every entry point runs first — rolls a
     * writer killed at any step forward (staging durable) or back (old
     * table intact in the backup). Single-writer-per-table, as for
-    * every mutation here.
+    * every mutation here. When every folded generation has a meta, the
+    * merged one gets the merged meta (see [[Meta.merge]]), staged before
+    * the swap.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     heal(spark, path)
     if (!exists(spark, path)) return
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    val batches = fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
+    val batches = batchIds(fs, p)
     if (batches.length <= 1) return
     val genId = batches.max
     val staging = new Path(path + "._compacting")
@@ -176,18 +232,22 @@ object IdempotentSink {
     // every row under the UNIFIED schema (explicit NULLs where a
     // generation predated a column), so post-compact reads no longer
     // pay the multi-footer merge
-    spark.read.option("mergeSchema", "true").parquet(path)
-      .withColumn("batch", org.apache.spark.sql.functions.lit(genId))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch")
+    val ms = metas(fs, p)
+    val merged = scan(spark, path, ms).withColumn("batch", lit(genId))
+    merged.write.mode(SaveMode.Overwrite).partitionBy("batch")
       .parquet(staging.toString)
+    ms.foreach(m => writeMeta(fs, new Path(staging, s"batch=$genId"),
+      Meta.merge(m.map(_._2), nullable(merged.drop("batch").schema))))
     renameOrThrow(fs, p, backup)
     renameOrThrow(fs, staging, p)
     fs.delete(backup, true)
   }
 
   /** Resolve a crashed writer: durable staging (has `_SUCCESS`) rolls
-    * FORWARD — its single commit rename is completed; partial staging
-    * rolls BACK (deleted). Either way readers see a complete table.
+    * FORWARD — its single commit rename is completed, after dropping a
+    * partial `._meta` temp (a generation committed without its `_meta`
+    * sends the table down the scan path); partial staging rolls BACK
+    * (deleted). Either way readers see a complete table.
     *
     * Also MIGRATES a legacy flat-append table (loose `part-*` files at
     * the root, from the pre-batch layout) into a `batch=<n>` dir:
@@ -222,9 +282,10 @@ object IdempotentSink {
     fs.listStatus(p).filter(_.getPath.getName.startsWith("._staging_batch="))
       .foreach { s =>
         val target = new Path(p, s.getPath.getName.stripPrefix("._staging_"))
-        if (fs.exists(new Path(s.getPath, "_SUCCESS")) && !fs.exists(target))
+        if (fs.exists(new Path(s.getPath, "_SUCCESS")) && !fs.exists(target)) {
+          fs.delete(new Path(s.getPath, MetaTemp), false)
           renameOrThrow(fs, s.getPath, target)
-        else fs.delete(s.getPath, true)
+        } else fs.delete(s.getPath, true)
       }
     val loose = fs.listStatus(p).filter(s => s.isFile &&
       (s.getPath.getName.startsWith("part-") || s.getPath.getName == "_SUCCESS"))
@@ -241,16 +302,195 @@ object IdempotentSink {
     */
   private[graft] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    val fs = fsOf(spark, p)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch="))
+    batchIds(fsOf(spark, p), p).nonEmpty
   }
 
-  private def nextBatchId(fs: FileSystem, p: Path): Long =
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).map(_.getPath.getName)
+  /** The largest committed value of key column `c`, from the metas
+    * alone: `Some(None)` for a table with no non-NULL key (or no
+    * generation), `None` when some generation has no readable meta or
+    * its meta does not record `c` — the caller then scans.
+    */
+  private[graft] def keyMax(spark: SparkSession, path: String, c: String): Option[Option[Any]] = {
+    heal(spark, path)
+    val p = new Path(path)
+    metas(fsOf(spark, p), p).flatMap { ms =>
+      val ranges = ms.map(_._2.ranges.get(c))
+      if (ranges.exists(_.isEmpty)) None
+      else {
+        val top = ranges.flatMap(_.get._2).maxOption
+        Some(top.map(fromOrdinal(ms.head._2.schema(c).dataType, _)))
+      }
+    }
+  }
+
+  /** One committed generation's `_meta`: its row count, the min and max
+    * of each key column whose type has an ordinal (see [[ordinal]]),
+    * NULL-only or empty giving `None`, and the schema it reads back with.
+    */
+  private[graft] case class Meta(rows: Long,
+      ranges: Map[String, (Option[Long], Option[Long])], schema: StructType) {
+    def json: String = {
+      val node = mapper.createObjectNode()
+      node.put("rows", rows)
+      val keys = node.putObject("keys")
+      ranges.foreach { case (k, (lo, hi)) =>
+        val r = keys.putObject(k)
+        lo match { case Some(v) => r.put("min", v); case None => r.putNull("min") }
+        hi match { case Some(v) => r.put("max", v); case None => r.putNull("max") }
+      }
+      node.replace("schema", mapper.readTree(schema.json))
+      mapper.writeValueAsString(node)
+    }
+  }
+
+  private[graft] object Meta {
+    def parse(text: String): Meta = {
+      val node = mapper.readTree(text)
+      def bound(n: com.fasterxml.jackson.databind.JsonNode) =
+        if (n == null || n.isNull) None else Some(n.asLong)
+      val keys = node.get("keys")
+      val ranges = keys.fieldNames.asScala.map { k =>
+        k -> (bound(keys.get(k).get("min")), bound(keys.get(k).get("max")))
+      }.toMap
+      Meta(node.get("rows").asLong,
+        ranges, DataType.fromJson(node.get("schema").toString).asInstanceOf[StructType])
+    }
+
+    /** The meta of a fold of `ms` written with `schema`: rows summed,
+      * min of mins and max of maxes over the key columns all of them
+      * record.
+      */
+    def merge(ms: Seq[Meta], schema: StructType): Meta = {
+      val shared = ms.map(_.ranges.keySet).reduce(_ intersect _)
+      Meta(ms.map(_.rows).sum, shared.map { k =>
+        val rs = ms.map(_.ranges(k))
+        k -> (rs.flatMap(_._1).minOption, rs.flatMap(_._2).maxOption)
+      }.toMap, schema)
+    }
+  }
+
+  private val mapper = new ObjectMapper()
+  private val MetaFile = "_meta"
+  private val MetaTemp = "._meta"
+
+  /** Every committed generation's meta, in id order; `None` as soon as
+    * one is missing or unreadable (that table takes the scan path).
+    */
+  private def metas(fs: FileSystem, p: Path): Option[Seq[(Long, Meta)]] = {
+    val out = batchIds(fs, p).sorted.map { id =>
+      id -> Try {
+        val in = fs.open(new Path(p, s"batch=$id/$MetaFile"))
+        try Meta.parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
+      }.toOption
+    }
+    if (out.exists(_._2.isEmpty)) None else Some(out.map { case (id, m) => id -> m.get })
+  }
+
+  /** The table with its `batch` column: the metas' schema when every
+    * generation records the same one, the merged footers otherwise.
+    */
+  private def scan(spark: SparkSession, path: String,
+      ms: Option[Seq[(Long, Meta)]]): DataFrame =
+    ms.map(_.map(_._2.schema).distinct) match {
+      case Some(Seq(schema)) =>
+        spark.read.schema(schema.add("batch", LongType)).parquet(path)
+      case _ => spark.read.option("mergeSchema", "true").parquet(path)
+    }
+
+  /** The generations an append bounded by `above` must anti-join
+    * against: those whose key max exceeds the bound. `None` when that
+    * cannot be told from the metas (no bound, a meta missing, a key
+    * type without an ordinal).
+    */
+  private def overlapping(ms: Option[Seq[(Long, Meta)]], keys: Seq[String],
+      above: Option[Any]): Option[Seq[Long]] =
+    for {
+      b <- above
+      gens <- ms
+      k = keys.head
+      if gens.nonEmpty && gens.forall(_._2.ranges.contains(k))
+      bound <- ordinalOf(gens.head._2.schema(k).dataType, b)
+    } yield gens.collect { case (id, m) if m.ranges(k)._2.exists(_ > bound) => id }
+
+  /** Key columns whose values map to a `Long` preserving order:
+    * timestamps as epoch-micros, longs as themselves.
+    */
+  private def ordinal(c: String, t: DataType): Option[Column] = t match {
+    case TimestampType => Some(unix_micros(col(c)))
+    case LongType => Some(col(c))
+    case _ => None
+  }
+
+  private def ordinalOf(t: DataType, v: Any): Option[Long] = (t, v) match {
+    case (TimestampType, ts: java.sql.Timestamp) => Some(DateTimeUtils.fromJavaTimestamp(ts))
+    case (LongType, n: java.lang.Long) => Some(n.longValue)
+    case _ => None
+  }
+
+  private def fromOrdinal(t: DataType, v: Long): Any =
+    if (t == TimestampType) DateTimeUtils.toJavaTimestamp(v) else v
+
+  /** `df` with its row count and key ranges observed by the write that
+    * consumes it — the write's own job computes them.
+    */
+  private def observed(df: DataFrame, keys: Seq[String], o: Observation): DataFrame = {
+    val ranges = keys.flatMap(k => ordinal(k, df.schema(k).dataType).toSeq
+      .flatMap(e => Seq(min(e).as(s"min_$k"), max(e).as(s"max_$k"))))
+    df.observe(o, count(lit(1)).as("rows"), ranges: _*)
+  }
+
+  /** The meta of a staged write, or `None` if its observation did not
+    * arrive — the generation then commits without one.
+    */
+  private def observedMeta(schema: StructType, keys: Seq[String],
+      o: Observation): Option[Meta] =
+    Try(Await.result(o.future, 10.seconds)).toOption
+      .filter(_.length > 0)
+      .map { (r: Row) =>
+        def opt(name: String) = {
+          val i = r.fieldIndex(name)
+          if (r.isNullAt(i)) None else Some(r.getLong(i))
+        }
+        val recorded = keys.filter(k => ordinal(k, schema(k).dataType).isDefined)
+        Meta(r.getAs[Long]("rows"),
+          recorded.map(k => k -> (opt(s"min_$k"), opt(s"max_$k"))).toMap,
+          nullable(schema))
+      }
+
+  /** Stage `meta` into generation dir `dir`: a temp file renamed into
+    * place, so a reader sees the whole meta or none. A failed write
+    * leaves no meta — the generation takes the scan path.
+    */
+  private def writeMeta(fs: FileSystem, dir: Path, meta: Meta): Unit = {
+    val tmp = new Path(dir, MetaTemp)
+    val ok = Try {
+      val out = fs.create(tmp, true)
+      try out.write(meta.json.getBytes(UTF_8)) finally out.close()
+      fs.rename(tmp, new Path(dir, MetaFile))
+    }.getOrElse(false)
+    if (!ok) fs.delete(tmp, false)
+  }
+
+  /** The schema a parquet generation reads back with: every field,
+    * element and map value nullable (what Spark's file sources report).
+    */
+  private def nullable(t: StructType): StructType =
+    StructType(t.fields.map(f => f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case ArrayType(e, _) => ArrayType(nullableType(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullableType(k), nullableType(v), valueContainsNull = true)
+    case other => other
+  }
+
+  private def batchIds(fs: FileSystem, p: Path): Seq[Long] =
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).map(_.getPath.getName).toSeq
       .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
-      .foldLeft(-1L)(math.max) + 1L
+
+  private def nextBatchId(fs: FileSystem, p: Path): Long =
+    batchIds(fs, p).foldLeft(-1L)(math.max) + 1L
 
   private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))

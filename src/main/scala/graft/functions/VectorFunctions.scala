@@ -30,8 +30,4 @@ object VectorFunctions {
     val n = norm(a) * norm(b)
     when(n > 0, d / n).otherwise(lit(0.0))
   }
-
-  /** Squared L2 distance (cheaper than L2 when only ranking matters). */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
 }

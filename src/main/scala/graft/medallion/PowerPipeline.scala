@@ -19,40 +19,41 @@ object PowerPipeline {
     val mlCsv = s"$base/export/ml_features"
   }
 
-  private def readOrEmpty(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (IdempotentSink.exists(spark, path)) IdempotentSink.read(spark, path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** One incremental run: ingest `batch` into bronze, propagate through
     * silver and gold. Safe to call repeatedly / with overlapping
     * batches.
+    *
+    * Each layer emits only rows past its own sink's watermark, so a
+    * layer whose upstream holds nothing past that watermark (proved by
+    * the upstream's commit metadata) is skipped exactly, and each
+    * append is bounded by the watermark its rows were filtered past:
+    * a no-op rerun runs only bronze's (empty) staging write and commits
+    * nothing.
     */
   def runIncrement(spark: SparkSession, batch: DataFrame, paths: Paths): Unit = {
     // bronze (S1-S3): cursor filter + PK dedup + append-if-absent
-    val bronzeSink = readOrEmpty(spark, paths.bronze, PowerSchemas.raw)
-    val cursor = Watermark.maxOrEpoch(bronzeSink, "minutes1_utc")
-    IdempotentSink.appendIfAbsent(spark,
-      Bronze.newRows(batch, cursor), paths.bronze, Seq("minutes1_utc"))
+    val cursor = Watermark.maxOrEpoch(spark, paths.bronze, "minutes1_utc")
+    IdempotentSink.appendIfAbsent(spark, Bronze.newRows(batch, cursor),
+      paths.bronze, Seq("minutes1_utc"), above = Some(cursor))
 
     // silver (S4-S7): watermark from fact sink, dim + fact upserts
-    val bronze = IdempotentSink.read(spark, paths.bronze)
-    val factSink = readOrEmpty(spark, paths.fact, PowerSchemas.fact)
-    val silverWm = Watermark.maxOrEpoch(factSink, "time_id")
-    IdempotentSink.appendIfAbsent(spark,
-      Silver.dimTime(bronze, silverWm), paths.dim, Seq("time_id"))
-    IdempotentSink.appendIfAbsent(spark,
-      Silver.fact(bronze, silverWm), paths.fact, Seq("time_id"))
+    val silverWm = Watermark.maxOrEpoch(spark, paths.fact, "time_id")
+    if (!Watermark.nothingPast(spark, paths.bronze, "minutes1_utc", silverWm)) {
+      val bronze = IdempotentSink.read(spark, paths.bronze)
+      IdempotentSink.appendIfAbsent(spark, Silver.dimTime(bronze, silverWm),
+        paths.dim, Seq("time_id"), above = Some(silverWm))
+      IdempotentSink.appendIfAbsent(spark, Silver.fact(bronze, silverWm),
+        paths.fact, Seq("time_id"), above = Some(silverWm))
+    }
 
     // gold (J1, W1-W18, lookback+trim): watermark from gold sink
-    val fact = IdempotentSink.read(spark, paths.fact)
-    val dim = IdempotentSink.read(spark, paths.dim)
-    val goldWm =
-      if (IdempotentSink.exists(spark, paths.gold))
-        Watermark.maxOrEpoch(IdempotentSink.read(spark, paths.gold), "time_id")
-      else Watermark.Epoch
-    IdempotentSink.appendIfAbsent(spark,
-      Gold.features(fact, dim, goldWm), paths.gold, Seq("time_id"))
+    val goldWm = Watermark.maxOrEpoch(spark, paths.gold, "time_id")
+    if (!Watermark.nothingPast(spark, paths.fact, "time_id", goldWm)) {
+      val fact = IdempotentSink.read(spark, paths.fact)
+      val dim = IdempotentSink.read(spark, paths.dim)
+      IdempotentSink.appendIfAbsent(spark, Gold.features(fact, dim, goldWm),
+        paths.gold, Seq("time_id"), above = Some(goldWm))
+    }
   }
 
   def exportCsv(spark: SparkSession, paths: Paths): Unit =

@@ -45,23 +45,6 @@ object Dedup {
     when(size(t) >= k, chained).otherwise(array(concat_ws(" ", t)))
   }
 
-  /** MinHash signature: the string shingles are hashed TWICE (two
-    * independent base hashes), then each of the `numPerm` permutations
-    * is `HashFamily.permute` over the bound base longs —
-    * Kirsch-Mitzenmacher double hashing, so string hashing cost is
-    * constant in `numPerm`. All codegen'd builtins, ANSI-safe (no raw
-    * long multiply; md5 permutes in a 2^50 ring).
-    */
-  def minhashSignature(text: Column, k: Int, numPerm: Int,
-      hashes: HashFamily = XxHash64Family): Column = {
-    val sh = shingles(text, k)
-    if (hashes.needsSecondHash)
-      minhashFromHashes(transform(sh, g => hashes.hash(g)),
-        transform(sh, g => hashes.hash2(g)), numPerm, hashes)
-    else
-      minhashFromHashes1(transform(sh, g => hashes.hash(g)), numPerm, hashes)
-  }
-
   /** Permutation minima over already-bound base-hash array columns
     * (double-hashing form). Callers should bind both base-hash arrays
     * through their own projection so the string hashing runs once, not

@@ -49,13 +49,4 @@ object SnapshotDiff {
       .filter(col("status") =!= "same")
       .select(keyCols.map(col) :+ col("status"): _*)
   }
-
-  /** One-row rollup of a diff: added/removed/changed counts. */
-  def diffSummary(prev: DataFrame, next: DataFrame, keyCols: Seq[String]): DataFrame =
-    diff(prev, next, keyCols)
-      .groupBy()
-      .agg(
-        sum(when(col("status") === "added", 1L).otherwise(0L)).as("n_added"),
-        sum(when(col("status") === "removed", 1L).otherwise(0L)).as("n_removed"),
-        sum(when(col("status") === "changed", 1L).otherwise(0L)).as("n_changed"))
 }

@@ -373,23 +373,30 @@ object TextIndex {
         merge = df => df.join(dead, Seq("doc"), "left_anti"),
         subPartitionCols = Seq("tok_bucket"), force = true)
       // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
-      // from the committed postings instead of summing stale rows
-      val committed = BatchStore.committedBatches(spark, postingsPath(path))
-      val statsDf = spark.read.parquet(postingsPath(path))
-        .filter(col("batch_id").isin(committed: _*))
-        .select(col("doc"), col("dl")).distinct()
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        .localCheckpoint()
-      BatchStore.compact(spark, statsPath(path), merge = _ => statsDf,
-        force = true)
+      // from the committed postings instead of summing stale rows — only
+      // from a COMMITTED fold: after a skipped or aborted one the old
+      // postings still hold the dead docs, and stats re-fit from them
+      // would publish counts that disagree with the live tombstones
+      if (folded) {
+        val committed = BatchStore.committedBatches(spark, postingsPath(path))
+        val statsDf = spark.read.parquet(postingsPath(path))
+          .filter(col("batch_id").isin(committed: _*))
+          .select(col("doc"), col("dl")).distinct()
+          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+          .localCheckpoint()
+        BatchStore.compact(spark, statsPath(path), merge = _ => statsDf,
+          force = true)
+      }
       // drain gate: a tombstone may only drop once its docs are gone.
       // The fold's COMMIT signal is the proof: a committed fold's
       // generation is exactly anti-join(previous committed postings,
       // dead), so the dead docs cannot be present — the verification
-      // rescan of the whole store is redundant. A skipped or
-      // race-aborted fold returns false and the tombstones stay live
-      // for the next compaction, exactly as before.
-      if (folded) {
+      // rescan of the whole store is redundant. A postings store with
+      // no committed generation holds no doc at all, so its tombstones
+      // drain too (the fold has nothing to fold there and returns
+      // false). A race-aborted fold returns false and the tombstones
+      // stay live for the next compaction, exactly as before.
+      if (folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty) {
         val dp = new Path(deadPath(path))
         val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         deadB.foreach(b => fs.delete(new Path(dp, s"batch=$b"), true))

@@ -21,13 +21,6 @@ object StreamingPower {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema).parquet(srcDir)
 
-  /** Late-duplicate drop within the watermark horizon — the streaming
-    * form of the PK guard (S3/S7).
-    */
-  def dedupWithinWatermark(events: DataFrame, tsCol: String, keyCol: String,
-      horizon: String): DataFrame =
-    events.withWatermark(tsCol, horizon).dropDuplicates(keyCol, tsCol)
-
   /** Streaming exact-dedup of a DOCUMENT stream by content fingerprint:
     * the LLM-ingest shape — as documents arrive, drop any whose text
     * hash was already seen (state bounded by the watermark horizon).
@@ -231,25 +224,6 @@ object StreamingPower {
     healLabels(spark, s"$storePath/labels")
     spark.read.parquet(s"$storePath/labels")
   }
-
-  /** The loop as a streaming query. `compactEvery = n` folds the
-    * corpus DOC store's generations whenever ≥ n commit (the label
-    * table is republished whole each step and never accretes).
-    */
-  def canonicalStream(docs: DataFrame, idCol: String, textCol: String,
-      storePath: String, checkpoint: String, threshold: Double = 0.5,
-      compactEvery: Int = 0, shingleK: Int = 3, numPerm: Int = 16,
-      bands: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        canonicalStep(batch, idCol, textCol, storePath, threshold, batchId,
-          shingleK, numPerm, bands)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, s"$storePath/docs").size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, s"$storePath/docs")
-      }
-      .start()
 
   /** Recover the label table around an interrupted [[canonicalStep]]
     * swap: labels missing + staged dir carrying an `_applied` marker
@@ -1242,21 +1216,6 @@ object StreamingPower {
   val momentMerge: DataFrame => DataFrame =
     _.groupBy("dim").agg(sum(col("n")).as("n"), sum(col("sum_q")).as("sum_q"),
       sum(col("sum_q2")).as("sum_q2"))
-
-  /** The loop as a streaming query over an embedding stream. */
-  def momentStream(embeddings: DataFrame, embCol: String, storePath: String,
-      checkpoint: String,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        momentStep(batch, embCol, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            momentMerge)
-      }
-      .start()
 
   /** Per-dimension mean/variance over everything the store has seen:
     * exact merged integer sums reconstructed to doubles ONCE with the

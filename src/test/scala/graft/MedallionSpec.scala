@@ -204,7 +204,23 @@ class MedallionSpec extends SparkSpecBase {
     PowerPipeline.runIncrement(spark, b1, PowerPipeline.Paths(dirInc))
     PowerPipeline.runIncrement(spark, b2, PowerPipeline.Paths(dirInc))
     // rerun with already-seen data: must change nothing
-    PowerPipeline.runIncrement(spark, b2, PowerPipeline.Paths(dirInc))
+    def batchDirs(): Map[String, Int] = Seq("bronze/power_system_raw", "silver/dim_time",
+      "silver/fact_power_system", "gold/power_system_5min_avg").map { t =>
+      t -> new java.io.File(s"$dirInc/$t").list().count(_.startsWith("batch="))
+    }.toMap
+    val dirsBefore = batchDirs()
+    val (_, rerunJobs) = JobCount(spark)(
+      PowerPipeline.runIncrement(spark, b2, PowerPipeline.Paths(dirInc)))
+    // silver and gold hold nothing past their watermarks' upstream: both
+    // layers are skipped, so they gain no generation and run no job;
+    // bronze stages zero rows and commits nothing either
+    assert(batchDirs() == dirsBefore, s"rerun committed generations: ${batchDirs()}")
+    // the bronze layer's jobs: its append's dedup shuffle stage and its
+    // staging write (the cursor, the anti-join and the watermarks are
+    // answered by the sinks' commit metadata)
+    val bronzeLayerJobs = 2
+    assert(rerunJobs <= bronzeLayerJobs,
+      s"rerun ran $rerunJobs jobs, more than the bronze layer's $bronzeLayerJobs")
 
     def goldOf(dir: String) = graft.engine.IdempotentSink
       .read(spark, s"$dir/gold/power_system_5min_avg")

@@ -244,4 +244,36 @@ class TextIndexSpec extends SparkSpecBase {
     assert(TextIndex.query(spark, path, probes, "query_id", "qtext",
       k = 10).collect().map(key).toSeq == inlineSurv.toSeq)
   }
+
+  /** An index whose postings generation lost its commit marker (a
+    * rewrite killed mid-way) while tombstones are pending: the postings
+    * store holds no committed generation, so the fold has nothing to
+    * fold and does not commit.
+    */
+  private def uncommittedPostingsWithTombstones(tag: String): String = {
+    val path = Files.createTempDirectory(s"graft_tidx_$tag").toString + "/idx"
+    TextIndex.appendBatch(corpus, "doc_id", "text", path, batchId = 0L)
+    TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
+      .select("doc_id"), "doc_id", path)
+    val marker = new Path(path + "/postings/batch_id=0/_SUCCESS")
+    assert(marker.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(marker, false))
+    path
+  }
+
+  test("tombstones drain when the postings store holds no committed generation") {
+    val path = uncommittedPostingsWithTombstones("drain")
+    assert(TextIndex.committedDeadBatches(spark, path).nonEmpty)
+    TextIndex.compact(spark, path)
+    assert(TextIndex.committedDeadBatches(spark, path).isEmpty,
+      "tombstones against an empty postings store never drain")
+  }
+
+  test("a fold that does not commit leaves the stats store as it was") {
+    val path = uncommittedPostingsWithTombstones("stats")
+    def stats() = graft.engine.BatchStore.read(spark, path + "/stats")
+      .collect().map(_.toString).toSeq.sorted
+    val before = stats()
+    TextIndex.compact(spark, path)
+    assert(stats() == before, "stats re-fit from postings the fold never committed")
+  }
 }
