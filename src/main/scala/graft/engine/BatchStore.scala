@@ -25,14 +25,14 @@ import org.apache.spark.sql.functions._
   * refinement of the store's read-side merge, which is what makes the
   * fold invisible to readers.
   *
-  * Crash discipline matches the siblings: the folded generation is
+  * Crash discipline is `StagedSwap`'s: the folded generation is
   * staged beside the store, its per-dir `_SUCCESS` marker — created
   * LAST — is the commit point, and the swap is two atomic renames.
-  * [[heal]], run by every step and reader, rolls a kill at any point
-  * forward (staging committed) or back (old store intact in the
-  * backup). Single-writer-per-store, like every mutation here: call
-  * [[compact]] from the store's own foreachBatch (see the streams'
-  * `compactEvery`), never beside a live writer.
+  * [[heal]], run by every step ([[commitStep]]) and reader, rolls a
+  * kill at any point forward (staging committed) or back (old store
+  * intact in the backup). Single-writer-per-store, like every mutation
+  * here: call [[compact]] from the store's own foreachBatch (see the
+  * streams' `compactEvery`), never beside a live writer.
   */
 object BatchStore {
   /** Committed generation ids: `batch_id=N` dirs carrying `_SUCCESS`. */
@@ -93,80 +93,59 @@ object BatchStore {
     // a single batch by definition
     if (batches.isEmpty || (batches.size <= 1 && !force)) return false
     val genId = batches.max
-    val staging = new Path(path + "._compacting")
-    val backup = new Path(path + "._old")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    val folded = merge(
-      spark.read.parquet(path)
-        .filter(col("batch_id").isin(batches: _*))
-        .drop("batch_id"))
-      .withColumn("batch_id", lit(genId))
-    // stores with a pruning sub-layout under each generation (e.g.
-    // TextIndex's tok_bucket) keep it through the fold, so partition
-    // pruning survives compaction — and are CLUSTERED by it before the
-    // partitioned write (the appendBatch discipline): a merge hook
-    // that shuffles (TextIndex's tombstone anti-join) otherwise leaves
-    // every reduce task holding rows of every sub-partition value, and
-    // the write fans out tasks x values small files per fold — the
-    // small-file problem compaction exists to fix, reintroduced by
-    // the fold itself.
-    val clustered =
-      if (subPartitionCols.isEmpty) folded
-      else folded.repartition(subPartitionCols.map(col): _*)
-    clustered.write.mode(SaveMode.Overwrite)
-      .partitionBy("batch_id" +: subPartitionCols: _*)
-      .parquet(staging.toString)
-    // the steps gate retries on the BATCH DIR's _SUCCESS (they write
-    // their dirs directly, so parquet puts the marker inside); the
-    // partitioned staging write only marks its root — add the per-dir
-    // marker, LAST, as the staging commit point
-    fs.create(new Path(staging, s"batch_id=$genId/_SUCCESS")).close()
-    // a CONCURRENT reader's heal may have deleted the live staging
-    // between the write and the marker create (fs.create silently
-    // recreates parent dirs): if parquet's root marker is gone, the
-    // staged rows are gone — swapping would publish an EMPTY committed
-    // generation and silently lose the store. Abort; a race landing
-    // after this check makes a rename throw, which heal rolls back.
-    if (!fs.exists(new Path(staging, "_SUCCESS"))) {
-      fs.delete(staging, true)
-      return false
+    StagedSwap.publish(fs, p) { staging =>
+      val folded = merge(
+        spark.read.parquet(path)
+          .filter(col("batch_id").isin(batches: _*))
+          .drop("batch_id"))
+        .withColumn("batch_id", lit(genId))
+      // stores with a pruning sub-layout under each generation (e.g.
+      // TextIndex's tok_bucket) keep it through the fold, so partition
+      // pruning survives compaction — and are CLUSTERED by it before the
+      // partitioned write (the appendBatch discipline): a merge hook
+      // that shuffles (TextIndex's tombstone anti-join) otherwise leaves
+      // every reduce task holding rows of every sub-partition value, and
+      // the write fans out tasks x values small files per fold — the
+      // small-file problem compaction exists to fix, reintroduced by
+      // the fold itself.
+      val clustered =
+        if (subPartitionCols.isEmpty) folded
+        else folded.repartition(subPartitionCols.map(col): _*)
+      clustered.write.mode(SaveMode.Overwrite)
+        .partitionBy("batch_id" +: subPartitionCols: _*)
+        .parquet(staging.toString)
+      // the steps gate retries on the BATCH DIR's _SUCCESS (they write
+      // their dirs directly, so parquet puts the marker inside); the
+      // partitioned staging write only marks its root — add the per-dir
+      // marker, LAST, as the staging commit point
+      fs.create(new Path(staging, s"batch_id=$genId/_SUCCESS")).close()
     }
-    renameOrThrow(fs, p, backup)
-    renameOrThrow(fs, staging, p)
-    fs.delete(backup, true)
-    true
   }
 
-  /** Recover around an interrupted [[compact]] swap: store missing
-    * with COMMITTED staging (per-dir `_SUCCESS` present — created
-    * last, so root markers alone never roll an unfinished fold
-    * forward) → finish the swap; store missing with the backup
-    * present → roll back; store present → drop leftovers. Each
-    * transition is one atomic rename.
+  /** Recover around an interrupted [[compact]] swap (`StagedSwap.heal`;
+    * the staging rolls forward only once its per-dir `_SUCCESS` exists).
     */
   def heal(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
-    val fs = fsOf(spark, p)
-    val staging = new Path(path + "._compacting")
-    val backup = new Path(path + "._old")
-    if (!fs.exists(p)) {
-      val stagingCommitted = fs.exists(staging) &&
-        fs.listStatus(staging).exists(s =>
-          s.getPath.getName.startsWith("batch_id=") &&
-            fs.exists(new Path(s.getPath, "_SUCCESS")))
-      if (stagingCommitted) renameOrThrow(fs, staging, p)
-      else if (fs.exists(backup)) renameOrThrow(fs, backup, p)
-    }
-    if (fs.exists(p)) {
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
+    StagedSwap.heal(fsOf(spark, p), p,
+      StagedSwap.generationSuccess("batch_id="))
   }
 
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"commit rename failed: $src -> $dst")
+  /** One `batch_id=N` generation of a micro-batch store — the prologue
+    * every `foreachBatch` step shares: heal, then skip a COMMITTED
+    * retry (the dir's `_SUCCESS`) before `rows` is even built, else
+    * write `rows` over the dir (a partial earlier attempt is
+    * overwritten). `rows` is by-name, so a committed retry computes
+    * nothing, and a step that reads its own store first does so inside
+    * it.
+    */
+  def commitStep(spark: SparkSession, path: String, batchId: Long)(
+      rows: => DataFrame): Unit = {
+    heal(spark, path)
+    val batchDir = new Path(path, s"batch_id=$batchId")
+    if (!fsOf(spark, batchDir).exists(new Path(batchDir, "_SUCCESS")))
+      rows.write.mode("overwrite").parquet(batchDir.toString)
+  }
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

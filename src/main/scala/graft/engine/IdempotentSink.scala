@@ -155,7 +155,7 @@ object IdempotentSink {
       m.rows == 0 && ms.map(_.map(_._2.schema).distinct) == Some(Seq(m.schema)))
     if (adds && fs.listStatus(staging).exists(_.getPath.getName.startsWith("part-"))) {
       meta.foreach(writeMeta(fs, staging, _))
-      renameOrThrow(fs, staging, new Path(p, s"batch=$next"))
+      StagedSwap.renameOrThrow(fs, staging, new Path(p, s"batch=$next"))
     } else fs.delete(staging, true)
   }
 
@@ -206,15 +206,17 @@ object IdempotentSink {
     *
     * The merged generation keeps the MAX folded id, not 0: the next
     * append's id is max+1, so folded ids are never reissued and
-    * [[readAsOf]] stays monotone. Publish is crash-safe: the merged
-    * table is staged as a complete sibling directory (parquet's root
-    * `_SUCCESS` marks it durable), then swapped in by two atomic
-    * renames; [[heal]] — which every entry point runs first — rolls a
-    * writer killed at any step forward (staging durable) or back (old
-    * table intact in the backup). Single-writer-per-table, as for
-    * every mutation here. When every folded generation has a meta, the
-    * merged one gets the merged meta (see [[Meta.merge]]), staged before
-    * the swap.
+    * [[readAsOf]] stays monotone. Publish is crash-safe
+    * (`StagedSwap.publish`): the merged table is staged as a complete
+    * sibling directory (parquet's root `_SUCCESS` marks it durable),
+    * then swapped in by two atomic renames; [[heal]] — which every
+    * entry point runs first — rolls a writer killed at any step forward
+    * (staging durable) or back (old table intact in the backup).
+    * Single-writer-per-table, as for every mutation here. When every
+    * folded generation has a meta, the merged one gets the merged meta
+    * (see [[Meta.merge]]), staged before the swap; a reader heal that
+    * deletes the staging before the meta lands aborts the fold (the
+    * meta's `fs.create` would otherwise recreate an empty staging).
     */
   def compact(spark: SparkSession, path: String): Unit = {
     heal(spark, path)
@@ -224,23 +226,18 @@ object IdempotentSink {
     val batches = batchIds(fs, p)
     if (batches.length <= 1) return
     val genId = batches.max
-    val staging = new Path(path + "._compacting")
-    val backup = new Path(path + "._old")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
     // merged read: compaction of an additively-evolved table rewrites
     // every row under the UNIFIED schema (explicit NULLs where a
     // generation predated a column), so post-compact reads no longer
     // pay the multi-footer merge
     val ms = metas(fs, p)
     val merged = scan(spark, path, ms).withColumn("batch", lit(genId))
-    merged.write.mode(SaveMode.Overwrite).partitionBy("batch")
-      .parquet(staging.toString)
-    ms.foreach(m => writeMeta(fs, new Path(staging, s"batch=$genId"),
-      Meta.merge(m.map(_._2), nullable(merged.drop("batch").schema))))
-    renameOrThrow(fs, p, backup)
-    renameOrThrow(fs, staging, p)
-    fs.delete(backup, true)
+    StagedSwap.publish(fs, p) { staging =>
+      merged.write.mode(SaveMode.Overwrite).partitionBy("batch")
+        .parquet(staging.toString)
+      ms.foreach(m => writeMeta(fs, new Path(staging, s"batch=$genId"),
+        Meta.merge(m.map(_._2), nullable(merged.drop("batch").schema))))
+    }
   }
 
   /** Resolve a crashed writer: durable staging (has `_SUCCESS`) rolls
@@ -263,28 +260,16 @@ object IdempotentSink {
     val p = new Path(path)
     val fs = fsOf(spark, p)
     // recover an interrupted [[compact]] swap first (the swap briefly
-    // removes the table dir itself): durable staging (root `_SUCCESS`)
-    // rolls FORWARD — checked before the backup, because a kill
-    // between the two swap renames leaves BOTH and the staging is the
-    // committed truth; otherwise the backup rolls BACK. With the
-    // table present, leftovers are abandoned attempts — dropped.
-    val staging = new Path(path + "._compacting")
-    val backup = new Path(path + "._old")
-    if (!fs.exists(p)) {
-      if (fs.exists(new Path(staging, "_SUCCESS"))) renameOrThrow(fs, staging, p)
-      else if (fs.exists(backup)) renameOrThrow(fs, backup, p)
-    }
-    if (fs.exists(p)) {
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
+    // removes the table dir itself); parquet's root `_SUCCESS` is the
+    // staged fold's commit marker
+    StagedSwap.heal(fs, p, StagedSwap.rootSuccess)
     if (!fs.exists(p)) return
     fs.listStatus(p).filter(_.getPath.getName.startsWith("._staging_batch="))
       .foreach { s =>
         val target = new Path(p, s.getPath.getName.stripPrefix("._staging_"))
         if (fs.exists(new Path(s.getPath, "_SUCCESS")) && !fs.exists(target)) {
           fs.delete(new Path(s.getPath, MetaTemp), false)
-          renameOrThrow(fs, s.getPath, target)
+          StagedSwap.renameOrThrow(fs, s.getPath, target)
         } else fs.delete(s.getPath, true)
       }
     val loose = fs.listStatus(p).filter(s => s.isFile &&
@@ -293,7 +278,7 @@ object IdempotentSink {
       val dst = new Path(p, s"batch=${nextBatchId(fs, p)}")
       fs.mkdirs(dst)
       loose.foreach(s =>
-        renameOrThrow(fs, s.getPath, new Path(dst, s.getPath.getName)))
+        StagedSwap.renameOrThrow(fs, s.getPath, new Path(dst, s.getPath.getName)))
     } else loose.foreach(s => fs.delete(s.getPath, false))
   }
 
@@ -491,10 +476,6 @@ object IdempotentSink {
 
   private def nextBatchId(fs: FileSystem, p: Path): Long =
     batchIds(fs, p).foldLeft(-1L)(math.max) + 1L
-
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"commit rename failed: $src -> $dst")
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -26,33 +26,15 @@ object PartitionedSink {
     spark.read.parquet(path)
   }
 
-  /** Self-heal a table around an interrupted `compact` swap, so the
-    * table is readable no matter where the writer died:
-    *  - staging complete (_SUCCESS) but table dir missing → finish the
-    *    swap (rename staging into place);
-    *  - table dir missing but the pre-swap backup present → roll back;
-    *  - table present → drop any leftover staging/backup (staging
-    *    without the table having moved means the compact never
-    *    committed; the backup with the table present means it did).
-    * Rename is the only mutation between complete states, and each
-    * rename is atomic on HDFS-like filesystems — readers resolve to
-    * either the old or the new COMPLETE table, never a partial one.
+  /** Self-heal a table around an interrupted `compact` swap
+    * (`StagedSwap.heal`; parquet's root `_SUCCESS` marks the staging
+    * complete), so the table is readable no matter where the writer
+    * died.
     */
   def heal(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(path + "._compacting")
-    val backup = new org.apache.hadoop.fs.Path(path + "._old")
-    val stagingCommitted = fs.exists(
-      new org.apache.hadoop.fs.Path(staging, "_SUCCESS"))
-    if (!fs.exists(p)) {
-      if (stagingCommitted) renameOrThrow(fs, staging, p) // crash between renames
-      else if (fs.exists(backup)) renameOrThrow(fs, backup, p) // crash pre-commit
-    }
-    if (fs.exists(p)) { // tidy whichever leftover lost the race
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
+    StagedSwap.heal(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, StagedSwap.rootSuccess)
   }
 
   /** Compact a parquet directory to ~`targetMB` files: the streaming /
@@ -61,9 +43,11 @@ object PartitionedSink {
     * re-partitions by the same columns, so partition pruning survives
     * compaction (spec-asserted).
     *
-    * Crash-safe publish: the rewrite lands in a staging dir (parquet's
-    * `_SUCCESS` marks it complete), then the swap is two atomic renames
-    * (table → backup, staging → table) and a backup delete. A writer
+    * Crash-safe publish (`StagedSwap.publish`): the rewrite lands in a
+    * staging dir (parquet's `_SUCCESS` marks it complete), then the
+    * swap is two atomic renames (table → backup, staging → table) and
+    * a backup delete; a staging healed away by a concurrent reader
+    * aborts the swap, leaving the table as it was. A writer
     * killed at ANY step leaves the table recoverable by `heal` — which
     * `readByDate` and `compact` both run first — so readers always see
     * a complete table (spec kills the swap mid-way and reads back the
@@ -99,8 +83,6 @@ object PartitionedSink {
     }
     val bytes = fs.getContentSummary(p).getLength
     val targetBytes = targetMB.toLong * 1024 * 1024
-    val tmp = new org.apache.hadoop.fs.Path(path + "._compacting")
-    val backup = new org.apache.hadoop.fs.Path(path + "._old")
     val df = spark.read.parquet(path)
     // partitioned tables: cluster rows by (partition key, salt) so each
     // output partition is written by few tasks (coalesce would spray
@@ -135,26 +117,12 @@ object PartitionedSink {
           .repartition(parts, (partitionCols.map(col) :+ col("_salt")): _*)
           .drop("_pkey", "_mod", "_salt")
       } else df.coalesce(math.max(1, (bytes / targetBytes).toInt))
-    val writer = sized.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp.toString)
-    // commit: two atomic renames; heal() recovers any crash in between.
-    // Each rename's boolean is checked — a silently-failed rename(tmp, p)
-    // followed by the backup delete would leave the table absent AND
-    // unrecoverable, masking the failure until the next read.
-    renameOrThrow(fs, p, backup)
-    renameOrThrow(fs, tmp, p)
-    fs.delete(backup, true)
+    StagedSwap.publish(fs, p) { staging =>
+      val writer = sized.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(staging.toString)
+    }
   }
-
-  /** HDFS `rename` reports failure via its return value, not an
-    * exception — surface it, so a failed swap step never cascades into
-    * deleting the only remaining copy.
-    */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"rename failed: $src -> $dst")
 
   /** (relative hive path like "p_date=2024-01-01", bytes) per leaf
     * partition directory.

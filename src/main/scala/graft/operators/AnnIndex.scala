@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.StagedSwap
 import graft.functions.VectorFunctions._
 
 /** PERSISTED IVF+PQ index — the build/publish/query separation a
@@ -124,13 +125,14 @@ object AnnIndex {
     // exists() is still true over an emptied enc — a retry would
     // APPEND to the old codebooks and silently drop the pre-crash
     // corpus from every future query.
-    Seq(coarsePath(path), subPath(path), metaPath(path),
-      encPath(path) + "._compacting", encPath(path) + "._old", encPath(path),
+    val enc = new Path(encPath(path))
+    Seq(new Path(coarsePath(path)), new Path(subPath(path)), new Path(metaPath(path)),
+      StagedSwap.staging(enc), StagedSwap.backup(enc), enc,
       // a rebuild starts a fresh corpus generation — tombstones refer
       // to the PREVIOUS generation's membership and must not suppress
       // re-indexed ids
-      deadPath(path))
-      .foreach(d => fs.delete(new Path(d), true))
+      new Path(deadPath(path)))
+      .foreach(fs.delete(_, true))
     // The three artifact publishes (coarse codebook, sub codebook,
     // train_meta) are independent single-row/tiny writes to disjoint
     // dirs — overlap them. Crash discipline is unchanged by the
@@ -377,13 +379,14 @@ object AnnIndex {
     * compaction rewrites committed rows only, into the same
     * (batch=0, list_id) layout, so partition pruning survives.
     *
-    * Crash-safe publish, same recipe as `PartitionedSink.compact`: the
-    * merged generation is staged beside `enc/`, marked committed by a
-    * batch-level `_SUCCESS` (the READER gate — parquet's root marker
-    * alone doesn't make batch dirs readable), then swapped in by two
-    * atomic renames. A writer killed at ANY step is recovered by
-    * [[healEnc]], which every entry point runs first: staging committed
-    * → roll forward; otherwise → roll back to the intact old `enc/`.
+    * Crash-safe publish (`StagedSwap.publish`): the merged generation
+    * is staged beside `enc/`, marked committed by a batch-level
+    * `_SUCCESS` (the READER gate — parquet's root marker alone doesn't
+    * make batch dirs readable), then swapped in by two atomic renames.
+    * A writer killed at ANY step is recovered by [[healEnc]], which
+    * every entry point runs first: staging committed → roll forward;
+    * otherwise → roll back to the intact old `enc/`. A fold aborted by
+    * a concurrent reader's heal drains no tombstone.
     */
   def compact(spark: SparkSession,
       path: String): Unit = graft.engine.BuildTiming.timed {
@@ -405,44 +408,29 @@ object AnnIndex {
     // keeps the retry a no-op — folding to 0 would re-append the
     // retried rows beside their compacted copies and double ADC sums
     val genId = batches.max
-    val staging = new Path(encPath(path) + "._compacting")
-    val backup = new Path(encPath(path) + "._old")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    val kept = spark.read.parquet(encPath(path))
-      .filter(col("batch").isin(batches: _*))
-      .withColumn("batch", lit(genId))
-    // apply tombstones physically: the folded generation simply
-    // doesn't contain dead rows
-    val folded =
-      if (deadBatches.isEmpty) kept
-      else kept.join(
-        deadIds(spark, path, deadBatches)
-          .withColumnRenamed("vec_id", "neighbor_id").localCheckpoint(),
-        Seq("neighbor_id"), "left_anti")
-    // cluster by list_id before the partitioned write (the BatchStore
-    // fold discipline): the tombstone anti-join shuffles, after which
-    // every task holds rows of every list — an unclustered write fans
-    // out tasks x nlists small files per fold
-    folded.repartition(col("list_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("batch", "list_id")
-      .parquet(staging.toString)
-    // reader gate: batch-level _SUCCESS (parquet only marks the root)
-    fs.create(new Path(staging, s"batch=$genId/_SUCCESS")).close()
-    // guard against a CONCURRENT reader's healEnc having deleted the
-    // live staging between the write and the marker create (fs.create
-    // silently recreates the parent dirs): if parquet's root marker is
-    // gone, the staged data is gone — publishing would swap in an
-    // EMPTY generation and silently lose the store. Abort instead;
-    // a race landing after this check makes a rename throw, which
-    // healEnc rolls back — never an empty publish.
-    if (!fs.exists(new Path(staging, "_SUCCESS"))) {
-      fs.delete(staging, true)
-      return
+    val committed = StagedSwap.publish(fs, enc) { staging =>
+      val kept = spark.read.parquet(encPath(path))
+        .filter(col("batch").isin(batches: _*))
+        .withColumn("batch", lit(genId))
+      // apply tombstones physically: the folded generation simply
+      // doesn't contain dead rows
+      val folded =
+        if (deadBatches.isEmpty) kept
+        else kept.join(
+          deadIds(spark, path, deadBatches)
+            .withColumnRenamed("vec_id", "neighbor_id").localCheckpoint(),
+          Seq("neighbor_id"), "left_anti")
+      // cluster by list_id before the partitioned write (the BatchStore
+      // fold discipline): the tombstone anti-join shuffles, after which
+      // every task holds rows of every list — an unclustered write fans
+      // out tasks x nlists small files per fold
+      folded.repartition(col("list_id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("batch", "list_id")
+        .parquet(staging.toString)
+      // reader gate: batch-level _SUCCESS (parquet only marks the root)
+      fs.create(new Path(staging, s"batch=$genId/_SUCCESS")).close()
     }
-    renameOrThrow(fs, enc, backup)
-    renameOrThrow(fs, staging, enc)
-    fs.delete(backup, true)
+    if (!committed) return
     // drain ONLY the snapshotted tombstone dirs — their rows are gone
     // from the folded generation. A crash before this point leaves
     // them live, which is harmless (the anti-join masks rows that no
@@ -452,31 +440,14 @@ object AnnIndex {
       fs.delete(new Path(deadPath(path), s"batch=$b"), true))
   }
 
-  /** Recover `enc/` around an interrupted [[compact]] swap: staging
-    * complete (its merged batch dir carries the reader-gate
-    * `_SUCCESS`) but `enc/` missing → finish the swap; `enc/` missing
-    * with the pre-swap backup present → roll back; `enc/` present →
-    * drop leftovers. Each state transition is one atomic rename, so
-    * readers resolve to the old or new COMPLETE generation set, never
-    * a partial one.
+  /** Recover `enc/` around an interrupted [[compact]] swap
+    * (`StagedSwap.heal`): the staging rolls forward only once its
+    * merged batch dir carries the reader-gate `_SUCCESS`.
     */
   private[graft] def healEnc(spark: SparkSession, path: String): Unit = {
     val enc = new Path(encPath(path))
-    val fs = fsOf(spark, enc)
-    val staging = new Path(encPath(path) + "._compacting")
-    val backup = new Path(encPath(path) + "._old")
-    if (!fs.exists(enc)) {
-      val stagingCommitted = fs.exists(staging) &&
-        fs.listStatus(staging).exists(s =>
-          s.getPath.getName.startsWith("batch=") &&
-            fs.exists(new Path(s.getPath, "_SUCCESS")))
-      if (stagingCommitted) renameOrThrow(fs, staging, enc)
-      else if (fs.exists(backup)) renameOrThrow(fs, backup, enc)
-    }
-    if (fs.exists(enc)) {
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
+    StagedSwap.heal(fsOf(spark, enc), enc,
+      StagedSwap.generationSuccess("batch="))
   }
 
   /** `query` + exact-cosine re-ranking: the PQ shortlist (k·candMult
@@ -721,10 +692,6 @@ object AnnIndex {
         round(col("sd").cast("double") / lit(1000000.0), 6).as("approx_d2"))
       .orderBy("query_id", "rank")
   }
-
-  private def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"commit rename failed: $src -> $dst")
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

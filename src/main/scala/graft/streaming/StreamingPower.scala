@@ -62,32 +62,30 @@ object StreamingPower {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.functions.col
     val spark = batch.sparkSession
-    graft.engine.BatchStore.heal(spark, indexPath)
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    val existing: Option[DataFrame] =
-      if (!fs.exists(root)) None
-      else if (!fs.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("batch_id="))) None
-      else Some(spark.read.parquet(indexPath)
-        .filter(col("batch_id") =!= batchId).drop("batch_id"))
-    val vsIndex = existing match {
-      case None => batch
-      case Some(idx) =>
-        val dupIds = graft.operators.Dedup
-          .minhashLshJoin(batch, idx, idCol, textCol, threshold = threshold)
-          .select(col("doc_new").as(idCol))
-          .distinct()
-        batch.join(dupIds, Seq(idCol), "left_anti")
+    graft.engine.BatchStore.commitStep(spark, indexPath, batchId) {
+      val root = new Path(indexPath)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val existing: Option[DataFrame] =
+        if (!fs.exists(root)) None
+        else if (!fs.listStatus(root).exists(s =>
+          s.isDirectory && s.getPath.getName.startsWith("batch_id="))) None
+        else Some(spark.read.parquet(indexPath)
+          .filter(col("batch_id") =!= batchId).drop("batch_id"))
+      val vsIndex = existing match {
+        case None => batch
+        case Some(idx) =>
+          val dupIds = graft.operators.Dedup
+            .minhashLshJoin(batch, idx, idCol, textCol, threshold = threshold)
+            .select(col("doc_new").as(idCol))
+            .distinct()
+          batch.join(dupIds, Seq(idCol), "left_anti")
+      }
+      val selfPairs = graft.operators.Dedup
+        .minhashLshPairs(vsIndex, idCol, textCol, threshold = threshold)
+      graft.operators.Dedup
+        .canonicalCorpus(vsIndex, selfPairs, idCol)
+        .drop("cluster_size", "removed_dups")
     }
-    val selfPairs = graft.operators.Dedup
-      .minhashLshPairs(vsIndex, idCol, textCol, threshold = threshold)
-    val keep = graft.operators.Dedup
-      .canonicalCorpus(vsIndex, selfPairs, idCol)
-      .drop("cluster_size", "removed_dups")
-    keep.write.mode("overwrite").parquet(batchDir.toString)
   }
 
   /** The loop as a streaming query: each micro-batch dedups against —
@@ -141,7 +139,6 @@ object StreamingPower {
     val spark = batch.sparkSession
     val docsPath = s"$storePath/docs"
     val labelsPath = s"$storePath/labels"
-    graft.engine.BatchStore.heal(spark, docsPath)
     healLabels(spark, labelsPath)
     val fs = new Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -152,9 +149,7 @@ object StreamingPower {
     //    skipping the marker is retry-neutral (empty redelivers empty)
     val batchDocs = batch.select(col(idCol), col(textCol)).localCheckpoint()
     if (batchDocs.isEmpty) return
-    val docsDir = new Path(docsPath, s"batch_id=$batchId")
-    if (!fs.exists(new Path(docsDir, "_SUCCESS")))
-      batchDocs.write.mode("overwrite").parquet(docsDir.toString)
+    graft.engine.BatchStore.commitStep(spark, docsPath, batchId)(batchDocs)
     // 2. new pairs — within the batch, and batch vs the standing corpus
     val within = graft.operators.Dedup
       .minhashLshPairs(batchDocs, idCol, textCol, shingleK = shingleK,
@@ -187,34 +182,21 @@ object StreamingPower {
     val updated = graft.operators.Dedup
       .assignToExistingClusters(oldLabels, pairs, "a", "b")
       .localCheckpoint() // freeze before the swap invalidates the old read
-    // 4. staged swap, marker created last = the commit point
-    val staging = new Path(labelsPath + "._staging")
-    val backup = new Path(labelsPath + "._old")
-    fs.delete(staging, true)
-    fs.delete(backup, true)
-    updated.write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(new Path(staging, "_applied"))
-    out.write(batchId.toString.getBytes("UTF-8")); out.close()
-    // a CONCURRENT canonicalLabels() heal may have deleted the live
-    // staging between the write and the marker create (fs.create
-    // silently recreates parent dirs): if parquet's root marker is
-    // gone, the staged labels are gone — swapping would publish an
-    // empty label table and silently reset every standing cluster.
-    // THROW (not return): a silent return would let foreachBatch
-    // commit the micro-batch with its label fold lost forever; failing
-    // makes the engine retry the batch (docs append is already a
-    // committed no-op). A race landing after this check makes a rename
-    // throw, which healLabels rolls back — same retry path.
-    if (!fs.exists(new Path(staging, "_SUCCESS"))) {
-      fs.delete(staging, true)
+    // 4. staged swap, marker created last = the commit point. A
+    //    CONCURRENT canonicalLabels() heal may delete the staging before
+    //    the marker lands, and the swap aborts: THROW (not return) — a
+    //    silent return would let foreachBatch commit the micro-batch with
+    //    its label fold lost forever; failing makes the engine retry the
+    //    batch (the docs append is already a committed no-op)
+    val published = graft.engine.StagedSwap.publish(fs, new Path(labelsPath)) { staging =>
+      updated.write.mode("overwrite").parquet(staging.toString)
+      val out = fs.create(new Path(staging, "_applied"))
+      out.write(batchId.toString.getBytes("UTF-8")); out.close()
+    }
+    if (!published)
       throw new java.io.IOException(
         s"canonical label staging for batch $batchId was healed away " +
           "by a concurrent reader; retry the micro-batch")
-    }
-    if (fs.exists(new Path(labelsPath)))
-      renameOrThrow(fs, new Path(labelsPath), backup)
-    renameOrThrow(fs, staging, new Path(labelsPath))
-    fs.delete(backup, true)
   }
 
   /** The current label table (healed first): every doc that belongs to
@@ -226,27 +208,14 @@ object StreamingPower {
   }
 
   /** Recover the label table around an interrupted [[canonicalStep]]
-    * swap: labels missing + staged dir carrying an `_applied` marker
-    * (created last → the staging is complete) → roll forward;
-    * labels missing + backup present → roll back; labels present →
-    * drop leftovers.
+    * swap (`StagedSwap.heal`): the staged dir rolls forward only once
+    * its `_applied` marker — created last — exists.
     */
   private def healLabels(spark: SparkSession, labelsPath: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(labelsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(labelsPath + "._staging")
-    val backup = new Path(labelsPath + "._old")
-    if (!fs.exists(p)) {
-      val stagingCommitted = fs.exists(staging) &&
-        fs.exists(new org.apache.hadoop.fs.Path(staging, "_applied"))
-      if (stagingCommitted) renameOrThrow(fs, staging, p)
-      else if (fs.exists(backup)) renameOrThrow(fs, backup, p)
-    }
-    if (fs.exists(p)) {
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
+    val p = new org.apache.hadoop.fs.Path(labelsPath)
+    graft.engine.StagedSwap.heal(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      graft.engine.StagedSwap.marker("_applied"))
   }
 
   /** The batch id the committed label table was last updated by. */
@@ -262,11 +231,6 @@ object StreamingPower {
     }
   }
 
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"commit rename failed: $src -> $dst")
-
   /** One micro-batch of the streaming count-min pipeline: sketch the
     * batch's token stream and write it under `batch_id=<id>` —
     * idempotent under retries exactly like `dedupStepAgainstIndex`
@@ -279,27 +243,10 @@ object StreamingPower {
     */
   def countMinStep(batch: DataFrame, textCol: String, storePath: String,
       batchId: Long): Unit =
-    sketchStep(batch.select(explode(split(col(textCol), " ")).as("token")),
-      storePath, batchId, depth = 4, width = 1024)
-
-  /** The shared count-min store step: sketch an already-projected
-    * single-column frame and land it under `batch_id=N` with the
-    * committed-skip/heal contract — ONE owner for the retry-gate
-    * sequence however many sketch stores exist ([[countMinStep]]'s
-    * token stream, [[keySketchStep]]'s join keys).
-    */
-  private def sketchStep(projected: DataFrame, storePath: String,
-      batchId: Long, depth: Int, width: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(projected.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(projected.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sketches
-      .countMinSketch(projected, projected.columns.head, depth, width)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sketches.countMinSketch(
+        batch.select(explode(split(col(textCol), " ")).as("token")), "token", 4, 1024)
+    }
 
   /** The count-min MERGE as a compaction hook: counters sum per
     * (r, c) — the folded generation is ≤ depth×width rows however
@@ -344,8 +291,10 @@ object StreamingPower {
     */
   def keySketchStep(batch: DataFrame, keyCol: String, storePath: String,
       batchId: Long, depth: Int = 4, width: Int = 1024): Unit =
-    sketchStep(batch.select(col(keyCol).cast("string").as("k")),
-      storePath, batchId, depth, width)
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sketches.countMinSketch(
+        batch.select(col(keyCol).cast("string").as("k")), "k", depth, width)
+    }
 
   /** The STORE-FED join-size readout: fold each side's committed
     * sketch rows (exact counter sums, order-free) and run the AMS
@@ -367,16 +316,10 @@ object StreamingPower {
     * (column, value) rows across batches fold by summing cnt.
     */
   def profileStep(batch: DataFrame, cols: Seq[String], storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Profile.valueHistogram(batch, cols)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Profile.valueHistogram(batch, cols)
+    }
 
   /** Profile MERGE as a compaction hook: cnt sums per (column, value)
     * — the folded generation is cardinality-sized (see
@@ -424,16 +367,10 @@ object StreamingPower {
     * registers however much (and however duplicated) the stream is.
     */
   def hllStep(batch: DataFrame, valueCol: String, storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sketches.hllRegisters(batch, col(valueCol))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sketches.hllRegisters(batch, col(valueCol))
+    }
 
   /** HLL MERGE as a compaction hook: rho MAXES per bucket — union, not
     * sum; folded generation ≤ 2^p rows.
@@ -449,16 +386,10 @@ object StreamingPower {
     * so overlapping batches don't skew the sample.
     */
   def quantileStep(batch: DataFrame, groupCol: String, idCol: String,
-      valueCol: String, k: Int, storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sketches.quantileSample(batch, groupCol, idCol, valueCol, k)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      valueCol: String, k: Int, storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sketches.quantileSample(batch, groupCol, idCol, valueCol, k)
+    }
 
   /** Bottom-k sample MERGE as a compaction hook — exact (see
     * `Sketches.mergeQuantileSamples`); folded generation ≤ groups·k
@@ -512,17 +443,11 @@ object StreamingPower {
     * holds ONE row per batch however much text streamed past.
     */
   def funnelStep(batch: DataFrame, idCol: String, textCol: String,
-      storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.TextAnalysis.funnelCounts(
+      storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.TextAnalysis.funnelCounts(
         graft.operators.TextAnalysis.funnelSignals(batch, idCol, textCol))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+    }
 
   /** Funnel-counter MERGE as a compaction hook: exact elementwise sums. */
   val funnelMerge: DataFrame => DataFrame =
@@ -563,17 +488,11 @@ object StreamingPower {
     */
   def psiStep(batch: DataFrame, valueCol: String, groupCol: String,
       a: String, b: String, lo: Double, hi: Double, bins: Int,
-      storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.StatTests
-      .psiBinCounts(batch, valueCol, groupCol, a, b, lo, hi, bins)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.StatTests
+        .psiBinCounts(batch, valueCol, groupCol, a, b, lo, hi, bins)
+    }
 
   /** PSI bin-count MERGE as a compaction hook: exact per-bin sums. */
   val psiMerge: DataFrame => DataFrame =
@@ -614,18 +533,11 @@ object StreamingPower {
     * profile-store contract); a retried committed batch is a no-op.
     */
   def imageHashStep(payloads: DataFrame, storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(payloads.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(
-      payloads.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Multimodal.dHash(payloads).toDF()
-      .select(col("doc_id"), col("w0"), col("w1"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(payloads.sparkSession, storePath, batchId) {
+      graft.operators.Multimodal.dHash(payloads).toDF()
+        .select(col("doc_id"), col("w0"), col("w1"))
+    }
 
   /** Image-hash MERGE as a compaction hook: each doc lives in exactly
     * one batch, so min() per word is the identity fold — deterministic
@@ -673,18 +585,11 @@ object StreamingPower {
     * contract); a retried committed batch is a no-op.
     */
   def audioFpStep(payloads: DataFrame, storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(payloads.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(
-      payloads.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Multimodal.audioFingerprint(payloads).toDF()
-      .select(col("doc_id"), col("w0"), col("w1"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(payloads.sparkSession, storePath, batchId) {
+      graft.operators.Multimodal.audioFingerprint(payloads).toDF()
+        .select(col("doc_id"), col("w0"), col("w1"))
+    }
 
   /** Audio-fingerprint MERGE as a compaction hook: each clip lives in
     * exactly one batch, so min() per word is the identity fold —
@@ -730,18 +635,11 @@ object StreamingPower {
     * a retried committed batch is a no-op.
     */
   def videoFpStep(payloads: DataFrame, storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(payloads.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(
-      payloads.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Multimodal.videoFingerprint(payloads).toDF()
-      .select(col("doc_id"), col("w0"), col("w1"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(payloads.sparkSession, storePath, batchId) {
+      graft.operators.Multimodal.videoFingerprint(payloads).toDF()
+        .select(col("doc_id"), col("w0"), col("w1"))
+    }
 
   /** Video-fingerprint MERGE as a compaction hook: one batch per clip
     * by contract, so min() per word is the identity fold.
@@ -794,16 +692,10 @@ object StreamingPower {
     * ≤ groups×days rows per batch.
     */
   def trendStep(batch: DataFrame, groupCol: String, tsCol: String,
-      storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sessions.dailyCounts(batch, groupCol, tsCol)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sessions.dailyCounts(batch, groupCol, tsCol)
+    }
 
   /** Daily-count MERGE as a compaction hook: exact per-(group, day)
     * sums.
@@ -850,20 +742,13 @@ object StreamingPower {
     * the committed-skip guard.
     */
   def seasonalStep(batch: DataFrame, tsCol: String, storePath: String,
-      batchId: Long, stepSeconds: Long = 3600L): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    batch.select(
-        expr(s"unix_timestamp($tsCol) div $stepSeconds * $stepSeconds")
-          .as("bucket_sec"))
-      .groupBy("bucket_sec").agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long, stepSeconds: Long = 3600L): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      batch.select(
+          expr(s"unix_timestamp($tsCol) div $stepSeconds * $stepSeconds")
+            .as("bucket_sec"))
+        .groupBy("bucket_sec").agg(count(lit(1)).as("cnt"))
+    }
 
   /** Bucket-count MERGE as a compaction hook: exact per-bucket sums. */
   val seasonalMerge: DataFrame => DataFrame =
@@ -901,25 +786,20 @@ object StreamingPower {
   def ewmaStep(batch: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, alphaPpm: Long, storePath: String,
       batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
-    graft.engine.BatchStore.heal(spark, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    val committed = graft.engine.BatchStore.committedBatches(spark, storePath)
-    val state = if (committed.isEmpty) None else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(keyCol)).orderBy(col("step").desc)
-      Some(graft.engine.BatchStore.read(spark, storePath)
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .select(col(keyCol), col("step").as("step0"),
-          col("s_micro").as("s0_micro")))
+    graft.engine.BatchStore.commitStep(spark, storePath, batchId) {
+      val committed = graft.engine.BatchStore.committedBatches(spark, storePath)
+      val state = if (committed.isEmpty) None else {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(keyCol)).orderBy(col("step").desc)
+        Some(graft.engine.BatchStore.read(spark, storePath)
+          .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+          .select(col(keyCol), col("step").as("step0"),
+            col("s_micro").as("s0_micro")))
+      }
+      graft.operators.Resample
+        .ewmaWith(batch, keyCol, tsCol, valueCol, alphaPpm, state)
     }
-    graft.operators.Resample
-      .ewmaWith(batch, keyCol, tsCol, valueCol, alphaPpm, state)
-      .write.mode("overwrite").parquet(batchDir.toString)
   }
 
   /** EWMA rows are append-only facts — compaction folds generations
@@ -963,17 +843,11 @@ object StreamingPower {
     */
   def dsirStep(batch: DataFrame, idCol: String, textCol: String,
       targetCol: String, buckets: Int, storePath: String, batchId: Long,
-      hashes: graft.functions.HashFamily = graft.functions.Md5Family): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sampling
-      .dsirBucketStats(batch, idCol, textCol, targetCol, buckets, hashes)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      hashes: graft.functions.HashFamily = graft.functions.Md5Family): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sampling
+        .dsirBucketStats(batch, idCol, textCol, targetCol, buckets, hashes)
+    }
 
   /** DSIR stats MERGE as a compaction hook: exact sums per bucket. */
   val dsirMerge: DataFrame => DataFrame =
@@ -1016,16 +890,10 @@ object StreamingPower {
     * passed (the mergeable-sketch point, applied to quantiles).
     */
   def histogramStep(batch: DataFrame, valueCol: String, lo: Double,
-      hi: Double, bins: Int, storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    graft.operators.Sketches.fixedHistogram(batch, valueCol, lo, hi, bins)
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      hi: Double, bins: Int, storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      graft.operators.Sketches.fixedHistogram(batch, valueCol, lo, hi, bins)
+    }
 
   /** Histogram MERGE as a compaction hook: bin counters sum — the
     * folded generation is ≤ `bins` rows (see [[countMinMerge]]).
@@ -1067,23 +935,17 @@ object StreamingPower {
     * (streamed ≡ one-shot, the repo's streaming-store contract).
     */
   def calibrationStep(batch: DataFrame, scoreCol: String, hitCol: String,
-      bins: Int, binWidth: Double, storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    // clamp on the LONG before the narrowing cast (ANSI CAST_OVERFLOW
-    // guard — mirrors Sampling.isotonicCalibration / psiBinCounts)
-    batch.select(
-        least(lit((bins - 1).toLong), greatest(lit(0L),
-          floor(col(scoreCol) / lit(binWidth)).cast("long"))).cast("int").as("bin"),
-        col(hitCol).cast("int").as("_hit"))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n"), sum("_hit").as("pos"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      bins: Int, binWidth: Double, storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      // clamp on the LONG before the narrowing cast (ANSI CAST_OVERFLOW
+      // guard — mirrors Sampling.isotonicCalibration / psiBinCounts)
+      batch.select(
+          least(lit((bins - 1).toLong), greatest(lit(0L),
+            floor(col(scoreCol) / lit(binWidth)).cast("long"))).cast("int").as("bin"),
+          col(hitCol).cast("int").as("_hit"))
+        .groupBy("bin")
+        .agg(count(lit(1)).as("n"), sum("_hit").as("pos"))
+    }
 
   /** Calibration MERGE as a compaction hook: per-bin counts add — the
     * folded generation is ≤ bins rows however many batches it
@@ -1126,19 +988,13 @@ object StreamingPower {
     * batches back out.
     */
   def cadenceStep(batch: DataFrame, keyCol: String, tsCol: String,
-      stepSeconds: Long, storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    batch.select(col(keyCol),
-      expr(s"unix_timestamp($tsCol) DIV $stepSeconds * $stepSeconds")
-        .as("bucket_sec"))
-      .distinct()
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      stepSeconds: Long, storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      batch.select(col(keyCol),
+        expr(s"unix_timestamp($tsCol) DIV $stepSeconds * $stepSeconds")
+          .as("bucket_sec"))
+        .distinct()
+    }
 
   /** Cadence MERGE as a compaction hook: the state is a SET of grid
     * points, so the fold is `distinct` — idempotent, and a pure
@@ -1192,21 +1048,15 @@ object StreamingPower {
     * dim); Σq² accumulates as decimal(38,0), exact at any scale.
     */
   def momentStep(batch: DataFrame, embCol: String, storePath: String,
-      batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    batch.select(posexplode(graft.operators.Pca.quantize(col(embCol)))
-        .as(Seq("dim", "q")))
-      .groupBy("dim")
-      .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"),
-        sum(col("q").cast("decimal(19,0)") * col("q").cast("decimal(19,0)"))
-          .as("sum_q2"))
-      .write.mode("overwrite").parquet(batchDir.toString)
-  }
+      batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId) {
+      batch.select(posexplode(graft.operators.Pca.quantize(col(embCol)))
+          .as(Seq("dim", "q")))
+        .groupBy("dim")
+        .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"),
+          sum(col("q").cast("decimal(19,0)") * col("q").cast("decimal(19,0)"))
+            .as("sum_q2"))
+    }
 
   /** Moment MERGE as a compaction hook: counts and exact integer sums
     * add per dim — the folded generation is ≤ dim rows however many
@@ -1246,15 +1096,8 @@ object StreamingPower {
     * map-side partial max_by means the compaction shuffle carries one
     * candidate per KEY, not the accumulated changelog.
     */
-  def cdcStep(batch: DataFrame, storePath: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    graft.engine.BatchStore.heal(batch.sparkSession, storePath)
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    val batchDir = new Path(root, s"batch_id=$batchId")
-    if (fs.exists(new Path(batchDir, "_SUCCESS"))) return // committed retry
-    batch.write.mode("overwrite").parquet(batchDir.toString)
-  }
+  def cdcStep(batch: DataFrame, storePath: String, batchId: Long): Unit =
+    graft.engine.BatchStore.commitStep(batch.sparkSession, storePath, batchId)(batch)
 
   /** The loop as a streaming query over a changelog stream.
     * `compactEvery = n` folds the accreted batch dirs to one whenever

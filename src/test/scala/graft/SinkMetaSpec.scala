@@ -184,4 +184,25 @@ class SinkMetaSpec extends SparkSpecBase {
       assert(IdempotentSink.read(spark, dir).count() == expected + (if (expected == 10) 10 else 5))
     }
   }
+
+  test("a reader heal that deletes compact's staging before the merged meta lands loses no row") {
+    HookFs.register(spark.sparkContext.hadoopConfiguration)
+    val dir = "hook://" + tmp("race")
+    IdempotentSink.appendIfAbsent(spark, minutes(0, 10), dir, Seq("k"))
+    IdempotentSink.appendIfAbsent(spark, minutes(10, 20), dir, Seq("k"))
+    val before = rowsOf(IdempotentSink.read(spark, dir))
+    val watermark = Watermark.maxOrEpoch(spark, dir, "k")
+    // the merged meta is created after the staging write; a reader
+    // healing in between finds the table live and drops the staging
+    val raced = HookFs.beforeCreate(f =>
+        f.getName == "._meta" && f.getParent.getParent.getName.endsWith("._compacting")) {
+      IdempotentSink.heal(spark, dir)
+    } {
+      IdempotentSink.compact(spark, dir)
+    }
+    assert(raced, "the reader heal never ran")
+    assert(rowsOf(IdempotentSink.read(spark, dir)) == before, "the raced compaction lost rows")
+    assert(before.size == 20)
+    assert(Watermark.maxOrEpoch(spark, dir, "k") == watermark)
+  }
 }

@@ -724,16 +724,16 @@ class StreamingSpec extends SparkSpecBase {
     // 1. staged labels durable (marker present), table intact: a kill
     //    before the first rename — heal drops the abandoned staging
     val t1 = freshStore("t1")
-    fs.mkdirs(new Path(s"$t1/labels._staging"))
-    fs.create(new Path(s"$t1/labels._staging/_applied")).close()
+    fs.mkdirs(new Path(s"$t1/labels._compacting"))
+    fs.create(new Path(s"$t1/labels._compacting/_applied")).close()
     assert(lbls(t1) == expect)
-    assert(!fs.exists(new Path(s"$t1/labels._staging")), "staging not tidied")
+    assert(!fs.exists(new Path(s"$t1/labels._compacting")), "staging not tidied")
 
     // 2. killed between the renames: labels at backup, staging committed
     //    (marker created last) — heal rolls FORWARD to the staged table
     val t2 = freshStore("t2")
-    spark.read.parquet(s"$t2/labels").write.parquet(s"$t2/labels._staging")
-    val out = fs.create(new Path(s"$t2/labels._staging/_applied"))
+    spark.read.parquet(s"$t2/labels").write.parquet(s"$t2/labels._compacting")
+    val out = fs.create(new Path(s"$t2/labels._compacting/_applied"))
     out.write("1".getBytes("UTF-8")); out.close()
     fs.rename(new Path(s"$t2/labels"), new Path(s"$t2/labels._old"))
     assert(lbls(t2) == expect)
@@ -743,10 +743,10 @@ class StreamingSpec extends SparkSpecBase {
     //    heal rolls BACK to the intact old table
     val t3 = freshStore("t3")
     spark.read.parquet(s"$t3/labels").limit(0)
-      .write.parquet(s"$t3/labels._staging") // incomplete staged content
+      .write.parquet(s"$t3/labels._compacting") // incomplete staged content
     fs.rename(new Path(s"$t3/labels"), new Path(s"$t3/labels._old"))
     assert(lbls(t3) == expect)
-    assert(!fs.exists(new Path(s"$t3/labels._staging")), "partial staging kept")
+    assert(!fs.exists(new Path(s"$t3/labels._compacting")), "partial staging kept")
   }
 
   test("a writer killed at ANY point of the batch-store compact swap heals to a complete store") {
