@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.{HashFamily, Md5Family, VectorExpressions, VectorFunctions, XxHash64Family}
 
@@ -21,12 +20,7 @@ import graft.functions.{HashFamily, Md5Family, VectorExpressions, VectorFunction
 object BenchMicro {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(16)
 
     val emb = graft.engine.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))

@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one place a graft Spark session is built: Bench, Verify, the
+  * probes, the demos and the specs all come through [[local]], so a
+  * session default changes here or nowhere.
+  *
+  * Conf precedence, lowest first: the comparability defaults (local[N]
+  * with N shuffle partitions, UTC session zone, AQE on, no UI), then
+  * the caller's `conf`, then the deployment's `SPARK_GRAFT_CONF="k=v;k=v"`
+  * (shuffle codec, partition sizing, join preferences — scale-dependent
+  * values stay parameterized instead of forking a main). Unset, every
+  * run keeps the defaults and stays comparable across rounds.
+  */
+object GraftSession {
+  def local(cpus: Int, conf: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+    val env = sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Nil)
+    (conf ++ env).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `SPARK_GRAFT_CONF`'s `k=v;k=v` form as ordered pairs, keys and
+    * values trimmed; the first `=` splits, so a value may hold more. A
+    * blank spec is no overrides. An entry that is empty, has no `=`
+    * or has a blank key is a typo, not a setting: it throws naming
+    * the entry instead of being silently dropped.
+    */
+  def parseConf(spec: String): Seq[(String, String)] =
+    if (spec.trim.isEmpty) Nil
+    else spec.split(";", -1).toSeq.map { entry =>
+      entry.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$entry' is not key=value (in '$spec')")
+      }
+    }
+}

@@ -11,8 +11,8 @@ import graft.functions.{CosineSimilarityExpr, Md5Family, MinhashSignatureExpr, N
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftSparkExtensions ...
-  *   // or in code:
-  *   SparkSession.builder().withExtensions(new GraftSparkExtensions()) ...
+  *   // or in code, the same static conf through the session factory:
+  *   GraftSession.local(n, "spark.sql.extensions" -> "graft.GraftSparkExtensions")
   * }}}
   *
   * Every session then has the graft native functions in its registry,

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import graft.medallion.{PowerPipeline, PowerSchemas}
 
 /** Runnable end-to-end demo of the medallion pipeline — the library
@@ -17,13 +17,7 @@ import graft.medallion.{PowerPipeline, PowerSchemas}
 object PowerPipelineDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/power_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     def feed(fromMin: Int, toMin: Int) = {
       val rows = (fromMin until toMin).map { i =>

@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import graft.medallion.{PowerPipeline, PowerSchemas}
 import graft.streaming.StreamingPower
 
@@ -15,13 +15,7 @@ import graft.streaming.StreamingPower
 object StreamingPowerDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/tmp/stream_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
 
     val feedDir = s"$base/feed"
     val paths = PowerPipeline.Paths(s"$base/tables")

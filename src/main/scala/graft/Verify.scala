@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -42,14 +41,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // SPARK_GRAFT_ONLY=q132_... restricts the dump for fast local
     // iteration on a new query; driver runs set no filter.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -57,30 +49,13 @@ object Verify {
     val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt).getOrElse(4)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Prewarm the session-shared stores (text index, near-dup pair
-    // store) BEFORE the waves, exactly like Bench: inside a wave, the
-    // first store-fed consumer pays the whole build while its
-    // wave-mates idle at the barrier (computeIfAbsent blocks them) —
-    // up front, the build runs once with every core to itself. The
-    // fresh-build queries (q161/q188/q332/q334) keep their scratch
-    // builds: measuring build cost is their contract.
-    if (selected.exists { case (n, _) =>
-        n.startsWith("q140") || n.startsWith("q144") || n.startsWith("q338") })
-      try graft.queries.ExtensionQueries.prewarmSharedTextIndex(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] index prewarm failed: $e") }
-    if (selected.exists { case (n, _) =>
-        Seq("q57", "q59", "q74", "q120", "q130", "q142",
-          "q171", "q180", "q325", "q329", "q333")
-          .exists(p => n.startsWith(p + "_")) })
-      try graft.queries.ExtensionQueries.prewarmSharedPairStore(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] pair-store prewarm failed: $e") }
-    if (selected.exists { case (n, _) =>
-        n.startsWith("q91_") || n.startsWith("q92_") })
-      try graft.queries.ExtensionQueries.prewarmSharedEpochStore(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] epoch-store prewarm failed: $e") }
+    // Prewarm the session-shared stores BEFORE the waves, exactly like
+    // Bench: inside a wave, the first store-fed consumer pays the whole
+    // build while its wave-mates idle at the barrier (computeIfAbsent
+    // blocks them) — up front, the build runs once with every core to
+    // itself. The fresh-build queries (q161/q188/q332/q334) keep their
+    // scratch builds: measuring build cost is their contract.
+    graft.queries.SharedStore.prewarm(spark, sfDir, selected.map(_._1), "verify")
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
 

@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Shared maintenance for the `batch_id=N` micro-batch stores
   * (`StreamingPower`'s dedup index, count-min / histogram sketch
@@ -31,8 +32,8 @@ import org.apache.spark.sql.functions._
   * [[heal]], run by every step ([[commitStep]]) and reader, rolls a
   * kill at any point forward (staging committed) or back (old store
   * intact in the backup). Single-writer-per-store, like every mutation
-  * here: call [[compact]] from the store's own foreachBatch (see the
-  * streams' `compactEvery`), never beside a live writer.
+  * here: call [[compact]] from the store's own foreachBatch ([[stream]]'s
+  * `compactEvery`), never beside a live writer.
   */
 object BatchStore {
   /** Committed generation ids: `batch_id=N` dirs carrying `_SUCCESS`. */
@@ -146,6 +147,26 @@ object BatchStore {
     if (!fsOf(spark, batchDir).exists(new Path(batchDir, "_SUCCESS")))
       rows.write.mode("overwrite").parquet(batchDir.toString)
   }
+
+  /** A micro-batch store as a streaming query over `rows`: each
+    * micro-batch runs `step(batch, batchId)` (a [[commitStep]] caller),
+    * then, with `compactEvery = n > 0`, folds the store through
+    * [[compact]] with `merge` once ≥ n generations have committed; 0 =
+    * never. Folding inside the same foreachBatch is safe because the
+    * stream IS the store's single writer.
+    */
+  def stream(rows: DataFrame, path: String, checkpoint: String,
+      compactEvery: Int, merge: DataFrame => DataFrame = identity)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        step(batch, batchId)
+        if (compactEvery > 0 &&
+            committedBatches(batch.sparkSession, path).size >= compactEvery)
+          compact(batch.sparkSession, path, merge)
+      }
+      .start()
 
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

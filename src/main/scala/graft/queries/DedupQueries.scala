@@ -375,90 +375,16 @@ object DedupQueries {
       .orderBy("id_a", "id_b")
 
 
-  /** The session-shared NEAR-DUP PAIR STORE per sf dir — built ONCE
-    * (three doc-disjoint increments per signal, exercising the
-    * new×new ∪ new×standing mining) and then READ by every audit that
-    * needs the pair graph (q142/q180/q325/q329). This is the q326
-    * ingest-once discipline applied to pair mining: before the store,
-    * each of those audits re-mined both signals from raw text/vectors
-    * in-query — the dominant cost of the governance tier. Build time
-    * is BuildTiming-accounted (amortizable `build_s`), and `Bench`
-    * prewarms it outside any timed window.
-    *
-    * Store pairs ≡ one-shot mining bit-for-bit (the PairStore
-    * decomposition argument), so every store-fed query keeps its
-    * one-shot DuckDB oracle unchanged.
-    */
-  private val sharedPairStoreByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def sharedPairStore(s: SparkSession, dir: String): String =
-    sharedPairStoreByDir.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_shared_pairs").toString + "/store"
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      (0L to 2L).foreach { b =>
-        PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
-          "doc_id", "text", path, b)
-        PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
-          emb, path, b, threshold = 0.4)
-      }
-      path
-    })
-
-  /** Pre-build the shared pair store outside any timed window (Bench's
-    * warm-up calls this so the store-fed audits time pure query cost).
-    */
-  def prewarmSharedPairStore(s: SparkSession, dir: String): Unit = {
-    sharedPairStore(s, dir); ()
-  }
-
-  /** The session-shared EPOCH store per sf dir — the rebuild-per-
-    * corpus-generation tier for the pair signals that are NOT
-    * incrementally decomposable and so can never join the PairStore:
-    * the q21 MinHash-LSH pair set (corpus-dependent hot-bucket cap)
-    * and the q62 DF-capped hashed shingle index (corpus-dependent hot
-    * list). Each is mined ONCE per corpus generation by the unchanged
-    * inline operator and published as a committed `epoch=N` dir
-    * (`EpochStore`); the audits that need them (q91 split leakage,
-    * q92 source overlap) read the committed artifact. Store read ≡
-    * inline mining bit-for-bit (EpochStoreSpec pins it), so the
-    * one-shot DuckDB oracles are unchanged. Build time is
-    * BuildTiming-accounted; Bench/Verify prewarm it outside timed
-    * windows.
-    */
-  private val sharedEpochStoreByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def sharedEpochStore(s: SparkSession, dir: String): String =
-    sharedEpochStoreByDir.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_epoch_store").toString + "/store"
-      val docs = Tables.documents(s, dir)
-      EpochStore.rebuild(s, s"$path/minhash_pairs", 0L,
-        Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family))
-      EpochStore.rebuild(s, s"$path/capped_grams", 0L,
-        Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
-          gramHash = Some(Md5Family)))
-      path
-    })
-
-  /** Pre-build the shared epoch store outside any timed window. */
-  def prewarmSharedEpochStore(s: SparkSession, dir: String): Unit = {
-    sharedEpochStore(s, dir); ()
-  }
-
   /** q21's MinHash-LSH pair set off the committed epoch. */
   private def storedMinhashPairs(s: SparkSession, dir: String): DataFrame =
-    EpochStore.read(s, s"${sharedEpochStore(s, dir)}/minhash_pairs")
+    EpochStore.read(s, s"${SharedStore.epochStore.path(s, dir)}/minhash_pairs")
 
   /** q62's DF-capped hashed shingle index off the committed epoch. */
   private def storedCappedGrams(s: SparkSession, dir: String): DataFrame =
-    EpochStore.read(s, s"${sharedEpochStore(s, dir)}/capped_grams")
+    EpochStore.read(s, s"${SharedStore.epochStore.path(s, dir)}/capped_grams")
 
   private[queries] def storedPairs(s: SparkSession, dir: String): DataFrame =
-    PairStore.pairs(s, sharedPairStore(s, dir))
+    PairStore.pairs(s, SharedStore.pairStore.path(s, dir))
 
   /** The text-signal edge set (doc_a, doc_b) off the shared store —
     * identical to inline `ngramJaccardPairs(..., XxHash64Family)`; the
@@ -662,7 +588,8 @@ object DedupQueries {
     * The store was built in three doc-disjoint increments per signal
     * (new×new ∪ new×standing each), so hash-matching the ONE-SHOT
     * mining oracle is the streamed ≡ one-shot proof for the whole
-    * store-fed audit tier (q142/q180/q325 read these same rows).
+    * store-fed audit tier (every [[SharedStore.pairStore]] consumer
+    * reads these same rows).
     */
   private val pairStoreQ: Q = (s, dir) =>
     storedPairs(s, dir)
@@ -670,9 +597,9 @@ object DedupQueries {
       .orderBy("signal", "doc_a", "doc_b")
 
   /** q334: the pair-store BUILD itself as a timed entry (the
-    * q161_text_index_build pattern): with q57/q59/q74/q120/q130/q142/
-    * q171/q180/q325/q333 all reading the prewarmed shared store, the
-    * mining cost would otherwise vanish from the bench record — this
+    * q161_text_index_build pattern): with the [[SharedStore.pairStore]]
+    * consumers all reading the prewarmed shared store, the mining cost
+    * would otherwise vanish from the bench record — this
     * query builds a FRESH scratch store in three doc-disjoint
     * increments per signal and reports the per-signal edge summary.
     * BuildTiming wraps the appends, so BENCH.json's build_s shows the
@@ -710,8 +637,9 @@ object DedupQueries {
   }
 
   /** q337: the EPOCH-STORE build itself as a timed entry (q334's
-    * pattern applied to the non-decomposable signals): with q91/q92
-    * reading the prewarmed shared epoch store, the once-per-corpus-
+    * pattern applied to the non-decomposable signals): with the
+    * [[SharedStore.epochStore]] consumers reading the prewarmed shared
+    * epoch store, the once-per-corpus-
     * generation mining cost would otherwise vanish from the bench
     * record — this query rebuilds a FRESH scratch epoch (both
     * signals: q21's capped MinHash pairs, q62's DF-capped gram index)

@@ -32,25 +32,4 @@ object ExtensionQueries {
   val queries: Map[String, Q] = domains.values.map(_._1).reduce(_ ++ _)
 
   val oracleSql: Map[String, String] = domains.values.map(_._2).reduce(_ ++ _)
-
-  /** Forwarder kept for Bench: pre-builds the shared scratch text index
-    * so q140/q141/q144's timed entries measure query cost, not build.
-    */
-  def prewarmSharedTextIndex(spark: SparkSession, dir: String): Unit =
-    TextQueries.prewarmSharedTextIndex(spark, dir)
-
-  /** Forwarder kept for Bench: pre-builds the shared near-dup pair
-    * store so the store-fed audits (q142/q180/q325/q329) time pure
-    * store-read cost, not the amortizable mining.
-    */
-  def prewarmSharedPairStore(spark: SparkSession, dir: String): Unit =
-    DedupQueries.prewarmSharedPairStore(spark, dir)
-
-  /** Forwarder kept for Bench: pre-builds the shared EPOCH store (the
-    * non-decomposable signals — q21's capped MinHash pairs, q62's
-    * DF-capped gram index) so q91/q92 time pure store-read cost, not
-    * the once-per-corpus-generation mining.
-    */
-  def prewarmSharedEpochStore(spark: SparkSession, dir: String): Unit =
-    DedupQueries.prewarmSharedEpochStore(spark, dir)
 }

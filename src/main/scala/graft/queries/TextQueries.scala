@@ -380,42 +380,19 @@ object TextQueries {
       probes, "query_id", "qtext", k = 10, fbDocs = 5, fbTerms = 8)
   }
 
-  /** Session-shared POSITIONAL text index over the q139/q140 corpus
-    * split (source != src0, two disjoint even/odd-doc_id batches) —
-    * built once per (JVM, sf dir) and reused by q140 (BM25 query) and
-    * q144 (phrase search). Index BUILD is the amortizable one-time
-    * cost of a persisted index and is timed as its own entry
-    * (q161_text_index_build); the standing q140/q144 entries then
-    * measure QUERY cost, which is what repeats in production. Results
-    * are identical to per-query scratch builds: batches hold disjoint
-    * doc sets and the stats fold is exact integer addition.
+  /** The two-batch positional index over the q139 corpus split
+    * (source != src0, disjoint even/odd-doc_id batches) — the shared
+    * store's build ([[SharedStore.textIndex]]) and q161's fresh one.
+    * Results equal a one-batch build: the batches hold disjoint doc
+    * sets and the stats fold is exact integer addition.
     */
-  private val sharedIdxByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def buildCorpusIndex(s: SparkSession, dir: String, idx: String): Unit = {
+  private[queries] def buildCorpusIndex(s: SparkSession, dir: String, idx: String): Unit = {
     val corpus = Tables.documents(s, dir)
       .filter(col("source") =!= "src0").select("doc_id", "text")
     TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", idx, batchId = 0L)
     TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 1),
       "doc_id", "text", idx, batchId = 1L)
-  }
-
-  private def sharedTextIndex(s: SparkSession, dir: String): String =
-    sharedIdxByDir.computeIfAbsent(dir, _ => {
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_shared_tidx").toString + "/idx"
-      buildCorpusIndex(s, dir, idx)
-      idx
-    })
-
-
-  /** Pre-build the shared index outside any timed window (Bench's
-    * warm-up calls this so q140/q144 timings are pure query cost).
-    */
-  def prewarmSharedTextIndex(s: SparkSession, dir: String): Unit = {
-    sharedTextIndex(s, dir); ()
   }
 
 
@@ -430,7 +407,7 @@ object TextQueries {
       .filter(col("source") === "src0" && col("doc_id") % 50 === 0)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("qtext"))
-    TextIndex.query(s, sharedTextIndex(s, dir), probes,
+    TextIndex.query(s, SharedStore.textIndex.path(s, dir), probes,
       "query_id", "qtext", k = 10)
   }
 
@@ -470,7 +447,7 @@ object TextQueries {
     val sparseRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
     graft.engine.Par.inParallel(
       () => sparseRef.set(
-        TextIndex.query(s, sharedTextIndex(s, dir), probes,
+        TextIndex.query(s, SharedStore.textIndex.path(s, dir), probes,
             "query_id", "qtext", k = 10)
           .select("query_id", "doc_id", "rank")
           .localCheckpoint()),
@@ -577,7 +554,7 @@ object TextQueries {
       .filter(col("source") === "src0" && col("doc_id") % 50 === 0)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(split(col("text"), " "), 2, 3)).as("phrase"))
-    TextIndex.phraseSearch(s, sharedTextIndex(s, dir), probes,
+    TextIndex.phraseSearch(s, SharedStore.textIndex.path(s, dir), probes,
       "query_id", "phrase")
   }
 
@@ -586,8 +563,9 @@ object TextQueries {
     * a fresh two-batch positional build on scratch, verified by
     * reading the committed postings back: doc count, summed document
     * length, and distinct (doc, token) posting count must equal the
-    * raw corpus's. This is the amortized one-time cost that q140/q144
-    * deliberately exclude (they query the session-shared store).
+    * raw corpus's. This is the amortized one-time cost that the
+    * [[SharedStore.textIndex]] consumers deliberately exclude (they
+    * query the session-shared store).
     */
   private val textIndexBuildQ: Q = (s, dir) => {
     val scratch = java.nio.file.Files.createTempDirectory("graft_q161_idx")

@@ -98,15 +98,10 @@ object StreamingPower {
   def dedupStreamAgainstIndex(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, checkpoint: String, threshold: Double = 0.5,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupStepAgainstIndex(batch, idCol, textCol, indexPath, threshold, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, indexPath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, indexPath)
-      }
-      .start()
+    graft.engine.BatchStore.stream(docs, indexPath, checkpoint,
+        compactEvery) { (batch, batchId) =>
+      dedupStepAgainstIndex(batch, idCol, textCol, indexPath, threshold, batchId)
+    }
 
   /** One micro-batch of STREAMING CANONICALIZATION: maintain a
     * persisted (doc_id, cluster_id, cluster_size) label table over an
@@ -263,16 +258,10 @@ object StreamingPower {
   def countMinStream(docs: DataFrame, textCol: String, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        countMinStep(batch, textCol, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            countMinMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(docs, storePath, checkpoint, compactEvery,
+        countMinMerge) { (batch, batchId) =>
+      countMinStep(batch, textCol, storePath, batchId)
+    }
 
   /** The merged sketch across every committed batch: sum per (r, c).
     * Committed-only read — a partial batch dir's counters would
@@ -335,16 +324,10 @@ object StreamingPower {
   def profileStream(rows: DataFrame, cols: Seq[String], storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        profileStep(batch, cols, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            profileMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        profileMerge) { (batch, batchId) =>
+      profileStep(batch, cols, storePath, batchId)
+    }
 
   /** The profile readout across every committed batch: fold the
     * stored histograms per (column, value), then the SAME
@@ -412,16 +395,10 @@ object StreamingPower {
   def hllStream(rows: DataFrame, valueCol: String, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hllStep(batch, valueCol, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            hllMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        hllMerge) { (batch, batchId) =>
+      hllStep(batch, valueCol, storePath, batchId)
+    }
 
   /** Distinct-count readout across every committed batch: registers
     * union by per-bucket max, then the SAME closed-form estimate the
@@ -459,16 +436,10 @@ object StreamingPower {
   def funnelStream(rows: DataFrame, idCol: String, textCol: String,
       storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelStep(batch, idCol, textCol, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            funnelMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        funnelMerge) { (batch, batchId) =>
+      funnelStep(batch, idCol, textCol, storePath, batchId)
+    }
 
   /** The funnel readout across every committed batch: fold the
     * counters (exact sums), then the SAME `funnelReport` rendering
@@ -504,17 +475,11 @@ object StreamingPower {
       a: String, b: String, lo: Double, hi: Double, bins: Int,
       storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        psiStep(batch, valueCol, groupCol, a, b, lo, hi, bins,
-          storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            psiMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        psiMerge) { (batch, batchId) =>
+      psiStep(batch, valueCol, groupCol, a, b, lo, hi, bins,
+        storePath, batchId)
+    }
 
   /** The drift readout across every committed batch: fold the bin
     * counts (exact sums) and render the SAME smoothed index the
@@ -551,16 +516,10 @@ object StreamingPower {
   def imageHashStream(rows: DataFrame, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageHashStep(batch, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            imageHashMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        imageHashMerge) { (batch, batchId) =>
+      imageHashStep(batch, storePath, batchId)
+    }
 
   /** The near-dup readout across every committed batch: the q290
     * banded-pair Hamming histogram off the stored hash table —
@@ -605,16 +564,10 @@ object StreamingPower {
   def audioFpStream(rows: DataFrame, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        audioFpStep(batch, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            audioFpMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        audioFpMerge) { (batch, batchId) =>
+      audioFpStep(batch, storePath, batchId)
+    }
 
   /** The near-dup readout across every committed batch of the audio
     * store: the banded Hamming pair histogram off the stored words —
@@ -652,16 +605,10 @@ object StreamingPower {
   def videoFpStream(rows: DataFrame, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        videoFpStep(batch, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            videoFpMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        videoFpMerge) { (batch, batchId) =>
+      videoFpStep(batch, storePath, batchId)
+    }
 
   /** The near-dup readout across every committed batch of the video
     * store — the image/audio readout's banded-Hamming machinery
@@ -707,16 +654,10 @@ object StreamingPower {
   def trendStream(rows: DataFrame, groupCol: String, tsCol: String,
       storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        trendStep(batch, groupCol, tsCol, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            trendMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        trendMerge) { (batch, batchId) =>
+      trendStep(batch, groupCol, tsCol, storePath, batchId)
+    }
 
   /** The drift readout across every committed batch: fold the daily
     * counts (exact sums) and render the SAME OLS the one-shot path
@@ -812,16 +753,10 @@ object StreamingPower {
       valueCol: String, alphaPpm: Long, storePath: String,
       checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ewmaStep(batch, keyCol, tsCol, valueCol, alphaPpm, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            ewmaMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        ewmaMerge) { (batch, batchId) =>
+      ewmaStep(batch, keyCol, tsCol, valueCol, alphaPpm, storePath, batchId)
+    }
 
   /** The full smoothed series across every committed batch — must
     * render exactly like the one-shot fold over the same rows.
@@ -857,16 +792,10 @@ object StreamingPower {
   def dsirStream(rows: DataFrame, idCol: String, textCol: String,
       targetCol: String, buckets: Int, storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dsirStep(batch, idCol, textCol, targetCol, buckets, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            dsirMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        dsirMerge) { (batch, batchId) =>
+      dsirStep(batch, idCol, textCol, targetCol, buckets, storePath, batchId)
+    }
 
   /** Score a corpus against the streamed importance model: fold the
     * committed bucket stats (exact sums), then the SAME scoring half
@@ -908,16 +837,10 @@ object StreamingPower {
   def histogramStream(rows: DataFrame, valueCol: String, lo: Double,
       hi: Double, bins: Int, storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        histogramStep(batch, valueCol, lo, hi, bins, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            histogramMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        histogramMerge) { (batch, batchId) =>
+      histogramStep(batch, valueCol, lo, hi, bins, storePath, batchId)
+    }
 
   /** Merged histogram across every committed batch: sum per bin —
     * feed to `Sketches.quantilesFromHistogram` for the readout.
@@ -958,17 +881,11 @@ object StreamingPower {
   def calibrationStream(rows: DataFrame, scoreCol: String, hitCol: String,
       bins: Int, binWidth: Double, storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        calibrationStep(batch, scoreCol, hitCol, bins, binWidth,
-          storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            calibrationMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(rows, storePath, checkpoint, compactEvery,
+        calibrationMerge) { (batch, batchId) =>
+      calibrationStep(batch, scoreCol, hitCol, bins, binWidth,
+        storePath, batchId)
+    }
 
   /** Isotonic readout over everything the store has seen — by
     * construction equal to the one-shot fit on the union of all
@@ -1009,16 +926,10 @@ object StreamingPower {
   def cadenceStream(events: DataFrame, keyCol: String, tsCol: String,
       stepSeconds: Long, storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cadenceStep(batch, keyCol, tsCol, stepSeconds, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath,
-            cadenceMerge)
-      }
-      .start()
+    graft.engine.BatchStore.stream(events, storePath, checkpoint, compactEvery,
+        cadenceMerge) { (batch, batchId) =>
+      cadenceStep(batch, keyCol, tsCol, stepSeconds, storePath, batchId)
+    }
 
   /** The gap/cadence report over everything the store has seen —
     * identical, by construction, to `Resample.gapReport` on the full
@@ -1107,15 +1018,10 @@ object StreamingPower {
     */
   def cdcStream(changelog: DataFrame, storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    changelog.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cdcStep(batch, storePath, batchId)
-        if (compactEvery > 0 && graft.engine.BatchStore
-            .committedBatches(batch.sparkSession, storePath).size >= compactEvery)
-          graft.engine.BatchStore.compact(batch.sparkSession, storePath)
-      }
-      .start()
+    graft.engine.BatchStore.stream(changelog, storePath, checkpoint,
+        compactEvery) { (batch, batchId) =>
+      cdcStep(batch, storePath, batchId)
+    }
 
   /** Current table state across every committed changelog batch —
     * committed-only read (`BatchStore.read`): a crashed step's partial

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.SharedStore
+
 /** Every registered query runs and returns rows at sf0.001, and every
   * oracle key refers to a real query — the structural contract the
   * driver's rows-only check relies on.
@@ -9,13 +11,26 @@ class QueriesSmokeSpec extends SparkSpecBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  private lazy val declared: Set[String] =
+    SharedStore.all.flatMap(_.consumers).toSet
+
+  /** A second path to the sf0.001 tables with the same base name. The
+    * queries no shared store declares as a consumer read through it,
+    * so a store built for it betrays an undeclared consumer.
+    */
+  private lazy val alias: String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_alias")
+    java.nio.file.Files.createSymbolicLink(d.resolve("sf0.001"),
+      java.nio.file.Paths.get(sf("sf0.001"))).toString
+  }
+
   /** Every registered query built ONCE at sf0.001 — its executed plan,
     * then its row count — so the store builds and checkpoints its
-    * construction runs are paid once for both checks below.
+    * construction runs are paid once for every check below.
     */
   private lazy val built: Seq[(String, String, Long)] =
     SparkEntry.queries.toSeq.map { case (name, fn) =>
-      val df = fn(spark, sf("sf0.001"))
+      val df = fn(spark, if (declared(name)) sf("sf0.001") else alias)
       (name, df.queryExecution.executedPlan.toString, df.count())
     }
 
@@ -36,6 +51,19 @@ class QueriesSmokeSpec extends SparkSpecBase {
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct:\n${plan.take(3000)}")
     }
+  }
+
+  test("only the declared consumers build the session-shared stores") {
+    // Bench and Verify prewarm exactly the stores the selected queries
+    // declare; an undeclared consumer would pay the build inside its
+    // timed window (and stall Verify's wave-mates at the barrier)
+    assert(built.nonEmpty)
+    SharedStore.all.foreach { st =>
+      assert(!st.isBuilt(alias), s"a query not declared in SharedStore " +
+        s"built the ${st.label} store: declare it as a consumer")
+    }
+    val unknown = declared -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"declared consumers that are not registered: $unknown")
   }
 
   test("portable HLL estimates stay within error bounds on both branches") {

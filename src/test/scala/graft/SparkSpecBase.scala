@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (spark_guide.md: lazy val, not
-  * per-test). UTC + small shuffle partitions to match the harness.
+  * per-test), built by the same `GraftSession` factory as the mains.
   */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
@@ -12,18 +12,12 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Fixed at local[4] whatever SPARK_GRAFT_CPUS says: spec timings
+    * and partition counts stay host-independent.
+    */
+  lazy val session: SparkSession = GraftSession.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.maxMetadataStringLength" -> "2000",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
 }
