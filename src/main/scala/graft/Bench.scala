@@ -2,8 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -63,27 +61,6 @@ object Bench {
       Thread.sleep(100) // let the async listener bus drain
       shuffleAcc.getAndSet(0) / 1e6
     }
-    // Memory hygiene between queries: ~15 operators `localCheckpoint()`
-    // intermediate frames, and those blocks stay pinned in storage
-    // memory until the driver GCs the RDD reference — across a
-    // 124-query suite the pressure compounds and bled into later
-    // queries' timings (r4: end-of-suite reruns WORSE than first runs).
-    // Released here, OUTSIDE the timed window: a query pays for its own
-    // checkpoints (they're inside its timing) but never for a previous
-    // query's leftovers. Unpersisting a locally checkpointed RDD warns
-    // that its lineage is gone — the point here — once per RDD, which
-    // buried real warnings at the end of Bench's log: the released
-    // RDDs' own loggers (named after their classes) are quieted for the
-    // release only.
-    def releaseCheckpoints(): Unit = {
-      val rdds = spark.sparkContext.getPersistentRDDs.values
-      val loggers = rdds.map(_.getClass.getName).toSet
-        .map((n: String) => n -> LogManager.getLogger(n).getLevel)
-      loggers.foreach { case (n, _) => Configurator.setLevel(n, Level.ERROR) }
-      try rdds.foreach(_.unpersist(blocking = false))
-      finally loggers.foreach { case (n, level) => Configurator.setLevel(n, level) }
-    }
-
     // warm-up: JVM/codegen/file-index, untimed
     try run("q01_scan_filter") catch { case _: Throwable => () }
     // Table warm-up (file listing + parquet footers), also untimed: a
@@ -100,23 +77,20 @@ object Bench {
       graft.engine.Tables.nation, graft.engine.Tables.region)
       .foreach(_(spark, sfDir).count())
     catch { case _: Throwable => () }
-    releaseCheckpoints()
+    GraftSession.releaseCheckpoints(spark)
 
     // SPARK_GRAFT_ONLY=q129_ann_recall,q130_... restricts the suite —
     // for standing-table maintenance (measure a few new queries on a
     // quiet host) and targeted noise checks, not driver runs (the
     // driver sets no filter and always benches everything).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val selected = SparkEntry.selected
 
     // Pre-build the session-shared stores OUTSIDE any timed window:
     // their consumers measure store-READ cost (what repeats in
     // production); each build's amortizable cost is its own timed
     // entry (q161/q334/q337).
     graft.queries.SharedStore.prewarm(spark, sfDir, selected, "bench")
-    releaseCheckpoints()
+    GraftSession.releaseCheckpoints(spark)
 
     shuffleAcc.set(0)
     graft.engine.BuildTiming.drainSeconds() // discard prewarm leftovers
@@ -136,7 +110,15 @@ object Bench {
       val b = graft.engine.BuildTiming.drainSeconds()
       if (b > 0.05) buildS(name) = b
       shuffleMb(name) = drainAndReadShuffleMb()
-      releaseCheckpoints()
+      // Memory hygiene between queries: ~15 operators `localCheckpoint()`
+      // intermediate frames, and those blocks stay pinned in storage
+      // memory until the driver GCs the RDD reference — across a
+      // 124-query suite the pressure compounds and bled into later
+      // queries' timings (r4: end-of-suite reruns WORSE than first runs).
+      // Released here, OUTSIDE the timed window: a query pays for its own
+      // checkpoints (they're inside its timing) but never for a previous
+      // query's leftovers.
+      GraftSession.releaseCheckpoints(spark)
       (name, dt, ok)
     }
     // Outlier re-measure: a single-shot timing on a shared host can
@@ -199,7 +181,7 @@ object Bench {
           val v2 = (System.nanoTime() - t0) / 1e9
           val b2 = graft.engine.BuildTiming.drainSeconds()
           drainAndReadShuffleMb() // discard: keep the first measurement
-          releaseCheckpoints()
+          GraftSession.releaseCheckpoints(spark)
           if (!ok2) extra = false
           else {
             timings = timings :+ v2

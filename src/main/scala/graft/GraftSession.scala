@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft Spark session is built: Bench, Verify, the
@@ -26,6 +28,23 @@ object GraftSession {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Unpersist every persisted RDD — chiefly the `localCheckpoint`s
+    * queries leave pinned in storage memory until the driver GCs them.
+    * Call it only between queries: it truncates the lineage of any
+    * query still running. Unpersisting a locally checkpointed RDD warns
+    * that its lineage is gone — the point here — once per RDD, which
+    * buries real warnings, so the released RDDs' own loggers (named
+    * after their classes) are quieted for the release only.
+    */
+  def releaseCheckpoints(spark: SparkSession): Unit = {
+    val rdds = spark.sparkContext.getPersistentRDDs.values
+    val loggers = rdds.map(_.getClass.getName).toSet
+      .map((n: String) => n -> LogManager.getLogger(n).getLevel)
+    loggers.foreach { case (n, _) => Configurator.setLevel(n, Level.ERROR) }
+    try rdds.foreach(_.unpersist(blocking = false))
+    finally loggers.foreach { case (n, level) => Configurator.setLevel(n, level) }
   }
 
   /** `SPARK_GRAFT_CONF`'s `k=v;k=v` form as ordered pairs, keys and

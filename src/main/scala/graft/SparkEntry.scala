@@ -21,6 +21,16 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ParityQueries.queries ++ ExtensionQueries.queries
 
+  /** The registered query names, sorted; `SPARK_GRAFT_ONLY=q1,q2`
+    * restricts them for local iteration and targeted checks (driver
+    * runs set no filter).
+    */
+  def selected: Seq[String] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+  }
+
   def oracleSql: Map[String, String] =
     ParityQueries.oracleSql ++ ExtensionQueries.oracleSql
 }

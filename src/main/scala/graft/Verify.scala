@@ -42,13 +42,11 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
 
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt).getOrElse(4)
     // SPARK_GRAFT_ONLY=q132_... restricts the dump for fast local
     // iteration on a new query; driver runs set no filter.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val par = sys.env.get("SPARK_GRAFT_VERIFY_PAR").map(_.toInt).getOrElse(4)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val queries = SparkEntry.queries
+    val selected = SparkEntry.selected.map(n => n -> queries(n))
     // Prewarm the session-shared stores BEFORE the waves, exactly like
     // Bench: inside a wave, the first store-fed consumer pays the whole
     // build while its wave-mates idle at the barrier (computeIfAbsent
@@ -56,8 +54,7 @@ object Verify {
     // itself. The fresh-build queries (q161/q188/q332/q334) keep their
     // scratch builds: measuring build cost is their contract.
     graft.queries.SharedStore.prewarm(spark, sfDir, selected.map(_._1), "verify")
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    GraftSession.releaseCheckpoints(spark)
 
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, par))
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -77,8 +74,7 @@ object Verify {
       // otherwise compounds across the 330-query dump. Only at the
       // barrier: mid-wave, an unpersist would truncate a concurrent
       // query's checkpointed lineage.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.releaseCheckpoints(spark)
     }
     pool.shutdown()
     System.err.println(

@@ -1,9 +1,10 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import Generations.fsOf
 
 /** Shared maintenance for the `batch_id=N` micro-batch stores
   * (`StreamingPower`'s dedup index, count-min / histogram sketch
@@ -36,16 +37,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * `compactEvery`), never beside a live writer.
   */
 object BatchStore {
+  private[graft] val Prefix = "batch_id="
+
   /** Committed generation ids: `batch_id=N` dirs carrying `_SUCCESS`. */
   def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
     val p = new Path(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      .sorted
+    Generations.committed(fsOf(spark, p), p, Prefix)
   }
 
   /** Read the store restricted to COMMITTED generations (per-dir
@@ -119,7 +116,7 @@ object BatchStore {
       // their dirs directly, so parquet puts the marker inside); the
       // partitioned staging write only marks its root — add the per-dir
       // marker, LAST, as the staging commit point
-      fs.create(new Path(staging, s"batch_id=$genId/_SUCCESS")).close()
+      Generations.markCommitted(fs, staging, Prefix, genId)
     }
   }
 
@@ -129,7 +126,7 @@ object BatchStore {
   def heal(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
     StagedSwap.heal(fsOf(spark, p), p,
-      StagedSwap.generationSuccess("batch_id="))
+      StagedSwap.generationSuccess(Prefix))
   }
 
   /** One `batch_id=N` generation of a micro-batch store — the prologue
@@ -143,31 +140,20 @@ object BatchStore {
   def commitStep(spark: SparkSession, path: String, batchId: Long)(
       rows: => DataFrame): Unit = {
     heal(spark, path)
-    val batchDir = new Path(path, s"batch_id=$batchId")
-    if (!fsOf(spark, batchDir).exists(new Path(batchDir, "_SUCCESS")))
-      rows.write.mode("overwrite").parquet(batchDir.toString)
+    val p = new Path(path)
+    Generations.gate(fsOf(spark, p), p, Prefix, batchId)(dir =>
+      rows.write.mode("overwrite").parquet(dir.toString))
   }
 
   /** A micro-batch store as a streaming query over `rows`: each
     * micro-batch runs `step(batch, batchId)` (a [[commitStep]] caller),
     * then, with `compactEvery = n > 0`, folds the store through
     * [[compact]] with `merge` once ≥ n generations have committed; 0 =
-    * never. Folding inside the same foreachBatch is safe because the
-    * stream IS the store's single writer.
+    * never (`Generations.stream`).
     */
   def stream(rows: DataFrame, path: String, checkpoint: String,
       compactEvery: Int, merge: DataFrame => DataFrame = identity)(
       step: (DataFrame, Long) => Unit): StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        step(batch, batchId)
-        if (compactEvery > 0 &&
-            committedBatches(batch.sparkSession, path).size >= compactEvery)
-          compact(batch.sparkSession, path, merge)
-      }
-      .start()
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Generations.stream(rows, checkpoint, compactEvery,
+      committedBatches(_, path).size, compact(_, path, merge))(step)
 }

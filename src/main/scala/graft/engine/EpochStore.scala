@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import Generations.fsOf
 
 /** Rebuild-per-corpus-generation store for artifacts that are NOT
   * incrementally decomposable — signals whose value for one document
@@ -38,16 +39,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * artifact.
   */
 object EpochStore {
+  private val Prefix = "epoch="
+
   /** Committed epoch ids: `epoch=N` dirs carrying `_SUCCESS`. */
   def committedEpochs(spark: SparkSession, path: String): Seq[Long] = {
     val p = new Path(path)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("epoch=").toLong)
-      .sorted
+    Generations.committed(fsOf(spark, p), p, Prefix)
   }
 
   /** The newest committed epoch, if any. */
@@ -64,14 +61,12 @@ object EpochStore {
       mine: => DataFrame): Unit = BuildTiming.timed {
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    val dir = new Path(p, s"epoch=$epochId")
-    if (!fs.exists(new Path(dir, "_SUCCESS"))) {
-      // Overwrite handles a crashed attempt's partial dir; the new
-      // marker is created by the parquet commit, after the data files
-      mine.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    }
+    // Overwrite handles a crashed attempt's partial dir; the new
+    // marker is created by the parquet commit, after the data files
+    Generations.gate(fs, p, Prefix, epochId)(dir =>
+      mine.write.mode(SaveMode.Overwrite).parquet(dir.toString))
     committedEpochs(spark, path).filter(_ < epochId)
-      .foreach(e => fs.delete(new Path(p, s"epoch=$e"), true))
+      .foreach(e => fs.delete(Generations.dir(p, Prefix, e), true))
   }
 
   /** Read the newest committed epoch. Throws when no epoch has ever
@@ -81,9 +76,6 @@ object EpochStore {
   def read(spark: SparkSession, path: String): DataFrame = {
     val cur = currentEpoch(spark, path).getOrElse(
       throw new IllegalStateException(s"no committed epoch at $path"))
-    spark.read.parquet(s"$path/epoch=$cur")
+    spark.read.parquet(Generations.dir(new Path(path), Prefix, cur).toString)
   }
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, Spar
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.{col, count, lit, max, min, unix_micros}
 import org.apache.spark.sql.types._
+import Generations.fsOf
 
 /** Insert-if-absent sink semantics on plain parquet directories.
   *
@@ -140,8 +141,8 @@ object IdempotentSink {
           case None => newRows(bounded, current, keys)
         }
       } else bounded.dropDuplicates(keys)
-    val next = nextBatchId(fs, p)
-    val staging = new Path(p, s"._staging_batch=$next")
+    val next = Generations.nextId(fs, p, Gen)
+    val staging = Generations.dir(p, Staging, next)
     val observation = Observation()
     observed(toWrite, keys, observation)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -155,7 +156,7 @@ object IdempotentSink {
       m.rows == 0 && ms.map(_.map(_._2.schema).distinct) == Some(Seq(m.schema)))
     if (adds && fs.listStatus(staging).exists(_.getPath.getName.startsWith("part-"))) {
       meta.foreach(writeMeta(fs, staging, _))
-      StagedSwap.renameOrThrow(fs, staging, new Path(p, s"batch=$next"))
+      StagedSwap.renameOrThrow(fs, staging, Generations.dir(p, Gen, next))
     } else fs.delete(staging, true)
   }
 
@@ -188,10 +189,10 @@ object IdempotentSink {
     heal(spark, path)
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    val batches = batchIds(fs, p)
+    val batches = Generations.ids(fs, p, Gen)
     require(batches.nonEmpty && maxBatchId >= batches.min,
       s"as-of $maxBatchId predates the oldest retained generation " +
-        s"(${batches.sorted.mkString(",")}) at $path — that history was " +
+        s"(${batches.mkString(",")}) at $path — that history was " +
         "folded away by compaction; the state cannot be reconstructed")
     scan(spark, path, metas(fs, p))
       .filter(col("batch") <= maxBatchId)
@@ -223,7 +224,7 @@ object IdempotentSink {
     if (!exists(spark, path)) return
     val p = new Path(path)
     val fs = fsOf(spark, p)
-    val batches = batchIds(fs, p)
+    val batches = Generations.ids(fs, p, Gen)
     if (batches.length <= 1) return
     val genId = batches.max
     // merged read: compaction of an additively-evolved table rewrites
@@ -235,7 +236,7 @@ object IdempotentSink {
     StagedSwap.publish(fs, p) { staging =>
       merged.write.mode(SaveMode.Overwrite).partitionBy("batch")
         .parquet(staging.toString)
-      ms.foreach(m => writeMeta(fs, new Path(staging, s"batch=$genId"),
+      ms.foreach(m => writeMeta(fs, Generations.dir(staging, Gen, genId),
         Meta.merge(m.map(_._2), nullable(merged.drop("batch").schema))))
     }
   }
@@ -264,18 +265,18 @@ object IdempotentSink {
     // staged fold's commit marker
     StagedSwap.heal(fs, p, StagedSwap.rootSuccess)
     if (!fs.exists(p)) return
-    fs.listStatus(p).filter(_.getPath.getName.startsWith("._staging_batch="))
-      .foreach { s =>
-        val target = new Path(p, s.getPath.getName.stripPrefix("._staging_"))
-        if (fs.exists(new Path(s.getPath, "_SUCCESS")) && !fs.exists(target)) {
-          fs.delete(new Path(s.getPath, MetaTemp), false)
-          StagedSwap.renameOrThrow(fs, s.getPath, target)
-        } else fs.delete(s.getPath, true)
-      }
+    Generations.ids(fs, p, Staging).foreach { id =>
+      val staged = Generations.dir(p, Staging, id)
+      val target = Generations.dir(p, Gen, id)
+      if (Generations.isCommitted(fs, p, Staging, id) && !fs.exists(target)) {
+        fs.delete(new Path(staged, MetaTemp), false)
+        StagedSwap.renameOrThrow(fs, staged, target)
+      } else fs.delete(staged, true)
+    }
     val loose = fs.listStatus(p).filter(s => s.isFile &&
       (s.getPath.getName.startsWith("part-") || s.getPath.getName == "_SUCCESS"))
     if (loose.exists(_.getPath.getName.startsWith("part-"))) {
-      val dst = new Path(p, s"batch=${nextBatchId(fs, p)}")
+      val dst = Generations.dir(p, Gen, Generations.nextId(fs, p, Gen))
       fs.mkdirs(dst)
       loose.foreach(s =>
         StagedSwap.renameOrThrow(fs, s.getPath, new Path(dst, s.getPath.getName)))
@@ -287,7 +288,7 @@ object IdempotentSink {
     */
   private[graft] def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    batchIds(fsOf(spark, p), p).nonEmpty
+    Generations.ids(fsOf(spark, p), p, Gen).nonEmpty
   }
 
   /** The largest committed value of key column `c`, from the metas
@@ -355,6 +356,11 @@ object IdempotentSink {
   }
 
   private val mapper = new ObjectMapper()
+  /** Generation dirs: every `batch=N` is committed, its rename being
+    * the commit; `._staging_batch=N` is where generation N is staged.
+    */
+  private val Gen = "batch="
+  private val Staging = "._staging_batch="
   private val MetaFile = "_meta"
   private val MetaTemp = "._meta"
 
@@ -362,9 +368,9 @@ object IdempotentSink {
     * one is missing or unreadable (that table takes the scan path).
     */
   private def metas(fs: FileSystem, p: Path): Option[Seq[(Long, Meta)]] = {
-    val out = batchIds(fs, p).sorted.map { id =>
+    val out = Generations.ids(fs, p, Gen).map { id =>
       id -> Try {
-        val in = fs.open(new Path(p, s"batch=$id/$MetaFile"))
+        val in = fs.open(new Path(Generations.dir(p, Gen, id), MetaFile))
         try Meta.parse(new String(in.readAllBytes(), UTF_8)) finally in.close()
       }.toOption
     }
@@ -468,15 +474,4 @@ object IdempotentSink {
     case MapType(k, v, _) => MapType(nullableType(k), nullableType(v), valueContainsNull = true)
     case other => other
   }
-
-  private def batchIds(fs: FileSystem, p: Path): Seq[Long] =
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
-
-  private def nextBatchId(fs: FileSystem, p: Path): Long =
-    batchIds(fs, p).foldLeft(-1L)(math.max) + 1L
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

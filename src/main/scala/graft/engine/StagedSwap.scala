@@ -38,14 +38,13 @@ object StagedSwap {
   /** Parquet's root `_SUCCESS`. */
   val rootSuccess: Committed = (fs, dir) => fs.exists(new Path(dir, "_SUCCESS"))
 
-  /** A `_SUCCESS` inside some `<prefix>N` generation dir — created by
-    * the writer after the partitioned staging write, which marks only
-    * its root, so a root marker alone never rolls an unfinished fold
-    * forward.
+  /** Some committed `<prefix>N` generation (`Generations`) — its
+    * `_SUCCESS` is created by the writer after the partitioned staging
+    * write, which marks only its root, so a root marker alone never
+    * rolls an unfinished fold forward.
     */
   def generationSuccess(prefix: String): Committed = (fs, dir) =>
-    fs.exists(dir) && fs.listStatus(dir).exists(s =>
-      s.getPath.getName.startsWith(prefix) && fs.exists(new Path(s.getPath, "_SUCCESS")))
+    Generations.committed(fs, dir, prefix).nonEmpty
 
   /** A marker file `name` at the staged root. */
   def marker(name: String): Committed = (fs, dir) => fs.exists(new Path(dir, name))

@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.StagedSwap
+import graft.engine.{Generations, StagedSwap}
+import graft.engine.Generations.fsOf
 import graft.functions.VectorFunctions._
 
 /** PERSISTED IVF+PQ index — the build/publish/query separation a
@@ -19,7 +20,7 @@ import graft.functions.VectorFunctions._
   *  - `coarse/` — (list_id, centroid), nlists rows;
   *  - `sub/`    — (m, code_id, c), numSub·numCodes rows;
   *  - `enc/`    — (neighbor_id, m, code_id) PARTITIONED BY
-  *    (batch, list_id); `enc/_manifest` caches the committed batch ids.
+  *    (batch, list_id).
   *
   * The `list_id` partitioning is what makes the IVF promise PHYSICAL:
   * a query filters the enc scan to its probes' nprobe lists, so
@@ -55,6 +56,8 @@ object AnnIndex {
   private def encPath(path: String) = s"$path/enc"
   private def deadPath(path: String) = s"$path/dead"
   private def metaPath(path: String) = s"$path/train_meta"
+  // enc and dead generations alike
+  private val Prefix = "batch="
 
   /** Derive seeded codebooks from the corpus, encode it, and publish
     * the three index tables. Re-running on an existing index is a full
@@ -222,7 +225,8 @@ object AnnIndex {
     healEnc(spark, path)
     val cents = spark.read.parquet(coarsePath(path)).localCheckpoint()
     val sub = spark.read.parquet(subPath(path)).localCheckpoint()
-    val id = if (batchId >= 0) batchId else nextBatchId(spark, path)
+    val enc = new Path(encPath(path))
+    val id = if (batchId >= 0) batchId else Generations.nextId(fsOf(spark, enc), enc, Prefix)
     writeEnc(batch, cents, sub, path, dim, numSub, id)
   }
 
@@ -251,12 +255,11 @@ object AnnIndex {
     // shared namespace would let a manual batch=0 trip the stream's
     // committed-retry guard and silently drop the stream's tombstones.
     val id = if (batchId >= 0) batchId
-      else math.max(nextIdIn(fs, dead), TextIndex.ManualDeleteBase)
-    val dir = new Path(dead, s"batch=$id")
-    if (fs.exists(new Path(dir, "_SUCCESS"))) return // committed retry
-    ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      else math.max(Generations.nextId(fs, dead, Prefix), TextIndex.ManualDeleteBase)
+    Generations.gate(fs, dead, Prefix, id)(dir =>
+      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(dir.toString))
   }
 
   /** [[delete]] as a streaming face: a stream of ids to forget (an
@@ -277,28 +280,16 @@ object AnnIndex {
   def deleteStream(ids: DataFrame, path: String, checkpoint: String,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        delete(batch, path, batchId = id)
-        if (compactEvery > 0 &&
-            committedDeadBatches(batch.sparkSession, path).size >= compactEvery)
-          compact(batch.sparkSession, path)
-      }
-      .start()
+    Generations.stream(ids, checkpoint, compactEvery,
+      committedDeadBatches(_, path).size, compact(_, path))(
+      (batch, id) => delete(batch, path, batchId = id))
 
-  /** Committed tombstone batch ids — per-dir `_SUCCESS` probes (the
-    * dead set is small by the compaction-drain contract; no manifest).
+  /** Committed tombstone batch ids (the dead set is small by the
+    * compaction-drain contract).
     */
   private[graft] def committedDeadBatches(spark: SparkSession, path: String): Seq[Long] = {
     val p = new Path(deadPath(path))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-      .filter(b => fs.exists(new Path(p, s"batch=$b/_SUCCESS")))
-      .sorted
+    Generations.committed(fsOf(spark, p), p, Prefix)
   }
 
   /** The live tombstoned id set (distinct, committed dirs only). */
@@ -349,27 +340,22 @@ object AnnIndex {
       compactEvery: Int = 0, rebuildAt: Double = 0.0,
       rebuildCorpus: DataFrame => DataFrame = null)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        if (!exists(spark, path))
-          build(batch, path, dim, nlists, numSub, numCodes, batchId = id)
-        else {
-          appendBatch(batch, path, dim, numSub, batchId = id)
-          // threshold check AFTER the append: the index never ends a
-          // micro-batch above `rebuildAt` — the appended batch is
-          // re-encoded by the rebuild, the price of the invariant
-          if (rebuildAt > 0 && rebuildCorpus != null &&
-              needsRebuild(spark, path, rebuildAt))
-            build(rebuildCorpus(batch), path, dim, nlists, numSub,
-              numCodes, batchId = id)
-        }
-        if (compactEvery > 0 &&
-            committedBatches(spark, path).size >= compactEvery)
-          compact(spark, path)
+    Generations.stream(vectors, checkpoint, compactEvery,
+      committedBatches(_, path).size, compact(_, path)) { (batch, id) =>
+      val spark = batch.sparkSession
+      if (!exists(spark, path))
+        build(batch, path, dim, nlists, numSub, numCodes, batchId = id)
+      else {
+        appendBatch(batch, path, dim, numSub, batchId = id)
+        // threshold check AFTER the append: the index never ends a
+        // micro-batch above `rebuildAt` — the appended batch is
+        // re-encoded by the rebuild, the price of the invariant
+        if (rebuildAt > 0 && rebuildCorpus != null &&
+            needsRebuild(spark, path, rebuildAt))
+          build(rebuildCorpus(batch), path, dim, nlists, numSub,
+            numCodes, batchId = id)
       }
-      .start()
+    }
 
   /** Merge every committed `enc/batch=N` generation into ONE —
     * the small-file remedy for a long-running `indexStream`, which
@@ -428,7 +414,7 @@ object AnnIndex {
         .write.mode(SaveMode.Overwrite).partitionBy("batch", "list_id")
         .parquet(staging.toString)
       // reader gate: batch-level _SUCCESS (parquet only marks the root)
-      fs.create(new Path(staging, s"batch=$genId/_SUCCESS")).close()
+      Generations.markCommitted(fs, staging, Prefix, genId)
     }
     if (!committed) return
     // drain ONLY the snapshotted tombstone dirs — their rows are gone
@@ -437,7 +423,7 @@ object AnnIndex {
     // longer exist); deletes that arrived mid-compaction keep their
     // dirs and stay effective.
     deadBatches.foreach(b =>
-      fs.delete(new Path(deadPath(path), s"batch=$b"), true))
+      fs.delete(Generations.dir(new Path(deadPath(path)), Prefix, b), true))
   }
 
   /** Recover `enc/` around an interrupted [[compact]] swap
@@ -447,7 +433,7 @@ object AnnIndex {
   private[graft] def healEnc(spark: SparkSession, path: String): Unit = {
     val enc = new Path(encPath(path))
     StagedSwap.heal(fsOf(spark, enc), enc,
-      StagedSwap.generationSuccess("batch="))
+      StagedSwap.generationSuccess(Prefix))
   }
 
   /** `query` + exact-cosine re-ranking: the PQ shortlist (k·candMult
@@ -466,86 +452,28 @@ object AnnIndex {
     Similarity.rerankExact(corpus, probes, shortlist, k)
   }
 
-  private def manifestFile(path: String) = new Path(encPath(path), "_manifest")
-
-  /** Committed batch ids, answered from the `enc/_manifest` CACHE plus
-    * ONE directory listing — without the manifest every query planning
-    * pays a per-batch `_SUCCESS` existence probe (O(batches) round
-    * trips on an object store). The manifest is advisory and
-    * SELF-HEALING: ids it lists but whose dirs are gone (compacted)
-    * are dropped, dirs it doesn't know are probed for `_SUCCESS` and
-    * adopted, and any drift rewrites the cache via tmp-file + atomic
-    * rename — a stale, missing, or corrupt manifest can only cost the
-    * probes it was saving, never correctness (spec-asserted).
-    */
+  /** Committed `enc/` generation ids. */
   private[graft] def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
     val p = new Path(encPath(path))
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return Seq.empty
-    val dirs = fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toLong)
-    val cached = readManifest(fs, path)
-    val live = cached.intersect(dirs.toSet)
-    val adopted = dirs.filterNot(live)
-      .filter(b => fs.exists(new Path(p, s"batch=$b/_SUCCESS")))
-    val all = (live ++ adopted).toSeq.sorted
-    if (all.toSet != cached) writeManifest(fs, path, all)
-    all
+    Generations.committed(fsOf(spark, p), p, Prefix)
   }
-
-  private def readManifest(fs: FileSystem, path: String): Set[Long] =
-    try {
-      val f = manifestFile(path)
-      if (!fs.exists(f)) Set.empty
-      else {
-        val in = fs.open(f)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        txt.split(",").iterator.map(_.trim).filter(_.nonEmpty)
-          .map(_.toLong).toSet
-      }
-    } catch { case _: Exception => Set.empty } // cache only — fall back to probing
-
-  private def writeManifest(fs: FileSystem, path: String, ids: Seq[Long]): Unit =
-    try {
-      val tmp = new Path(encPath(path),
-        s"._manifest.${java.util.UUID.randomUUID}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(ids.mkString(",").getBytes("UTF-8")) finally out.close()
-      val dst = manifestFile(path)
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-    } catch { case _: Exception => () } // best-effort cache refresh
-
-  private def nextBatchId(spark: SparkSession, path: String): Long = {
-    val p = new Path(encPath(path))
-    nextIdIn(fsOf(spark, p), p)
-  }
-
-  private def nextIdIn(fs: FileSystem, p: Path): Long =
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch=") => n.stripPrefix("batch=").toLong }
-      .foldLeft(-1L)(math.max) + 1L
 
   private def writeEnc(vectors: DataFrame, cents: DataFrame, sub: DataFrame,
       path: String, dim: Int, numSub: Int, batchId: Long): Unit = {
-    val spark = vectors.sparkSession
-    val batchDir = new Path(encPath(path), s"batch=$batchId")
-    val fs = fsOf(spark, batchDir)
-    if (fs.exists(new Path(batchDir, "_SUCCESS")))
-      return // committed retry: no-op
-    val enc = Similarity.pqEncodeWithCodebook(vectors, dim, numSub, sub)
-    val lists = Similarity.nearestListIds(
-      vectors.select(col("vec_id").as("neighbor_id"),
-        asDouble(col("embedding")).as("emb")),
-      "neighbor_id", cents)
-      .select("list_id", "neighbor_id")
-    // codes ⋈ list assignment: both O(N) — shuffle equi-join, same
-    // contract as the inline IVF+PQ path
-    enc.join(lists.hint("shuffle_hash"), Seq("neighbor_id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(batchDir.toString)
+    val enc = new Path(encPath(path))
+    Generations.gate(fsOf(vectors.sparkSession, enc), enc, Prefix, batchId) { batchDir =>
+      val codes = Similarity.pqEncodeWithCodebook(vectors, dim, numSub, sub)
+      val lists = Similarity.nearestListIds(
+        vectors.select(col("vec_id").as("neighbor_id"),
+          asDouble(col("embedding")).as("emb")),
+        "neighbor_id", cents)
+        .select("list_id", "neighbor_id")
+      // codes ⋈ list assignment: both O(N) — shuffle equi-join, same
+      // contract as the inline IVF+PQ path
+      codes.join(lists.hint("shuffle_hash"), Seq("neighbor_id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("list_id")
+        .parquet(batchDir.toString)
+    }
   }
 
   /** FILTERED ANN, pre-filter strategy — metadata predicate ∧ vector
@@ -692,7 +620,4 @@ object AnnIndex {
         round(col("sd").cast("double") / lit(1000000.0), 6).as("approx_d2"))
       .orderBy("query_id", "rank")
   }
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{BatchStore, BuildTiming}
+import graft.engine.{BatchStore, BuildTiming, Generations}
 import graft.functions.HashFamily
 
 /** Persisted NEAR-DUP PAIR store: the (doc_a, doc_b, signal, score)
@@ -57,9 +57,10 @@ object PairStore {
   private def textPairs(p: String) = s"$p/text_pairs"
   private def embPairs(p: String) = s"$p/emb_pairs"
 
-  // one owner for the per-dir _SUCCESS commit convention: BatchStore
-  private def committed(spark: SparkSession, root: String, batchId: Long): Boolean =
-    BatchStore.committedBatches(spark, root).contains(batchId)
+  private def committed(spark: SparkSession, root: String, batchId: Long): Boolean = {
+    val p = new Path(root)
+    Generations.isCommitted(Generations.fsOf(spark, p), p, BatchStore.Prefix, batchId)
+  }
 
   /** Drop batch dirs in the DEPENDENT stores (pairs, intermediate
     * state like sizes) newer than the GATE store's newest committed
@@ -90,11 +91,11 @@ object PairStore {
     val gateMax = BatchStore.committedBatches(spark, gateRoot)
       .foldLeft(-1L)(math.max)
     dependentRoots.foreach { root =>
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val p = new Path(root)
+      val fs = Generations.fsOf(spark, p)
       BatchStore.committedBatches(spark, root)
         .filter(_ > gateMax)
-        .foreach(b => fs.delete(new Path(s"$root/batch_id=$b"), true))
+        .foreach(b => fs.delete(Generations.dir(p, BatchStore.Prefix, b), true))
     }
   }
 
@@ -113,7 +114,8 @@ object PairStore {
   }
 
   private def writeBatch(df: DataFrame, root: String, batchId: Long): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/batch_id=$batchId")
+    df.write.mode(SaveMode.Overwrite)
+      .parquet(Generations.dir(new Path(root), BatchStore.Prefix, batchId).toString)
 
   /** Append one DOC batch: mines the n-gram-Jaccard pairs touching the
     * batch (new×new ∪ new×standing via the persisted gram index) into
@@ -287,14 +289,8 @@ object PairStore {
   def textPairStream(rows: DataFrame, idCol: String, textCol: String,
       storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendDocs(batch, idCol, textCol, storePath, batchId)
-        if (compactEvery > 0 && BatchStore
-            .committedBatches(batch.sparkSession, grams(storePath))
-            .size >= compactEvery)
-          compactText(batch.sparkSession, storePath)
-      }
-      .start()
+    Generations.stream(rows, checkpoint, compactEvery,
+      BatchStore.committedBatches(_, grams(storePath)).size,
+      compactText(_, storePath))(
+      (batch, batchId) => appendDocs(batch, idCol, textCol, storePath, batchId))
 }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.BatchStore
+import graft.engine.{BatchStore, Generations}
 
 /** Persisted inverted text index with BM25 queries — the text-retrieval
   * sibling of `AnnIndex`: build/append once, query many times, without
@@ -43,6 +43,7 @@ object TextIndex {
   private def postingsPath(path: String) = path + "/postings"
   private def statsPath(path: String) = path + "/stats"
   private def deadPath(path: String) = path + "/dead"
+  private val DeadPrefix = "batch="
 
   /** TOMBSTONE delete (the `AnnIndex.delete` shape): doc ids to forget
     * land under `dead/batch=M` (parquet's own per-dir `_SUCCESS` is
@@ -60,7 +61,7 @@ object TextIndex {
     require(committedBatches(spark, path).nonEmpty,
       s"no committed index at $path — build it first")
     val dead = new Path(deadPath(path))
-    val fs = dead.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Generations.fsOf(spark, dead)
     // auto-allocated MANUAL ids live above ManualDeleteBase, DISJOINT
     // from deleteStream's engine batch ids (which count from 0): were
     // they shared, a manual batch=0 would make the stream's batch 0 hit
@@ -68,12 +69,11 @@ object TextIndex {
     // Callers passing an EXPLICIT batchId own that discipline (the
     // engine-id contract) and must not mix manual ids into it.
     val id = if (batchId >= 0) batchId
-      else math.max(nextDeadId(fs, dead), ManualDeleteBase)
-    val dir = new Path(dead, s"batch=$id")
-    if (fs.exists(new Path(dir, "_SUCCESS"))) return // committed retry
-    ids.select(col(idCol).cast("long").as("doc")).distinct()
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      else math.max(Generations.nextId(fs, dead, DeadPrefix), ManualDeleteBase)
+    Generations.gate(fs, dead, DeadPrefix, id)(dir =>
+      ids.select(col(idCol).cast("long").as("doc")).distinct()
+        .coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(dir.toString))
   }
 
   /** [[delete]] as a streaming face (a takedown/unsubscribe feed):
@@ -93,24 +93,9 @@ object TextIndex {
   def deleteStream(ids: DataFrame, idCol: String, path: String,
       checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        delete(batch, idCol, path, batchId = id)
-        if (compactEvery > 0 &&
-            committedDeadBatches(batch.sparkSession, path).size >= compactEvery)
-          compact(batch.sparkSession, path)
-      }
-      .start()
-
-  private def nextDeadId(fs: org.apache.hadoop.fs.FileSystem,
-      dead: Path): Long = {
-    if (!fs.exists(dead)) return 0L
-    val ids = fs.listStatus(dead).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-    if (ids.isEmpty) 0L else ids.max + 1
-  }
+    Generations.stream(ids, checkpoint, compactEvery,
+      committedDeadBatches(_, path).size, compact(_, path))(
+      (batch, id) => delete(batch, idCol, path, batchId = id))
 
   /** Committed tombstone batch ids — per-dir `_SUCCESS` probes (the
     * dead set stays small by the compaction-drain contract).
@@ -118,20 +103,16 @@ object TextIndex {
   private[graft] def committedDeadBatches(spark: SparkSession,
       path: String): Seq[Long] = {
     val p = new Path(deadPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-      .filter(id => fs.exists(new Path(p, s"batch=$id/_SUCCESS")))
-      .sorted
+    Generations.committed(Generations.fsOf(spark, p), p, DeadPrefix)
   }
 
   private def deadDocs(spark: SparkSession, path: String,
-      batches: Seq[Long]): DataFrame =
+      batches: Seq[Long]): DataFrame = {
+    val dead = new Path(deadPath(path))
     spark.read
-      .parquet(batches.map(b => s"${deadPath(path)}/batch=$b"): _*)
+      .parquet(batches.map(Generations.dir(dead, DeadPrefix, _).toString): _*)
       .select(col("doc")).distinct()
+  }
 
   /** Committed generations: batches whose postings AND stats both
     * carry their `_SUCCESS` marker.
@@ -151,41 +132,41 @@ object TextIndex {
   def appendBatch(docs: DataFrame, idCol: String, textCol: String,
       path: String, batchId: Long, buckets: Int = 64,
       withPositions: Boolean = true): Unit = graft.engine.BuildTiming.timed {
-    val spark = docs.sparkSession
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val statsDir = new Path(statsPath(path) + s"/batch_id=$batchId")
-    if (fs.exists(new Path(statsDir, "_SUCCESS"))) return
-    val toks =
-      if (withPositions)
-        docs.select(col(idCol).as("doc"),
-          size(split(col(textCol), " ")).as("dl"),
-          posexplode(split(col(textCol), " ")).as(Seq("pos", "token")))
-      else
-        docs.select(col(idCol).as("doc"),
-          size(split(col(textCol), " ")).as("dl"),
-          explode(split(col(textCol), " ")).as("token"))
-    val aggs =
-      if (withPositions)
-        Seq(count(lit(1)).as("tf"),
-          sort_array(collect_list(col("pos"))).as("positions"))
-      else Seq(count(lit(1)).as("tf"))
-    toks.groupBy("doc", "dl", "token")
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(buckets)))
-      // cluster by bucket before the partitioned write: ONE file per
-      // bucket per batch. Without this every aggregate partition fans
-      // out to every bucket dir — buckets × shuffle-partitions small
-      // files per append, whose listing + footer reads come to
-      // dominate query latency (and at real scale become the classic
-      // small-file problem on the store).
-      .repartition(col("tok_bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tok_bucket")
-      .parquet(postingsPath(path) + s"/batch_id=$batchId")
-    docs.agg(count(lit(1)).as("n_docs"),
-        sum(size(split(col(textCol), " "))).as("sum_dl"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(statsDir.toString)
+    val stats = new Path(statsPath(path))
+    Generations.gate(Generations.fsOf(docs.sparkSession, stats), stats,
+      BatchStore.Prefix, batchId) { statsDir =>
+      val toks =
+        if (withPositions)
+          docs.select(col(idCol).as("doc"),
+            size(split(col(textCol), " ")).as("dl"),
+            posexplode(split(col(textCol), " ")).as(Seq("pos", "token")))
+        else
+          docs.select(col(idCol).as("doc"),
+            size(split(col(textCol), " ")).as("dl"),
+            explode(split(col(textCol), " ")).as("token"))
+      val aggs =
+        if (withPositions)
+          Seq(count(lit(1)).as("tf"),
+            sort_array(collect_list(col("pos"))).as("positions"))
+        else Seq(count(lit(1)).as("tf"))
+      toks.groupBy("doc", "dl", "token")
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(buckets)))
+        // cluster by bucket before the partitioned write: ONE file per
+        // bucket per batch. Without this every aggregate partition fans
+        // out to every bucket dir — buckets × shuffle-partitions small
+        // files per append, whose listing + footer reads come to
+        // dominate query latency (and at real scale become the classic
+        // small-file problem on the store).
+        .repartition(col("tok_bucket"))
+        .write.mode(SaveMode.Overwrite).partitionBy("tok_bucket")
+        .parquet(Generations.dir(new Path(postingsPath(path)), BatchStore.Prefix, batchId)
+          .toString)
+      docs.agg(count(lit(1)).as("n_docs"),
+          sum(size(split(col(textCol), " "))).as("sum_dl"))
+        .write.mode(SaveMode.Overwrite)
+        .parquet(statsDir.toString)
+    }
   }
 
   /** BM25 top-`k` over the committed index — same formula, rounding,
@@ -398,8 +379,8 @@ object TextIndex {
       // stay live for the next compaction, exactly as before.
       if (folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty) {
         val dp = new Path(deadPath(path))
-        val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        deadB.foreach(b => fs.delete(new Path(dp, s"batch=$b"), true))
+        val fs = Generations.fsOf(spark, dp)
+        deadB.foreach(b => fs.delete(Generations.dir(dp, DeadPrefix, b), true))
       }
     }
   }
@@ -412,13 +393,7 @@ object TextIndex {
       path: String, checkpoint: String, buckets: Int = 64,
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch, idCol, textCol, path, id, buckets)
-        if (compactEvery > 0 &&
-            committedBatches(batch.sparkSession, path).size >= compactEvery)
-          compact(batch.sparkSession, path)
-      }
-      .start()
+    Generations.stream(docs, checkpoint, compactEvery,
+      committedBatches(_, path).size, compact(_, path))(
+      (batch, id) => appendBatch(batch, idCol, textCol, path, id, buckets))
 }

@@ -472,7 +472,7 @@ object AnnQueries {
 
   /** q131: the PERSISTED ANN index end-to-end — build the stored
     * index at a scratch path, then answer through its on-disk tables
-    * (partition-pruned enc scan, manifest-gated batches). Same seeded
+    * (partition-pruned enc scan, `_SUCCESS`-gated batches). Same seeded
     * codebooks and routing as q102, whose oracle it shares verbatim:
     * a hash match certifies the store/encode/prune/read path itself.
     */

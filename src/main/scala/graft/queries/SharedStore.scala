@@ -2,6 +2,7 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.engine.{EpochStore, Tables}
@@ -35,8 +36,9 @@ final class SharedStore private (
     */
   def path(s: SparkSession, dir: String): String =
     byDir.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files.createTempDirectory(tempPrefix)
-        .toString + "/" + leaf
+      val tmp = java.nio.file.Files.createTempDirectory(tempPrefix)
+      SharedStore.temps.add(tmp.toFile)
+      val root = tmp.toString + "/" + leaf
       build(s, dir, root)
       root
     })
@@ -46,6 +48,12 @@ final class SharedStore private (
 }
 
 object SharedStore {
+  /** Every store dir this JVM created, deleted by one hook at exit —
+    * not before: later suites in the same JVM reuse the caches.
+    */
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+  sys.addShutdownHook(temps.forEach(FileUtils.deleteQuietly(_)))
+
   /** The POSITIONAL text index over the q139 corpus split (source !=
     * src0, two disjoint even/odd-doc_id batches) — serves BM25 and
     * phrase search alike. Its fresh build is q161's timed entry.

@@ -64,11 +64,9 @@ object StreamingPower {
     val spark = batch.sparkSession
     graft.engine.BatchStore.commitStep(spark, indexPath, batchId) {
       val root = new Path(indexPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val existing: Option[DataFrame] =
-        if (!fs.exists(root)) None
-        else if (!fs.listStatus(root).exists(s =>
-          s.isDirectory && s.getPath.getName.startsWith("batch_id="))) None
+        if (graft.engine.Generations.ids(graft.engine.Generations.fsOf(spark, root),
+            root, graft.engine.BatchStore.Prefix).isEmpty) None
         else Some(spark.read.parquet(indexPath)
           .filter(col("batch_id") =!= batchId).drop("batch_id"))
       val vsIndex = existing match {

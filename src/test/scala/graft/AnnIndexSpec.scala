@@ -414,7 +414,7 @@ class AnnIndexSpec extends SparkSpecBase {
       s"learned recall ${recall(fromIndex)} below seeded ${recall(seeded)}")
   }
 
-  test("a stale or corrupt enc/_manifest self-heals and never changes results") {
+  test("a stray enc/_manifest from an older index never changes results") {
     import org.apache.hadoop.fs.Path
     val dir = Files.createTempDirectory("graft_annmanifest").toString + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
@@ -429,22 +429,16 @@ class AnnIndexSpec extends SparkSpecBase {
       val out = fs.create(mf, true)
       out.write(txt.getBytes("UTF-8")); out.close()
     }
-    def readMf(): String = {
-      val in = fs.open(mf)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
     // stale: claims a batch that was never written, misses batch 1
     overwrite("0,999")
     val got1 = AnnIndex.query(spark, dir, probes, k = 5, dim = 64)
       .collect().map(key)
     assert(got1.sameElements(want), "stale manifest changed results")
-    assert(readMf() == "0,1", s"manifest not healed: ${readMf()}")
-    // corrupt: unparseable → ignored, rebuilt from _SUCCESS probes
+    // corrupt: unparseable
     overwrite("not-a-manifest")
     val got2 = AnnIndex.query(spark, dir, probes, k = 5, dim = 64)
       .collect().map(key)
-    assert(got2.sameElements(want) && readMf() == "0,1",
-      "corrupt manifest not healed")
+    assert(got2.sameElements(want), "corrupt manifest changed results")
   }
 
   test("appended exact-duplicate vectors become searchable without retraining") {
