@@ -97,10 +97,11 @@ object ScaleProbe {
       val jssA = storeTmp.resolve("jss_a").toString
       val jssB = storeTmp.resolve("jss_b").toString
       if (only.forall(_.contains("join_size_readout"))) {
-        graft.streaming.StreamingPower.keySketchStep(
-          ev.select("user_id"), "user_id", jssA, 0L, width = 65536)
-        graft.streaming.StreamingPower.keySketchStep(
-          ev.select("event_id"), "event_id", jssB, 0L, width = 65536)
+        val keySketch = graft.streaming.StreamingPower.countMin
+        keySketch.append(spark, jssA, 0L)(graft.streaming.StreamingPower
+          .keySketchRows(ev, "user_id", width = 65536))
+        keySketch.append(spark, jssB, 0L)(graft.streaming.StreamingPower
+          .keySketchRows(ev, "event_id", width = 65536))
       }
       val textQueries = docs0.filter(col("doc_id") % 50 === 0)
         .select(col("doc_id").as("query_id"),
@@ -301,8 +302,9 @@ object ScaleProbe {
         "key_sketch_build" -> (() => Sketches.countMinSketch(
           ev.select(col("user_id").cast("string").as("k")), "k",
           width = 65536)),
-        "join_size_readout" -> (() => graft.streaming.StreamingPower
-          .mergedJoinSize(spark, jssA, jssB)))
+        "join_size_readout" -> (() => Sketches.joinSizeFromSketches(
+          graft.streaming.StreamingPower.countMin.read(spark, jssA),
+          graft.streaming.StreamingPower.countMin.read(spark, jssB))))
 
       for ((name, f) <- ops if only.forall(_.contains(name))) {
         val dt = time(f())

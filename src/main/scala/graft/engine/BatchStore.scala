@@ -7,9 +7,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import Generations.fsOf
 
 /** Shared maintenance for the `batch_id=N` micro-batch stores
-  * (`StreamingPower`'s dedup index, count-min / histogram sketch
-  * stores, CDC changelog): each `foreachBatch` step writes its batch
-  * dir directly and gates retries on that dir's `_SUCCESS`, so a
+  * (`StreamingPower`'s sketch and count stores, CDC changelog, dedup
+  * index; TextIndex and PairStore generations): each step writes its
+  * batch dir directly and gates retries on that dir's `_SUCCESS`, so a
   * long-running stream accretes a directory per micro-batch forever —
   * the same small-file flaw, and the same staged-swap cure, as
   * `AnnIndex.compact` / `IdempotentSink.compact`.
@@ -19,13 +19,14 @@ import Generations.fsOf
   * the fold are never re-delivered, and a retry of the LAST folded id
   * finds its dir present-and-committed (the folded generation) — still
   * a no-op, exactly the invariant the stores' `_SUCCESS` gate encodes.
-  * The optional `merge` hook lets a MERGEABLE store collapse rows, not
-  * just files: count-min sums counters per (r, c), the histogram per
-  * bin — after which the folded generation is constant-size no matter
-  * how much stream has passed. `merge` MUST preserve the step schema
-  * (future generations land beside its output) and MUST be a pure
-  * refinement of the store's read-side merge, which is what makes the
-  * fold invisible to readers.
+  * A MERGEABLE store collapses rows, not just files: count-min sums
+  * counters per (r, c), the histogram per bin — after which the folded
+  * generation is constant-size no matter how much stream has passed.
+  * Such a store is one [[Mergeable]]: its fold is written once and is
+  * both the compaction hook and the read-side merge, so folding is
+  * invisible to readers by construction. No caller outside the engine
+  * and `TextIndex` (whose fold applies tombstones) passes a merge hook
+  * to [[compact]] itself.
   *
   * Crash discipline is `StagedSwap`'s: the folded generation is
   * staged beside the store, its per-dir `_SUCCESS` marker — created
@@ -33,8 +34,8 @@ import Generations.fsOf
   * [[heal]], run by every step ([[commitStep]]) and reader, rolls a
   * kill at any point forward (staging committed) or back (old store
   * intact in the backup). Single-writer-per-store, like every mutation
-  * here: call [[compact]] from the store's own foreachBatch ([[stream]]'s
-  * `compactEvery`), never beside a live writer.
+  * here: call [[compact]] from the store's own foreachBatch
+  * ([[Mergeable.stream]]'s `compactEvery`), never beside a live writer.
   */
 object BatchStore {
   private[graft] val Prefix = "batch_id="
@@ -145,15 +146,40 @@ object BatchStore {
       rows.write.mode("overwrite").parquet(dir.toString))
   }
 
-  /** A micro-batch store as a streaming query over `rows`: each
-    * micro-batch runs `step(batch, batchId)` (a [[commitStep]] caller),
-    * then, with `compactEvery = n > 0`, folds the store through
-    * [[compact]] with `merge` once ≥ n generations have committed; 0 =
-    * never (`Generations.stream`).
+  /** A mergeable micro-batch store: `fold` maps any union of the
+    * store's rows (batch id dropped) to the same schema, and folding
+    * twice changes nothing a reader sees — sums per key, max per
+    * register, distinct, or the identity for stores that keep rows.
+    * Every use of the store goes through these four methods, so the
+    * fold that compacts the store is the fold every read applies.
     */
-  def stream(rows: DataFrame, path: String, checkpoint: String,
-      compactEvery: Int, merge: DataFrame => DataFrame = identity)(
-      step: (DataFrame, Long) => Unit): StreamingQuery =
-    Generations.stream(rows, checkpoint, compactEvery,
-      committedBatches(_, path).size, compact(_, path, merge))(step)
+  final case class Mergeable(fold: DataFrame => DataFrame) {
+    /** Commit `rows` as generation `batchId` ([[commitStep]]: a
+      * committed retry builds nothing). A step that reads its own
+      * store does so inside `rows`.
+      */
+    def append(spark: SparkSession, path: String, batchId: Long)(
+        rows: => DataFrame): Unit =
+      commitStep(spark, path, batchId)(rows)
+
+    /** Fold every committed generation into one ([[BatchStore.compact]]). */
+    def compact(spark: SparkSession, path: String): Unit =
+      BatchStore.compact(spark, path, fold)
+
+    /** The store's committed generations, folded. */
+    def read(spark: SparkSession, path: String): DataFrame =
+      fold(BatchStore.read(spark, path).drop("batch_id"))
+
+    /** The store as a streaming query over `src`: each micro-batch
+      * appends `rows(batch)` under the engine's batch id, then, with
+      * `compactEvery = n > 0`, compacts once ≥ n generations have
+      * committed; 0 = never (`Generations.stream`).
+      */
+    def stream(src: DataFrame, path: String, checkpoint: String,
+        compactEvery: Int = 0)(rows: DataFrame => DataFrame): StreamingQuery =
+      Generations.stream(src, checkpoint, compactEvery,
+        committedBatches(_, path).size, compact(_, path)) { (batch, batchId) =>
+        append(batch.sparkSession, path, batchId)(rows(batch))
+      }
+  }
 }

@@ -219,8 +219,8 @@ object Multimodal {
 
   /** The near-dup PAIR half of the dHash pipeline, standalone over an
     * already-hashed (doc_id, w0, w1) frame — the seam the PERSISTED
-    * image-hash store reads through (`StreamingPower
-    * .mergedImagePairs`): 4×16-bit banded equi-join candidates (the
+    * fingerprint store reads through (`StreamingPower
+    * .fingerprint`): 4×16-bit banded equi-join candidates (the
     * q21/q22 SimHash discipline, never all-pairs), hot bands
     * (> `maxBucket` members — duplicate floods that would turn the
     * join quadratic) dropped via the broadcast-anti cap, exact

@@ -36,7 +36,7 @@ object Profile {
     * from — exposed because it is the profile's MERGEABLE form: two
     * histograms over disjoint row sets fold by summing cnt per
     * (column, value), which is what the streaming profile store
-    * persists per batch (`StreamingPower.profileStream`).
+    * persists per batch (`StreamingPower.profile`).
     */
   def valueHistogram(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "at least one column to profile")

@@ -341,7 +341,7 @@ object Sampling {
   /** The mergeable half of [[importanceResample]]: per-bucket exact
     * token counts in the target subcorpus (`tc`) and the whole corpus
     * (`rc`). Sums fold across any split of the corpus — the streaming
-    * store form (`StreamingPower.dsirStep`).
+    * store form (`StreamingPower.dsir`).
     */
   def dsirBucketStats(docs: DataFrame, idCol: String, textCol: String,
       targetCol: String, buckets: Int = 256,

@@ -237,7 +237,7 @@ object Sessions {
 
   /** The mergeable half of [[volumeTrend]]: per-(group, epoch-day)
     * exact counts — rows fold across any disjoint event split (the
-    * streaming-store shape; `StreamingPower.trendStep` persists them
+    * streaming-store shape; `StreamingPower.trend` persists them
     * per micro-batch).
     */
   def dailyCounts(events: DataFrame, groupCol: String,

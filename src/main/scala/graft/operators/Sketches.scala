@@ -45,7 +45,7 @@ object Sketches {
     * MERGEABLE form: HLL union is per-register MAX, so two register
     * frames over disjoint (or overlapping!) row sets fold by
     * `max(rho)` per bucket, which is what the streaming store
-    * persists per batch (`StreamingPower.hllStream`).
+    * persists per batch (`StreamingPower.hll`).
     */
   def hllRegisters(df: DataFrame, c: Column, p: Int = 12,
       hashes: HashFamily = Md5Family): DataFrame = {
@@ -389,7 +389,7 @@ object Sketches {
     * sketches with the same (depth, width, hashes) MERGE by summing
     * counts per (r, c); that mergeability is what makes the sketch a
     * streaming/partitioned-aggregation primitive (see
-    * `StreamingPower.countMinStream`).
+    * `StreamingPower.countMin`).
     */
   def countMinSketch(tokens: DataFrame, tokenCol: String, depth: Int = 4,
       width: Int = 1024, hashes: HashFamily = Md5Family): DataFrame =
@@ -417,7 +417,7 @@ object Sketches {
     * collision mass — so min over the depth rows is an upper bound
     * that concentrates within ε·N_A·N_B/width. The 100 TB use: the
     * two sketches are constant-size (depth×width) MERGEABLE tables
-    * (the `countMinStream` store shape), so a pipeline can predict
+    * (the `StreamingPower.countMin` store shape), so a pipeline can predict
     * whether a join is broadcastable / how many shuffle partitions it
     * needs WITHOUT running the join or scanning either side again.
     *
@@ -463,7 +463,7 @@ object Sketches {
     * count-min sketch tables sharing (depth, width, hash family) —
     * what a store-fed planner reads. Count-min rows are mergeable
     * (sum per (r, c)), so the inputs can come straight off two
-    * persisted monitor stores (`StreamingPower.keySketchStep`) with
+    * persisted monitor stores (`StreamingPower.keySketchRows`) with
     * NO scan of either joined input: the whole readout touches
     * 2×depth×width rows. One row (n_a, n_b, est_join).
     */

@@ -37,7 +37,7 @@ object StatTests {
 
   /** The mergeable half of [[psi]]: per-bin exact (ca, cb) counts —
     * rows fold across any disjoint corpus split (the streaming-store
-    * shape; `graft.streaming.StreamingPower.psiStep` persists them
+    * shape; `graft.streaming.StreamingPower.psi` persists them
     * per micro-batch).
     */
   def psiBinCounts(df: DataFrame, valueCol: String, groupCol: String,
@@ -104,7 +104,7 @@ object StatTests {
 
   /** The readout half of [[wasserstein1]] over already-aggregated
     * (bin, ca, cb) rows — the seam a PSI-style store's mergeable bin
-    * counts feed (`StreamingPower.mergedWasserstein`): fold rows
+    * counts feed (`StreamingPower.psi`, q324): fold rows
     * (exact sums, so pre-split micro-batch counts merge losslessly),
     * re-grid over the full bin range, cumulate, and take the
     * cross-multiplied integer sum. Streamed ≡ one-shot by

@@ -478,16 +478,12 @@ object AnnQueries {
     */
   private val annIndexQ: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q131_idx")
-    val idx = scratch.toString + "/idx"
-    AnnIndex.build(emb, idx, dim = 64)
-    // materialize BEFORE deleting the scratch index (the frame is
-    // lazy), so repeated bench/verify invocations don't accrete
-    // sf-scale index copies under /tmp
-    val out = AnnIndex.query(s, idx, emb.filter(col("vec_id") < 10),
-      k = 3, dim = 64).localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q131_idx") { scratch =>
+      val idx = scratch + "/idx"
+      AnnIndex.build(emb, idx, dim = 64)
+      AnnIndex.query(s, idx, emb.filter(col("vec_id") < 10),
+        k = 3, dim = 64)
+    }
   }
 
 
@@ -584,14 +580,13 @@ object AnnQueries {
     */
   private val annDeleteQ: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q175_del")
-    val idx = scratch.toString + "/idx"
-    AnnIndex.build(emb, idx, dim = 64)
-    AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"), idx)
-    val out = AnnIndex.query(s, idx, emb.filter(col("vec_id") < 10),
-      k = 3, dim = 64).localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q175_del") { scratch =>
+      val idx = scratch + "/idx"
+      AnnIndex.build(emb, idx, dim = 64)
+      AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"), idx)
+      AnnIndex.query(s, idx, emb.filter(col("vec_id") < 10),
+        k = 3, dim = 64)
+    }
   }
 
   /** q282: FILTERED ANN recall report — metadata predicate ∧ vector
@@ -612,19 +607,17 @@ object AnnQueries {
     val probes = emb.filter(col("vec_id") < 10)
     val eligible = emb.filter(col("label") < 5).select("vec_id")
     val k = 3
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q282_filt")
-    val idx = scratch.toString + "/idx"
-    // the index build and the exact ground-truth pass share no state —
-    // overlap them (independent-job rule) instead of serializing the
-    // build's many small store jobs ahead of the brute-force scan
     val exactRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    inParallel(
-      () => AnnIndex.build(emb, idx, dim = 64),
-      () => exactRef.set(Similarity.bruteForceTopK(
-          emb.filter(col("label") < 5), probes, k)
-        .select("query_id", "neighbor_id").localCheckpoint()))
-    val exact = exactRef.get
-    val both =
+    val both = withScratch(s, "graft_q282_filt") { scratch =>
+      val idx = scratch + "/idx"
+      // the index build and the exact ground-truth pass share no state —
+      // overlap them (independent-job rule) instead of serializing the
+      // build's many small store jobs ahead of the brute-force scan
+      inParallel(
+        () => AnnIndex.build(emb, idx, dim = 64),
+        () => exactRef.set(Similarity.bruteForceTopK(
+            emb.filter(col("label") < 5), probes, k)
+          .select("query_id", "neighbor_id").localCheckpoint()))
       AnnIndex.queryFiltered(s, idx, probes, eligible, k, dim = 64)
         .select(col("query_id"), col("neighbor_id"),
           lit("prefilter").as("method"))
@@ -632,8 +625,8 @@ object AnnQueries {
           dim = 64, candMult = 4)
           .select(col("query_id"), col("neighbor_id"),
             lit("postfilter").as("method")))
-        .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
+    }
+    val exact = exactRef.get
     val returned = both.groupBy("method").agg(count(lit(1)).as("returned"))
     val hits = both.join(exact, Seq("query_id", "neighbor_id"))
       .groupBy("method").agg(count(lit(1)).as("hits"))
@@ -714,14 +707,12 @@ object AnnQueries {
     */
   private val semdedupIndexQ: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q330_sdidx")
-    val idx = scratch.toString + "/idx"
-    AnnIndex.build(emb, idx, dim = 64) // nlists=8 seeded = q115 routing
-    // materialize before deleting the scratch index (the frame is lazy)
-    val out = Similarity.semanticDedupFromIndex(s, idx, emb, threshold = 0.4)
-      .orderBy("vec_id").localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q330_sdidx") { scratch =>
+      val idx = scratch + "/idx"
+      AnnIndex.build(emb, idx, dim = 64) // nlists=8 seeded = q115 routing
+      Similarity.semanticDedupFromIndex(s, idx, emb, threshold = 0.4)
+        .orderBy("vec_id")
+    }
   }
 
   /** q335: INDEX-FED semantic decontamination — q167's audit with the
@@ -736,13 +727,12 @@ object AnnQueries {
     val emb = Tables.embeddings(s, dir)
     val train = emb.filter(col("vec_id") % 50 =!= 0)
     val bench = emb.filter(col("vec_id") % 50 === 0)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q335_sdidx")
-    val idx = scratch.toString + "/idx"
-    AnnIndex.build(train, idx, dim = 64) // nlists=8 seeded-from-train
-    val out = Decontamination.semanticContaminatedFromIndex(
-      s, idx, train, bench, tau = 0.35, nprobe = 4).localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q335_sdidx") { scratch =>
+      val idx = scratch + "/idx"
+      AnnIndex.build(train, idx, dim = 64) // nlists=8 seeded-from-train
+      Decontamination.semanticContaminatedFromIndex(
+        s, idx, train, bench, tau = 0.35, nprobe = 4)
+    }
   }
 
   val queries: Map[String, Q] = Map(

@@ -606,35 +606,32 @@ object DedupQueries {
     * amortizable share explicitly. Oracle = the one-shot mining
     * aggregated to the same summary (scores as exact µ-units).
     */
-  private val pairStoreBuildQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q334_ps")
-    val path = scratch.toString + "/store"
-    val docs = Tables.documents(s, dir)
-    val emb = Tables.embeddings(s, dir)
-    // the two signals write DISJOINT store roots (grams/sizes/
-    // text_pairs vs sig/emb_pairs) and the store's single-writer
-    // discipline is PER SIGNAL — so the text and embedding chains mine
-    // concurrently (batch order stays sequential within each chain),
-    // the same overlap a production text stream + embedding stream
-    // would give. Wall time ≈ max(chain) instead of sum.
-    inParallel(
-      () => (0L to 2L).foreach { b =>
-        PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
-          "doc_id", "text", path, b)
-      },
-      () => (0L to 2L).foreach { b =>
-        PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
-          emb, path, b, threshold = 0.4)
-      })
-    val out = PairStore.pairs(s, path)
-      .groupBy("signal")
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(round(col("score") * 1e6).cast("long")).as("score_sum_us"))
-      .orderBy("signal")
-      .localCheckpoint() // materialize before the scratch delete
-    deleteRecursively(s, scratch.toString)
-    out
-  }
+  private val pairStoreBuildQ: Q = (s, dir) =>
+    withScratch(s, "graft_q334_ps") { scratch =>
+      val path = scratch + "/store"
+      val docs = Tables.documents(s, dir)
+      val emb = Tables.embeddings(s, dir)
+      // the two signals write DISJOINT store roots (grams/sizes/
+      // text_pairs vs sig/emb_pairs) and the store's single-writer
+      // discipline is PER SIGNAL — so the text and embedding chains mine
+      // concurrently (batch order stays sequential within each chain),
+      // the same overlap a production text stream + embedding stream
+      // would give. Wall time ≈ max(chain) instead of sum.
+      inParallel(
+        () => (0L to 2L).foreach { b =>
+          PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
+            "doc_id", "text", path, b)
+        },
+        () => (0L to 2L).foreach { b =>
+          PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
+            emb, path, b, threshold = 0.4)
+        })
+      PairStore.pairs(s, path)
+        .groupBy("signal")
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(round(col("score") * 1e6).cast("long")).as("score_sum_us"))
+        .orderBy("signal")
+    }
 
   /** q337: the EPOCH-STORE build itself as a timed entry (q334's
     * pattern applied to the non-decomposable signals): with the
@@ -650,34 +647,31 @@ object DedupQueries {
     * build_s isolates the amortizable epoch cost explicitly. Oracle =
     * the same two one-shot mining chains reduced to the same summary.
     */
-  private val epochStoreBuildQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q337_es")
-    val path = scratch.toString + "/store"
-    val docs = Tables.documents(s, dir)
-    // the two signals publish to DISJOINT epoch roots with no ordering
-    // contract between them — rebuild concurrently (wall ≈ max, not sum)
-    inParallel(
-      () => EpochStore.rebuild(s, s"$path/minhash_pairs", 0L,
-        Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family)),
-      () => EpochStore.rebuild(s, s"$path/capped_grams", 0L,
-        Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
-          gramHash = Some(Md5Family))))
-    val mh = EpochStore.read(s, s"$path/minhash_pairs")
-      .select(Md5Family.hash(concat_ws("_", col("doc_a"), col("doc_b"),
-        round(col("est_jaccard") * 1e6).cast("long"))).as("h"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(h)").as("fp"))
-      .select(lit("minhash_pairs").as("signal"), col("n_rows"), col("fp"))
-    val cg = EpochStore.read(s, s"$path/capped_grams")
-      .select(Md5Family.hash(concat_ws("_", col("doc"), col("g"))).as("h"))
-      .agg(count(lit(1)).as("n_rows"),
-        expr("bit_xor(h)").as("fp"))
-      .select(lit("capped_grams").as("signal"), col("n_rows"), col("fp"))
-    val out = mh.union(cg).orderBy("signal")
-      .localCheckpoint() // materialize before the scratch delete
-    deleteRecursively(s, scratch.toString)
-    out
-  }
+  private val epochStoreBuildQ: Q = (s, dir) =>
+    withScratch(s, "graft_q337_es") { scratch =>
+      val path = scratch + "/store"
+      val docs = Tables.documents(s, dir)
+      // the two signals publish to DISJOINT epoch roots with no ordering
+      // contract between them — rebuild concurrently (wall ≈ max, not sum)
+      inParallel(
+        () => EpochStore.rebuild(s, s"$path/minhash_pairs", 0L,
+          Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family)),
+        () => EpochStore.rebuild(s, s"$path/capped_grams", 0L,
+          Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
+            gramHash = Some(Md5Family))))
+      val mh = EpochStore.read(s, s"$path/minhash_pairs")
+        .select(Md5Family.hash(concat_ws("_", col("doc_a"), col("doc_b"),
+          round(col("est_jaccard") * 1e6).cast("long"))).as("h"))
+        .agg(count(lit(1)).as("n_rows"),
+          expr("bit_xor(h)").as("fp"))
+        .select(lit("minhash_pairs").as("signal"), col("n_rows"), col("fp"))
+      val cg = EpochStore.read(s, s"$path/capped_grams")
+        .select(Md5Family.hash(concat_ws("_", col("doc"), col("g"))).as("h"))
+        .agg(count(lit(1)).as("n_rows"),
+          expr("bit_xor(h)").as("fp"))
+        .select(lit("capped_grams").as("signal"), col("n_rows"), col("fp"))
+      mh.union(cg).orderBy("signal")
+    }
 
   val queries: Map[String, Q] = Map(
     "q337_epoch_store_build" -> epochStoreBuildQ,

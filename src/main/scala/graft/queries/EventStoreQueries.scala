@@ -7,6 +7,7 @@ import graft.engine.{IdempotentSink, Tables}
 import graft.functions.Md5Family
 import graft.operators._
 import graft.queries.QueryHelpers._
+import graft.streaming.StreamingPower
 
 /** Event, time-series, storage and multimodal family: sessionization, windows, as-of/interval joins, resample/gap/anomaly, SCD2/CDC/snapshot-diff, idempotent sinks, streaming cadence/moment stores, JSON and image-decode plumbing.
   *
@@ -383,31 +384,27 @@ object EventStoreQueries {
   private val sinkRoundtripQ: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
       .select("doc_id", "source", "text").localCheckpoint()
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q133_sink")
-    val store = scratch.toString + "/t"
-    // three appends with overlapping key ranges: [0,45%), [40%,75%),
-    // [70%,100%) of the id space — every boundary slice re-delivers
-    val ids = docs.agg(min("doc_id"), max("doc_id")).head()
-    val (lo, hi) = (ids.getLong(0), ids.getLong(1))
-    val span = math.max(1L, hi - lo + 1)
-    def slice(a: Double, b: Double) = docs.filter(
-      col("doc_id") >= lo + (span * a).toLong &&
-        col("doc_id") < lo + (span * b).toLong + (if (b >= 1.0) 1 else 0))
-    IdempotentSink.appendIfAbsent(s, slice(0.0, 0.45), store, Seq("doc_id"))
-    IdempotentSink.appendIfAbsent(s, slice(0.40, 0.75), store, Seq("doc_id"))
-    IdempotentSink.appendIfAbsent(s, slice(0.70, 1.0), store, Seq("doc_id"))
-    IdempotentSink.compact(s, store)
-    // materialize the 20-row summary, then drop the scratch store
-    // (same hygiene as q131)
-    val out = IdempotentSink.read(s, store)
-      .groupBy("source")
-      .agg(count(lit(1)).as("docs"),
-        sum(length(col("text")).cast("long")).as("chars"),
-        min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-      .orderBy("source")
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q133_sink") { scratch =>
+      val store = scratch + "/t"
+      // three appends with overlapping key ranges: [0,45%), [40%,75%),
+      // [70%,100%) of the id space — every boundary slice re-delivers
+      val ids = docs.agg(min("doc_id"), max("doc_id")).head()
+      val (lo, hi) = (ids.getLong(0), ids.getLong(1))
+      val span = math.max(1L, hi - lo + 1)
+      def slice(a: Double, b: Double) = docs.filter(
+        col("doc_id") >= lo + (span * a).toLong &&
+          col("doc_id") < lo + (span * b).toLong + (if (b >= 1.0) 1 else 0))
+      IdempotentSink.appendIfAbsent(s, slice(0.0, 0.45), store, Seq("doc_id"))
+      IdempotentSink.appendIfAbsent(s, slice(0.40, 0.75), store, Seq("doc_id"))
+      IdempotentSink.appendIfAbsent(s, slice(0.70, 1.0), store, Seq("doc_id"))
+      IdempotentSink.compact(s, store)
+      IdempotentSink.read(s, store)
+        .groupBy("source")
+        .agg(count(lit(1)).as("docs"),
+          sum(length(col("text")).cast("long")).as("chars"),
+          min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+        .orderBy("source")
+    }
   }
 
 
@@ -450,23 +447,20 @@ object EventStoreQueries {
     */
   private val ewmaStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir).filter(col("user_id") < 50)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q234_ewma")
-    val store = scratch.toString + "/ewma"
-    val cuts = Seq(
-      col("ts") < lit("2024-01-11").cast("timestamp"),
-      col("ts") >= lit("2024-01-11").cast("timestamp")
-        && col("ts") < lit("2024-01-21").cast("timestamp"),
-      col("ts") >= lit("2024-01-21").cast("timestamp"))
-    cuts.zipWithIndex.foreach { case (cut, b) =>
-      graft.streaming.StreamingPower.ewmaStep(ev.filter(cut),
-        "user_id", "ts", "value", alphaPpm = 300000L, store, batchId = b)
+    withScratch(s, "graft_q234_ewma") { scratch =>
+      val store = scratch + "/ewma"
+      val cuts = Seq(
+        col("ts") < lit("2024-01-11").cast("timestamp"),
+        col("ts") >= lit("2024-01-11").cast("timestamp")
+          && col("ts") < lit("2024-01-21").cast("timestamp"),
+        col("ts") >= lit("2024-01-21").cast("timestamp"))
+      cuts.zipWithIndex.foreach { case (cut, b) =>
+        StreamingPower.ewma.append(s, store, b)(StreamingPower.ewmaRows(
+          ev.filter(cut), "user_id", "ts", "value", alphaPpm = 300000L, store))
+      }
+      StreamingPower.ewma.compact(s, store)
+      StreamingPower.ewma.read(s, store).orderBy("user_id", "step")
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.ewmaMerge)
-    val out = graft.streaming.StreamingPower.mergedEwma(s, store, "user_id")
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -565,19 +559,15 @@ object EventStoreQueries {
     */
   private val trendStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q247_trend")
-    val store = scratch.toString + "/trend"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.trendStep(
-        ev.filter(col("event_id") % 3 === b), "event_type", "ts",
-        store, batchId = b)
+    withScratch(s, "graft_q247_trend") { scratch =>
+      val store = scratch + "/trend"
+      (0L until 3L).foreach { b =>
+        StreamingPower.trend.append(s, store, b)(Sessions.dailyCounts(
+          ev.filter(col("event_id") % 3 === b), "event_type", "ts"))
+      }
+      StreamingPower.trend.compact(s, store)
+      Sessions.trendFromDaily(StreamingPower.trend.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.trendMerge)
-    val out = graft.streaming.StreamingPower.mergedTrend(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -652,19 +642,15 @@ object EventStoreQueries {
     */
   private val cusumStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q264_cusum")
-    val store = scratch.toString + "/trend"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.trendStep(
-        ev.filter(col("event_id") % 3 === b), "event_type", "ts",
-        store, batchId = b)
+    withScratch(s, "graft_q264_cusum") { scratch =>
+      val store = scratch + "/trend"
+      (0L until 3L).foreach { b =>
+        StreamingPower.trend.append(s, store, b)(Sessions.dailyCounts(
+          ev.filter(col("event_id") % 3 === b), "event_type", "ts"))
+      }
+      StreamingPower.trend.compact(s, store)
+      Sessions.cusumDaily(StreamingPower.trend.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.trendMerge)
-    val out = graft.streaming.StreamingPower.mergedCusum(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q274: the seasonal-decomposition readout over a streamed hourly
@@ -673,19 +659,16 @@ object EventStoreQueries {
     */
   private val seasonalStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_q274_seasonal")
-    val store = scratch.toString + "/seasonal"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.seasonalStep(
-        ev.filter(col("event_id") % 3 === b), "ts", store, batchId = b)
+    withScratch(s, "graft_q274_seasonal") { scratch =>
+      val store = scratch + "/seasonal"
+      (0L until 3L).foreach { b =>
+        StreamingPower.seasonal.append(s, store, b)(StreamingPower
+          .seasonalRows(ev.filter(col("event_id") % 3 === b), "ts"))
+      }
+      StreamingPower.seasonal.compact(s, store)
+      Resample.seasonalFromBuckets(StreamingPower.seasonal.read(s, store),
+        stepSeconds = 3600L, period = 24, halfWindow = 12)
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.seasonalMerge)
-    val out = graft.streaming.StreamingPower.mergedSeasonal(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q253: RFM user segmentation as of Jan 31 — quintile scores per
@@ -713,20 +696,17 @@ object EventStoreQueries {
     */
   private val cadenceStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q151_cad")
-    val store = scratch.toString + "/cadence"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.cadenceStep(
-        ev.filter(col("event_id") % 3 === b), "user_id", "ts",
-        stepSeconds = 3600L, store, batchId = b)
+    withScratch(s, "graft_q151_cad") { scratch =>
+      val store = scratch + "/cadence"
+      (0L until 3L).foreach { b =>
+        StreamingPower.cadence.append(s, store, b)(StreamingPower.cadenceRows(
+          ev.filter(col("event_id") % 3 === b), "user_id", "ts",
+          stepSeconds = 3600L))
+      }
+      StreamingPower.cadence.compact(s, store)
+      Resample.gapFromBuckets(StreamingPower.cadence.read(s, store),
+        "user_id", stepSeconds = 3600L)
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.cadenceMerge)
-    val out = graft.streaming.StreamingPower
-      .cadenceReport(s, store, "user_id", stepSeconds = 3600L)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -737,18 +717,15 @@ object EventStoreQueries {
     */
   private val momentStoreQ: Q = (s, dir) => {
     val emb = Tables.embeddings(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q152_mom")
-    val store = scratch.toString + "/moments"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.momentStep(
-        emb.filter(col("vec_id") % 3 === b), "embedding", store, batchId = b)
+    withScratch(s, "graft_q152_mom") { scratch =>
+      val store = scratch + "/moments"
+      (0L until 3L).foreach { b =>
+        StreamingPower.moment.append(s, store, b)(StreamingPower.momentRows(
+          emb.filter(col("vec_id") % 3 === b), "embedding"))
+      }
+      StreamingPower.moment.compact(s, store)
+      StreamingPower.momentReport(StreamingPower.moment.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.momentMerge)
-    val out = graft.streaming.StreamingPower.momentReport(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -770,18 +747,15 @@ object EventStoreQueries {
   private val profileStoreQ: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
     val cols = Seq("doc_id", "lang", "n_chars", "source", "text")
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q172_prof")
-    val store = scratch.toString + "/profile"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.profileStep(
-        docs.filter(col("doc_id") % 3 === b), cols, store, batchId = b)
+    withScratch(s, "graft_q172_prof") { scratch =>
+      val store = scratch + "/profile"
+      (0L until 3L).foreach { b =>
+        StreamingPower.profile.append(s, store, b)(Profile.valueHistogram(
+          docs.filter(col("doc_id") % 3 === b), cols))
+      }
+      StreamingPower.profile.compact(s, store)
+      Profile.profileFromCounts(StreamingPower.profile.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.profileMerge)
-    val out = graft.streaming.StreamingPower.mergedProfile(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -795,20 +769,17 @@ object EventStoreQueries {
     val docs = Tables.documents(s, dir)
       .withColumn("tgt",
         when(col("source").isin("src0", "src1"), 1).otherwise(0))
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q186_dsir")
-    val store = scratch.toString + "/dsir"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.dsirStep(
-        docs.filter(col("doc_id") % 3 === b), "doc_id", "text", "tgt",
-        buckets = 256, store, batchId = b)
+    withScratch(s, "graft_q186_dsir") { scratch =>
+      val store = scratch + "/dsir"
+      (0L until 3L).foreach { b =>
+        StreamingPower.dsir.append(s, store, b)(Sampling.dsirBucketStats(
+          docs.filter(col("doc_id") % 3 === b), "doc_id", "text", "tgt",
+          buckets = 256))
+      }
+      StreamingPower.dsir.compact(s, store)
+      Sampling.importanceResampleWith(docs, "doc_id", "text",
+        StreamingPower.dsir.read(s, store), n = 100, buckets = 256)
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.dsirMerge)
-    val out = graft.streaming.StreamingPower.mergedDsirSample(s, store,
-        docs, "doc_id", "text", n = 100)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -820,19 +791,15 @@ object EventStoreQueries {
     */
   private val funnelStoreQ: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q196_funnel")
-    val store = scratch.toString + "/funnel"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.funnelStep(
-        docs.filter(col("doc_id") % 3 === b), "doc_id", "text", store,
-        batchId = b)
+    withScratch(s, "graft_q196_funnel") { scratch =>
+      val store = scratch + "/funnel"
+      (0L until 3L).foreach { b =>
+        StreamingPower.funnel.append(s, store, b)(StreamingPower.funnelRows(
+          docs.filter(col("doc_id") % 3 === b), "doc_id", "text"))
+      }
+      StreamingPower.funnel.compact(s, store)
+      TextAnalysis.funnelReport(StreamingPower.funnel.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.funnelMerge)
-    val out = graft.streaming.StreamingPower.mergedFunnel(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
 
@@ -905,43 +872,41 @@ object EventStoreQueries {
     * scales one partition per payload file. Value sums travel as
     * fixed-point longs (the q148 order-invariance rule).
     */
-  private val feedSourceQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q163_feed")
-    val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
-        col("value"))
-    val bodies = recs
-      .withColumn("bucket", pmod(xxhash64(col("event_id")), lit(4)).cast("int"))
-      .select(col("bucket"), to_json(struct(col("event_id"), col("user_id"),
-        col("event_type"), col("minutes1_utc"), col("value"))).as("j"))
-      .groupBy("bucket")
-      .agg(concat(lit("{\"records\":["),
-        concat_ws(",", collect_list(col("j"))), lit("]}")).as("body"))
-      .collect()
-    bodies.foreach { r =>
-      java.nio.file.Files.write(scratch.resolve(f"page${r.getInt(0)}%02d.json"),
-        r.getString(1).getBytes("UTF-8"))
+  private val feedSourceQ: Q = (s, dir) =>
+    withScratch(s, "graft_q163_feed") { scratch =>
+      val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
+          col("value"))
+      val bodies = recs
+        .withColumn("bucket", pmod(xxhash64(col("event_id")), lit(4)).cast("int"))
+        .select(col("bucket"), to_json(struct(col("event_id"), col("user_id"),
+          col("event_type"), col("minutes1_utc"), col("value"))).as("j"))
+        .groupBy("bucket")
+        .agg(concat(lit("{\"records\":["),
+          concat_ws(",", collect_list(col("j"))), lit("]}")).as("body"))
+        .collect()
+      bodies.foreach { r =>
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(scratch, f"page${r.getInt(0)}%02d.json"),
+          r.getString(1).getBytes("UTF-8"))
+      }
+      // explicit schema: `to_json` drops null fields, so inference from
+      // one payload could miss a key — inference is FeedSourceSpec's job
+      val feed = s.read.format("graft.sources.FeedSource")
+        .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
+          "minutes1_utc STRING, value DOUBLE")
+        .option("endpoint", scratch)
+        .option("cursorField", "minutes1_utc")
+        .option("startCursor", "2024-01-16T00:00:00")
+        .load()
+      feed.groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 1e6).cast("long")).as("value_sum_us"),
+          min(col("minutes1_utc")).as("min_cursor"),
+          max(col("minutes1_utc")).as("max_cursor"))
+        .orderBy("event_type")
     }
-    // explicit schema: `to_json` drops null fields, so inference from
-    // one payload could miss a key — inference is FeedSourceSpec's job
-    val feed = s.read.format("graft.sources.FeedSource")
-      .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
-        "minutes1_utc STRING, value DOUBLE")
-      .option("endpoint", scratch.toString)
-      .option("cursorField", "minutes1_utc")
-      .option("startCursor", "2024-01-16T00:00:00")
-      .load()
-    val out = feed.groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 1e6).cast("long")).as("value_sum_us"),
-        min(col("minutes1_utc")).as("min_cursor"),
-        max(col("minutes1_utc")).as("max_cursor"))
-      .orderBy("event_type")
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
-  }
 
   private val feedBronzeOracle: String =
     """SELECT event_type,
@@ -966,92 +931,89 @@ object EventStoreQueries {
     * oracle certifies batch ingest, live-paged ingest, and the polling
     * stream against one truth.
     */
-  private val feedHttpStreamQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q301_stream")
-    val sink = scratch.resolve("bronze").toString
-    val ckpt = scratch.resolve("ckpt").toString
-    val rowsDf = Tables.events(s, dir)
-      .filter(col("event_id") % 20 === 0 && col("ts").isNotNull)
-      .select(
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("c"),
-        to_json(struct(col("event_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
-          round(col("value") * 1e6).cast("long").as("value_us"))).as("j"))
-    val rows = collectFixtureRows(rowsDf, "c", "j")
-    val cursors = rows.map(_.getString(0))
-    val bodies = rows.map(_.getString(1))
-    val horizon = new java.util.concurrent.atomic.AtomicReference(
-      "2024-01-20T00:00:00") // drain-1 horizon; lifted before drain 2
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/dataset/PowerSystemRightNow",
-      (x: com.sun.net.httpserver.HttpExchange) => {
-        val q = Option(x.getRequestURI.getRawQuery).getOrElse("")
-        val params = q.split("&").filter(_.contains("=")).map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          k -> java.net.URLDecoder.decode(v, "UTF-8")
-        }.toMap
-        val start = params.getOrElse("start", "")
-        val offset = params.getOrElse("offset", "0").toLong
-        val limit = params.getOrElse("limit", "1000000").toInt
-        val hz = horizon.get
-        val idx = cursors.indices.filter(i =>
-          cursors(i) >= start && cursors(i) < hz)
-        val total = idx.length
-        val page = idx.slice(
-          math.min(offset, total).toInt,
-          math.min(offset + limit, total).toInt)
-        val body = page.map(bodies)
-          .mkString(s"""{"total": $total, "records": [""", ",", "]}")
-          .getBytes("UTF-8")
-        x.getResponseHeaders.add("Content-Type", "application/json")
-        x.sendResponseHeaders(200, body.length)
-        x.getResponseBody.write(body)
-        x.close()
-      })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}" +
-        "/dataset/PowerSystemRightNow"
-      def drain(): Unit = {
-        val q = s.readStream.format("graft.sources.FeedSource")
-          .schema("event_id BIGINT, event_type STRING, " +
-            "minutes1_utc STRING, value_us BIGINT")
-          .option("endpoint", url)
-          .option("cursorField", "minutes1_utc")
-          .option("pageSize", "256")
-          .option("maxPagesPerPoll", "4")
-          .option("pollIntervalMs", "0")
-          .load()
-          .writeStream
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => {
-            IdempotentSink.appendIfAbsent(s, df, sink, Seq("event_id"))
-            ()
-          })
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+  private val feedHttpStreamQ: Q = (s, dir) =>
+    withScratch(s, "graft_q301_stream") { scratch =>
+      val sink = s"$scratch/bronze"
+      val ckpt = s"$scratch/ckpt"
+      val rowsDf = Tables.events(s, dir)
+        .filter(col("event_id") % 20 === 0 && col("ts").isNotNull)
+        .select(
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("c"),
+          to_json(struct(col("event_id"), col("event_type"),
+            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
+            round(col("value") * 1e6).cast("long").as("value_us"))).as("j"))
+      val rows = collectFixtureRows(rowsDf, "c", "j")
+      val cursors = rows.map(_.getString(0))
+      val bodies = rows.map(_.getString(1))
+      val horizon = new java.util.concurrent.atomic.AtomicReference(
+        "2024-01-20T00:00:00") // drain-1 horizon; lifted before drain 2
+      val server = com.sun.net.httpserver.HttpServer.create(
+        new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      server.createContext("/dataset/PowerSystemRightNow",
+        (x: com.sun.net.httpserver.HttpExchange) => {
+          val q = Option(x.getRequestURI.getRawQuery).getOrElse("")
+          val params = q.split("&").filter(_.contains("=")).map { kv =>
+            val Array(k, v) = kv.split("=", 2)
+            k -> java.net.URLDecoder.decode(v, "UTF-8")
+          }.toMap
+          val start = params.getOrElse("start", "")
+          val offset = params.getOrElse("offset", "0").toLong
+          val limit = params.getOrElse("limit", "1000000").toInt
+          val hz = horizon.get
+          val idx = cursors.indices.filter(i =>
+            cursors(i) >= start && cursors(i) < hz)
+          val total = idx.length
+          val page = idx.slice(
+            math.min(offset, total).toInt,
+            math.min(offset + limit, total).toInt)
+          val body = page.map(bodies)
+            .mkString(s"""{"total": $total, "records": [""", ",", "]}")
+            .getBytes("UTF-8")
+          x.getResponseHeaders.add("Content-Type", "application/json")
+          x.sendResponseHeaders(200, body.length)
+          x.getResponseBody.write(body)
+          x.close()
+        })
+      server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
+      server.start()
+      try {
+        val url = s"http://127.0.0.1:${server.getAddress.getPort}" +
+          "/dataset/PowerSystemRightNow"
+        def drain(): Unit = {
+          val q = s.readStream.format("graft.sources.FeedSource")
+            .schema("event_id BIGINT, event_type STRING, " +
+              "minutes1_utc STRING, value_us BIGINT")
+            .option("endpoint", url)
+            .option("cursorField", "minutes1_utc")
+            .option("pageSize", "256")
+            .option("maxPagesPerPoll", "4")
+            .option("pollIntervalMs", "0")
+            .load()
+            .writeStream
+            .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => {
+              IdempotentSink.appendIfAbsent(s, df, sink, Seq("event_id"))
+              ()
+            })
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+        }
+        drain() // drain 1: records below the horizon, in capped batches
+        horizon.set("~") // '~' > any ISO timestamp: the feed "caught up"
+        drain() // drain 2: resumes at the checkpointed record position
+        IdempotentSink.read(s, sink)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
+            min(col("minutes1_utc")).as("min_cursor"),
+            max(col("minutes1_utc")).as("max_cursor"))
+          .orderBy("event_type")
+      } finally {
+        server.stop(0)
+        server.getExecutor
+          .asInstanceOf[java.util.concurrent.ExecutorService].shutdown()
       }
-      drain() // drain 1: records below the horizon, in capped batches
-      horizon.set("~") // '~' > any ISO timestamp: the feed "caught up"
-      drain() // drain 2: resumes at the checkpointed record position
-      val out = IdempotentSink.read(s, sink)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
-          min(col("minutes1_utc")).as("min_cursor"),
-          max(col("minutes1_utc")).as("max_cursor"))
-        .orderBy("event_type")
-        .localCheckpoint()
-      deleteRecursively(s, scratch.toString)
-      out
-    } finally {
-      server.stop(0)
-      server.getExecutor
-        .asInstanceOf[java.util.concurrent.ExecutorService].shutdown()
     }
-  }
 
   /** q292: the reference's bronze ingest LOOP over the LIVE transport
     * — q164's contract (poll → cursor from the sink's watermark →
@@ -1065,85 +1027,82 @@ object EventStoreQueries {
     * against one truth. Fixture server corpus is the q285 bounded
     * collect; the ingest path never collects.
     */
-  private val feedHttpBronzeQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q292_http")
-    val sink = scratch.resolve("bronze").toString
-    val rowsDf = Tables.events(s, dir)
-      .filter(col("event_id") % 20 === 0 && col("ts").isNotNull)
-      .select(
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("c"),
-        to_json(struct(col("event_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
-          round(col("value") * 1e6).cast("long").as("value_us"))).as("j"))
-    val rows = collectFixtureRows(rowsDf, "c", "j")
-    val cursors = rows.map(_.getString(0))
-    val bodies = rows.map(_.getString(1))
-    val horizon = new java.util.concurrent.atomic.AtomicReference(
-      "2024-01-20T00:00:00") // poll-1 horizon; lifted before poll 2
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/dataset/PowerSystemRightNow",
-      (x: com.sun.net.httpserver.HttpExchange) => {
-        val q = Option(x.getRequestURI.getRawQuery).getOrElse("")
-        val params = q.split("&").filter(_.contains("=")).map { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          k -> java.net.URLDecoder.decode(v, "UTF-8")
-        }.toMap
-        val start = params.getOrElse("start", "")
-        val offset = params.getOrElse("offset", "0").toLong
-        val limit = params.getOrElse("limit", "1000000").toInt
-        val hz = horizon.get
-        val idx = cursors.indices.filter(i =>
-          cursors(i) >= start && cursors(i) < hz)
-        val total = idx.length
-        val page = idx.slice(
-          math.min(offset, total).toInt,
-          math.min(offset + limit, total).toInt)
-        val body = page.map(bodies)
-          .mkString(s"""{"total": $total, "records": [""", ",", "]}")
-          .getBytes("UTF-8")
-        x.getResponseHeaders.add("Content-Type", "application/json")
-        x.sendResponseHeaders(200, body.length)
-        x.getResponseBody.write(body)
-        x.close()
-      })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
-    server.start()
-    try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}" +
-        "/dataset/PowerSystemRightNow"
-      def ingest(): Unit = {
-        val cursor =
-          if (IdempotentSink.exists(s, sink))
-            IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
-          else null
-        var rd = s.read.format("graft.sources.FeedSource")
-          .schema("event_id BIGINT, event_type STRING, " +
-            "minutes1_utc STRING, value_us BIGINT")
-          .option("endpoint", url)
-          .option("cursorField", "minutes1_utc")
-          .option("pageSize", "256")
-        if (cursor != null) rd = rd.option("startCursor", cursor)
-        IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
+  private val feedHttpBronzeQ: Q = (s, dir) =>
+    withScratch(s, "graft_q292_http") { scratch =>
+      val sink = s"$scratch/bronze"
+      val rowsDf = Tables.events(s, dir)
+        .filter(col("event_id") % 20 === 0 && col("ts").isNotNull)
+        .select(
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("c"),
+          to_json(struct(col("event_id"), col("event_type"),
+            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
+            round(col("value") * 1e6).cast("long").as("value_us"))).as("j"))
+      val rows = collectFixtureRows(rowsDf, "c", "j")
+      val cursors = rows.map(_.getString(0))
+      val bodies = rows.map(_.getString(1))
+      val horizon = new java.util.concurrent.atomic.AtomicReference(
+        "2024-01-20T00:00:00") // poll-1 horizon; lifted before poll 2
+      val server = com.sun.net.httpserver.HttpServer.create(
+        new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      server.createContext("/dataset/PowerSystemRightNow",
+        (x: com.sun.net.httpserver.HttpExchange) => {
+          val q = Option(x.getRequestURI.getRawQuery).getOrElse("")
+          val params = q.split("&").filter(_.contains("=")).map { kv =>
+            val Array(k, v) = kv.split("=", 2)
+            k -> java.net.URLDecoder.decode(v, "UTF-8")
+          }.toMap
+          val start = params.getOrElse("start", "")
+          val offset = params.getOrElse("offset", "0").toLong
+          val limit = params.getOrElse("limit", "1000000").toInt
+          val hz = horizon.get
+          val idx = cursors.indices.filter(i =>
+            cursors(i) >= start && cursors(i) < hz)
+          val total = idx.length
+          val page = idx.slice(
+            math.min(offset, total).toInt,
+            math.min(offset + limit, total).toInt)
+          val body = page.map(bodies)
+            .mkString(s"""{"total": $total, "records": [""", ",", "]}")
+            .getBytes("UTF-8")
+          x.getResponseHeaders.add("Content-Type", "application/json")
+          x.sendResponseHeaders(200, body.length)
+          x.getResponseBody.write(body)
+          x.close()
+        })
+      server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(16))
+      server.start()
+      try {
+        val url = s"http://127.0.0.1:${server.getAddress.getPort}" +
+          "/dataset/PowerSystemRightNow"
+        def ingest(): Unit = {
+          val cursor =
+            if (IdempotentSink.exists(s, sink))
+              IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
+            else null
+          var rd = s.read.format("graft.sources.FeedSource")
+            .schema("event_id BIGINT, event_type STRING, " +
+              "minutes1_utc STRING, value_us BIGINT")
+            .option("endpoint", url)
+            .option("cursorField", "minutes1_utc")
+            .option("pageSize", "256")
+          if (cursor != null) rd = rd.option("startCursor", cursor)
+          IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
+        }
+        ingest() // poll 1: records below the horizon
+        horizon.set("~") // '~' > any ISO timestamp: the feed "caught up"
+        ingest() // poll 2: start = sink watermark, boundary re-read deduped
+        IdempotentSink.read(s, sink)
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
+            min(col("minutes1_utc")).as("min_cursor"),
+            max(col("minutes1_utc")).as("max_cursor"))
+          .orderBy("event_type")
+      } finally {
+        server.stop(0)
+        server.getExecutor
+          .asInstanceOf[java.util.concurrent.ExecutorService].shutdown()
       }
-      ingest() // poll 1: records below the horizon
-      horizon.set("~") // '~' > any ISO timestamp: the feed "caught up"
-      ingest() // poll 2: start = sink watermark, boundary re-read deduped
-      val out = IdempotentSink.read(s, sink)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
-          min(col("minutes1_utc")).as("min_cursor"),
-          max(col("minutes1_utc")).as("max_cursor"))
-        .orderBy("event_type")
-        .localCheckpoint()
-      deleteRecursively(s, scratch.toString)
-      out
-    } finally {
-      server.stop(0)
-      server.getExecutor
-        .asInstanceOf[java.util.concurrent.ExecutorService].shutdown()
     }
-  }
 
   /** q290: perceptual-hash IMAGE near-dup — the multimodal twin of
     * SimHash-on-text, over REAL rasters: docs render to true 9×8
@@ -1182,24 +1141,21 @@ object EventStoreQueries {
     // below — each batch would encode the WHOLE corpus and keep a
     // third (3x the codec CPU for the same rows)
     val docs = Tables.documents(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q326_ih")
-    val store = scratch.toString + "/imagehash"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.imageHashStep(
-        Multimodal.withPatternedImagePayload(
-          docs.filter(col("doc_id") % 3 === b)), store, batchId = b)
+    withScratch(s, "graft_q326_ih") { scratch =>
+      val store = scratch + "/imagehash"
+      (0L until 3L).foreach { b =>
+        StreamingPower.fingerprint.append(s, store, b)(StreamingPower
+          .fingerprintRows(Multimodal.dHash(Multimodal.withPatternedImagePayload(
+            docs.filter(col("doc_id") % 3 === b)))))
+      }
+      StreamingPower.fingerprint.compact(s, store)
+      Multimodal.dHashPairHistogram(StreamingPower.fingerprint.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.imageHashMerge)
-    val out = graft.streaming.StreamingPower.mergedImagePairs(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q336: the PERSISTED audio-fingerprint tier — the acoustic twin
     * of q326: each clip's RIFF/PCM parse is paid ONCE, at ingest
-    * (`StreamingPower.audioFpStep`), only the two 32-bit
+    * (`Multimodal.audioFingerprint`), only the two 32-bit
     * energy-gradient words land in the batch store (three doc-disjoint
     * appends), compacted, then the banded Hamming pair readout runs
     * off the STORE — streamed ≡ one-shot, the q290 pair machinery
@@ -1214,25 +1170,23 @@ object EventStoreQueries {
     // batch-split BEFORE the payload synthesis (see q326): a filter
     // after the opaque encode re-synthesizes the whole corpus per batch
     val docs = Tables.documents(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q336_afp")
-    val store = scratch.toString + "/audiofp"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.audioFpStep(
-        Multimodal.withPatternedAudioPayload(
-          docs.filter(col("doc_id") % 3 === b)), store, batchId = b)
+    withScratch(s, "graft_q336_afp") { scratch =>
+      val store = scratch + "/audiofp"
+      (0L until 3L).foreach { b =>
+        StreamingPower.fingerprint.append(s, store, b)(StreamingPower
+          .fingerprintRows(Multimodal.audioFingerprint(
+            Multimodal.withPatternedAudioPayload(
+              docs.filter(col("doc_id") % 3 === b)))))
+      }
+      StreamingPower.fingerprint.compact(s, store)
+      Multimodal.dHashPairHistogram(StreamingPower.fingerprint.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.audioFpMerge)
-    val out = graft.streaming.StreamingPower.mergedAudioPairs(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q339: the PERSISTED video-fingerprint tier — the temporal third
     * of the modality triple (q326 images, q336 audio): each clip's
     * frame sequence decodes ONCE at ingest
-    * (`StreamingPower.videoFpStep` — every sampled frame's full
+    * (`Multimodal.videoFingerprint` — every sampled frame's full
     * raster), only the two 32-bit temporal-signature words land in
     * the batch store (three doc-disjoint appends), compacted, then
     * the banded Hamming pair readout runs off the STORE — streamed ≡
@@ -1246,19 +1200,17 @@ object EventStoreQueries {
     // batch-split BEFORE the payload synthesis (see q326): a filter
     // after the opaque encode re-synthesizes the whole corpus per batch
     val docs = Tables.documents(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q339_vfp")
-    val store = scratch.toString + "/videofp"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.videoFpStep(
-        Multimodal.withPatternedVideoPayload(
-          docs.filter(col("doc_id") % 3 === b)), store, batchId = b)
+    withScratch(s, "graft_q339_vfp") { scratch =>
+      val store = scratch + "/videofp"
+      (0L until 3L).foreach { b =>
+        StreamingPower.fingerprint.append(s, store, b)(StreamingPower
+          .fingerprintRows(Multimodal.videoFingerprint(
+            Multimodal.withPatternedVideoPayload(
+              docs.filter(col("doc_id") % 3 === b)))))
+      }
+      StreamingPower.fingerprint.compact(s, store)
+      Multimodal.dHashPairHistogram(StreamingPower.fingerprint.read(s, store))
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.videoFpMerge)
-    val out = graft.streaming.StreamingPower.mergedVideoPairs(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q285: LIVE HTTP ingest end-to-end — the reference's actual
@@ -1359,55 +1311,52 @@ object EventStoreQueries {
     * pattern); the ingest path itself is the production shape —
     * feed scan → anti-join on the healed store → append.
     */
-  private val feedBronzeQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q164_bronze")
-    val feedDir = scratch.resolve("feed")
-    java.nio.file.Files.createDirectories(feedDir)
-    val sink = scratch.resolve("bronze").toString
-    val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
-      .select(col("event_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
-        round(col("value") * 1e6).cast("long").as("value_us"))
-    val cut = "2024-01-20T00:00:00" // poll-1 horizon
-    val overlapFrom = "2024-01-15T00:00:00" // poll 2 re-delivers from here
-    def drop(name: String, df: DataFrame): Unit = {
-      val body = df
-        .select(to_json(struct(col("event_id"), col("event_type"),
-          col("minutes1_utc"), col("value_us"))).as("j"))
-        .agg(concat(lit("{\"records\":["),
-          concat_ws(",", collect_list(col("j"))), lit("]}")).as("b"))
-        .head.getString(0)
-      java.nio.file.Files.write(feedDir.resolve(name), body.getBytes("UTF-8"))
+  private val feedBronzeQ: Q = (s, dir) =>
+    withScratch(s, "graft_q164_bronze") { scratch =>
+      val feedDir = java.nio.file.Paths.get(scratch, "feed")
+      java.nio.file.Files.createDirectories(feedDir)
+      val sink = s"$scratch/bronze"
+      val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
+        .select(col("event_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
+          round(col("value") * 1e6).cast("long").as("value_us"))
+      val cut = "2024-01-20T00:00:00" // poll-1 horizon
+      val overlapFrom = "2024-01-15T00:00:00" // poll 2 re-delivers from here
+      def drop(name: String, df: DataFrame): Unit = {
+        val body = df
+          .select(to_json(struct(col("event_id"), col("event_type"),
+            col("minutes1_utc"), col("value_us"))).as("j"))
+          .agg(concat(lit("{\"records\":["),
+            concat_ws(",", collect_list(col("j"))), lit("]}")).as("b"))
+          .head.getString(0)
+        java.nio.file.Files.write(feedDir.resolve(name), body.getBytes("UTF-8"))
+      }
+      def ingest(): Unit = {
+        val cursor =
+          if (IdempotentSink.exists(s, sink))
+            IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
+          else null
+        var rd = s.read.format("graft.sources.FeedSource")
+          .schema("event_id BIGINT, event_type STRING, minutes1_utc STRING, " +
+            "value_us BIGINT")
+          .option("endpoint", feedDir.toString)
+          .option("cursorField", "minutes1_utc")
+        if (cursor != null) rd = rd.option("startCursor", cursor)
+        // >= cursor re-reads the boundary second from already-ingested
+        // drops — exactly the at-least-once window the PK dedup absorbs
+        IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
+      }
+      drop("drop-000.json", recs.filter(col("minutes1_utc") < cut))
+      ingest()
+      drop("drop-001.json", recs.filter(col("minutes1_utc") >= overlapFrom))
+      ingest()
+      IdempotentSink.read(s, sink)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
+          min(col("minutes1_utc")).as("min_cursor"),
+          max(col("minutes1_utc")).as("max_cursor"))
+        .orderBy("event_type")
     }
-    def ingest(): Unit = {
-      val cursor =
-        if (IdempotentSink.exists(s, sink))
-          IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
-        else null
-      var rd = s.read.format("graft.sources.FeedSource")
-        .schema("event_id BIGINT, event_type STRING, minutes1_utc STRING, " +
-          "value_us BIGINT")
-        .option("endpoint", feedDir.toString)
-        .option("cursorField", "minutes1_utc")
-      if (cursor != null) rd = rd.option("startCursor", cursor)
-      // >= cursor re-reads the boundary second from already-ingested
-      // drops — exactly the at-least-once window the PK dedup absorbs
-      IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
-    }
-    drop("drop-000.json", recs.filter(col("minutes1_utc") < cut))
-    ingest()
-    drop("drop-001.json", recs.filter(col("minutes1_utc") >= overlapFrom))
-    ingest()
-    val out = IdempotentSink.read(s, sink)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
-        min(col("minutes1_utc")).as("min_cursor"),
-        max(col("minutes1_utc")).as("max_cursor"))
-      .orderBy("event_type")
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
-  }
 
   /** q279: ADDITIVE SCHEMA EVOLUTION through the whole bronze chain —
     * the dlt auto-evolve behavior (`bronze_ingest.py:39-43`) under the
@@ -1426,58 +1375,55 @@ object EventStoreQueries {
     * the MIXED payload store (union across payloads), not from a
     * caller-supplied schema.
     */
-  private val schemaEvolutionQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q279_evo")
-    val feedDir = scratch.resolve("feed")
-    java.nio.file.Files.createDirectories(feedDir)
-    val sink = scratch.resolve("bronze").toString
-    val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
-      .select(col("event_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
-        round(col("value") * 1e6).cast("long").as("value_us"))
-    val cut = "2024-01-20T00:00:00" // poll-1 horizon == evolution point
-    val overlapFrom = "2024-01-15T00:00:00" // poll 2 re-delivers from here
-    def drop(name: String, df: DataFrame, cols: Seq[String]): Unit = {
-      val body = df
-        .select(to_json(struct(cols.map(col): _*)).as("j"))
-        .agg(concat(lit("{\"records\":["),
-          concat_ws(",", collect_list(col("j"))), lit("]}")).as("b"))
-        .head.getString(0)
-      java.nio.file.Files.write(feedDir.resolve(name), body.getBytes("UTF-8"))
+  private val schemaEvolutionQ: Q = (s, dir) =>
+    withScratch(s, "graft_q279_evo") { scratch =>
+      val feedDir = java.nio.file.Paths.get(scratch, "feed")
+      java.nio.file.Files.createDirectories(feedDir)
+      val sink = s"$scratch/bronze"
+      val recs = Tables.events(s, dir).filter(col("event_id") % 20 === 0)
+        .select(col("event_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("minutes1_utc"),
+          round(col("value") * 1e6).cast("long").as("value_us"))
+      val cut = "2024-01-20T00:00:00" // poll-1 horizon == evolution point
+      val overlapFrom = "2024-01-15T00:00:00" // poll 2 re-delivers from here
+      def drop(name: String, df: DataFrame, cols: Seq[String]): Unit = {
+        val body = df
+          .select(to_json(struct(cols.map(col): _*)).as("j"))
+          .agg(concat(lit("{\"records\":["),
+            concat_ws(",", collect_list(col("j"))), lit("]}")).as("b"))
+          .head.getString(0)
+        java.nio.file.Files.write(feedDir.resolve(name), body.getBytes("UTF-8"))
+      }
+      def ingest(): Unit = {
+        val cursor =
+          if (IdempotentSink.exists(s, sink))
+            IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
+          else null
+        // schema INFERRED from the mixed payload store (the additive
+        // union), not caller-supplied — the evolution surface under test
+        var rd = s.read.format("graft.sources.FeedSource")
+          .option("endpoint", feedDir.toString)
+          .option("cursorField", "minutes1_utc")
+        if (cursor != null) rd = rd.option("startCursor", cursor)
+        IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
+      }
+      val base = Seq("event_id", "event_type", "minutes1_utc", "value_us")
+      drop("drop-000.json", recs.filter(col("minutes1_utc") < cut), base)
+      ingest()
+      drop("drop-001.json",
+        recs.filter(col("minutes1_utc") >= overlapFrom)
+          .withColumn("quality", pmod(col("event_id"), lit(5L))),
+        base :+ "quality")
+      ingest()
+      IdempotentSink.read(s, sink)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
+          count(col("quality")).as("n_quality"),
+          coalesce(sum(col("quality")), lit(0L)).as("quality_sum"),
+          min(col("minutes1_utc")).as("min_cursor"),
+          max(col("minutes1_utc")).as("max_cursor"))
+        .orderBy("event_type")
     }
-    def ingest(): Unit = {
-      val cursor =
-        if (IdempotentSink.exists(s, sink))
-          IdempotentSink.read(s, sink).agg(max("minutes1_utc")).head.getString(0)
-        else null
-      // schema INFERRED from the mixed payload store (the additive
-      // union), not caller-supplied — the evolution surface under test
-      var rd = s.read.format("graft.sources.FeedSource")
-        .option("endpoint", feedDir.toString)
-        .option("cursorField", "minutes1_utc")
-      if (cursor != null) rd = rd.option("startCursor", cursor)
-      IdempotentSink.appendIfAbsent(s, rd.load(), sink, Seq("event_id"))
-    }
-    val base = Seq("event_id", "event_type", "minutes1_utc", "value_us")
-    drop("drop-000.json", recs.filter(col("minutes1_utc") < cut), base)
-    ingest()
-    drop("drop-001.json",
-      recs.filter(col("minutes1_utc") >= overlapFrom)
-        .withColumn("quality", pmod(col("event_id"), lit(5L))),
-      base :+ "quality")
-    ingest()
-    val out = IdempotentSink.read(s, sink)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("value_us")).as("value_sum_us"),
-        count(col("quality")).as("n_quality"),
-        coalesce(sum(col("quality")), lit(0L)).as("quality_sum"),
-        min(col("minutes1_utc")).as("min_cursor"),
-        max(col("minutes1_utc")).as("max_cursor"))
-      .orderBy("event_type")
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
-  }
 
   /** q280: grouped quantiles with NO pre-declared bin edges — the
     * mergeable bottom-k (KMV-style) quantile sketch
@@ -1497,29 +1443,23 @@ object EventStoreQueries {
     * micro-batch appends of per-batch bottom-k samples (batch 1
     * re-delivers a third of batch 0: the (group, h) dedup inside the
     * merge absorbs it where a naive union would skew the sample),
-    * compacted through `quantileMerge`, read out through the same
+    * compacted through the store's bottom-k fold, read out through the same
     * ranked readout. Shares q280's oracle verbatim: streamed must
     * equal one-shot, which is exactly the bottom-k merge identity.
     */
   private val quantileStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q281_qtile")
-    val store = scratch.toString + "/qtile"
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 === 0), "event_type", "event_id",
-      "value", k = 256, store, batchId = 0L)
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 <= 1), "event_type", "event_id",
-      "value", k = 256, store, batchId = 1L)
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 === 2), "event_type", "event_id",
-      "value", k = 256, store, batchId = 2L)
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.quantileMerge(256))
-    val out = graft.streaming.StreamingPower.mergedQuantiles(s, store, 256)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q281_qtile") { scratch =>
+      val store = scratch + "/qtile"
+      val sample = StreamingPower.quantile(256)
+      Seq(col("event_id") % 3 === 0, col("event_id") % 3 <= 1,
+          col("event_id") % 3 === 2).zipWithIndex.foreach { case (slice, b) =>
+        sample.append(s, store, b)(Sketches.quantileSample(ev.filter(slice),
+          "event_type", "event_id", "value", k = 256))
+      }
+      sample.compact(s, store)
+      Sketches.quantilesFromSample(sample.read(s, store))
+    }
   }
 
   /** q181: streaming HLL distinct-count store — the documents table
@@ -1530,20 +1470,16 @@ object EventStoreQueries {
     */
   private val hllStoreQ: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q181_hll")
-    val store = scratch.toString + "/hll"
-    graft.streaming.StreamingPower.hllStep(
-      docs.filter(col("doc_id") % 3 === 0), "text", store, batchId = 0L)
-    graft.streaming.StreamingPower.hllStep(
-      docs.filter(col("doc_id") % 3 <= 1), "text", store, batchId = 1L)
-    graft.streaming.StreamingPower.hllStep(
-      docs.filter(col("doc_id") % 3 === 2), "text", store, batchId = 2L)
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.hllMerge)
-    val out = graft.streaming.StreamingPower.mergedHllDistinct(s, store)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q181_hll") { scratch =>
+      val store = scratch + "/hll"
+      Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 <= 1,
+          col("doc_id") % 3 === 2).zipWithIndex.foreach { case (slice, b) =>
+        StreamingPower.hll.append(s, store, b)(
+          Sketches.hllRegisters(docs.filter(slice), col("text")))
+      }
+      StreamingPower.hll.compact(s, store)
+      Sketches.hllEstimateFromRegisters(StreamingPower.hll.read(s, store))
+    }
   }
 
   /** q211: signup→click→purchase conversion funnel, first-touch
@@ -1569,46 +1505,39 @@ object EventStoreQueries {
     */
   private val psiStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q216_psi")
-    val store = scratch.toString + "/psi"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.psiStep(
-        ev.filter(col("event_id") % 3 === b), "value", "event_type",
-        "click", "view", lo = 0.0, hi = 500.0, bins = 10, store, batchId = b)
+    withScratch(s, "graft_q216_psi") { scratch =>
+      val store = scratch + "/psi"
+      (0L until 3L).foreach { b =>
+        StreamingPower.psi.append(s, store, b)(StatTests.psiBinCounts(
+          ev.filter(col("event_id") % 3 === b), "value", "event_type",
+          "click", "view", lo = 0.0, hi = 500.0, bins = 10))
+      }
+      StreamingPower.psi.compact(s, store)
+      StatTests.psiFromCounts(StreamingPower.psi.read(s, store), bins = 10)
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.psiMerge)
-    val out = graft.streaming.StreamingPower.mergedPsi(s, store, bins = 10)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q324: store-fed Wasserstein-1 drift — the SAME mergeable
     * (bin, ca, cb) rows a q216-style PSI monitor store persists,
     * written as three micro-batch appends at q322's grid, compacted,
-    * then read through the W₁ readout (`mergedWasserstein`):
+    * then read through the W₁ readout (`StatTests.wasserstein1FromBins`):
     * streamed ≡ one-shot, so it shares q322's oracle verbatim. One
     * persisted store now serves both the per-bin (PSI) and the
     * metric-aware (W₁) drift readings.
     */
   private val wassersteinStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir).filter(col("value").isNotNull)
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q324_w1")
-    val store = scratch.toString + "/w1"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.psiStep(
-        ev.filter(col("event_id") % 3 === b), "value", "event_type",
-        "click", "view", lo = 0.0, hi = 320.0, bins = 32, store,
-        batchId = b)
+    withScratch(s, "graft_q324_w1") { scratch =>
+      val store = scratch + "/w1"
+      (0L until 3L).foreach { b =>
+        StreamingPower.psi.append(s, store, b)(StatTests.psiBinCounts(
+          ev.filter(col("event_id") % 3 === b), "value", "event_type",
+          "click", "view", lo = 0.0, hi = 320.0, bins = 32))
+      }
+      StreamingPower.psi.compact(s, store)
+      StatTests.wasserstein1FromBins(StreamingPower.psi.read(s, store),
+        lo = 0.0, hi = 320.0, bins = 32)
     }
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.psiMerge)
-    val out = graft.streaming.StreamingPower
-      .mergedWasserstein(s, store, lo = 0.0, hi = 320.0, bins = 32)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
   }
 
   val queries: Map[String, Q] = Map(

@@ -20,6 +20,19 @@ private[queries] object QueryHelpers {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
+  /** A query over scratch stores: `body` gets a fresh temp dir named
+    * `prefix…`, its result is `localCheckpoint`ed ONCE (materialized
+    * before the stores it reads go), and the dir is deleted — also
+    * when `body` throws, so a failing query leaks nothing under the
+    * temp dir.
+    */
+  def withScratch(s: SparkSession, prefix: String)(
+      body: String => DataFrame): DataFrame = {
+    val scratch = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(scratch).localCheckpoint()
+    finally deleteRecursively(s, scratch)
+  }
+
   /** Run independent store-build chains CONCURRENTLY and wait for all
     * (the guide's overlap-independent-jobs rule): Spark happily runs
     * several jobs at once inside one application, and two chains that

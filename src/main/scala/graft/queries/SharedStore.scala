@@ -2,10 +2,9 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.engine.{EpochStore, Tables}
+import graft.engine.{EpochStore, Tables, TempDirs}
 import graft.functions.Md5Family
 import graft.operators.{Dedup, PairStore}
 
@@ -31,13 +30,14 @@ final class SharedStore private (
 
   private val byDir = new ConcurrentHashMap[String, String]()
 
-  /** The store's root for the tables under `dir`, built on first use;
-    * concurrent first callers block on the one build.
+  /** The store's root for the tables under `dir`, built on first use
+    * in a temp dir deleted at JVM exit (`TempDirs`); concurrent first
+    * callers block on the one build.
     */
   def path(s: SparkSession, dir: String): String =
     byDir.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory(tempPrefix)
-      SharedStore.temps.add(tmp.toFile)
+      val tmp = TempDirs.deleteOnExit(
+        java.nio.file.Files.createTempDirectory(tempPrefix))
       val root = tmp.toString + "/" + leaf
       build(s, dir, root)
       root
@@ -48,12 +48,6 @@ final class SharedStore private (
 }
 
 object SharedStore {
-  /** Every store dir this JVM created, deleted by one hook at exit —
-    * not before: later suites in the same JVM reuse the caches.
-    */
-  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  sys.addShutdownHook(temps.forEach(FileUtils.deleteQuietly(_)))
-
   /** The POSITIONAL text index over the q139 corpus split (source !=
     * src0, two disjoint even/odd-doc_id batches) — serves BM25 and
     * phrase search alike. Its fresh build is q161's timed entry.

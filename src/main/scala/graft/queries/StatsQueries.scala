@@ -7,6 +7,7 @@ import graft.engine.{IdempotentSink, Tables, TimeFeatures}
 import graft.functions.Md5Family
 import graft.operators._
 import graft.queries.QueryHelpers._
+import graft.streaming.StreamingPower
 
 /** Sampling/statistics family: splits, stratified/temperature/weighted draws, calibration, quantiles and sketches, packing, z-order, salted/bucketed joins.
   *
@@ -197,7 +198,7 @@ object StatsQueries {
     * certified against the exact Σ f_A·f_B. Where q227's advisor
     * needs the key-granular count tables (state ∝ distinct keys),
     * the sketch form is depth×width regardless of vocabulary and
-    * MERGEABLE (the countMinStream store shape) — the planning
+    * MERGEABLE (the `StreamingPower.countMin` store shape) — the planning
     * primitive that still works when the key tables themselves are
     * too big to hold. The orderkey vocabulary exceeds the sketch
     * width at every SF, so the estimate genuinely carries collision
@@ -211,7 +212,7 @@ object StatsQueries {
 
   /** q332: the STORE-FED form of q327 — each fact table maintains a
     * persisted count-min KEY sketch (two incremental batches here,
-    * `StreamingPower.keySketchStep`), and the planner's join-size
+    * `StreamingPower.keySketchRows`), and the planner's join-size
     * readout folds the two stores and runs the AMS min-inner-product
     * with NO scan of either fact table (the q216→q324 pattern applied
     * to the planning primitive). Count-min is linear in its input, so
@@ -219,49 +220,47 @@ object StatsQueries {
     * the exact Σ f_A·f_B certification side is recomputed from the
     * raw tables as in q327, whose oracle this shares verbatim.
     */
-  private val joinSizeStoreQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q332_jss")
-    val pa = scratch.resolve("li").toString
-    val pb = scratch.resolve("ord").toString
-    val li = Tables.lineitem(s, dir)
-    val ord = Tables.orders(s, dir)
-    // the two fact tables' sketch stores are DISJOINT roots with no
-    // ordering contract between them — maintain concurrently (batch
-    // order stays sequential within each store); BuildTiming's union
-    // accounting keeps build_s a wall-clock share
-    inParallel(
-      () => graft.engine.BuildTiming.timed {
-        (0L to 1L).foreach { b =>
-          graft.streaming.StreamingPower.keySketchStep(
-            li.filter(pmod(col("l_orderkey"), lit(2)) === b),
-            "l_orderkey", pa, b, width = 65536)
-        }
-      },
-      () => graft.engine.BuildTiming.timed {
-        (0L to 1L).foreach { b =>
-          graft.streaming.StreamingPower.keySketchStep(
-            ord.filter(pmod(col("o_orderkey"), lit(2)) === b),
-            "o_orderkey", pb, b, width = 65536)
-        }
-      })
-    val base = graft.streaming.StreamingPower.mergedJoinSize(s, pa, pb)
-    // exact side on the NATIVE long key (the string cast is the sketch
-    // side's hash contract, not the join's): same groups, same matches,
-    // 8-byte shuffle rows instead of decimal strings
-    val exact = li.select(col("l_orderkey").as("jk")).groupBy("jk")
-      .agg(count(lit(1)).as("fa"))
-      .join(ord.select(col("o_orderkey").as("jk")).groupBy("jk")
-        .agg(count(lit(1)).as("fb")), Seq("jk"))
-      .agg(coalesce(sum(col("fa") * col("fb")), lit(0L)).as("exact_join"))
-    val out = base.crossJoin(broadcast(exact))
-      .select(col("n_a"), col("n_b"), col("est_join"), col("exact_join"),
-        when(col("exact_join") > 0L,
-          round(col("est_join").cast("double")
-            / col("exact_join").cast("double"), 6)).as("est_ratio"))
-      .localCheckpoint() // materialize before the scratch delete
-    deleteRecursively(s, scratch.toString)
-    out
-  }
+  private val joinSizeStoreQ: Q = (s, dir) =>
+    withScratch(s, "graft_q332_jss") { scratch =>
+      val pa = s"$scratch/li"
+      val pb = s"$scratch/ord"
+      val li = Tables.lineitem(s, dir)
+      val ord = Tables.orders(s, dir)
+      // the two fact tables' sketch stores are DISJOINT roots with no
+      // ordering contract between them — maintain concurrently (batch
+      // order stays sequential within each store); BuildTiming's union
+      // accounting keeps build_s a wall-clock share
+      inParallel(
+        () => graft.engine.BuildTiming.timed {
+          (0L to 1L).foreach { b =>
+            StreamingPower.countMin.append(s, pa, b)(StreamingPower.keySketchRows(
+              li.filter(pmod(col("l_orderkey"), lit(2)) === b), "l_orderkey",
+              width = 65536))
+          }
+        },
+        () => graft.engine.BuildTiming.timed {
+          (0L to 1L).foreach { b =>
+            StreamingPower.countMin.append(s, pb, b)(StreamingPower.keySketchRows(
+              ord.filter(pmod(col("o_orderkey"), lit(2)) === b), "o_orderkey",
+              width = 65536))
+          }
+        })
+      val base = Sketches.joinSizeFromSketches(
+        StreamingPower.countMin.read(s, pa), StreamingPower.countMin.read(s, pb))
+      // exact side on the NATIVE long key (the string cast is the sketch
+      // side's hash contract, not the join's): same groups, same matches,
+      // 8-byte shuffle rows instead of decimal strings
+      val exact = li.select(col("l_orderkey").as("jk")).groupBy("jk")
+        .agg(count(lit(1)).as("fa"))
+        .join(ord.select(col("o_orderkey").as("jk")).groupBy("jk")
+          .agg(count(lit(1)).as("fb")), Seq("jk"))
+        .agg(coalesce(sum(col("fa") * col("fb")), lit(0L)).as("exact_join"))
+      base.crossJoin(broadcast(exact))
+        .select(col("n_a"), col("n_b"), col("est_join"), col("exact_join"),
+          when(col("exact_join") > 0L,
+            round(col("est_join").cast("double")
+              / col("exact_join").cast("double"), 6)).as("est_ratio"))
+    }
 
 
   /** Mixture-governance report for the temperature rebalance: per
@@ -604,24 +603,18 @@ object StatsQueries {
   private val calibrationStoreQ: Q = (s, dir) => {
     val ev = Tables.events(s, dir).filter(col("value").isNotNull)
       .withColumn("_hit", (col("event_type") === "purchase").cast("int"))
-    val scratch =
-      java.nio.file.Files.createTempDirectory("graft_q316_calib")
-    val store = scratch.toString + "/calib"
-    (0L until 3L).foreach { b =>
-      graft.streaming.StreamingPower.calibrationStep(
-        ev.filter(col("event_id") % 3 === b), "value", "_hit",
-        bins = 16, binWidth = 8.0, store, batchId = b)
+    withScratch(s, "graft_q316_calib") { scratch =>
+      val store = scratch + "/calib"
+      // batch 1 twice: a re-delivered micro-batch, which the _SUCCESS
+      // guard makes a no-op
+      Seq(0L, 1L, 2L, 1L).foreach { b =>
+        StreamingPower.calibration.append(s, store, b)(StreamingPower
+          .calibrationRows(ev.filter(col("event_id") % 3 === b), "value",
+            "_hit", bins = 16, binWidth = 8.0))
+      }
+      StreamingPower.calibration.compact(s, store)
+      Sampling.isotonicFromBins(StreamingPower.calibration.read(s, store))
     }
-    // a re-delivered micro-batch: the _SUCCESS guard makes it a no-op
-    graft.streaming.StreamingPower.calibrationStep(
-      ev.filter(col("event_id") % 3 === 1L), "value", "_hit",
-      bins = 16, binWidth = 8.0, store, batchId = 1L)
-    graft.engine.BatchStore.compact(s, store,
-      graft.streaming.StreamingPower.calibrationMerge)
-    val out = graft.streaming.StreamingPower.mergedCalibration(s, store)
-      .localCheckpoint()
-    QueryHelpers.deleteRecursively(s, scratch.toString)
-    out
   }
 
   /** q317: cumulative gains / lift table — the decile targeting
@@ -789,27 +782,25 @@ object StatsQueries {
     * join, same as q85's z-order range shuffle.
     */
   private val bucketedJoinQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q135_bkt")
-    val tag = math.abs(scratch.toString.hashCode).toString
+    // catalog tables unique per call, dropped even when the query fails
+    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
     val (ot, ct) = (s"graft_bkt_orders_$tag", s"graft_bkt_customer_$tag")
-    Bucketing.writeBucketed(s,
-      Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
-      ot, scratch.toString + "/orders", 8, Seq("o_custkey"))
-    Bucketing.writeBucketed(s,
-      Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
-      ct, scratch.toString + "/customer", 8, Seq("c_custkey"))
-    val out = Bucketing.colocatedJoin(s, ot, ct, "o_custkey", "c_custkey")
-      .groupBy("c_mktsegment")
-      // revenue in exact integer cents: double sums over a shuffled
-      // join visit rows in engine-dependent order (CLAUDE.md: exact
-      // integer accumulation for order-varying cross-engine sums)
-      .agg(count(lit(1)).as("orders"),
-        sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
-      .orderBy("c_mktsegment")
-      .localCheckpoint()
-    Bucketing.dropTables(s, ot, ct)
-    deleteRecursively(s, scratch.toString)
-    out
+    try withScratch(s, "graft_q135_bkt") { scratch =>
+      Bucketing.writeBucketed(s,
+        Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
+        ot, scratch + "/orders", 8, Seq("o_custkey"))
+      Bucketing.writeBucketed(s,
+        Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
+        ct, scratch + "/customer", 8, Seq("c_custkey"))
+      Bucketing.colocatedJoin(s, ot, ct, "o_custkey", "c_custkey")
+        .groupBy("c_mktsegment")
+        // revenue in exact integer cents: double sums over a shuffled
+        // join visit rows in engine-dependent order, so order-varying
+        // cross-engine sums accumulate as exact integers
+        .agg(count(lit(1)).as("orders"),
+          sum(round(col("o_totalprice") * 100).cast("long")).as("revenue_cents"))
+        .orderBy("c_mktsegment")
+    } finally Bucketing.dropTables(s, ot, ct)
   }
 
 

@@ -437,27 +437,25 @@ object TextQueries {
       corpus.select(col("doc_id").as("vec_id")), "vec_id")
     val probeEmb = emb.join(
       probes.select(col("query_id").as("vec_id")), "vec_id")
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q338_ann")
-    val idx = scratch.toString + "/ann"
-    // The sparse tier (BM25 off the prewarmed shared index) and the
-    // scratch ANN build touch disjoint stores and share nothing until
-    // the RRF fusion — overlap them (the q282 build-∥-ground-truth
-    // pattern); the sparse ranking materializes on its own thread
-    // while the build's store jobs run.
-    val sparseRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    graft.engine.Par.inParallel(
-      () => sparseRef.set(
-        TextIndex.query(s, SharedStore.textIndex.path(s, dir), probes,
-            "query_id", "qtext", k = 10)
-          .select("query_id", "doc_id", "rank")
-          .localCheckpoint()),
-      () => AnnIndex.build(corpusEmb, idx, dim = 64))
-    val dense = AnnIndex.query(s, idx, probeEmb, k = 10, dim = 64)
-      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-    val out = Retrieval.rrfFuse(Seq(sparseRef.get, dense), k = 10)
-      .localCheckpoint() // materialize before the scratch delete
-    QueryHelpers.deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q338_ann") { scratch =>
+      val idx = scratch + "/ann"
+      // The sparse tier (BM25 off the prewarmed shared index) and the
+      // scratch ANN build touch disjoint stores and share nothing until
+      // the RRF fusion — overlap them (the q282 build-∥-ground-truth
+      // pattern); the sparse ranking materializes on its own thread
+      // while the build's store jobs run.
+      val sparseRef = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
+      graft.engine.Par.inParallel(
+        () => sparseRef.set(
+          TextIndex.query(s, SharedStore.textIndex.path(s, dir), probes,
+              "query_id", "qtext", k = 10)
+            .select("query_id", "doc_id", "rank")
+            .localCheckpoint()),
+        () => AnnIndex.build(corpusEmb, idx, dim = 64))
+      val dense = AnnIndex.query(s, idx, probeEmb, k = 10, dim = 64)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+      Retrieval.rrfFuse(Seq(sparseRef.get, dense), k = 10)
+    }
   }
 
 
@@ -475,19 +473,17 @@ object TextQueries {
       .filter(col("source") === "src0" && col("doc_id") % 50 === 0)
       .select(col("doc_id").as("query_id"),
         concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("qtext"))
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q188_tidx")
-    val path = scratch.toString + "/tidx"
-    TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 0),
-      "doc_id", "text", path, batchId = 0L, withPositions = false)
-    TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 1),
-      "doc_id", "text", path, batchId = 1L, withPositions = false)
-    TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
-      .select("doc_id"), "doc_id", path)
-    TextIndex.compact(s, path)
-    val out = TextIndex.query(s, path, probes, "query_id", "qtext", k = 10)
-      .localCheckpoint()
-    deleteRecursively(s, scratch.toString)
-    out
+    withScratch(s, "graft_q188_tidx") { scratch =>
+      val path = scratch + "/tidx"
+      TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 0),
+        "doc_id", "text", path, batchId = 0L, withPositions = false)
+      TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 1),
+        "doc_id", "text", path, batchId = 1L, withPositions = false)
+      TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
+        .select("doc_id"), "doc_id", path)
+      TextIndex.compact(s, path)
+      TextIndex.query(s, path, probes, "query_id", "qtext", k = 10)
+    }
   }
 
 
@@ -567,22 +563,19 @@ object TextQueries {
     * [[SharedStore.textIndex]] consumers deliberately exclude (they
     * query the session-shared store).
     */
-  private val textIndexBuildQ: Q = (s, dir) => {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_q161_idx")
-    val idx = scratch.toString + "/idx"
-    buildCorpusIndex(s, dir, idx)
-    val committed = TextIndex.committedBatches(s, idx)
-    val out = s.read.parquet(idx + "/postings")
-      .filter(col("batch_id").isin(committed: _*))
-      .groupBy("doc").agg(max(col("dl")).as("dl"), count(lit(1)).as("nt"))
-      .agg(lit(committed.size).as("n_batches"),
-        count(lit(1)).as("n_docs"),
-        sum(col("dl")).as("sum_dl"),
-        sum(col("nt")).as("n_postings"))
-      .localCheckpoint() // materialize BEFORE deleting the scratch
-    deleteRecursively(s, scratch.toString)
-    out
-  }
+  private val textIndexBuildQ: Q = (s, dir) =>
+    withScratch(s, "graft_q161_idx") { scratch =>
+      val idx = scratch + "/idx"
+      buildCorpusIndex(s, dir, idx)
+      val committed = TextIndex.committedBatches(s, idx)
+      s.read.parquet(idx + "/postings")
+        .filter(col("batch_id").isin(committed: _*))
+        .groupBy("doc").agg(max(col("dl")).as("dl"), count(lit(1)).as("nt"))
+        .agg(lit(committed.size).as("n_batches"),
+          count(lit(1)).as("n_docs"),
+          sum(col("dl")).as("sum_dl"),
+          sum(col("nt")).as("n_postings"))
+    }
 
 
   /** q153: exact vocabulary-overlap matrix between sources — pairwise

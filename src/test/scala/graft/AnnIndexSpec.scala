@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.operators.{AnnIndex, Similarity}
@@ -16,7 +15,7 @@ class AnnIndexSpec extends SparkSpecBase {
     (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))
 
   test("stored-index query == inline IVF+PQ under the same seeded codebooks") {
-    val dir = Files.createTempDirectory("graft_annidx").toString + "/idx"
+    val dir = tempDir("graft_annidx") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val fromIndex = AnnIndex.query(spark, dir, probes, k = 3, dim = 64)
@@ -29,7 +28,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("query reads only probed list partitions (PartitionFilters on list_id)") {
-    val dir = Files.createTempDirectory("graft_annprune").toString + "/idx"
+    val dir = tempDir("graft_annprune") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 3)
     val plan = AnnIndex.query(spark, dir, probes, k = 3, dim = 64, nprobe = 2)
@@ -41,7 +40,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("stored-index re-ranked query == inline re-ranked operator") {
-    val dir = Files.createTempDirectory("graft_annrr").toString + "/idx"
+    val dir = tempDir("graft_annrr") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val fromIndex = AnnIndex.queryReranked(spark, dir, probes, emb, k = 3,
@@ -53,7 +52,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("index-fed SemDeDup: incremental appends + tombstones feed the same dedup as inline routing") {
-    val dir = Files.createTempDirectory("graft_annsd").toString + "/idx"
+    val dir = tempDir("graft_annsd") + "/idx"
     val half0 = emb.filter(col("vec_id") % 2 === 0)
     val half1 = emb.filter(col("vec_id") % 2 =!= 0)
     // codebook derives from the BUILD corpus (half0); the appended half
@@ -77,7 +76,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("retried batch append is a no-op once committed — no duplicate codes corrupt ADC sums") {
-    val dir = Files.createTempDirectory("graft_annretry").toString + "/idx"
+    val dir = tempDir("graft_annretry") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val extra = probes.withColumn("vec_id", col("vec_id") + 10000L)
@@ -93,7 +92,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("tombstone delete: masked immediately, physically dropped by compaction, drained tombstones harmless") {
-    val dir = Files.createTempDirectory("graft_anndel").toString + "/idx"
+    val dir = tempDir("graft_anndel") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val n = emb.count().toInt
@@ -137,18 +136,18 @@ class AnnIndexSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_anndelstream").toString + "/idx"
+    val dir = tempDir("graft_anndelstream") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val oneShot = {
-      val ref = Files.createTempDirectory("graft_anndelref").toString + "/idx"
+      val ref = tempDir("graft_anndelref") + "/idx"
       AnnIndex.build(emb, ref, dim = 64)
       AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"), ref)
       AnnIndex.query(spark, ref, probes, k = 3, dim = 64).collect().map(key).toSeq
     }
     val ms = MemoryStream[Long]
     val q = AnnIndex.deleteStream(ms.toDF().toDF("vec_id"), dir,
-      Files.createTempDirectory("graft_anndelckpt").toString, compactEvery = 2)
+      tempDir("graft_anndelckpt"), compactEvery = 2)
     val dead = emb.filter(col("vec_id") % 7 === 0)
       .select("vec_id").as[Long].collect().toSeq
     val (d1, d2) = dead.splitAt(dead.size / 2)
@@ -168,7 +167,7 @@ class AnnIndexSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("graft_annstream").toString
+    val base = tempDir("graft_annstream")
     val dir = s"$base/idx"
     val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -194,7 +193,7 @@ class AnnIndexSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("graft_annretrain").toString
+    val base = tempDir("graft_annretrain")
     val dir = s"$base/idx"
     val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -220,7 +219,7 @@ class AnnIndexSpec extends SparkSpecBase {
     // the retrained index IS a fresh seeded build over the full corpus
     // (codebooks derive from the corpus, batch id is irrelevant)
     val probes = emb.filter(col("vec_id") < 10)
-    val fresh = Files.createTempDirectory("graft_annretrain_ref").toString + "/idx"
+    val fresh = tempDir("graft_annretrain_ref") + "/idx"
     AnnIndex.build(emb, fresh, dim = 64)
     val got = AnnIndex.query(spark, dir, probes, k = 5, dim = 64).collect().map(key)
     val ref = AnnIndex.query(spark, fresh, probes, k = 5, dim = 64).collect().map(key)
@@ -232,7 +231,7 @@ class AnnIndexSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Files.createTempDirectory("graft_annstreamc").toString
+    val base = tempDir("graft_annstreamc")
     val dir = s"$base/idx"
     val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -265,7 +264,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("rebuild on an existing path drops every stale encoded generation") {
-    val dir = Files.createTempDirectory("graft_annrebuild").toString + "/idx"
+    val dir = tempDir("graft_annrebuild") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     // grow the index, then REBUILD (retrain codebooks) — old codes
@@ -285,7 +284,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("exists() is false until BOTH codebooks are committed (crashed build self-heals via rebuild)") {
-    val dir = Files.createTempDirectory("graft_annpartial").toString + "/idx"
+    val dir = tempDir("graft_annpartial") + "/idx"
     assert(!AnnIndex.exists(spark, dir))
     AnnIndex.build(emb, dir, dim = 64)
     assert(AnnIndex.exists(spark, dir))
@@ -305,7 +304,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("compaction merges batch generations without changing query results") {
-    val dir = Files.createTempDirectory("graft_anncompact").toString + "/idx"
+    val dir = tempDir("graft_anncompact") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     AnnIndex.appendBatch(probes.withColumn("vec_id", col("vec_id") + 10000L),
@@ -348,7 +347,7 @@ class AnnIndexSpec extends SparkSpecBase {
     import org.apache.hadoop.fs.Path
     val probes = emb.filter(col("vec_id") < 10)
     def freshIndex(tag: String): (String, Array[(Long, Int, Long, Double)]) = {
-      val dir = Files.createTempDirectory(s"graft_anncrash$tag").toString + "/idx"
+      val dir = tempDir(s"graft_anncrash$tag") + "/idx"
       AnnIndex.build(emb, dir, dim = 64)
       AnnIndex.appendBatch(probes.withColumn("vec_id", col("vec_id") + 10000L),
         dir, dim = 64)
@@ -391,7 +390,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("learned-codebook build: stored query == inline learned operator; recall not below seeded") {
-    val dir = Files.createTempDirectory("graft_annlearned").toString + "/idx"
+    val dir = tempDir("graft_annlearned") + "/idx"
     AnnIndex.buildLearned(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     val fromIndex = AnnIndex.query(spark, dir, probes, k = 3, dim = 64)
@@ -406,7 +405,7 @@ class AnnIndexSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     def recall(rows: Array[(Long, Int, Long, Double)]): Double =
       rows.count(r => exact.contains((r._1, r._3))).toDouble / exact.size
-    val seededDir = Files.createTempDirectory("graft_annseed").toString + "/idx"
+    val seededDir = tempDir("graft_annseed") + "/idx"
     AnnIndex.build(emb, seededDir, dim = 64)
     val seeded = AnnIndex.query(spark, seededDir, probes, k = 3, dim = 64)
       .collect().map(key)
@@ -416,7 +415,7 @@ class AnnIndexSpec extends SparkSpecBase {
 
   test("a stray enc/_manifest from an older index never changes results") {
     import org.apache.hadoop.fs.Path
-    val dir = Files.createTempDirectory("graft_annmanifest").toString + "/idx"
+    val dir = tempDir("graft_annmanifest") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     AnnIndex.appendBatch(probes.withColumn("vec_id", col("vec_id") + 10000L),
@@ -442,7 +441,7 @@ class AnnIndexSpec extends SparkSpecBase {
   }
 
   test("appended exact-duplicate vectors become searchable without retraining") {
-    val dir = Files.createTempDirectory("graft_annapp").toString + "/idx"
+    val dir = tempDir("graft_annapp") + "/idx"
     AnnIndex.build(emb, dir, dim = 64)
     val probes = emb.filter(col("vec_id") < 10)
     // append copies of the probe vectors under new ids: they quantize
@@ -465,7 +464,7 @@ class AnnIndexSpec extends SparkSpecBase {
     // the corpus, independent of how many batches deliver it — so the
     // maintenance trigger is the fraction, pinned here at its 1.0
     // default ("appended as much as was trained").
-    val dir = Files.createTempDirectory("graft_annfrac").toString + "/idx"
+    val dir = tempDir("graft_annfrac") + "/idx"
     val base = emb.filter(col("vec_id") % 2 === 0)
     val rest = emb.filter(col("vec_id") % 2 =!= 0)
     AnnIndex.build(base, dir, dim = 64)

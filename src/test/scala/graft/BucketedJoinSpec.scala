@@ -42,7 +42,7 @@ class BucketedJoinSpec extends SparkSpecBase {
   }
 
   test("Bucketing.colocatedJoin: exchange-free SMJ, one file per bucket, answer == plain join") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bktspec")
+    val tmp = tempDir("graft_bktspec")
     val orders = Tables.orders(spark, sf("sf0.001"))
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val cust = Tables.customer(spark, sf("sf0.001"))
@@ -97,7 +97,7 @@ class BucketedJoinSpec extends SparkSpecBase {
         s"bucketed group-by still shuffles:\n$aggPlan")
     } finally {
       Bucketing.dropTables(spark, ot, ct)
-      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
 }

@@ -18,7 +18,7 @@ import graft.operators.Dedup
   */
 class EpochStoreSpec extends SparkSpecBase {
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_epochstore").toString + "/store"
+    tempDir("graft_epochstore") + "/store"
 
   private def docs: DataFrame = Tables.documents(spark, sf("sf0.001"))
 

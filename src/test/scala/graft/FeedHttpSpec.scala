@@ -189,7 +189,7 @@ class FeedHttpSpec extends SparkSpecBase {
   test("live polling stream: capped micro-batches, checkpointed position resume") {
     val dyn = new AtomicReference(mkRecords(9))
     val (server, url) = serve(IndexedSeq.empty, dynRecs = dyn)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_feed_ckpt").toString
+    val ckpt = tempDir("graft_feed_ckpt")
     val batches = scala.collection.mutable.ArrayBuffer[Long]()
     def drain(): Unit = {
       val q = spark.readStream.format(fmt)

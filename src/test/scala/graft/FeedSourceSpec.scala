@@ -12,7 +12,7 @@ class FeedSourceSpec extends SparkSpecBase {
   private val fmt = "graft.sources.FeedSource"
 
   private def writePayloads(): String = {
-    val dir = Files.createTempDirectory("graft_feed").toString
+    val dir = tempDir("graft_feed")
     def w(name: String, body: String): Unit =
       Files.write(java.nio.file.Paths.get(dir, name), body.getBytes("UTF-8"))
     w("page0.json",
@@ -89,7 +89,7 @@ class FeedSourceSpec extends SparkSpecBase {
   }
 
   test("micro-batch stream ingests each payload exactly once and sees late drops") {
-    val dir = Files.createTempDirectory("graft_feed_stream").toString
+    val dir = tempDir("graft_feed_stream")
     def w(name: String, body: String): Unit =
       Files.write(java.nio.file.Paths.get(dir, name), body.getBytes("UTF-8"))
     w("drop-000.json",

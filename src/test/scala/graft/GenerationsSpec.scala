@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +13,7 @@ class GenerationsSpec extends AnyFunSuite {
   private val fs: FileSystem = FileSystem.getLocal(new Configuration())
 
   private def root(tag: String): Path =
-    new Path(Files.createTempDirectory(s"graft_gens_$tag").toString, "store")
+    new Path(SparkSpecBase.tempDir(s"graft_gens_$tag"), "store")
 
   private def touch(p: Path, text: String = ""): Unit = {
     val out = fs.create(p, true)

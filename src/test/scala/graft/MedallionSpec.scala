@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.engine.Watermark
@@ -192,8 +191,8 @@ class MedallionSpec extends SparkSpecBase {
   }
 
   test("pipeline end-to-end: incremental == full, rerun is a no-op") {
-    val dirFull = Files.createTempDirectory("graft_full").toString
-    val dirInc = Files.createTempDirectory("graft_inc").toString
+    val dirFull = tempDir("graft_full")
+    val dirInc = tempDir("graft_inc")
     val (b1, b2) = {
       val cut = ts("2024-01-01 00:00:30")
       (fixture.filter(org.apache.spark.sql.functions.col("minutes1_utc") <= cut),

@@ -15,7 +15,7 @@ import graft.operators.{Dedup, PairStore, Similarity}
   */
 class PairStoreSpec extends SparkSpecBase {
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_pairstore").toString + "/store"
+    tempDir("graft_pairstore") + "/store"
 
   private def docs: DataFrame = Tables.documents(spark, sf("sf0.001"))
   private def emb: DataFrame = Tables.embeddings(spark, sf("sf0.001"))
@@ -157,7 +157,7 @@ class PairStoreSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val path = tmp()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ps_ckpt").toString
+    val ckpt = tempDir("graft_ps_ckpt")
     val corpus = docs.select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val ms = MemoryStream[(Long, String)]

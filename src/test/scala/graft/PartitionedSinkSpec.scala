@@ -6,7 +6,7 @@ import graft.engine.{PartitionedSink, Tables}
 
 class PartitionedSinkSpec extends SparkSpecBase {
   test("date-partitioned sink prunes partitions for watermark predicates") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/events"
+    val dir = tempDir("graft_part") + "/events"
     val events = Tables.events(spark, sf("sf0.001"))
     PartitionedSink.writeByDate(events, "ts", dir)
 
@@ -23,7 +23,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   test("idempotent append commits atomically: a writer killed mid-publish leaves the old version") {
     import graft.engine.IdempotentSink
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_atomic").toString + "/t"
+    val dir = tempDir("graft_atomic") + "/t"
     IdempotentSink.appendIfAbsent(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, Seq("k"))
     assert(IdempotentSink.read(spark, dir).count() == 2)
@@ -52,7 +52,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   test("a legacy flat-append table migrates into the batch layout on heal") {
     import graft.engine.IdempotentSink
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_legacy").toString + "/t"
+    val dir = tempDir("graft_legacy") + "/t"
     // pre-batch layout: loose part files at the table root — under the
     // batch contract this reads as "not a table", so an un-migrated
     // append would skip key-dedup and then mix hive/non-hive layouts
@@ -69,7 +69,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   }
 
   test("compaction preserves data and reduces file count") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = tempDir("graft_compact") + "/t"
     val events = Tables.events(spark, sf("sf0.001"))
     events.repartition(37).write.parquet(dir) // deliberately fragmented
     def files() = new java.io.File(dir).listFiles.count(_.getName.endsWith(".parquet"))
@@ -82,7 +82,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   }
 
   test("compaction sizes files per partition: a skewed partition splits, small ones stay single") {
-    val dir = Files.createTempDirectory("graft_skewc").toString + "/t"
+    val dir = tempDir("graft_skewc") + "/t"
     // one ~5 MB partition (incompressible md5 payload) + one tiny one
     val big = spark.range(150000).selectExpr(
       "md5(cast(id as string)) AS payload", "DATE '2024-01-01' AS p_date")
@@ -102,7 +102,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
 
   test("a writer killed at ANY point of the compact swap leaves the table readable") {
     import org.apache.hadoop.fs.Path
-    val base = Files.createTempDirectory("graft_atomic").toString
+    val base = tempDir("graft_atomic")
     val events = Tables.events(spark, sf("sf0.001")).select("event_id", "ts", "value")
     val n = events.count()
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -149,7 +149,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   test("idempotent-sink compaction folds generations; appends and key-dedup continue above the folded id") {
     import graft.engine.IdempotentSink
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_sinkc").toString + "/t"
+    val dir = tempDir("graft_sinkc") + "/t"
     (0 until 5).foreach { i =>
       IdempotentSink.appendIfAbsent(spark,
         Seq((i.toLong, s"v$i"), (i + 100L, s"w$i")).toDF("k", "v"), dir, Seq("k"))
@@ -181,7 +181,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
     import graft.engine.IdempotentSink
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_sinkck").toString
+    val base = tempDir("graft_sinkck")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def freshTable(name: String): (String, Set[Long]) = {
       val dir = s"$base/$name"
@@ -234,7 +234,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   test("readAsOf time-travels to each committed batch with partition-pruned scans") {
     import graft.engine.IdempotentSink
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_asof").toString + "/t"
+    val dir = tempDir("graft_asof") + "/t"
     (0 until 4).foreach { i =>
       IdempotentSink.appendIfAbsent(spark,
         Seq((i.toLong, s"v$i")).toDF("k", "v"), dir, Seq("k"))
@@ -265,7 +265,7 @@ class PartitionedSinkSpec extends SparkSpecBase {
   test("additive schema evolution: new columns append, NULL-backfill on read, type change rejected") {
     import graft.engine.IdempotentSink
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evo").toString + "/t"
+    val dir = tempDir("graft_evo") + "/t"
     IdempotentSink.appendIfAbsent(spark,
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, Seq("k"))
     // additive: generation 1 carries an extra column

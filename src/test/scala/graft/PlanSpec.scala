@@ -740,8 +740,7 @@ class PlanSpec extends SparkSpecBase {
     // routing touches two small columns — the PQ code rows (m, code_id)
     // must be pruned out of the parquet read (list_id/batch are
     // partition values, not file columns)
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_enc")
-      .toString + "/idx"
+    val dir = tempDir("graft_plan_enc") + "/idx"
     graft.operators.AnnIndex.build(
       Tables.embeddings(spark, sf("sf0.001")), dir, dim = 64)
     val plan = planOf(graft.operators.AnnIndex.listAssignments(spark, dir))

@@ -71,31 +71,22 @@ class QuantileSketchSpec extends SparkSpecBase {
   test("streamed quantile store ≡ one-shot readout (compaction included)") {
     val ev = Tables.events(spark, sf("sf0.001"))
     val k = 64
-    val scratch = java.nio.file.Files.createTempDirectory("graft_qtile_spec")
-    val store = scratch.toString + "/q"
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 === 0), "event_type", "event_id",
-      "value", k, store, batchId = 0L)
+    val store = tempDir("graft_qtile_spec") + "/q"
+    val sample = graft.streaming.StreamingPower.quantile(k)
+    def append(slice: org.apache.spark.sql.Column, batchId: Long): Unit =
+      sample.append(spark, store, batchId)(Sketches.quantileSample(
+        ev.filter(slice), "event_type", "event_id", "value", k))
+    append(col("event_id") % 3 === 0, 0L)
     // committed retry of batch 0 must be a no-op
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 === 0), "event_type", "event_id",
-      "value", k, store, batchId = 0L)
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 <= 1), "event_type", "event_id",
-      "value", k, store, batchId = 1L)
-    graft.streaming.StreamingPower.quantileStep(
-      ev.filter(col("event_id") % 3 === 2), "event_type", "event_id",
-      "value", k, store, batchId = 2L)
-    graft.engine.BatchStore.compact(spark, store,
-      graft.streaming.StreamingPower.quantileMerge(k))
-    val streamed = graft.streaming.StreamingPower
-      .mergedQuantiles(spark, store, k)
+    append(col("event_id") % 3 === 0, 0L)
+    append(col("event_id") % 3 <= 1, 1L)
+    append(col("event_id") % 3 === 2, 2L)
+    sample.compact(spark, store)
+    val streamed = Sketches.quantilesFromSample(sample.read(spark, store))
     val oneShot = Sketches.sampledGroupQuantiles(ev, "event_type",
       "event_id", "value", k)
     assert(streamed.exceptAll(oneShot).count() == 0 &&
       oneShot.exceptAll(streamed).count() == 0,
       "streamed store readout differs from one-shot")
-    val p = new org.apache.hadoop.fs.Path(scratch.toString)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 }

@@ -19,8 +19,8 @@ class QueriesSmokeSpec extends SparkSpecBase {
     * so a store built for it betrays an undeclared consumer.
     */
   private lazy val alias: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_alias")
-    java.nio.file.Files.createSymbolicLink(d.resolve("sf0.001"),
+    java.nio.file.Files.createSymbolicLink(
+      java.nio.file.Paths.get(tempDir("graft_alias"), "sf0.001"),
       java.nio.file.Paths.get(sf("sf0.001"))).toString
   }
 
@@ -28,16 +28,33 @@ class QueriesSmokeSpec extends SparkSpecBase {
     * then its row count — so the store builds and checkpoints its
     * construction runs are paid once for every check below.
     */
-  private lazy val built: Seq[(String, String, Long)] =
-    SparkEntry.queries.toSeq.map { case (name, fn) =>
+  private lazy val built: Seq[(String, String, Long)] = {
+    val before = queryScratchDirs()
+    val out = SparkEntry.queries.toSeq.map { case (name, fn) =>
       val df = fn(spark, if (declared(name)) sf("sf0.001") else alias)
       (name, df.queryExecution.executedPlan.toString, df.count())
     }
+    leftScratch = queryScratchDirs() -- before
+    out
+  }
+
+  /** The `graft_q<digits>_…` dirs (query scratch stores) under the
+    * temp dir, and those the build above left behind.
+    */
+  private def queryScratchDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .fold(Set.empty[String])(_.filter(_.matches("graft_q\\d+_.*")).toSet)
+  private var leftScratch = Set.empty[String]
 
   test("every query is non-empty at sf0.001") {
     built.foreach { case (name, _, n) =>
       assert(n > 0, s"$name returned 0 rows")
     }
+  }
+
+  test("no registered query leaves its scratch dir behind") {
+    assert(built.nonEmpty)
+    assert(leftScratch.isEmpty, s"query scratch dirs left: $leftScratch")
   }
 
   test("no registered query plans a CartesianProduct") {

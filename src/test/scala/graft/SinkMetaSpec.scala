@@ -15,7 +15,7 @@ import graft.engine.{IdempotentSink, Watermark}
   * writer killed anywhere around the meta heals to such a table.
   */
 class SinkMetaSpec extends SparkSpecBase {
-  private def tmp(tag: String) = Files.createTempDirectory(s"graft_meta_$tag").toString + "/t"
+  private def tmp(tag: String) = tempDir(s"graft_meta_$tag") + "/t"
 
   /** Rows with minute timestamps `from until to`, key `k`, plus columns
     * of the types a parquet round trip normalizes (nullability of

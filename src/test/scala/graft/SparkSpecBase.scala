@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+  def tempDir(prefix: String): String = SparkSpecBase.tempDir(prefix)
 }
 
 object SparkSpecBase {
@@ -18,6 +19,12 @@ object SparkSpecBase {
   lazy val session: SparkSession = GraftSession.local(4,
     "spark.app.name" -> "graft-test",
     "spark.sql.maxMetadataStringLength" -> "2000",
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+    "spark.sql.warehouse.dir" -> tempDir("graft_warehouse"))
+
+  /** A fresh temp dir named `prefix…`, deleted when the JVM exits
+    * (`TempDirs`), so a spec run leaves nothing under the temp dir.
+    */
+  def tempDir(prefix: String): String =
+    graft.engine.TempDirs.deleteOnExit(
+      java.nio.file.Files.createTempDirectory(prefix)).toString
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions.lit
 import graft.engine.StagedSwap
@@ -51,7 +50,7 @@ class StagedSwapSpec extends SparkSpecBase {
 
   /** A live dir holding [[oldRows]], published through the protocol. */
   private def fresh(kind: Kind, tag: String): Path = {
-    val live = new Path(Files.createTempDirectory(s"graft_swap_$tag").toString, "live")
+    val live = new Path(tempDir(s"graft_swap_$tag"), "live")
     assert(StagedSwap.publish(local, live)(kind.write(local, _, oldRows)))
     assert(read(live) == oldRows)
     live

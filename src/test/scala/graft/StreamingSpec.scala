@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.engine.Tables
@@ -12,8 +11,20 @@ import graft.streaming.StreamingPower
   * exactly the reference's rerun-for-new-data contract.
   */
 class StreamingSpec extends SparkSpecBase {
+  /** The dedup-index step as a streaming query, through the store loop
+    * every micro-batch store runs (`Generations.stream`).
+    */
+  private def dedupStream(docs: org.apache.spark.sql.DataFrame,
+      indexPath: String, ckpt: String, compactEvery: Int = 0) =
+    graft.engine.Generations.stream(docs, ckpt, compactEvery,
+      graft.engine.BatchStore.committedBatches(_, indexPath).size,
+      graft.engine.BatchStore.compact(_, indexPath)) { (batch, batchId) =>
+      StreamingPower.dedupStepAgainstIndex(batch, "doc_id", "text",
+        indexPath, batchId = batchId)
+    }
+
   test("file-source ingest + watermarked minute aggregate matches batch") {
-    val srcDir = Files.createTempDirectory("graft_stream_src").toString
+    val srcDir = tempDir("graft_stream_src")
     val events = Tables.events(spark, sf("sf0.001"))
     events.write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
@@ -41,7 +52,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("hopping-window aggregate runs unchanged on a stream and matches batch") {
-    val srcDir = Files.createTempDirectory("graft_hop_src").toString
+    val srcDir = tempDir("graft_hop_src")
     val events = Tables.events(spark, sf("sf0.001"))
     events.write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
@@ -67,8 +78,8 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("checkpointed ingest resumes: second batch of files processed incrementally") {
-    val srcDir = Files.createTempDirectory("graft_inc_src").toString
-    val ckpt = Files.createTempDirectory("graft_inc_ckpt").toString
+    val srcDir = tempDir("graft_inc_src")
+    val ckpt = tempDir("graft_inc_ckpt")
     val events = Tables.events(spark, sf("sf0.001")).cache()
     val (b1, b2) = (events.filter(col("event_id") < 500), events.filter(col("event_id") >= 500))
     b1.write.mode("append").parquet(srcDir)
@@ -94,10 +105,10 @@ class StreamingSpec extends SparkSpecBase {
 
   test("streaming-driven medallion == batch-driven medallion") {
     import graft.medallion._
-    val feedDir = Files.createTempDirectory("graft_feed").toString
-    val ckpt = Files.createTempDirectory("graft_feed_ckpt").toString
-    val streamBase = Files.createTempDirectory("graft_ms").toString
-    val batchBase = Files.createTempDirectory("graft_mb").toString
+    val feedDir = tempDir("graft_feed")
+    val ckpt = tempDir("graft_feed_ckpt")
+    val streamBase = tempDir("graft_ms")
+    val batchBase = tempDir("graft_mb")
     def feed(fromMin: Int, toMin: Int) = {
       val rows = (fromMin until toMin).map { i =>
         org.apache.spark.sql.Row.fromSeq(
@@ -152,11 +163,10 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val indexPath = Files.createTempDirectory("graft_dedup_index").toString + "/index"
-    val ckpt = Files.createTempDirectory("graft_dedup_ckpt").toString
+    val indexPath = tempDir("graft_dedup_index") + "/index"
+    val ckpt = tempDir("graft_dedup_ckpt")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.dedupStreamAgainstIndex(
-      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", indexPath, ckpt)
+    val q = dedupStream(ms.toDF().toDF("doc_id", "text"), indexPath, ckpt)
     ms.addData(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"))
@@ -174,7 +184,7 @@ class StreamingSpec extends SparkSpecBase {
 
   test("dedup-against-index step: idempotent under retry, canonical within a batch") {
     import spark.implicits._
-    val indexPath = Files.createTempDirectory("graft_dedup_step").toString + "/index"
+    val indexPath = tempDir("graft_dedup_step") + "/index"
     def readIds() = spark.read.parquet(indexPath).select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     // batch 0 carries an INTRA-batch near-dup pair (10, 11): only the
@@ -201,17 +211,18 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_cm_store").toString + "/sketch"
-    val ckpt = Files.createTempDirectory("graft_cm_ckpt").toString
+    val storePath = tempDir("graft_cm_store") + "/sketch"
+    val ckpt = tempDir("graft_cm_ckpt")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.countMinStream(
-      ms.toDF().toDF("doc_id", "text"), "text", storePath, ckpt)
+    val q = StreamingPower.countMin.stream(
+      ms.toDF().toDF("doc_id", "text"), storePath, ckpt)(
+      StreamingPower.tokenSketchRows(_, "text"))
     ms.addData((1L, "a b a c"), (2L, "b b d"))
     q.processAllAvailable()
     ms.addData((3L, "a d d e"))
     q.processAllAvailable()
     q.stop()
-    val merged = StreamingPower.mergedCountMin(spark, storePath)
+    val merged = StreamingPower.countMin.read(spark, storePath)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val allTokens = Seq("a b a c", "b b d", "a d d e")
       .flatMap(_.split(" ")).toDF("token")
@@ -219,14 +230,14 @@ class StreamingSpec extends SparkSpecBase {
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(merged == batch, "merged streaming sketch != whole-stream batch sketch")
     // and a retried step (same batchId) must not double counters
-    StreamingPower.countMinStep(
-      Seq((9L, "a d d e")).toDF("doc_id", "text"), "text", storePath, batchId = 1L)
-    val again = StreamingPower.mergedCountMin(spark, storePath)
+    StreamingPower.countMin.append(spark, storePath, 1L)(StreamingPower
+      .tokenSketchRows(Seq((9L, "a d d e")).toDF("doc_id", "text"), "text"))
+    val again = StreamingPower.countMin.read(spark, storePath)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(again == batch, "retried batch mutated the committed sketch store")
     // estimates off the merged sketch never undercount
     val est = graft.operators.Sketches.countMinEstimates(
-      allTokens, "token", StreamingPower.mergedCountMin(spark, storePath))
+      allTokens, "token", StreamingPower.countMin.read(spark, storePath))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = allTokens.groupBy("token").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -235,22 +246,25 @@ class StreamingSpec extends SparkSpecBase {
 
   test("key-sketch stores: store-fed join-size readout equals the one-shot estimate") {
     import spark.implicits._
-    val pa = Files.createTempDirectory("graft_jss_a").toString + "/s"
-    val pb = Files.createTempDirectory("graft_jss_b").toString + "/s"
+    val pa = tempDir("graft_jss_a") + "/s"
+    val pb = tempDir("graft_jss_b") + "/s"
     val a = Seq(1L, 1L, 2L, 3L, 3L, 3L, 7L).toDF("k1")
     val b = Seq(1L, 3L, 3L, 4L).toDF("k2")
     // two incremental batches per side (disjoint by parity)
     (0L to 1L).foreach { i =>
-      StreamingPower.keySketchStep(a.filter(pmod(col("k1"), lit(2)) === i),
-        "k1", pa, i)
-      StreamingPower.keySketchStep(b.filter(pmod(col("k2"), lit(2)) === i),
-        "k2", pb, i)
+      StreamingPower.countMin.append(spark, pa, i)(StreamingPower
+        .keySketchRows(a.filter(pmod(col("k1"), lit(2)) === i), "k1"))
+      StreamingPower.countMin.append(spark, pb, i)(StreamingPower
+        .keySketchRows(b.filter(pmod(col("k2"), lit(2)) === i), "k2"))
     }
+    def joinSize() = graft.operators.Sketches.joinSizeFromSketches(
+      StreamingPower.countMin.read(spark, pa),
+      StreamingPower.countMin.read(spark, pb))
     def row3(df: org.apache.spark.sql.DataFrame) = {
       val r = df.select("n_a", "n_b", "est_join").head()
       (r.getLong(0), r.getLong(1), r.getLong(2))
     }
-    val stored = row3(StreamingPower.mergedJoinSize(spark, pa, pb))
+    val stored = row3(joinSize())
     val oneShot = row3(graft.operators.Sketches.joinSizeEstimate(
       a, "k1", b, "k2"))
     assert(stored === oneShot,
@@ -259,37 +273,36 @@ class StreamingSpec extends SparkSpecBase {
     // est >= exact inner product (1*1 + 3*2 = 7) — the CM upper bound
     assert(stored._3 >= 7L)
     // a retried committed step is a no-op on the readout
-    StreamingPower.keySketchStep(a.filter(pmod(col("k1"), lit(2)) === 1L),
-      "k1", pa, 1L)
-    assert(row3(StreamingPower.mergedJoinSize(spark, pa, pb)) === stored)
+    StreamingPower.countMin.append(spark, pa, 1L)(StreamingPower
+      .keySketchRows(a.filter(pmod(col("k1"), lit(2)) === 1L), "k1"))
+    assert(row3(joinSize()) === stored)
     // compaction folds each side without changing the readout
-    graft.engine.BatchStore.compact(spark, pa, StreamingPower.countMinMerge)
-    assert(row3(StreamingPower.mergedJoinSize(spark, pa, pb)) === stored)
+    StreamingPower.countMin.compact(spark, pa)
+    assert(row3(joinSize()) === stored)
   }
 
   test("streaming CDC store compacts to the batch apply of the whole changelog") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_cdc_store").toString + "/log"
-    val ckpt = Files.createTempDirectory("graft_cdc_ckpt").toString
+    val storePath = tempDir("graft_cdc_store") + "/log"
+    val ckpt = tempDir("graft_cdc_ckpt")
     val ms = MemoryStream[(Long, String, Long, String)]
-    val q = StreamingPower.cdcStream(
-      ms.toDF().toDF("k", "attr", "seq", "op"), storePath, ckpt)
+    val q = StreamingPower.cdc.stream(
+      ms.toDF().toDF("k", "attr", "seq", "op"), storePath, ckpt)(identity)
     ms.addData((1L, "a", 0L, "I"), (2L, "b", 1L, "I"))
     q.processAllAvailable()
     ms.addData((1L, "a2", 2L, "U"), (2L, "b", 3L, "D"), (3L, "c", 4L, "I"))
     q.processAllAvailable()
     q.stop()
-    def state() = StreamingPower
-      .cdcCurrentState(spark, storePath, "k", "seq", "op", Seq("attr"))
+    def state() = graft.operators.Cdc.applyChangelog(
+        StreamingPower.cdc.read(spark, storePath), "k", "seq", "op", Seq("attr"))
       .orderBy("k").as[(Long, String, Long)].collect().toSeq
     assert(state() == Seq((1L, "a2", 2L), (3L, "c", 4L)),
       "streamed state != expected current state (update applied, delete dropped)")
     // a retried micro-batch (same batchId) must not re-apply its ops
-    StreamingPower.cdcStep(
-      Seq((9L, "ghost", 99L, "I")).toDF("k", "attr", "seq", "op"),
-      storePath, batchId = 1L)
+    StreamingPower.cdc.append(spark, storePath, 1L)(
+      Seq((9L, "ghost", 99L, "I")).toDF("k", "attr", "seq", "op"))
     assert(state() == Seq((1L, "a2", 2L), (3L, "c", 4L)),
       "retried batch mutated the committed changelog store")
   }
@@ -298,11 +311,12 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_hll_store").toString + "/hll"
-    val ckpt = Files.createTempDirectory("graft_hll_ckpt").toString
+    val storePath = tempDir("graft_hll_store") + "/hll"
+    val ckpt = tempDir("graft_hll_ckpt")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.hllStream(ms.toDF().toDF("id", "t"), "t",
-      storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.hll.stream(ms.toDF().toDF("id", "t"),
+      storePath, ckpt, compactEvery = 2)(
+      graft.operators.Sketches.hllRegisters(_, col("t")))
     val b1 = (1 to 300).map(i => (i.toLong, s"v$i"))
     val b2 = (200 to 500).map(i => (i.toLong, s"v$i")) // 200..300 re-observed
     ms.addData(b1: _*)
@@ -312,15 +326,18 @@ class StreamingSpec extends SparkSpecBase {
     q.stop()
     val whole = graft.operators.Sketches
       .hllDistinct((b1 ++ b2).toDF("id", "t"), col("t")).head()
-    val merged = StreamingPower.mergedHllDistinct(spark, storePath).head()
+    val merged = graft.operators.Sketches.hllEstimateFromRegisters(
+      StreamingPower.hll.read(spark, storePath)).head()
     // max-union absorbs the overlap EXACTLY — unlike a sum fold, which
     // would double-count the re-observed values
     assert(merged == whole, s"merged $merged != whole-stream $whole")
     // within HLL error of the 500 true distinct values
     assert(math.abs(merged.getDouble(1) - 500) / 500 < 0.1)
     // a retried (already folded) batch id is a no-op
-    StreamingPower.hllStep(b2.toDF("id", "t"), "t", storePath, batchId = 1L)
-    assert(StreamingPower.mergedHllDistinct(spark, storePath).head() == whole,
+    StreamingPower.hll.append(spark, storePath, 1L)(
+      graft.operators.Sketches.hllRegisters(b2.toDF("id", "t"), col("t")))
+    assert(graft.operators.Sketches.hllEstimateFromRegisters(
+      StreamingPower.hll.read(spark, storePath)).head() == whole,
       "retried batch mutated the committed HLL store")
   }
 
@@ -328,12 +345,13 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_prof_store").toString + "/prof"
-    val ckpt = Files.createTempDirectory("graft_prof_ckpt").toString
+    val storePath = tempDir("graft_prof_store") + "/prof"
+    val ckpt = tempDir("graft_prof_ckpt")
     val cols = Seq("id", "s")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.profileStream(
-      ms.toDF().toDF("id", "s"), cols, storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.profile.stream(
+      ms.toDF().toDF("id", "s"), storePath, ckpt, compactEvery = 2)(
+      graft.operators.Profile.valueHistogram(_, cols))
     val b1 = Seq(1L -> "a", 2L -> "b", 3L -> "a")
     val b2 = Seq(4L -> "b", 5L -> "b", 6L -> "c")
     ms.addData(b1: _*)
@@ -343,15 +361,18 @@ class StreamingSpec extends SparkSpecBase {
     q.stop()
     val whole = graft.operators.Profile
       .columnProfile((b1 ++ b2).toDF("id", "s"), cols).collect().toSeq
-    val merged = StreamingPower.mergedProfile(spark, storePath).collect().toSeq
+    val merged = graft.operators.Profile.profileFromCounts(
+      StreamingPower.profile.read(spark, storePath)).collect().toSeq
     assert(merged == whole, s"merged $merged != whole-stream $whole")
     // cross-batch modal shift is visible: "b" (3 across batches) beats
     // "a" (2, batch-1 local winner)
     val sRow = merged.find(_.getString(0) == "s").get
     assert(sRow.getString(6) == "b" && sRow.getLong(7) == 3L)
     // a retried batch id must not inflate any count
-    StreamingPower.profileStep(b2.toDF("id", "s"), cols, storePath, batchId = 1L)
-    assert(StreamingPower.mergedProfile(spark, storePath).collect().toSeq == whole,
+    StreamingPower.profile.append(spark, storePath, 1L)(
+      graft.operators.Profile.valueHistogram(b2.toDF("id", "s"), cols))
+    assert(graft.operators.Profile.profileFromCounts(
+      StreamingPower.profile.read(spark, storePath)).collect().toSeq == whole,
       "retried batch mutated the committed profile store")
   }
 
@@ -359,12 +380,13 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_hist_store").toString + "/hist"
-    val ckpt = Files.createTempDirectory("graft_hist_ckpt").toString
+    val storePath = tempDir("graft_hist_store") + "/hist"
+    val ckpt = tempDir("graft_hist_ckpt")
     val (lo, hi, bins) = (0.0, 100.0, 50)
     val ms = MemoryStream[(Long, Double)]
-    val q = StreamingPower.histogramStream(
-      ms.toDF().toDF("id", "value"), "value", lo, hi, bins, storePath, ckpt)
+    val q = StreamingPower.histogram.stream(
+      ms.toDF().toDF("id", "value"), storePath, ckpt)(
+      graft.operators.Sketches.fixedHistogram(_, "value", lo, hi, bins))
     val b1 = Seq(1L -> 3.0, 2L -> 55.5, 3L -> 55.9, 4L -> -7.0) // -7 clamps to bin 0
     val b2 = Seq(5L -> 99.9, 6L -> 150.0, 7L -> 3.9)            // 150 clamps to last
     ms.addData(b1: _*)
@@ -374,20 +396,20 @@ class StreamingSpec extends SparkSpecBase {
     q.stop()
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val merged = toMap(StreamingPower.mergedHistogram(spark, storePath))
+    val merged = toMap(StreamingPower.histogram.read(spark, storePath))
     val whole = toMap(graft.operators.Sketches.fixedHistogram(
       (b1 ++ b2).toDF("id", "value"), "value", lo, hi, bins))
     assert(merged == whole, s"merged $merged != whole-stream $whole")
     // a retried batch id must not double any bin
-    StreamingPower.histogramStep(
-      b2.toDF("id", "value"), "value", lo, hi, bins, storePath, batchId = 1L)
-    assert(toMap(StreamingPower.mergedHistogram(spark, storePath)) == whole,
+    StreamingPower.histogram.append(spark, storePath, 1L)(graft.operators
+      .Sketches.fixedHistogram(b2.toDF("id", "value"), "value", lo, hi, bins))
+    assert(toMap(StreamingPower.histogram.read(spark, storePath)) == whole,
       "retried batch mutated the committed histogram store")
     // quantile readout: 7 values, median target = 4th smallest = 55.5,
     // which lands in bin floor(55.5/2) = 27 → lower edge 54.0 (exact
     // median within one 2.0 bin width)
     val med = graft.operators.Sketches.quantilesFromHistogram(
-      StreamingPower.mergedHistogram(spark, storePath), lo, hi, bins,
+      StreamingPower.histogram.read(spark, storePath), lo, hi, bins,
       qs = Seq(0.5)).collect().head
     assert(med.getInt(1) == 27 && med.getDouble(2) == 54.0,
       s"median readout ${med.mkString(",")}")
@@ -397,12 +419,12 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_calib_store").toString + "/calib"
-    val ckpt = Files.createTempDirectory("graft_calib_ckpt").toString
+    val storePath = tempDir("graft_calib_store") + "/calib"
+    val ckpt = tempDir("graft_calib_ckpt")
     val ms = MemoryStream[(Double, Int)]
-    val q = StreamingPower.calibrationStream(
-      ms.toDF().toDF("score", "hit"), "score", "hit",
-      bins = 5, binWidth = 1.0, storePath, ckpt)
+    val q = StreamingPower.calibration.stream(
+      ms.toDF().toDF("score", "hit"), storePath, ckpt)(
+      StreamingPower.calibrationRows(_, "score", "hit", bins = 5, binWidth = 1.0))
     // the hand-PAV fixture from StatExtrasSpec, split across batches
     val all = Seq(
       (0.5, 1), (0.5, 1), (0.5, 0), (0.5, 0),
@@ -419,7 +441,8 @@ class StreamingSpec extends SparkSpecBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
         r.getDouble(4))).toSeq
-    val merged = rows(StreamingPower.mergedCalibration(spark, storePath))
+    val merged = rows(graft.operators.Sampling.isotonicFromBins(
+      StreamingPower.calibration.read(spark, storePath)))
     val oneShot = rows(graft.operators.Sampling.isotonicCalibration(
       all.toDF("score", "hit"), col("score"), col("hit") === 1,
       bins = 5, binWidth = 1.0))
@@ -427,9 +450,11 @@ class StreamingSpec extends SparkSpecBase {
     // all bins pool globally to 7/20 on this fixture
     assert(merged.forall(t => math.abs(t._4 - 0.35) < 1e-9), merged.toString)
     // a retried batch id must not double any bin count
-    StreamingPower.calibrationStep(b2.toDF("score", "hit"), "score", "hit",
-      bins = 5, binWidth = 1.0, storePath, batchId = 1L)
-    assert(rows(StreamingPower.mergedCalibration(spark, storePath)) == oneShot,
+    StreamingPower.calibration.append(spark, storePath, 1L)(StreamingPower
+      .calibrationRows(b2.toDF("score", "hit"), "score", "hit", bins = 5,
+        binWidth = 1.0))
+    assert(rows(graft.operators.Sampling.isotonicFromBins(
+      StreamingPower.calibration.read(spark, storePath))) == oneShot,
       "retried batch mutated the committed calibration store")
   }
 
@@ -460,7 +485,7 @@ class StreamingSpec extends SparkSpecBase {
   test("batch text operators run unchanged as streaming transforms") {
     // operators are pure DataFrame => DataFrame, so map-side ones plug
     // straight into readStream — the library's batch/stream reuse story
-    val srcDir = Files.createTempDirectory("graft_txt_src").toString
+    val srcDir = tempDir("graft_txt_src")
     val docs = Tables.documents(spark, sf("sf0.001"))
     docs.write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
@@ -477,7 +502,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("streaming session_window (state-store) matches batch sessionize") {
-    val srcDir = Files.createTempDirectory("graft_sw_src").toString
+    val srcDir = tempDir("graft_sw_src")
     val events = Tables.events(spark, sf("sf0.001"))
     events.write.mode("overwrite").parquet(srcDir)
     val schema = spark.read.parquet(srcDir).schema
@@ -587,11 +612,10 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val indexPath = Files.createTempDirectory("graft_dedup_cx").toString + "/index"
-    val ckpt = Files.createTempDirectory("graft_dedup_cx_ck").toString
+    val indexPath = tempDir("graft_dedup_cx") + "/index"
+    val ckpt = tempDir("graft_dedup_cx_ck")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.dedupStreamAgainstIndex(
-      ms.toDF().toDF("doc_id", "text"), "doc_id", "text", indexPath, ckpt,
+    val q = dedupStream(ms.toDF().toDF("doc_id", "text"), indexPath, ckpt,
       compactEvery = 2)
     ms.addData(
       (1L, "the quick brown fox jumps over the lazy dog"),
@@ -627,16 +651,16 @@ class StreamingSpec extends SparkSpecBase {
 
   test("count-min store compaction merges to a constant-size generation with identical estimates") {
     import spark.implicits._
-    val storePath = Files.createTempDirectory("graft_cm_cx").toString + "/sketch"
+    val storePath = tempDir("graft_cm_cx") + "/sketch"
     val texts = Seq("a b a c", "b b d", "a d d e", "e e a b")
     texts.zipWithIndex.foreach { case (t, i) =>
-      StreamingPower.countMinStep(
-        Seq((i.toLong, t)).toDF("doc_id", "text"), "text", storePath, i.toLong)
+      StreamingPower.countMin.append(spark, storePath, i.toLong)(StreamingPower
+        .tokenSketchRows(Seq((i.toLong, t)).toDF("doc_id", "text"), "text"))
     }
-    val before = StreamingPower.mergedCountMin(spark, storePath)
+    val before = StreamingPower.countMin.read(spark, storePath)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-    graft.engine.BatchStore.compact(spark, storePath, StreamingPower.countMinMerge)
-    val after = StreamingPower.mergedCountMin(spark, storePath)
+    StreamingPower.countMin.compact(spark, storePath)
+    val after = StreamingPower.countMin.read(spark, storePath)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(after == before, "compaction changed the merged sketch")
     def dirs() = new java.io.File(storePath).listFiles
@@ -648,11 +672,11 @@ class StreamingSpec extends SparkSpecBase {
     assert(rows.groupBy("r", "c").count().filter(col("count") > 1).count() == 0,
       "folded generation still holds per-batch duplicate counters")
     // append after compaction continues above the folded id
-    StreamingPower.countMinStep(
-      Seq((9L, "z z z")).toDF("doc_id", "text"), "text", storePath, 4L)
+    StreamingPower.countMin.append(spark, storePath, 4L)(StreamingPower
+      .tokenSketchRows(Seq((9L, "z z z")).toDF("doc_id", "text"), "text"))
     val est = graft.operators.Sketches.countMinEstimates(
       Seq("z").toDF("token"), "token",
-      StreamingPower.mergedCountMin(spark, storePath))
+      StreamingPower.countMin.read(spark, storePath))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est("z") >= 3L, "post-compaction append lost counts")
   }
@@ -660,7 +684,7 @@ class StreamingSpec extends SparkSpecBase {
   test("streaming canonicalization: labels equal the full-recompute CC after every micro-batch, bridges included") {
     import spark.implicits._
     import graft.operators.Dedup
-    val store = Files.createTempDirectory("graft_canon_stream").toString + "/canon"
+    val store = tempDir("graft_canon_stream") + "/canon"
     val thr = 0.2
     val a = "alpha beta gamma delta epsilon zeta"
     val c = "omega psi chi phi upsilon tau"
@@ -704,7 +728,7 @@ class StreamingSpec extends SparkSpecBase {
   test("a writer killed at ANY point of the canonical label swap heals to a complete table") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_canon_kill").toString
+    val base = tempDir("graft_canon_kill")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val t = "the quick brown fox jumps over the lazy dog"
     def freshStore(name: String): String = {
@@ -752,22 +776,22 @@ class StreamingSpec extends SparkSpecBase {
   test("a writer killed at ANY point of the batch-store compact swap heals to a complete store") {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_bs_kill").toString
+    val base = tempDir("graft_bs_kill")
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def freshStore(name: String): String = {
       val p = s"$base/$name"
       (0 until 3).foreach { i =>
-        StreamingPower.countMinStep(
-          Seq((i.toLong, s"tok$i tok$i common")).toDF("doc_id", "text"),
-          "text", p, i.toLong)
+        StreamingPower.countMin.append(spark, p, i.toLong)(StreamingPower
+          .tokenSketchRows(Seq((i.toLong, s"tok$i tok$i common"))
+            .toDF("doc_id", "text"), "text"))
       }
       p
     }
-    def merged(p: String) = StreamingPower.mergedCountMin(spark, p)
+    def merged(p: String) = StreamingPower.countMin.read(spark, p)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val expect = merged(freshStore("ref"))
     def stage(p: String): Unit = {
-      StreamingPower.countMinMerge(spark.read.parquet(p).drop("batch_id"))
+      StreamingPower.countMin.fold(spark.read.parquet(p).drop("batch_id"))
         .withColumn("batch_id", lit(2L))
         .write.partitionBy("batch_id").parquet(p + "._compacting")
       fs.create(new Path(p + "._compacting/batch_id=2/_SUCCESS")).close()
@@ -809,13 +833,15 @@ class StreamingSpec extends SparkSpecBase {
   test("cadence store: report == batch gapReport, compaction + folded-retry invisible") {
     import graft.operators.Resample
     val events = Tables.events(spark, sf("sf0.001"))
-    val store = Files.createTempDirectory("graft_cad_store").toString + "/cadence"
+    val store = tempDir("graft_cad_store") + "/cadence"
     (0L until 3L).foreach { b =>
-      StreamingPower.cadenceStep(events.filter(col("event_id") % 3 === b),
-        "user_id", "ts", 3600L, store, b)
+      StreamingPower.cadence.append(spark, store, b)(StreamingPower
+        .cadenceRows(events.filter(col("event_id") % 3 === b), "user_id", "ts",
+          3600L))
     }
     def report(): Seq[(Long, Long, Long, Long, Long)] =
-      StreamingPower.cadenceReport(spark, store, "user_id", 3600L)
+      Resample.gapFromBuckets(StreamingPower.cadence.read(spark, store),
+          "user_id", 3600L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4))).toSeq
     val batch = Resample.gapReport(events, "user_id", "ts", 3600L)
@@ -823,7 +849,7 @@ class StreamingSpec extends SparkSpecBase {
         r.getLong(3), r.getLong(4))).toSeq
     assert(report() == batch, "store-backed report != batch gap report")
     // fold duplicates re-observed across batches: compaction invisible
-    graft.engine.BatchStore.compact(spark, store, StreamingPower.cadenceMerge)
+    StreamingPower.cadence.compact(spark, store)
     assert(report() == batch, "compaction changed the report")
     // the folded generation holds no duplicate grid points
     val dup = spark.read.parquet(store).groupBy("user_id", "bucket_sec")
@@ -831,20 +857,22 @@ class StreamingSpec extends SparkSpecBase {
     assert(dup == 0, "folded generation holds duplicate buckets")
     // retry of the folded last batch id is a no-op
     val last = graft.engine.BatchStore.committedBatches(spark, store).max
-    StreamingPower.cadenceStep(events.filter(col("event_id") % 3 === 2),
-      "user_id", "ts", 3600L, store, last)
+    StreamingPower.cadence.append(spark, store, last)(StreamingPower
+      .cadenceRows(events.filter(col("event_id") % 3 === 2), "user_id", "ts",
+        3600L))
     assert(report() == batch, "retry of the folded batch id mutated the store")
   }
 
   test("moment store: report == one-shot batch moments, compaction + folded-retry invisible") {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
-    val store = Files.createTempDirectory("graft_mom_store").toString + "/moments"
+    val store = tempDir("graft_mom_store") + "/moments"
     (0L until 3L).foreach { b =>
-      StreamingPower.momentStep(emb.filter(col("vec_id") % 3 === b),
-        "embedding", store, b)
+      StreamingPower.moment.append(spark, store, b)(StreamingPower
+        .momentRows(emb.filter(col("vec_id") % 3 === b), "embedding"))
     }
     def report(): Seq[(Int, Long, Double, Double)] =
-      StreamingPower.momentReport(spark, store).collect()
+      StreamingPower.momentReport(StreamingPower.moment.read(spark, store))
+        .collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
     // one-shot batch computation with the same association — exact
     // integer sums over the fixed-point coordinates are order-
@@ -864,14 +892,14 @@ class StreamingSpec extends SparkSpecBase {
     val got = report()
     assert(got.length == 64)
     assert(got == batch, "store report != one-shot batch moments")
-    graft.engine.BatchStore.compact(spark, store, StreamingPower.momentMerge)
+    StreamingPower.moment.compact(spark, store)
     assert(report() == got, "compaction changed the report")
     // constant-size folded generation: one row per dim
     assert(spark.read.parquet(store).count() == 64)
     // retry of the folded last batch id is a no-op
     val last = graft.engine.BatchStore.committedBatches(spark, store).max
-    StreamingPower.momentStep(emb.filter(col("vec_id") % 3 === 2),
-      "embedding", store, last)
+    StreamingPower.moment.append(spark, store, last)(StreamingPower
+      .momentRows(emb.filter(col("vec_id") % 3 === 2), "embedding"))
     assert(report() == got, "retry of the folded batch id mutated the store")
     // a crashed step's PARTIAL batch dir (rows written, no _SUCCESS)
     // is invisible to the report — partial per-dim sums would corrupt
@@ -879,7 +907,8 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.hadoop.fs.Path
     val fs = new Path(store)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StreamingPower.momentStep(emb.limit(7), "embedding", store, last + 97)
+    StreamingPower.moment.append(spark, store, last + 97)(
+      StreamingPower.momentRows(emb.limit(7), "embedding"))
     fs.delete(new Path(s"$store/batch_id=${last + 97}/_SUCCESS"), false)
     assert(report() == got, "partial (uncommitted) batch dir leaked into the report")
   }
@@ -889,11 +918,11 @@ class StreamingSpec extends SparkSpecBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def t(s: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $s")
-    val store = Files.createTempDirectory("graft_cad_ms").toString + "/cadence"
-    val ckpt = Files.createTempDirectory("graft_cad_ms_ck").toString
+    val store = tempDir("graft_cad_ms") + "/cadence"
+    val ckpt = tempDir("graft_cad_ms_ck")
     val ms = MemoryStream[StreamingPower.Evt]
-    val q = StreamingPower.cadenceStream(ms.toDF(), "user_id", "ts", 3600L,
-      store, ckpt, compactEvery = 2)
+    val q = StreamingPower.cadence.stream(ms.toDF(), store, ckpt,
+      compactEvery = 2)(StreamingPower.cadenceRows(_, "user_id", "ts", 3600L))
     ms.addData(StreamingPower.Evt(1L, t("00:10:00"), 1.0),
       StreamingPower.Evt(1L, t("03:20:00"), 1.0))
     q.processAllAvailable()
@@ -901,7 +930,8 @@ class StreamingSpec extends SparkSpecBase {
       StreamingPower.Evt(2L, t("05:00:00"), 1.0))
     q.processAllAvailable()
     q.stop()
-    val got = StreamingPower.cadenceReport(spark, store, "user_id", 3600L)
+    val got = graft.operators.Resample
+      .gapFromBuckets(StreamingPower.cadence.read(spark, store), "user_id", 3600L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSeq
     // user 1: hours 0..3 observed at 0 and 3 → 4 expected, 2 present,
@@ -913,13 +943,14 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_funnel_store").toString + "/funnel"
-    val ckpt = Files.createTempDirectory("graft_funnel_ckpt").toString
+    val storePath = tempDir("graft_funnel_store") + "/funnel"
+    val ckpt = tempDir("graft_funnel_ckpt")
     val docs = graft.engine.Tables.documents(spark, sf("sf0.001"))
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
     val ms = MemoryStream[(Long, String)]
-    val q = StreamingPower.funnelStream(ms.toDF().toDF("doc_id", "text"),
-      "doc_id", "text", storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.funnel.stream(ms.toDF().toDF("doc_id", "text"),
+      storePath, ckpt, compactEvery = 2)(
+      StreamingPower.funnelRows(_, "doc_id", "text"))
     val (b1, b2) = docs.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -931,14 +962,16 @@ class StreamingSpec extends SparkSpecBase {
       graft.operators.TextAnalysis.funnelCounts(
         graft.operators.TextAnalysis.funnelSignals(whole, "doc_id", "text")))
       .collect().toSeq
-    val streamed = StreamingPower.mergedFunnel(spark, storePath)
+    val streamed = graft.operators.TextAnalysis.funnelReport(
+      StreamingPower.funnel.read(spark, storePath))
       .collect().toSeq
     assert(streamed == oneShot,
       s"streamed funnel diverged:\n$streamed\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.funnelStep(b2.toDF("doc_id", "text"), "doc_id", "text",
-      storePath, batchId = 1L)
-    assert(StreamingPower.mergedFunnel(spark, storePath)
+    StreamingPower.funnel.append(spark, storePath, 1L)(
+      StreamingPower.funnelRows(b2.toDF("doc_id", "text"), "doc_id", "text"))
+    assert(graft.operators.TextAnalysis.funnelReport(
+      StreamingPower.funnel.read(spark, storePath))
       .collect().toSeq == oneShot,
       "retried batch mutated the committed funnel store")
   }
@@ -947,16 +980,16 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_psi_store").toString + "/psi"
-    val ckpt = Files.createTempDirectory("graft_psi_ckpt").toString
+    val storePath = tempDir("graft_psi_store") + "/psi"
+    val ckpt = tempDir("graft_psi_ckpt")
     val ev = graft.engine.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "event_type", "value")
       .as[(Long, String, Double)].collect().toSeq
     val ms = MemoryStream[(Long, String, Double)]
-    val q = StreamingPower.psiStream(
+    val q = StreamingPower.psi.stream(
       ms.toDF().toDF("event_id", "event_type", "value"),
-      "value", "event_type", "click", "view", lo = 0.0, hi = 500.0,
-      bins = 10, storePath, ckpt, compactEvery = 2)
+      storePath, ckpt, compactEvery = 2)(graft.operators.StatTests.psiBinCounts(
+      _, "value", "event_type", "click", "view", lo = 0.0, hi = 500.0, bins = 10))
     val (b1, b2) = ev.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -966,14 +999,16 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.StatTests.psi(
       ev.toDF("event_id", "event_type", "value"), "value", "event_type",
       "click", "view", lo = 0.0, hi = 500.0).collect().toSeq
-    val streamed = StreamingPower.mergedPsi(spark, storePath, bins = 10)
+    val streamed = graft.operators.StatTests.psiFromCounts(
+      StreamingPower.psi.read(spark, storePath), bins = 10)
       .collect().toSeq
     assert(streamed == oneShot, s"streamed PSI diverged:\n$streamed\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.psiStep(b2.toDF("event_id", "event_type", "value"),
-      "value", "event_type", "click", "view", 0.0, 500.0, 10,
-      storePath, batchId = 1L)
-    assert(StreamingPower.mergedPsi(spark, storePath, bins = 10)
+    StreamingPower.psi.append(spark, storePath, 1L)(graft.operators.StatTests
+      .psiBinCounts(b2.toDF("event_id", "event_type", "value"),
+        "value", "event_type", "click", "view", 0.0, 500.0, 10))
+    assert(graft.operators.StatTests.psiFromCounts(
+      StreamingPower.psi.read(spark, storePath), bins = 10)
       .collect().toSeq == oneShot,
       "retried batch mutated the committed PSI store")
   }
@@ -982,16 +1017,16 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_w1_store").toString + "/w1"
-    val ckpt = Files.createTempDirectory("graft_w1_ckpt").toString
+    val storePath = tempDir("graft_w1_store") + "/w1"
+    val ckpt = tempDir("graft_w1_ckpt")
     val ev = graft.engine.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "event_type", "value")
       .as[(Long, String, Double)].collect().toSeq
     val ms = MemoryStream[(Long, String, Double)]
-    val q = StreamingPower.psiStream(
+    val q = StreamingPower.psi.stream(
       ms.toDF().toDF("event_id", "event_type", "value"),
-      "value", "event_type", "click", "view", lo = 0.0, hi = 320.0,
-      bins = 32, storePath, ckpt, compactEvery = 2)
+      storePath, ckpt, compactEvery = 2)(graft.operators.StatTests.psiBinCounts(
+      _, "value", "event_type", "click", "view", lo = 0.0, hi = 320.0, bins = 32))
     val (b1, b2) = ev.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1001,15 +1036,15 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.StatTests.wasserstein1(
       ev.toDF("event_id", "event_type", "value"), "value", "event_type",
       "click", "view", lo = 0.0, hi = 320.0, bins = 32).collect().toSeq
-    def streamed() = StreamingPower
-      .mergedWasserstein(spark, storePath, lo = 0.0, hi = 320.0, bins = 32)
+    def streamed() = graft.operators.StatTests.wasserstein1FromBins(
+        StreamingPower.psi.read(spark, storePath), lo = 0.0, hi = 320.0, bins = 32)
       .collect().toSeq
     assert(streamed() == oneShot,
       s"streamed W1 diverged:\n${streamed()}\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.psiStep(b2.toDF("event_id", "event_type", "value"),
-      "value", "event_type", "click", "view", 0.0, 320.0, 32,
-      storePath, batchId = 1L)
+    StreamingPower.psi.append(spark, storePath, 1L)(graft.operators.StatTests
+      .psiBinCounts(b2.toDF("event_id", "event_type", "value"),
+        "value", "event_type", "click", "view", 0.0, 320.0, 32))
     assert(streamed() == oneShot,
       "retried batch mutated the committed W1 store")
   }
@@ -1018,14 +1053,15 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_ih_store").toString + "/ih"
-    val ckpt = Files.createTempDirectory("graft_ih_ckpt").toString
+    val storePath = tempDir("graft_ih_store") + "/ih"
+    val ckpt = tempDir("graft_ih_ckpt")
     val payloads = graft.operators.Multimodal.withPatternedImagePayload(
         graft.engine.Tables.documents(spark, sf("sf0.001")))
       .as[(Long, Array[Byte])].collect().toSeq
     val ms = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingPower.imageHashStream(
-      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.fingerprint.stream(
+      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)(
+      p => StreamingPower.fingerprintRows(graft.operators.Multimodal.dHash(p)))
     val (b1, b2) = payloads.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1035,13 +1071,14 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.Multimodal.dHashPairHistogram(
       graft.operators.Multimodal.dHash(
         payloads.toDF("doc_id", "payload")).toDF()).collect().toSeq
-    def streamed() = StreamingPower.mergedImagePairs(spark, storePath)
+    def streamed() = graft.operators.Multimodal.dHashPairHistogram(
+        StreamingPower.fingerprint.read(spark, storePath))
       .collect().toSeq
     assert(streamed() == oneShot,
       s"streamed pair histogram diverged:\n${streamed()}\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.imageHashStep(b2.toDF("doc_id", "payload"),
-      storePath, batchId = 1L)
+    StreamingPower.fingerprint.append(spark, storePath, 1L)(StreamingPower
+      .fingerprintRows(graft.operators.Multimodal.dHash(b2.toDF("doc_id", "payload"))))
     assert(streamed() == oneShot,
       "retried batch mutated the committed image-hash store")
   }
@@ -1050,8 +1087,8 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_afp_store").toString + "/afp"
-    val ckpt = Files.createTempDirectory("graft_afp_ckpt").toString
+    val storePath = tempDir("graft_afp_store") + "/afp"
+    val ckpt = tempDir("graft_afp_ckpt")
     val payloads = graft.operators.Multimodal.withPatternedAudioPayload(
         graft.engine.Tables.documents(spark, sf("sf0.001")))
       .as[(Long, Array[Byte])].collect().toSeq
@@ -1061,8 +1098,9 @@ class StreamingSpec extends SparkSpecBase {
       payloads.toDF("doc_id", "payload")).collect()
     assert(fps.forall(_.real_decode), "patterned WAVs must really parse")
     val ms = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingPower.audioFpStream(
-      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.fingerprint.stream(
+      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)(
+      p => StreamingPower.fingerprintRows(graft.operators.Multimodal.audioFingerprint(p)))
     val (b1, b2) = payloads.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1073,13 +1111,14 @@ class StreamingSpec extends SparkSpecBase {
       graft.operators.Multimodal.audioFingerprint(
         payloads.toDF("doc_id", "payload")).toDF()).collect().toSeq
     assert(oneShot.nonEmpty, "degenerate fixture: no near-dup audio pairs")
-    def streamed() = StreamingPower.mergedAudioPairs(spark, storePath)
+    def streamed() = graft.operators.Multimodal.dHashPairHistogram(
+        StreamingPower.fingerprint.read(spark, storePath))
       .collect().toSeq
     assert(streamed() == oneShot,
       s"streamed audio pair histogram diverged:\n${streamed()}\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.audioFpStep(b2.toDF("doc_id", "payload"),
-      storePath, batchId = 1L)
+    StreamingPower.fingerprint.append(spark, storePath, 1L)(StreamingPower
+      .fingerprintRows(graft.operators.Multimodal.audioFingerprint(b2.toDF("doc_id", "payload"))))
     assert(streamed() == oneShot,
       "retried batch mutated the committed audio-fingerprint store")
     // a non-WAV payload degrades to the stub row, never throws
@@ -1093,8 +1132,8 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_vfp_store").toString + "/vfp"
-    val ckpt = Files.createTempDirectory("graft_vfp_ckpt").toString
+    val storePath = tempDir("graft_vfp_store") + "/vfp"
+    val ckpt = tempDir("graft_vfp_ckpt")
     val payloads = graft.operators.Multimodal.withPatternedVideoPayload(
         graft.engine.Tables.documents(spark, sf("sf0.001")))
       .as[(Long, Array[Byte])].collect().toSeq
@@ -1117,8 +1156,9 @@ class StreamingSpec extends SparkSpecBase {
         s"fingerprint diverged from the closed form for doc ${r.doc_id}")
     }
     val ms = MemoryStream[(Long, Array[Byte])]
-    val q = StreamingPower.videoFpStream(
-      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.fingerprint.stream(
+      ms.toDF().toDF("doc_id", "payload"), storePath, ckpt, compactEvery = 2)(
+      p => StreamingPower.fingerprintRows(graft.operators.Multimodal.videoFingerprint(p)))
     val (b1, b2) = payloads.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1129,12 +1169,13 @@ class StreamingSpec extends SparkSpecBase {
       graft.operators.Multimodal.videoFingerprint(
         payloads.toDF("doc_id", "payload")).toDF()).collect().toSeq
     assert(oneShot.nonEmpty, "degenerate fixture: no near-dup video pairs")
-    def streamed() = StreamingPower.mergedVideoPairs(spark, storePath)
+    def streamed() = graft.operators.Multimodal.dHashPairHistogram(
+        StreamingPower.fingerprint.read(spark, storePath))
       .collect().toSeq
     assert(streamed() == oneShot,
       s"streamed video pair histogram diverged:\n${streamed()}\n$oneShot")
-    StreamingPower.videoFpStep(b2.toDF("doc_id", "payload"),
-      storePath, batchId = 1L)
+    StreamingPower.fingerprint.append(spark, storePath, 1L)(StreamingPower
+      .fingerprintRows(graft.operators.Multimodal.videoFingerprint(b2.toDF("doc_id", "payload"))))
     assert(streamed() == oneShot,
       "retried batch mutated the committed video-fingerprint store")
     val stub = graft.operators.Multimodal.videoFingerprint(
@@ -1147,15 +1188,16 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_dsir_store").toString + "/dsir"
-    val ckpt = Files.createTempDirectory("graft_dsir_ckpt").toString
+    val storePath = tempDir("graft_dsir_store") + "/dsir"
+    val ckpt = tempDir("graft_dsir_ckpt")
     val docs = (
       (0 until 6).map(i => (i.toLong, "alpha beta alpha", 1)) ++
       (6 until 24).map(i => (i.toLong, s"noise${i % 4} noise${(i + 1) % 4}", 0)))
     val ms = MemoryStream[(Long, String, Int)]
-    val q = StreamingPower.dsirStream(
-      ms.toDF().toDF("doc_id", "text", "tgt"), "doc_id", "text", "tgt",
-      buckets = 64, storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.dsir.stream(
+      ms.toDF().toDF("doc_id", "text", "tgt"), storePath, ckpt,
+      compactEvery = 2)(graft.operators.Sampling.dsirBucketStats(
+      _, "doc_id", "text", "tgt", buckets = 64))
     val (b1, b2) = docs.partition(_._1 % 2 == 0) // disjoint corpus split
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1166,15 +1208,16 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.Sampling
       .importanceResample(whole, "doc_id", "text", "tgt", n = 24, buckets = 64)
       .collect().toSeq
-    val streamed = StreamingPower.mergedDsirSample(spark, storePath,
-      whole, "doc_id", "text", n = 24, buckets = 64).collect().toSeq
-    assert(streamed == oneShot,
-      s"streamed model diverged from one-shot fit:\n$streamed\n$oneShot")
+    def streamed() = graft.operators.Sampling.importanceResampleWith(whole,
+      "doc_id", "text", StreamingPower.dsir.read(spark, storePath), n = 24,
+      buckets = 64).collect().toSeq
+    assert(streamed() == oneShot,
+      s"streamed model diverged from one-shot fit:\n${streamed()}\n$oneShot")
     // a retried (already folded) batch id is a no-op
-    StreamingPower.dsirStep(b2.toDF("doc_id", "text", "tgt"), "doc_id",
-      "text", "tgt", buckets = 64, storePath, batchId = 1L)
-    assert(StreamingPower.mergedDsirSample(spark, storePath, whole,
-      "doc_id", "text", n = 24, buckets = 64).collect().toSeq == oneShot,
+    StreamingPower.dsir.append(spark, storePath, 1L)(graft.operators.Sampling
+      .dsirBucketStats(b2.toDF("doc_id", "text", "tgt"), "doc_id", "text",
+        "tgt", buckets = 64))
+    assert(streamed() == oneShot,
       "retried batch mutated the committed DSIR store")
   }
 
@@ -1182,15 +1225,15 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_trend_store").toString + "/trend"
-    val ckpt = Files.createTempDirectory("graft_trend_ckpt").toString
+    val storePath = tempDir("graft_trend_store") + "/trend"
+    val ckpt = tempDir("graft_trend_ckpt")
     val ev = graft.engine.Tables.events(spark, sf("sf0.001"))
       .select("event_id", "event_type", "ts")
       .as[(Long, String, java.sql.Timestamp)].collect().toSeq
     val ms = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingPower.trendStream(
-      ms.toDF().toDF("event_id", "event_type", "ts"),
-      "event_type", "ts", storePath, ckpt, compactEvery = 2)
+    val q = StreamingPower.trend.stream(
+      ms.toDF().toDF("event_id", "event_type", "ts"), storePath, ckpt,
+      compactEvery = 2)(graft.operators.Sessions.dailyCounts(_, "event_type", "ts"))
     val (b1, b2) = ev.partition(_._1 % 2 == 0)
     ms.addData(b1: _*)
     q.processAllAvailable()
@@ -1200,13 +1243,15 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.Sessions.volumeTrend(
       ev.toDF("event_id", "event_type", "ts"), "event_type", "ts")
       .collect().toSeq
-    val streamed = StreamingPower.mergedTrend(spark, storePath)
+    val streamed = graft.operators.Sessions.trendFromDaily(
+      StreamingPower.trend.read(spark, storePath))
       .collect().toSeq
     assert(streamed == oneShot,
       s"streamed trend diverged:\n$streamed\n$oneShot")
-    StreamingPower.trendStep(b2.toDF("event_id", "event_type", "ts"),
-      "event_type", "ts", storePath, batchId = 1L)
-    assert(StreamingPower.mergedTrend(spark, storePath)
+    StreamingPower.trend.append(spark, storePath, 1L)(graft.operators.Sessions
+      .dailyCounts(b2.toDF("event_id", "event_type", "ts"), "event_type", "ts"))
+    assert(graft.operators.Sessions.trendFromDaily(
+      StreamingPower.trend.read(spark, storePath))
       .collect().toSeq == oneShot,
       "retried batch mutated the committed trend store")
   }
@@ -1215,8 +1260,8 @@ class StreamingSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val storePath = Files.createTempDirectory("graft_ewma_store").toString + "/ewma"
-    val ckpt = Files.createTempDirectory("graft_ewma_ckpt").toString
+    val storePath = tempDir("graft_ewma_store") + "/ewma"
+    val ckpt = tempDir("graft_ewma_ckpt")
     def ts(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
     val all = Seq((1L, ts(1), 10.0), (1L, ts(2), 20.0), (2L, ts(1), 4.0),
       (1L, ts(3), 40.0), (2L, ts(4), 8.0), (1L, ts(5), 10.0))
@@ -1224,10 +1269,10 @@ class StreamingSpec extends SparkSpecBase {
     // never goes backwards across batches)
     val (b1, b2) = all.partition(_._2.getTime <= ts(2).getTime)
     val ms = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val q = StreamingPower.ewmaStream(
-      ms.toDF().toDF("user_id", "ts", "value"),
-      "user_id", "ts", "value", alphaPpm = 500000L, storePath, ckpt,
-      compactEvery = 2)
+    val q = StreamingPower.ewma.stream(
+      ms.toDF().toDF("user_id", "ts", "value"), storePath, ckpt,
+      compactEvery = 2)(StreamingPower.ewmaRows(_, "user_id", "ts", "value",
+      alphaPpm = 500000L, storePath))
     ms.addData(b1: _*)
     q.processAllAvailable()
     ms.addData(b2: _*)
@@ -1236,15 +1281,18 @@ class StreamingSpec extends SparkSpecBase {
     val oneShot = graft.operators.Resample.ewma(
       all.toDF("user_id", "ts", "value"), "user_id", "ts", "value",
       alphaPpm = 500000L).collect().toSeq
-    val streamed = StreamingPower.mergedEwma(spark, storePath, "user_id")
+    val streamed = StreamingPower.ewma.read(spark, storePath)
+      .orderBy("user_id", "step")
       .collect().toSeq
     assert(streamed == oneShot,
       s"streamed EWMA diverged:\n$streamed\n$oneShot")
     // a retried (already folded) batch id is a no-op — the recurrence
     // must not double-apply
-    StreamingPower.ewmaStep(b2.toDF("user_id", "ts", "value"),
-      "user_id", "ts", "value", 500000L, storePath, batchId = 1L)
-    assert(StreamingPower.mergedEwma(spark, storePath, "user_id")
+    StreamingPower.ewma.append(spark, storePath, 1L)(StreamingPower.ewmaRows(
+      b2.toDF("user_id", "ts", "value"), "user_id", "ts", "value", 500000L,
+      storePath))
+    assert(StreamingPower.ewma.read(spark, storePath)
+      .orderBy("user_id", "step")
       .collect().toSeq == oneShot,
       "retried batch mutated the committed EWMA store")
   }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
@@ -29,7 +28,7 @@ class TextIndexSpec extends SparkSpecBase {
     .collect().map(key)
 
   private def buildTwoBatches(tag: String): String = {
-    val path = Files.createTempDirectory(s"graft_tidx$tag").toString + "/idx"
+    val path = tempDir(s"graft_tidx$tag") + "/idx"
     TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 0),
       "doc_id", "text", path, batchId = 0L)
     TextIndex.appendBatch(corpus.filter(col("doc_id") % 2 === 1),
@@ -86,7 +85,7 @@ class TextIndexSpec extends SparkSpecBase {
 
   test("phrase search: overlaps counted, duplicate-token phrases, compaction-safe") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_tidx_phrase").toString + "/idx"
+    val path = tempDir("graft_tidx_phrase") + "/idx"
     val corpus2 = Seq(
       (1L, "a a a a"),        // "a a" occurs at bases 0,1,2 (overlaps)
       (2L, "x a b a b a y"),  // "a b a" at bases 1 and 3
@@ -109,7 +108,7 @@ class TextIndexSpec extends SparkSpecBase {
 
   test("phrase search beyond 64 tokens: chunked coverage mask") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft_tidx_long").toString + "/idx"
+    val path = tempDir("graft_tidx_long") + "/idx"
     // doc 1 contains the 70-token phrase once (at base 5); doc 2 is a
     // near-miss (one token flipped inside the phrase's SECOND 64-token
     // word — the exact bits a wrapped shift would corrupt); doc 3 is
@@ -162,8 +161,8 @@ class TextIndexSpec extends SparkSpecBase {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = Files.createTempDirectory("graft_tidx_stream").toString + "/idx"
-    val ckpt = Files.createTempDirectory("graft_tidx_ckpt").toString
+    val path = tempDir("graft_tidx_stream") + "/idx"
+    val ckpt = tempDir("graft_tidx_ckpt")
     val rows = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
     val ms = MemoryStream[(Long, String)]
     val q = TextIndex.indexStream(ms.toDF().toDF("doc_id", "text"),
@@ -232,7 +231,7 @@ class TextIndexSpec extends SparkSpecBase {
   }
 
   test("tombstone delete on a single-generation index folds under force-compact") {
-    val path = Files.createTempDirectory("graft_tidx_del1").toString + "/idx"
+    val path = tempDir("graft_tidx_del1") + "/idx"
     TextIndex.appendBatch(corpus, "doc_id", "text", path, batchId = 0L)
     TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
       .select("doc_id"), "doc_id", path)
@@ -251,7 +250,7 @@ class TextIndexSpec extends SparkSpecBase {
     * fold and does not commit.
     */
   private def uncommittedPostingsWithTombstones(tag: String): String = {
-    val path = Files.createTempDirectory(s"graft_tidx_$tag").toString + "/idx"
+    val path = tempDir(s"graft_tidx_$tag") + "/idx"
     TextIndex.appendBatch(corpus, "doc_id", "text", path, batchId = 0L)
     TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
       .select("doc_id"), "doc_id", path)
