@@ -89,7 +89,7 @@ object Bench {
     // their consumers measure store-READ cost (what repeats in
     // production); each build's amortizable cost is its own timed
     // entry (q161/q334/q337).
-    graft.queries.SharedStore.prewarm(spark, sfDir, selected, "bench")
+    graft.queries.SharedStore.prewarm(spark, sfDir, SparkEntry.needs(selected), "bench")
     GraftSession.releaseCheckpoints(spark)
 
     shuffleAcc.set(0)

@@ -4,6 +4,9 @@ import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 /** The one place a graft Spark session is built: Bench, Verify, the
   * probes, the demos and the specs all come through [[local]], so a
   * session default changes here or nowhere.
@@ -45,6 +48,24 @@ object GraftSession {
     loggers.foreach { case (n, _) => Configurator.setLevel(n, Level.ERROR) }
     try rdds.foreach(_.unpersist(blocking = false))
     finally loggers.foreach { case (n, level) => Configurator.setLevel(n, level) }
+  }
+
+  /** Apply `f` to `items` in waves of `par` concurrent calls on one
+    * session, and [[releaseCheckpoints]] at each wave's barrier only:
+    * mid-wave, a release would truncate a concurrent call's
+    * checkpointed lineage. Results come back in `items` order; a failed
+    * call rethrows once its wave has settled.
+    */
+  def inWaves[A, B](spark: SparkSession, par: Int, items: Seq[A])(f: A => B): Seq[B] = {
+    val width = math.max(1, par)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try items.grouped(width).toList.flatMap { wave =>
+      val fs = wave.map(a => Future(f(a)))
+      fs.foreach(Await.ready(_, Duration.Inf))
+      releaseCheckpoints(spark)
+      fs.map(Await.result(_, Duration.Inf))
+    } finally pool.shutdown()
   }
 
   /** `SPARK_GRAFT_CONF`'s `k=v;k=v` form as ordered pairs, keys and

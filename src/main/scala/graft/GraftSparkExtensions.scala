@@ -1,10 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarityExpr, Md5Family, MinhashSignatureExpr, NfcNormalizeExpr}
+import graft.functions.Native
 
 /** Library integration point — the standard way to ship custom Catalyst
   * expressions with a Spark library:
@@ -19,27 +17,20 @@ import graft.functions.{CosineSimilarityExpr, Md5Family, MinhashSignatureExpr, N
   * usable from plain SQL (`SELECT graft_cosine(a.embedding, b.embedding)
   * ...`), not just from the Scala API's `call_function` helpers.
   *
-  * Registered:
-  *  - `graft_cosine(array<double>, array<double>)` — fused codegen
-  *    cosine similarity ([[graft.functions.CosineSimilarityExpr]]);
-  *  - `graft_minhash16(array<long>, array<long>)` — fused 16-permutation
-  *    minhash signature over two base-hash arrays in the Md5Family ring
-  *    ([[graft.functions.MinhashSignatureExpr]]).
+  * Registered: every row of [[graft.functions.Native]] —
+  *  - `graft_cosine(array<double>, array<double>)` and
+  *    `graft_dot(array<double>, array<double>)`, fused codegen cosine
+  *    similarity and dot product;
+  *  - `graft_nfc(string)`, Unicode NFC normalization, and
+  *    `graft_topgram(array<string>, int)`, the most frequent n-gram;
+  *  - `graft_minhash(array<long>, array<long>, numPerm, ring)`, the fused
+  *    minhash signature over two base-hash arrays, and its 16-permutation
+  *    Md5Family form `graft_minhash16(array<long>, array<long>)`;
+  *  - `graft_bloom_agg(long, expectedItems, numBits)` and
+  *    `graft_bloom_might_contain(binary, long)`, Spark's Bloom filter
+  *    aggregate and probe.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarityExpr].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarityExpr(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash16"),
-      new ExpressionInfo(classOf[MinhashSignatureExpr].getName, "graft_minhash16"),
-      (exprs: Seq[Expression]) =>
-        MinhashSignatureExpr(exprs.head, exprs(1), 16, Md5Family.Ring)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalizeExpr].getName, "graft_nfc"),
-      (exprs: Seq[Expression]) => NfcNormalizeExpr(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    Native.all.foreach(f => ext.injectFunction((f.id, f.info, f.build)))
 }

@@ -53,30 +53,19 @@ object Verify {
     // blocks them) — up front, the build runs once with every core to
     // itself. The fresh-build queries (q161/q188/q332/q334) keep their
     // scratch builds: measuring build cost is their contract.
-    graft.queries.SharedStore.prewarm(spark, sfDir, selected.map(_._1), "verify")
+    graft.queries.SharedStore.prewarm(spark, sfDir,
+      SparkEntry.needs(selected.map(_._1)), "verify")
     GraftSession.releaseCheckpoints(spark)
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, par))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    selected.grouped(math.max(1, par)).foreach { wave =>
-      val fs = wave.map { case (name, fn) =>
-        scala.concurrent.Future {
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          }
-        }
+    // storage pressure otherwise compounds across the 330-query dump:
+    // inWaves releases localCheckpoint blocks at each wave's barrier
+    GraftSession.inWaves(spark, par, selected) { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      fs.foreach(f => scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
-      // release localCheckpoint blocks between waves — storage pressure
-      // otherwise compounds across the 330-query dump. Only at the
-      // barrier: mid-wave, an unpersist would truncate a concurrent
-      // query's checkpointed lineage.
-      GraftSession.releaseCheckpoints(spark)
     }
-    pool.shutdown()
     System.err.println(
       f"[verify] done: ${selected.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1f s (par=$par)")
     spark.stop()

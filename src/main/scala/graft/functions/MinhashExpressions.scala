@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst expression for the full minhash signature — the
@@ -92,14 +92,10 @@ case class MinhashSignatureExpr(left: Expression, right: Expression,
 }
 
 object MinhashExpressions {
-  /** Register (idempotent, parameter-keyed name) and return the fused
-    * minhash signature Column.
+  /** The fused minhash signature Column (`graft_minhash`, see
+    * [[Native]]; `numPerm` and `ring` travel as literal arguments).
     */
   def minhashFast(spark: SparkSession)(h1: Column, h2: Column,
-      numPerm: Int, ring: Long): Column = {
-    val name = s"graft_minhash_${numPerm}_$ring"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinhashSignatureExpr(exprs.head, exprs(1), numPerm, ring), "built-in")
-    call_function(name, h1, h2)
-  }
+      numPerm: Int, ring: Long): Column =
+    Native.call(spark, "graft_minhash", h1, h2, lit(numPerm), lit(ring))
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -159,22 +158,13 @@ case class TopGramExpr(left: Expression, right: Expression)
 }
 
 object TextExpressions {
-  private val NfcName = "graft_nfc"
-  private val TopGramName = "graft_topgram"
-
-  /** Register (idempotent) and return the fused top-n-gram Column:
+  /** The fused top-n-gram Column (`graft_topgram`, see [[Native]]):
     * struct(g, c) — winning gram and its count.
     */
-  def topGramFast(spark: SparkSession)(tokens: Column, n: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TopGramName, exprs => TopGramExpr(exprs.head, exprs(1)), "built-in")
-    call_function(TopGramName, tokens, n)
-  }
+  def topGramFast(spark: SparkSession)(tokens: Column, n: Column): Column =
+    Native.call(spark, "graft_topgram", tokens, n)
 
-  /** Register (idempotent) and return the codegen'd NFC Column. */
-  def nfcFast(spark: SparkSession)(c: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NfcName, exprs => NfcNormalizeExpr(exprs.head), "built-in")
-    call_function(NfcName, c)
-  }
+  /** The codegen'd NFC Column (`graft_nfc`). */
+  def nfcFast(spark: SparkSession)(c: Column): Column =
+    Native.call(spark, "graft_nfc", c)
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over
@@ -140,24 +139,11 @@ case class DotProductExpr(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  private val FuncName = "graft_cosine"
-  private val DotName = "graft_dot"
+  /** The codegen'd cosine Column (`graft_cosine`, see [[Native]]). */
+  def cosineFast(spark: SparkSession)(a: Column, b: Column): Column =
+    Native.call(spark, "graft_cosine", a, b)
 
-  /** Register (idempotent) and return the codegen'd cosine Column.
-    * Registration goes through the session FunctionRegistry because
-    * Spark 4's Column API no longer exposes a public
-    * Expression→Column constructor.
-    */
-  def cosineFast(spark: SparkSession)(a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => CosineSimilarityExpr(exprs.head, exprs(1)), "built-in")
-    call_function(FuncName, a, b)
-  }
-
-  /** Register (idempotent) and return the codegen'd dot-product Column. */
-  def dotFast(spark: SparkSession)(a: Column, b: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProductExpr(exprs.head, exprs(1)), "built-in")
-    call_function(DotName, a, b)
-  }
+  /** The codegen'd dot-product Column (`graft_dot`). */
+  def dotFast(spark: SparkSession)(a: Column, b: Column): Column =
+    Native.call(spark, "graft_dot", a, b)
 }

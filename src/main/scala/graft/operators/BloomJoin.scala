@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 
 /** Bloom runtime-filter join — the generic form of the prefilter
   * `Decontamination.contaminatedBloom` uses: build a Bloom filter over
@@ -56,30 +57,19 @@ object BloomJoin {
   /** Codegen Bloom probe: `BloomFilterAggregate` over xxhash64(key)
     * (distributed, mergeable), the serialized filter embedded as a
     * binary literal, probed with `BloomFilterMightContain` over the
-    * SAME hash (the aggregate stores longs). Registered through the
-    * session FunctionRegistry — Spark 4's Column API has no public
-    * Expression→Column constructor.
+    * SAME hash (the aggregate stores longs) — both as the
+    * `graft_bloom_*` rows of [[graft.functions.Native]].
     */
   private def builtinProbe(keys: DataFrame, expected: Long, fpp: Double,
       keyExpr: Column): Column = {
     val spark = keys.sparkSession
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expected, fpp)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs.head, exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs.head, exprs(1)),
-      "built-in")
     val filterBytes = keys
-      .agg(call_function("graft_bloom_agg", xxhash64(col("_bj_key")),
+      .agg(Native.call(spark, "graft_bloom_agg", xxhash64(col("_bj_key")),
         lit(expected), lit(numBits)).as("bf"))
       .head.getAs[Array[Byte]]("bf")
-    call_function("graft_bloom_might_contain", lit(filterBytes),
+    Native.call(spark, "graft_bloom_might_contain", lit(filterBytes),
       xxhash64(keyExpr))
   }
 

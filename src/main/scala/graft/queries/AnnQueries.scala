@@ -12,7 +12,7 @@ import graft.queries.QueryHelpers._
   *
   * Split from the former ExtensionQueries monolith (round 7) — query
   * bodies, registration names, and oracle SQL are unchanged;
-  * [[ExtensionQueries]] re-aggregates every domain map.
+  * [[ExtensionQueries]] concatenates every domain's `all` list.
   */
 object AnnQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -735,54 +735,6 @@ object AnnQueries {
     }
   }
 
-  val queries: Map[String, Q] = Map(
-    "q335_semantic_decontam_index" -> semanticDecontamIndexQ,
-    "q330_semdedup_index" -> semdedupIndexQ,
-    "q320_jl_projection" -> jlProjectionQ,
-    "q282_ann_filtered" -> annFilteredQ,
-    "q175_ann_delete" -> annDeleteQ,
-    "q174_label_prop" -> labelPropQ,
-    "q173_matryoshka" -> truncationQ,
-    "q169_hard_negatives" -> hardNegativesQ,
-    "q170_cluster_topics" -> clusterTopicsQ,
-    "q167_semantic_decontam" -> semanticDecontamQ,
-    "q160_opq_gain" -> opqGainQ,
-    "q159_ann_recall_learned" -> annRecallLearnedQ,
-    "q149_dim_drift" -> dimDriftQ,
-    "q148_embedding_cov" -> embeddingCovQ,
-    "q147_knn_label_noise" -> knnLabelNoiseQ,
-    "q131_ann_index" -> annIndexQ,
-    "q129_ann_recall" -> annRecallQ,
-    "q126_ann_ivfpq_rerank" -> annIvfPqRerank,
-    "q124_negative_samples" -> negSamplesQ,
-    "q123_centroid_affinity" -> affinityQ,
-    "q122_embedding_diversity" -> diversityQ,
-    "q102_ann_ivf_pq" -> annIvfPq,
-    "q99_ann_pq" -> annPq,
-    "q80_quantize_int8" -> quantizeQ,
-    "q66_embedding_norms" -> embeddingNorms,
-    "q58_lang_centroids" -> langCentroids,
-    "q40_ann_ivf" -> annIvf,
-    "q24_ann_topk" -> annTopK,
-    "q286_binary_hamming" -> binaryHammingQ,
-    "q289_maxsim" -> maxSimQ,
-    "q26_ann_lsh" -> annLsh,
-    "q27_centroids" -> centroids,
-    "q183_mmr" -> mmrQ,
-    "q197_embedding_outliers" -> outliersQ,
-    "q198_knn_pagerank" -> pagerankQ,
-    "q199_silhouette" -> silhouetteQ,
-    "q201_coreset" -> coresetQ,
-    "q302_coreset_scaled" -> coresetScaledQ,
-    "q202_density_clusters" -> densityQ,
-    "q203_knn_eval" -> knnEvalQ,
-    "q204_knn_kappa" -> knnKappaQ,
-    "q224_knn_triangles" -> trianglesQ,
-    "q249_list_balance" -> listBalanceQ,
-    "q251_kcore" -> kCoreQ,
-    "q252_assortativity" -> assortQ,
-    "q255_modularity" -> modularityQ)
-
   /** q183's oracle: the same greedy MMR unrolled as k−1 CTE steps —
     * each step's candidate scores are exact BIGINT arithmetic over the
     * ppm-quantized relevance/pairwise cosines (`700000·rel_ppm −
@@ -1238,22 +1190,22 @@ object AnnQueries {
         |  FROM hits)
         |WHERE rn = 1 ORDER BY train_id""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // q330: index-fed SemDeDup must reproduce the inline q115 exactly
     // (same seeded codebook, same routing, same exact-cosine verify)
-    "q330_semdedup_index" -> DedupQueries.oracleSql("q115_semdedup"),
-    "q320_jl_projection" -> jlProjectionOracle,
-    "q198_knn_pagerank" -> pagerankOracle,
-    "q201_coreset" -> coresetOracle,
-    "q302_coreset_scaled" -> coresetScaledOracle,
-    "q224_knn_triangles" -> trianglesOracle,
-    "q249_list_balance" -> listBalanceOracle,
-    "q251_kcore" -> kCoreOracle,
-    "q252_assortativity" -> assortOracle,
-    "q255_modularity" -> modularityOracle,
+    Query("q330_semdedup_index", semdedupIndexQ, DedupQueries.semdedupOracle),
+    Query("q320_jl_projection", jlProjectionQ, jlProjectionOracle),
+    Query("q198_knn_pagerank", pagerankQ, pagerankOracle),
+    Query("q201_coreset", coresetQ, coresetOracle),
+    Query("q302_coreset_scaled", coresetScaledQ, coresetScaledOracle),
+    Query("q224_knn_triangles", trianglesQ, trianglesOracle),
+    Query("q249_list_balance", listBalanceQ, listBalanceOracle),
+    Query("q251_kcore", kCoreQ, kCoreOracle),
+    Query("q252_assortativity", assortQ, assortOracle),
+    Query("q255_modularity", modularityQ, modularityOracle),
     // q203: per-class one-vs-rest counts off the vote chain; F1 from
     // integers (2tp / (2tp+fp+fn)), never from the rounded p and r.
-    "q203_knn_eval" ->
+    Query("q203_knn_eval", knnEvalQ,
       s"""WITH $knnVoteCtes,
         |cls AS (SELECT class FROM nt UNION SELECT class FROM np),
         |tp AS (SELECT t AS class, n AS tp FROM pairs WHERE t = p)
@@ -1275,10 +1227,10 @@ object AnnQueries {
         |FROM cls LEFT JOIN tp ON tp.class = cls.class
         |  LEFT JOIN nt ON nt.class = cls.class
         |  LEFT JOIN np ON np.class = cls.class
-        |ORDER BY cls.class""".stripMargin,
+        |ORDER BY cls.class""".stripMargin),
     // q204: kappa as one exact-integer division,
     // (N·agree − Σ nt·np) / (N² − Σ nt·np).
-    "q204_knn_kappa" ->
+    Query("q204_knn_kappa", knnKappaQ,
       s"""WITH $knnVoteCtes,
         |a AS (SELECT CAST(SUM(n) AS BIGINT) AS n_items,
         |    CAST(SUM(CASE WHEN t = p THEN n ELSE 0 END) AS BIGINT) AS n_agree
@@ -1291,11 +1243,11 @@ object AnnQueries {
         |    ROUND(CAST(a.n_items * a.n_agree - ex.sum_ntnp AS DOUBLE)
         |      / (a.n_items * a.n_items - ex.sum_ntnp), 6)
         |  END AS kappa
-        |FROM a CROSS JOIN ex""".stripMargin,
+        |FROM a CROSS JOIN ex""".stripMargin),
     // q202: q197's routing CTEs, symmetric eps pairs, core = degree
     // >= minPts, recursive closure over core-core edges + core self
     // loops, min-reachable label; noise -1.
-    "q202_density_clusters" ->
+    Query("q202_density_clusters", densityQ,
       // asg feeds BOTH sides of the eps self-join plus the final
       // readout, p feeds deg and the core-edge join — MATERIALIZED or
       // DuckDB re-derives the N×√N routing cross-join per reference
@@ -1338,10 +1290,10 @@ object AnnQueries {
         |FROM asg a LEFT JOIN deg ON deg.node = a.vec_id
         |  LEFT JOIN core ON core.node = a.vec_id
         |  LEFT JOIN cl ON cl.vec_id = a.vec_id
-        |ORDER BY a.vec_id""".stripMargin,
+        |ORDER BY a.vec_id""".stripMargin),
     // q199: same seeded codebook; per-vector distances to ALL
     // centroids, top-2 by ppm distance, exact-integer silhouette.
-    "q199_silhouette" ->
+    Query("q199_silhouette", silhouetteQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id,
@@ -1372,11 +1324,11 @@ object AnnQueries {
         |  CAST(SUM(s_ppm) AS BIGINT) AS sum_s_ppm,
         |  ROUND(CAST(SUM(s_ppm) AS BIGINT) / (count(*) * 1000000e0), 6) AS mean_s
         |FROM s GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q183_mmr" -> mmrOracle,
+        |ORDER BY 1""".stripMargin),
+    Query("q183_mmr", mmrQ, mmrOracle),
     // q197: q174's seeded routing + within-list kNN window; cosines
     // quantize to ppm at birth, the cut compares exact integers.
-    "q197_embedding_outliers" ->
+    Query("q197_embedding_outliers", outliersQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id,
@@ -1410,21 +1362,21 @@ object AnnQueries {
         |    OR coalesce(kn.knn_sum_ppm, 0) < 300000 * coalesce(kn.n_nbrs, 0)
         |    THEN 1 ELSE 0 END AS INTEGER) AS outlier
         |FROM asg a LEFT JOIN kn ON kn.node = a.vec_id
-        |ORDER BY a.vec_id""".stripMargin,
+        |ORDER BY a.vec_id""".stripMargin),
     // q175: q102's chain with tombstoned neighbors masked from the
     // candidate set — everything else (codebooks, routing, ADC)
     // identical, exactly the query-time anti-join semantics.
-    "q175_ann_delete" ->
-      ivfPqSeededOracleWhere(" AND c.neighbor_id % 7 <> 0"),
+    Query("q175_ann_delete", annDeleteQ,
+      ivfPqSeededOracleWhere(" AND c.neighbor_id % 7 <> 0")),
     // q282: the same adc frame cut pre- vs post-filter, scored
     // against the exact filtered top-k (see QueryHelpers).
-    "q282_ann_filtered" -> annFilteredOracle,
+    Query("q282_ann_filtered", annFilteredQ, annFilteredOracle),
     // q174: the ⌈√N⌉ seeded routing (q125's cb/ca pattern), the
     // within-list kNN graph (rounded cosine, id tie-break), then two
     // unrolled majority rounds — each restricted to not-yet-labeled
     // nodes, (count DESC, label ASC) tie-break, exactly the Spark
     // iteration.
-    "q174_label_prop" ->
+    Query("q174_label_prop", labelPropQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS c
         |       FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
@@ -1460,11 +1412,11 @@ object AnnQueries {
         |        FROM v2) WHERE r = 1),
         |l2 AS (SELECT * FROM l1 UNION ALL SELECT * FROM n2)
         |SELECT vec_id, label, CAST(hop AS INTEGER) AS hop
-        |FROM l2 ORDER BY vec_id""".stripMargin,
-    "q173_matryoshka" -> matryoshkaOracle,
+        |FROM l2 ORDER BY vec_id""".stripMargin),
+    Query("q173_matryoshka", truncationQ, matryoshkaOracle),
     // q169: definitional — every (probe, other-label corpus vector)
     // pair scored, rounded-cosine rank with neighbor_id tie-break.
-    "q169_hard_negatives" ->
+    Query("q169_hard_negatives", hardNegativesQ,
       """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |p AS (SELECT * FROM e WHERE vec_id < 10),
         |s AS (SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -1474,11 +1426,11 @@ object AnnQueries {
         |SELECT query_id, rank, neighbor_id, neighbor_label, cosine FROM
         |  (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
         |     ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank FROM s)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // q170: the seeded coarse routing (q102's ccb over the FULL
     // corpus), docs joined to their list by id, then q158's top-terms
     // chain per list.
-    "q170_cluster_topics" ->
+    Query("q170_cluster_topics", clusterTopicsQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ccb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS cc
         |        FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
@@ -1500,22 +1452,22 @@ object AnnQueries {
         |      ORDER BY cnt DESC, token) AS INTEGER) AS rank,
         |    round(cnt/sum(cnt) OVER (PARTITION BY g), 6) AS share FROM c)
         |SELECT g AS list_id, rank, token, cnt, share FROM r WHERE rank <= 5
-        |ORDER BY list_id, rank""".stripMargin,
+        |ORDER BY list_id, rank""".stripMargin),
     // q335: index-fed decontamination must reproduce the inline q167
     // exactly (same seeded-from-train codebook, same routing, same
     // rounded-cosine threshold) — oracle shared verbatim.
-    "q335_semantic_decontam_index" -> semanticDecontamOracle,
+    Query("q335_semantic_decontam_index", semanticDecontamIndexQ, semanticDecontamOracle),
     // q167: replays the exact seeded-IVF routing (train-side codebook
     // by md5 hash order, corpus→1 list, bench→4 lists) and thresholds
     // on the ROUNDED cosine; per-train hit count and the
     // (cosine DESC, bench_id) best-match tie-break mirror the two
     // window functions.
-    "q167_semantic_decontam" -> semanticDecontamOracle,
+    Query("q167_semantic_decontam", semanticDecontamQ, semanticDecontamOracle),
     // q160: the derived rank-4 corpus and its seeded-tier ppm error
     // are replayed exactly (fixed integer loadings, q99's codebook
     // chain); the corpus fingerprint proves both engines scored the
     // same vectors; learned/OPQ tiers enter as asserted booleans.
-    "q160_opq_gain" ->
+    Query("q160_opq_gain", opqGainQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |wt AS (SELECT vec_id,
         |    [v[1]*CAST((d*3) % 7 - 3 AS DOUBLE)
@@ -1549,13 +1501,13 @@ object AnnQueries {
         |SELECT (SELECT count(*) FROM e) AS n_vecs, fp.corpus_fp,
         |  err.seeded_err_ppm,
         |  true AS learned_le_seeded, true AS opq_halves_learned
-        |FROM fp CROSS JOIN err""".stripMargin,
+        |FROM fp CROSS JOIN err""".stripMargin),
     // q159: the seeded-PQ tier is replayed exactly (q99's chain at
     // probes<50, k=5) against the exact cosine top-5; the learned
     // tiers (driver-side Lloyd, not SQL-expressible) enter as the
     // asserted booleans learned >= seeded — Spark computes the real
     // comparison, so a Lloyd regression flips the hash red.
-    "q159_ann_recall_learned" ->
+    Query("q159_ann_recall_learned", annRecallLearnedQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ms AS (SELECT unnest(generate_series(0, 7)) AS m),
         |sub AS (SELECT vec_id, m, v[m*8+1 : m*8+8] AS s FROM e, ms),
@@ -1600,12 +1552,12 @@ object AnnQueries {
         |SELECT tot.total, h.seeded_hits,
         |  ROUND(CAST(h.seeded_hits AS DOUBLE) / tot.total, 6) AS seeded_recall,
         |  true AS pq_learned_ge_seeded, true AS ivfpq_learned_ge_seeded
-        |FROM tot CROSS JOIN h""".stripMargin,
+        |FROM tot CROSS JOIN h""".stripMargin),
     // q149: conditional sums over the FIXED-POINT coordinates (q =
     // round(x*1e6), matching Pca.quantize) — exact integers, so only
     // the final reconstruction is float, with the Spark side's exact
     // association: mean = Σq/1e6/n, var = Σq²/1e12/n - mean·mean.
-    "q149_dim_drift" ->
+    Query("q149_dim_drift", dimDriftQ,
       """WITH t AS (SELECT CASE WHEN vec_id % 2 = 0 THEN 0 ELSE 1 END AS h,
         |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |u AS (SELECT h, CAST(gs.i - 1 AS INTEGER) AS dim,
@@ -1632,7 +1584,7 @@ object AnnQueries {
         |      /count(CASE WHEN h=0 THEN q END)
         |    - CAST(sum(CASE WHEN h=1 THEN q END) AS DOUBLE)/1e6
         |      /count(CASE WHEN h=1 THEN q END)), 6) AS mean_shift
-        |FROM u GROUP BY dim ORDER BY dim""".stripMargin,
+        |FROM u GROUP BY dim ORDER BY dim""".stripMargin),
     // q148: definitional covariance over the FIXED-POINT coordinates
     // (q = round(x*1e6) as BIGINT, matching Pca.quantize): integer
     // sums are exact and order-invariant on both engines, so the one
@@ -1640,7 +1592,7 @@ object AnnQueries {
     // SAME association covCell uses — is bit-identical, not merely
     // close (the CLAUDE.md order-invariance invariant; double partial
     // sums here flipped a 6-dp boundary in round 6).
-    "q148_embedding_cov" ->
+    Query("q148_embedding_cov", embeddingCovQ,
       """WITH e AS (SELECT row_number() OVER () AS rid,
         |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |u AS (SELECT rid, gs.i AS d, CAST(round(v[gs.i]*1e6) AS BIGINT) AS q
@@ -1652,11 +1604,11 @@ object AnnQueries {
         |    - CAST(sum(a.q) AS DOUBLE)/1e6*(CAST(sum(b.q) AS DOUBLE)/1e6)
         |      /count(*))/count(*), 6) + 0e0 AS cov
         |FROM u a JOIN u b ON a.rid = b.rid AND b.d >= a.d
-        |GROUP BY 1, 2 ORDER BY dim_i, dim_j""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY dim_i, dim_j""".stripMargin),
     // q147: definitional quadratic kNN + vote — rank on the ROUNDED
     // cosine (q24's convention), majority with (count DESC, label)
     // tie-break, both deterministic cross-engine.
-    "q147_knn_label_noise" ->
+    Query("q147_knn_label_noise", knnLabelNoiseQ,
       """WITH q AS (SELECT vec_id AS query_id, label AS q_label,
         |    CAST(embedding AS DOUBLE[]) AS qe
         |  FROM embeddings WHERE vec_id % 20 = 0),
@@ -1675,12 +1627,12 @@ object AnnQueries {
         |      ORDER BY n_votes DESC, n_label) AS vr FROM v)
         |SELECT query_id AS vec_id, q_label AS label, n_label AS knn_label,
         |  n_votes, CASE WHEN q_label = n_label THEN 1 ELSE 0 END AS agree
-        |FROM w WHERE vr = 1 ORDER BY vec_id""".stripMargin,
+        |FROM w WHERE vr = 1 ORDER BY vec_id""".stripMargin),
     // q129: q102's ADC chain + q126's rerank + q24's exact top-k,
     // composed into one recall report — every tier's result set is the
     // SAME CTE shape its own oracle uses, so a hash match here means
     // the recall numbers, not just the rankings, agree cross-engine.
-    "q129_ann_recall" ->
+    Query("q129_ann_recall", annRecallQ,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ccb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS cc
         |       FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
@@ -1756,8 +1708,8 @@ object AnnQueries {
         |FROM (SELECT unnest(['ivfpq_adc', 'ivfpq_rerank']) AS method) names
         |LEFT JOIN h ON h.method = names.method
         |CROSS JOIN tot
-        |ORDER BY names.method""".stripMargin,
-    "q124_negative_samples" ->
+        |ORDER BY names.method""".stripMargin),
+    Query("q124_negative_samples", negSamplesQ,
       s"""WITH nn AS (SELECT count(*) AS n FROM embeddings),
         |d AS (SELECT e.vec_id AS anchor_id, gs.i AS sample_idx,
         |        ${md5l("concat(CAST(e.vec_id AS VARCHAR), ':', CAST(gs.i AS VARCHAR), ':neg')")} % nn.n AS draw
@@ -1770,8 +1722,8 @@ object AnnQueries {
         |SELECT anchor_id, CAST(sample_idx AS INTEGER) AS sample_idx, neg_id,
         |  e2.label AS neg_label
         |FROM s JOIN embeddings e2 ON e2.vec_id = s.neg_id
-        |ORDER BY anchor_id, sample_idx""".stripMargin,
-    "q122_embedding_diversity" ->
+        |ORDER BY anchor_id, sample_idx""".stripMargin),
+    Query("q122_embedding_diversity", diversityQ,
       """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |n AS (SELECT label, count(*) AS n,
         |        avg(list_dot_product(v, v)) AS s FROM e GROUP BY label),
@@ -1780,8 +1732,8 @@ object AnnQueries {
         |       GROUP BY label, gs.d),
         |m2 AS (SELECT label, sum(m * m) AS m2 FROM dm GROUP BY label)
         |SELECT label, n, ROUND(2.0e0 * (s - m2), 6) AS mean_sq_dist
-        |FROM n JOIN m2 USING (label) ORDER BY label""".stripMargin,
-    "q123_centroid_affinity" ->
+        |FROM n JOIN m2 USING (label) ORDER BY label""".stripMargin),
+    Query("q123_centroid_affinity", affinityQ,
       """WITH e AS (SELECT label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |dm AS (SELECT label, gs.d AS dim, ROUND(avg(v[gs.d]), 6) AS m
         |       FROM e, LATERAL (SELECT unnest(generate_series(1, len(v))) AS d) gs
@@ -1790,13 +1742,13 @@ object AnnQueries {
         |SELECT a.label AS label_a, b.label AS label_b,
         |  ROUND(list_cosine_similarity(a.c, b.c), 6) AS cosine
         |FROM c a JOIN c b ON a.label < b.label
-        |ORDER BY label_a, label_b""".stripMargin,
-    "q102_ann_ivf_pq" -> ivfPqSeededOracle,
+        |ORDER BY label_a, label_b""".stripMargin),
+    Query("q102_ann_ivf_pq", annIvfPq, ivfPqSeededOracle),
     // q131 shares q102's oracle VERBATIM: the persisted index must
     // return exactly what the inline operator returns — the hash match
     // proves the store/encode/prune/read path, not just the algebra.
-    "q131_ann_index" -> ivfPqSeededOracle,
-    "q126_ann_ivfpq_rerank" ->
+    Query("q131_ann_index", annIndexQ, ivfPqSeededOracle),
+    Query("q126_ann_ivfpq_rerank", annIvfPqRerank,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ccb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS cc
         |       FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
@@ -1853,8 +1805,8 @@ object AnnQueries {
         |          sl.neighbor_id) AS INTEGER) AS rank
         |  FROM sl JOIN e eq ON eq.vec_id = sl.query_id
         |          JOIN e en ON en.vec_id = sl.neighbor_id)
-        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-    "q99_ann_pq" ->
+        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin),
+    Query("q99_ann_pq", annPq,
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ms AS (SELECT unnest(generate_series(0, 7)) AS m),
         |sub AS (SELECT vec_id, m, v[m*8+1 : m*8+8] AS s FROM e, ms),
@@ -1887,8 +1839,8 @@ object AnnQueries {
         |        CAST(row_number() OVER (PARTITION BY query_id
         |            ORDER BY sd, neighbor_id) AS INTEGER) AS rank
         |      FROM adc)
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q40_ann_ivf" ->
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Query("q40_ann_ivf", annIvf,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS c
         |       FROM (SELECT vec_id, v,
@@ -1911,8 +1863,8 @@ object AnnQueries {
         |             AS INTEGER) AS rank
         |      FROM cand)
         |SELECT query_id, rank, neighbor_id, cos AS cosine
-        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-    "q66_embedding_norms" ->
+        |FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin),
+    Query("q66_embedding_norms", embeddingNorms,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |m AS (SELECT vec_id, v,
         |        list_max(list_transform(v, x -> abs(x))) AS max_abs FROM e)
@@ -1924,9 +1876,9 @@ object AnnQueries {
         |    ROUND(list_aggregate(list_transform(v,
         |        x -> pow(x - ROUND(x * 127 / max_abs) * max_abs / 127, 2)), 'sum')
         |      / len(v), 6) END AS int8_mse
-        |FROM m ORDER BY vec_id""".stripMargin,
-    "q26_ann_lsh" -> annLshOracle,
-    "q80_quantize_int8" ->
+        |FROM m ORDER BY vec_id""".stripMargin),
+    Query("q26_ann_lsh", annLsh, annLshOracle),
+    Query("q80_quantize_int8", quantizeQ,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |m AS (SELECT vec_id, v,
         |        list_max(list_transform(v, x -> abs(x))) AS max_abs FROM e)
@@ -1935,15 +1887,15 @@ object AnnQueries {
         |       ELSE round(v[gs.i] * 127 / max_abs) END AS INTEGER) AS q,
         |  ROUND(max_abs, 6) AS max_abs
         |FROM m, LATERAL (SELECT unnest(generate_series(1, len(v))) AS i) gs
-        |ORDER BY vec_id, dim""".stripMargin,
-    "q58_lang_centroids" ->
+        |ORDER BY vec_id, dim""".stripMargin),
+    Query("q58_lang_centroids", langCentroids,
       """SELECT d.lang, CAST(gs.dim - 1 AS INTEGER) AS dim,
         |  count(*) AS n_docs,
         |  ROUND(AVG(CAST(e.embedding[gs.dim] AS DOUBLE)), 6) AS centroid_v
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id,
         |  LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS dim) gs
-        |GROUP BY d.lang, gs.dim ORDER BY d.lang, dim""".stripMargin,
-    "q24_ann_topk" ->
+        |GROUP BY d.lang, gs.dim ORDER BY d.lang, dim""".stripMargin),
+    Query("q24_ann_topk", annTopK,
       """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
         |           FROM embeddings WHERE vec_id < 10),
         |c AS (SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS ce FROM embeddings),
@@ -1954,19 +1906,19 @@ object AnnQueries {
         |             AS INTEGER) AS rank
         |      FROM s)
         |SELECT query_id, rank, neighbor_id, cos AS cosine
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q27_centroids" ->
+        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    Query("q27_centroids", centroids,
       """SELECT label, CAST(gs.dim - 1 AS INTEGER) AS dim,
         |  ROUND(AVG(CAST(embedding[gs.dim] AS DOUBLE)), 6) AS centroid_v
         |FROM embeddings,
         |  LATERAL (SELECT unnest(generate_series(1, len(embedding))) AS dim) gs
-        |GROUP BY label, gs.dim ORDER BY label, dim""".stripMargin,
+        |GROUP BY label, gs.dim ORDER BY label, dim""".stripMargin),
     // q286: DuckDB replays the binary-quantize pipeline closed-form —
     // identical sign-bit word packing (Σ 2^i, 32-bit words: exact in
     // both engines), xor/bit_count Hamming, shortlist-50 on
     // (hamming, neighbor_id), exact-cosine rerank on (cos DESC,
     // neighbor_id). `w` feeds both join sides -> AS MATERIALIZED.
-    "q286_binary_hamming" ->
+    Query("q286_binary_hamming", binaryHammingQ,
       """WITH e AS MATERIALIZED (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |w AS MATERIALIZED (
@@ -1997,13 +1949,13 @@ object AnnQueries {
         |      ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank
         |  FROM r)
         |SELECT query_id, rank, neighbor_id, hamming, cos AS cosine
-        |FROM f WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
+        |FROM f WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
     // q289: the chunk vectors rebuild closed-form (`list(... ORDER BY
     // i)` — 0.25-step reweights are exact binary fractions, so the
     // doubles are bit-identical to Spark's transform), cosines
     // quantize to ppm longs, max-then-sum is exact integer. `d`
     // feeds one join but 4 chunk rows per vec -> MATERIALIZED anyway.
-    "q289_maxsim" ->
+    Query("q289_maxsim", maxSimQ,
       """WITH e AS MATERIALIZED (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |d AS MATERIALIZED (
@@ -2036,5 +1988,9 @@ object AnnQueries {
         |      ORDER BY maxsim_ppm DESC, doc_id) AS INTEGER) AS rank
         |  FROM m)
         |SELECT query_id, rank, doc_id, maxsim_ppm
-        |FROM f2 WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)
+        |FROM f2 WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

@@ -12,7 +12,7 @@ import graft.queries.QueryHelpers._
   *
   * Split from the former ExtensionQueries monolith (round 7) — query
   * bodies, registration names, and oracle SQL are unchanged;
-  * [[ExtensionQueries]] re-aggregates every domain map.
+  * [[ExtensionQueries]] concatenates every domain's `all` list.
   */
 object DedupQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -673,45 +673,6 @@ object DedupQueries {
       mh.union(cg).orderBy("signal")
     }
 
-  val queries: Map[String, Q] = Map(
-    "q337_epoch_store_build" -> epochStoreBuildQ,
-    "q334_pair_store_build" -> pairStoreBuildQ,
-    "q329_pair_store" -> pairStoreQ,
-    "q325_temporal_leakage" -> temporalLeakageQ,
-    "q319_weighted_minhash" -> weightedMinhashQ,
-    "q207_cross_source_dups" -> crossSourceDupQ,
-    "q180_ensemble_split" -> ensembleSplitQ,
-    "q155_bloom_semi_join" -> bloomSemiJoinQ,
-    "q142_cluster_split" -> clusterSplitQ,
-    "q138_fuzzy_join" -> fuzzyJoinQ,
-    "q137_cdc_pairs" -> cdcPairsQ,
-    "q136_cdc_chunks" -> cdcChunksQ,
-    "q130_incremental_canon" -> incrementalCanonQ,
-    "q127_clean_corpus" -> cleanCorpusQ,
-    "q125_semdedup_auto" -> semdedupAutoQ,
-    "q120_source_dedup_report" -> sourceDedupReportQ,
-    "q115_semdedup" -> semdedupQ,
-    "q111_dup_span_removal" -> dupSpanQ,
-    "q106_segment_dedup" -> segmentDedupQ,
-    "q91_split_leakage" -> splitLeakage,
-    "q92_source_overlap" -> sourceOverlap,
-    "q171_quality_canonical" -> qualityCanonicalQ,
-    "q59_canonical_corpus" -> canonicalCorpusQ,
-    "q71_decontaminate_bloom" -> decontaminateBloom,
-    "q74_embedding_dedup" -> embeddingDedup,
-    "q78_incremental_dedup" -> incrementalDedup,
-    "q62_ngram_jaccard_capped" -> ngramJaccardCapped,
-    "q64_decontaminate" -> decontaminate,
-    "q57_dedup_clusters" -> dedupClusters,
-    "q20_dedup_exact" -> dedupExact,
-    "q21_minhash_lsh" -> minhashLsh,
-    "q22_simhash_pairs" -> simhashPairs,
-    "q23_ngram_jaccard" -> ngramJaccard,
-    "q191_minhash_calib" -> minhashCalib,
-    "q232_containment" -> containmentQ,
-    "q235_lsh_design" -> lshDesignQ,
-    "q248_blocking" -> blockingQ)
-
   /** The q191/q232 shared chain: Md5Family minhash bands →
     * bucket-capped candidate pairs → exact hashed-shingle sets,
     * sizes, and pairwise intersections. Verbatim the former q191
@@ -749,11 +710,42 @@ object DedupQueries {
       |  JOIN gset b ON b.doc_id = c.doc_b AND b.gh = a.gh GROUP BY 1, 2)"""
       .stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q319_weighted_minhash" -> weightedMinhashOracle,
+  /** q115's oracle, shared verbatim by q330's index-fed run. */
+  lazy val semdedupOracle: String =
+    s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+      |  FROM embeddings),
+      |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS c
+      |       FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
+      |             FROM e ORDER BY h, vec_id LIMIT 8)),
+      |ca AS (SELECT e.vec_id, e.v, cb.list_id,
+      |         row_number() OVER (PARTITION BY e.vec_id
+      |           ORDER BY ROUND(list_cosine_similarity(e.v, cb.c), 6) DESC, cb.list_id)
+      |           AS crank
+      |       FROM e CROSS JOIN cb),
+      |asg AS (SELECT vec_id, v, list_id FROM ca WHERE crank = 1),
+      |jp AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+      |  FROM asg a JOIN asg b ON a.list_id = b.list_id AND a.vec_id < b.vec_id
+      |  WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4),
+      |edges AS (SELECT id_a AS u, id_b AS v FROM jp
+      |          UNION SELECT id_b, id_a FROM jp
+      |          UNION SELECT id_a, id_a FROM jp UNION SELECT id_b, id_b FROM jp),
+      |reach AS (SELECT u, v FROM edges
+      |          UNION SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u),
+      |clusters AS (SELECT u AS vec_id, min(v) AS cluster_id,
+      |               CAST(count(DISTINCT v) AS BIGINT) AS cluster_size
+      |             FROM reach GROUP BY u)
+      |SELECT em.vec_id, em.label,
+      |  coalesce(c.cluster_size, 1::BIGINT) AS cluster_size,
+      |  coalesce(c.cluster_size, 1::BIGINT) - 1 AS removed_dups
+      |FROM embeddings em LEFT JOIN clusters c ON em.vec_id = c.vec_id
+      |WHERE c.cluster_id IS NULL OR c.cluster_id = em.vec_id
+      |ORDER BY em.vec_id""".stripMargin
+
+  val all: Seq[Query] = Seq(
+    Query("q319_weighted_minhash", weightedMinhashQ, weightedMinhashOracle),
     // q248: block-size counts only; pair mass Σ C(n,2) exact, the two
     // ratios one float expression each.
-    "q248_blocking" ->
+    Query("q248_blocking", blockingQ,
       """WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |ft AS (SELECT lower(string_split(text, ' ')[1]) AS k
         |  FROM documents),
@@ -782,10 +774,10 @@ object DedupQueries {
         |  CASE WHEN cand_pairs > 0 THEN
         |    ROUND(CAST(max_block * (max_block - 1) // 2 AS DOUBLE)
         |      / CAST(cand_pairs AS DOUBLE), 6) END AS max_block_share
-        |FROM a CROSS JOIN n ORDER BY scheme""".stripMargin,
+        |FROM a CROSS JOIN n ORDER BY scheme""".stripMargin),
     // q235: the staged x2/x4 squaring chain mirrors the Spark column
     // graph exactly — identical IEEE multiply order, nano floor.
-    "q235_lsh_design" ->
+    Query("q235_lsh_design", lshDesignQ,
       s"""WITH $minhashExactSetCtes,
         |p0 AS (SELECT c.doc_a, c.doc_b, coalesce(iv.n_inter, 0) AS n_inter,
         |    sa.n + sb.n - coalesce(iv.n_inter, 0) AS n_union
@@ -801,10 +793,10 @@ object DedupQueries {
         |  (n_inter * 1000000) // n_union AS exact_ppm,
         |  ROUND(CAST(floor((1e0 - x4 * x4) * 1000000000e0 + 0.5e0)
         |    AS BIGINT) / 1000000000e0, 6) AS detect_p
-        |FROM p4 ORDER BY doc_a, doc_b""".stripMargin,
+        |FROM p4 ORDER BY doc_a, doc_b""".stripMargin),
     // q232: the q191 chain's exact sets re-read for directional
     // containment; every ratio one floored integer division.
-    "q232_containment" ->
+    Query("q232_containment", containmentQ,
       s"""WITH $minhashExactSetCtes
         |SELECT doc_a, doc_b, n_a, n_b, n_inter, cont_a_ppm, cont_b_ppm,
         |  jaccard_ppm FROM (
@@ -818,11 +810,11 @@ object DedupQueries {
         |  JOIN sz sa ON sa.doc_id = c.doc_a
         |  JOIN sz sb ON sb.doc_id = c.doc_b)
         |WHERE greatest(cont_a_ppm, cont_b_ppm) >= 800000
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // q207: q106's segment CTEs (8-token windows), string segments
     // exact where Spark moves xxhash64 keys; pair arithmetic exact
     // (n(n-1)//2 within, na*nb across), unordered pairs via src <=.
-    "q207_cross_source_dups" ->
+    Query("q207_cross_source_dups", crossSourceDupQ,
       """WITH toks AS (SELECT source AS src, string_split(text, ' ') AS t
         |  FROM documents),
         |segarr AS (SELECT src,
@@ -839,12 +831,12 @@ object DedupQueries {
         |  FROM g a JOIN g b ON a.segment = b.segment AND a.src <= b.src)
         |SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS n_digests,
         |  CAST(SUM(pairs) AS BIGINT) AS n_pairs
-        |FROM j WHERE pairs > 0 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM j WHERE pairs > 0 GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // q191: q21's chain without the threshold, matches kept as exact
     // integers, joined to the exact shingle-set intersection/union;
     // est_ppm = n_match·62500 exactly (16 divides 1e6), exact_ppm
     // floors one division of exact ints.
-    "q191_minhash_calib" ->
+    Query("q191_minhash_calib", minhashCalib,
       s"""WITH $minhashExactSetCtes
         |SELECT doc_a, doc_b, n_match, n_inter, n_union, est_ppm, exact_ppm,
         |  est_ppm - exact_ppm AS err_ppm FROM (
@@ -857,19 +849,19 @@ object DedupQueries {
         |  FROM est e LEFT JOIN iv USING (doc_a, doc_b)
         |  JOIN sz sa ON sa.doc_id = e.doc_a
         |  JOIN sz sb ON sb.doc_id = e.doc_b)
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // q155: the Bloom prefilter is invisible to results (false
     // positives die in the exact join, false negatives impossible) —
     // the oracle is the PLAIN semi join.
-    "q155_bloom_semi_join" ->
+    Query("q155_bloom_semi_join", bloomSemiJoinQ,
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  round(sum(o_totalprice), 6) AS sum_price
         |FROM orders WHERE o_custkey IN
         |  (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // q334: the store-build summary — the same tjp/ejp one-shot mining
     // reduced to per-signal counts and exact µ-unit score sums.
-    "q334_pair_store_build" ->
+    Query("q334_pair_store_build", pairStoreBuildQ,
       s"""WITH $lshCandCtes,
         |toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -894,11 +886,11 @@ object DedupQueries {
         |SELECT signal, CAST(count(*) AS BIGINT) AS n_pairs,
         |  CAST(SUM(CAST(round(score * 1e6) AS BIGINT)) AS BIGINT)
         |    AS score_sum_us
-        |FROM lab GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM lab GROUP BY 1 ORDER BY 1""".stripMargin),
     // q329: the one-shot mining of BOTH signals (q325's tjp/ejp CTEs
     // with their scores kept) — the store's three-increment build must
     // reproduce it bit-for-bit, scores included.
-    "q329_pair_store" ->
+    Query("q329_pair_store", pairStoreQ,
       s"""WITH $lshCandCtes,
         |toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -922,11 +914,12 @@ object DedupQueries {
         |  SELECT 'ngram' AS signal, doc_a, doc_b, score FROM tjp
         |  UNION ALL SELECT 'emb', doc_a, doc_b, score FROM ejp)
         |ORDER BY signal, doc_a, doc_b""".stripMargin,
+      needs = Set(SharedStore.pairStore)),
     // q325: q180's tjp/ejp pair CTEs verbatim (no closure needed —
     // the audit counts straddling PAIRS, not clusters), split by
     // row_number over doc_id order with exact r*100 <= pct*N band
     // compares (the Spark side computes the same rank distributed).
-    "q325_temporal_leakage" ->
+    Query("q325_temporal_leakage", temporalLeakageQ,
       s"""WITH $lshCandCtes,
         |toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -967,13 +960,14 @@ object DedupQueries {
         |  round(CAST(SUM(CASE WHEN s_a <> s_b THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*), 6) AS leakage_ratio
         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+      needs = Set(SharedStore.pairStore)),
     // q142: q57's recursive-CC cluster assignment, then the split is a
     // pure md5 of the CLUSTER id; docs outside every pair fall back to
     // their own id (singleton clusters).
     // q180: q142's closure over the UNION of the text jp (shingle
     // Jaccard) and the embedding jp (q26's seeded sign-LSH chain,
     // lshCandCtes) — same md5-of-cluster split.
-    "q180_ensemble_split" ->
+    Query("q180_ensemble_split", ensembleSplitQ,
       s"""WITH RECURSIVE $lshCandCtes,
         |toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -1003,7 +997,8 @@ object DedupQueries {
         |       WHEN ${md5l("CAST(cluster_id AS VARCHAR)")} % 100 < 90 THEN 'val'
         |       ELSE 'test' END AS split
         |FROM alld ORDER BY doc_id""".stripMargin,
-    "q142_cluster_split" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q142_cluster_split", clusterSplitQ,
       s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1028,19 +1023,20 @@ object DedupQueries {
         |       WHEN ${md5l("CAST(cluster_id AS VARCHAR)")} % 100 < 90 THEN 'val'
         |       ELSE 'test' END AS split
         |FROM alld ORDER BY doc_id""".stripMargin,
+      needs = Set(SharedStore.pairStore)),
     // q138: the oracle is the definitionally-exact quadratic join;
     // Spark's index-driven plan must reproduce it bit-for-bit.
-    "q138_fuzzy_join" ->
+    Query("q138_fuzzy_join", fuzzyJoinQ,
       """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
         |  CAST(levenshtein(a.c_name, b.c_name) AS INTEGER) AS dist
         |FROM customer a JOIN customer b
         |  ON a.c_custkey < b.c_custkey
         | AND abs(length(a.c_name) - length(b.c_name)) <= 1
         |WHERE levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
+        |ORDER BY id_a, id_b""".stripMargin),
     // q137: q136's chunk CTEs + a per-doc-distinct, DF-capped
     // inverted-index pair join. One double division at the very end.
-    "q137_cdc_pairs" ->
+    Query("q137_cdc_pairs", cdcPairsQ,
       s"""WITH toks AS (SELECT doc_id, i - 1 AS pos, t[i] AS tok
         |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |  LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) gs),
@@ -1075,10 +1071,10 @@ object DedupQueries {
         |FROM p
         |JOIN n na ON doc_a = na.doc_id
         |JOIN n nb ON doc_b = nb.doc_id
-        |ORDER BY doc_a, doc_b""".stripMargin,
+        |ORDER BY doc_a, doc_b""".stripMargin),
     // q136: DuckDB replays the CDC boundary rule (bigram md5 % 16)
     // and chunk fingerprints with the same window algebra.
-    "q136_cdc_chunks" ->
+    Query("q136_cdc_chunks", cdcChunksQ,
       s"""WITH toks AS (SELECT doc_id, i - 1 AS pos, t[i] AS tok
         |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |  LATERAL (SELECT unnest(generate_series(1, len(t))) AS i) gs),
@@ -1099,12 +1095,12 @@ object DedupQueries {
         |  count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences
         |FROM ch GROUP BY chunk_hash
         |HAVING count(DISTINCT doc_id) > 1
-        |ORDER BY n_docs DESC, n_occurrences DESC, chunk_hash""".stripMargin,
+        |ORDER BY n_docs DESC, n_occurrences DESC, chunk_hash""".stripMargin),
     // q130's oracle is q57's full-recompute CC over the ENTIRE pair
     // set — the Spark side computes it incrementally (standing labels
     // + arriving batch), so the hash match IS the incremental==full
     // equivalence proof.
-    "q130_incremental_canon" ->
+    Query("q130_incremental_canon", incrementalCanonQ,
       """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1124,7 +1120,8 @@ object DedupQueries {
         |SELECT u AS doc_id, min(v) AS cluster_id,
         |  CAST(count(DISTINCT v) AS BIGINT) AS cluster_size
         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
-    "q120_source_dedup_report" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q120_source_dedup_report", sourceDedupReportQ,
       """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1153,36 +1150,9 @@ object DedupQueries {
         |  ROUND(CAST(count(*) AS DOUBLE) / t.n_docs, 6) AS retention
         |FROM surv s JOIN tot t ON s.source = t.source
         |GROUP BY t.source, t.n_docs ORDER BY t.source""".stripMargin,
-    "q115_semdedup" ->
-      s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS c
-        |       FROM (SELECT vec_id, v, ${md5l("CAST(vec_id AS VARCHAR)")} AS h
-        |             FROM e ORDER BY h, vec_id LIMIT 8)),
-        |ca AS (SELECT e.vec_id, e.v, cb.list_id,
-        |         row_number() OVER (PARTITION BY e.vec_id
-        |           ORDER BY ROUND(list_cosine_similarity(e.v, cb.c), 6) DESC, cb.list_id)
-        |           AS crank
-        |       FROM e CROSS JOIN cb),
-        |asg AS (SELECT vec_id, v, list_id FROM ca WHERE crank = 1),
-        |jp AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM asg a JOIN asg b ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-        |  WHERE ROUND(list_cosine_similarity(a.v, b.v), 6) >= 0.4),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM jp
-        |          UNION SELECT id_b, id_a FROM jp
-        |          UNION SELECT id_a, id_a FROM jp UNION SELECT id_b, id_b FROM jp),
-        |reach AS (SELECT u, v FROM edges
-        |          UNION SELECT r.u, e2.v FROM reach r JOIN edges e2 ON r.v = e2.u),
-        |clusters AS (SELECT u AS vec_id, min(v) AS cluster_id,
-        |               CAST(count(DISTINCT v) AS BIGINT) AS cluster_size
-        |             FROM reach GROUP BY u)
-        |SELECT em.vec_id, em.label,
-        |  coalesce(c.cluster_size, 1::BIGINT) AS cluster_size,
-        |  coalesce(c.cluster_size, 1::BIGINT) - 1 AS removed_dups
-        |FROM embeddings em LEFT JOIN clusters c ON em.vec_id = c.vec_id
-        |WHERE c.cluster_id IS NULL OR c.cluster_id = em.vec_id
-        |ORDER BY em.vec_id""".stripMargin,
-    "q125_semdedup_auto" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q115_semdedup", semdedupQ, semdedupOracle),
+    Query("q125_semdedup_auto", semdedupAutoQ,
       s"""WITH RECURSIVE e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings),
         |cb AS (SELECT row_number() OVER (ORDER BY h, vec_id) - 1 AS list_id, v AS c
@@ -1211,8 +1181,8 @@ object DedupQueries {
         |  coalesce(c.cluster_size, 1::BIGINT) - 1 AS removed_dups
         |FROM embeddings em LEFT JOIN clusters c ON em.vec_id = c.vec_id
         |WHERE c.cluster_id IS NULL OR c.cluster_id = em.vec_id
-        |ORDER BY em.vec_id""".stripMargin,
-    "q111_dup_span_removal" ->
+        |ORDER BY em.vec_id""".stripMargin),
+    Query("q111_dup_span_removal", dupSpanQ,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |w AS (SELECT doc_id, i - 1 AS pos, ${md5l("array_to_string(t[i:i+7], ' ')")} AS gh
         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 7)) AS i) gs
@@ -1237,8 +1207,8 @@ object DedupQueries {
         |  coalesce(text_clean, '') AS text_clean
         |FROM toks LEFT JOIN nds USING (doc_id) LEFT JOIN ncv USING (doc_id)
         |  LEFT JOIN tc USING (doc_id)
-        |ORDER BY toks.doc_id""".stripMargin,
-    "q106_segment_dedup" ->
+        |ORDER BY toks.doc_id""".stripMargin),
+    Query("q106_segment_dedup", segmentDedupQ,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |segarr AS (SELECT doc_id,
         |    [array_to_string(t[i:i+7], ' ') FOR i IN generate_series(1, GREATEST(len(t), 1), 8)]
@@ -1256,8 +1226,8 @@ object DedupQueries {
         |SELECT doc_id, n_segments,
         |  coalesce(kept_segments, 0) AS kept_segments,
         |  coalesce(text_clean, '') AS text_clean
-        |FROM n LEFT JOIN k USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q91_split_leakage" ->
+        |FROM n LEFT JOIN k USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Query("q91_split_leakage", splitLeakage,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1293,13 +1263,14 @@ object DedupQueries {
         |        / count(*), 6) AS leakage_ratio
         |FROM pairs JOIN sp sa ON sa.doc_id = doc_a
         |  JOIN sp sb ON sb.doc_id = doc_b""".stripMargin,
+      needs = Set(SharedStore.epochStore)),
     // q337: both one-shot mining chains (q21's banded MinHash pairs,
     // q62's DF-capped hashed gram index) reduced to the store-read
     // summary — row count + bit_xor md5 content fingerprint per
     // signal. Hash-equality certifies the fresh epoch rebuild holds
     // exactly the inline mining's rows. Multi-referenced CTEs
     // MATERIALIZED per the repo invariant.
-    "q337_epoch_store_build" ->
+    Query("q337_epoch_store_build", epochStoreBuildQ,
       s"""WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS MATERIALIZED (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1337,8 +1308,8 @@ object DedupQueries {
         |  SELECT 'minhash_pairs', CAST(count(*) AS BIGINT),
         |    CAST(bit_xor(${md5l("concat(CAST(doc_a AS VARCHAR), '_', CAST(doc_b AS VARCHAR), '_', CAST(CAST(round(est_jaccard * 1000000e0) AS BIGINT) AS VARCHAR))")}) AS BIGINT)
         |  FROM mhp
-        |) ORDER BY signal""".stripMargin,
-    "q92_source_overlap" ->
+        |) ORDER BY signal""".stripMargin),
+    Query("q92_source_overlap", sourceOverlap,
       s"""WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1358,9 +1329,10 @@ object DedupQueries {
         |FROM shared JOIN sizes sa ON sa.source = source_a
         |  JOIN sizes sb ON sb.source = source_b
         |ORDER BY source_a, source_b""".stripMargin,
+      needs = Set(SharedStore.epochStore)),
     // q171: q57's recursive closure, survivor = per-cluster window on
     // (n_chars DESC, doc_id); singletons key by their own id.
-    "q171_quality_canonical" ->
+    Query("q171_quality_canonical", qualityCanonicalQ,
       """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1389,7 +1361,8 @@ object DedupQueries {
         |FROM (SELECT *, row_number() OVER (PARTITION BY cl
         |        ORDER BY n_chars DESC, doc_id) AS rn FROM sel)
         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-    "q59_canonical_corpus" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q59_canonical_corpus", canonicalCorpusQ,
       """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1414,7 +1387,8 @@ object DedupQueries {
         |FROM documents d LEFT JOIN cc ON cc.doc_id = d.doc_id
         |WHERE cc.doc_id IS NULL OR cc.cluster_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin,
-    "q62_ngram_jaccard_capped" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q62_ngram_jaccard_capped", ngramJaccardCapped,
       s"""WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1430,8 +1404,8 @@ object DedupQueries {
         |  ROUND(CAST(common AS DOUBLE) / (sa.n + sb.n - common), 6) AS jaccard
         |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
         |WHERE ROUND(CAST(common AS DOUBLE) / (sa.n + sb.n - common), 6) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q64_decontaminate" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q64_decontaminate", decontaminate,
       """WITH toks AS (SELECT doc_id, source, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, source, CASE WHEN len(t) >= 5
         |  THEN [array_to_string(t[i:i+4], ' ') FOR i IN generate_series(1, len(t)-4)]
@@ -1440,10 +1414,10 @@ object DedupQueries {
         |bench AS (SELECT DISTINCT g FROM g WHERE source = 'src0')
         |SELECT g.doc_id, count(*) AS shared_grams
         |FROM g JOIN bench USING (g) WHERE g.source <> 'src0'
-        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
+        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin),
     // q71: the Bloom prefilter is performance-only (exact verify join
     // removes false positives), so the oracle is q64's, verbatim.
-    "q71_decontaminate_bloom" ->
+    Query("q71_decontaminate_bloom", decontaminateBloom,
       """WITH toks AS (SELECT doc_id, source, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, source, CASE WHEN len(t) >= 5
         |  THEN [array_to_string(t[i:i+4], ' ') FOR i IN generate_series(1, len(t)-4)]
@@ -1452,12 +1426,13 @@ object DedupQueries {
         |bench AS (SELECT DISTINCT g FROM g WHERE source = 'src0')
         |SELECT g.doc_id, count(*) AS shared_grams
         |FROM g JOIN bench USING (g) WHERE g.source <> 'src0'
-        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
-    "q74_embedding_dedup" -> embeddingDedupOracle,
+        |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin),
+    Query("q74_embedding_dedup", embeddingDedup, embeddingDedupOracle,
+      needs = Set(SharedStore.pairStore)),
     // q78: q21's minhash machinery, restricted to (incoming >= bucket 50)
     // × (existing < bucket 50) candidate pairs; no hot-bucket cap in the
     // cross form (mirrors Dedup.minhashLshJoin exactly).
-    "q78_incremental_dedup" ->
+    Query("q78_incremental_dedup", incrementalDedup,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t,
         |    ${md5l("CAST(doc_id AS VARCHAR)")} % 100 AS bucket FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -1484,8 +1459,8 @@ object DedupQueries {
         |    JOIN mh b ON b.doc_id = c.doc_old AND a.p = b.p
         |  GROUP BY c.doc_new, c.doc_old)
         |SELECT doc_new, doc_old, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.5 ORDER BY doc_new, doc_old""".stripMargin,
-    "q21_minhash_lsh" ->
+        |WHERE est_jaccard >= 0.5 ORDER BY doc_new, doc_old""".stripMargin),
+    Query("q21_minhash_lsh", minhashLsh,
       s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1511,8 +1486,8 @@ object DedupQueries {
         |  JOIN cand c ON c.doc_a = a.doc_id AND c.doc_b = b.doc_id
         |  GROUP BY 1, 2)
         |SELECT doc_a, doc_b, est_jaccard FROM est
-        |WHERE est_jaccard >= 0.5 ORDER BY doc_a, doc_b""".stripMargin,
-    "q22_simhash_pairs" ->
+        |WHERE est_jaccard >= 0.5 ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q22_simhash_pairs", simhashPairs,
       s"""WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
         |th AS (SELECT doc_id, tf, ${md5l("token")} AS h FROM tf),
@@ -1530,8 +1505,8 @@ object DedupQueries {
         |  FROM seg a JOIN seg b
         |    ON a.s = b.s AND a.seg_val = b.seg_val AND a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, hamming FROM cand
-        |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin,
-    "q57_dedup_clusters" ->
+        |WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q57_dedup_clusters", dedupClusters,
       """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1551,10 +1526,11 @@ object DedupQueries {
         |SELECT u AS doc_id, min(v) AS cluster_id,
         |  CAST(count(DISTINCT v) AS BIGINT) AS cluster_size
         |FROM reach GROUP BY u ORDER BY doc_id""".stripMargin,
-    "q20_dedup_exact" ->
+      needs = Set(SharedStore.pairStore)),
+    Query("q20_dedup_exact", dedupExact,
       """SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-        |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin,
-    "q23_ngram_jaccard" ->
+        |FROM documents GROUP BY text ORDER BY doc_id""".stripMargin),
+    Query("q23_ngram_jaccard", ngramJaccard,
       """WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1567,8 +1543,8 @@ object DedupQueries {
         |  ROUND(CAST(common AS DOUBLE) / (sa.n + sb.n - common), 6) AS jaccard
         |FROM pairs JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
         |WHERE ROUND(CAST(common AS DOUBLE) / (sa.n + sb.n - common), 6) >= 0.5
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "q127_clean_corpus" ->
+        |ORDER BY doc_a, doc_b""".stripMargin),
+    Query("q127_clean_corpus", cleanCorpusQ,
       """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS toks FROM documents),
         |m AS (SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens,
         |  ROUND(CAST(len(list_filter(toks, x -> x IN
@@ -1583,5 +1559,9 @@ object DedupQueries {
         |FROM m)
         |SELECT doc_id, n_tokens, stopword_ratio, ttr, drop_reason,
         |  CAST(CASE WHEN drop_reason = 'kept' THEN 1 ELSE 0 END AS INTEGER) AS keep
-        |FROM r ORDER BY doc_id""".stripMargin)
+        |FROM r ORDER BY doc_id""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

@@ -13,7 +13,7 @@ import graft.streaming.StreamingPower
   *
   * Split from the former ExtensionQueries monolith (round 7) — query
   * bodies, registration names, and oracle SQL are unchanged;
-  * [[ExtensionQueries]] re-aggregates every domain map.
+  * [[ExtensionQueries]] concatenates every domain's `all` list.
   */
 object EventStoreQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -1540,83 +1540,6 @@ object EventStoreQueries {
     }
   }
 
-  val queries: Map[String, Q] = Map(
-    "q211_event_funnel" -> eventFunnelQ,
-    "q212_event_transitions" -> transitionsQ,
-    "q216_psi_store" -> psiStoreQ,
-    "q324_wasserstein_store" -> wassersteinStoreQ,
-    "q186_dsir_store" -> dsirStoreQ,
-    "q194_decayed_engagement" -> decayedQ,
-    "q196_funnel_store" -> funnelStoreQ,
-    "q181_hll_store" -> hllStoreQ,
-    "q280_quantile_sketch" -> quantileSketchQ,
-    "q281_quantile_store" -> quantileStoreQ,
-    "q172_profile_store" -> profileStoreQ,
-    "q164_feed_bronze" -> feedBronzeQ,
-    "q279_schema_evolution" -> schemaEvolutionQ,
-    "q163_feed_source" -> feedSourceQ,
-    "q285_feed_http" -> feedHttpQ,
-    "q290_image_phash" -> imagePhashQ,
-    "q326_image_hash_store" -> imageHashStoreQ,
-    "q336_audio_fp_store" -> audioFpStoreQ,
-    "q339_video_fp_store" -> videoFpStoreQ,
-    "q292_feed_http_bronze" -> feedHttpBronzeQ,
-    "q301_feed_http_stream" -> feedHttpStreamQ,
-    "q162_image_decode" -> imageDecodeQ,
-    "q189_audio_decode" -> audioDecodeQ,
-    "q278_video_frames" -> videoFramesQ,
-    "q157_grid_anomaly" -> gridAnomalyQ,
-    "q156_session_features" -> sessionFeaturesQ,
-    "q152_moment_store" -> momentStoreQ,
-    "q151_cadence_store" -> cadenceStoreQ,
-    "q146_gap_report" -> gapReportQ,
-    "q145_resample" -> resampleQ,
-    "q226_ewma" -> ewmaQ,
-    "q263_holt" -> holtQ,
-    "q264_cusum_store" -> cusumStoreQ,
-    "q265_forecast_skill" -> forecastSkillQ,
-    "q266_mann_kendall" -> mannKendallQ,
-    "q268_kaplan_meier" -> kmQ,
-    "q269_log_rank" -> logRankQ,
-    "q274_seasonal_store" -> seasonalStoreQ,
-    "q275_dispersion" -> dispersionQ,
-    "q276_acf" -> acfQ,
-    "q277_hour_profile" -> hourProfileQ,
-    "q229_interarrival" -> interArrivalQ,
-    "q234_ewma_store" -> ewmaStoreQ,
-    "q241_cuped" -> cupedQ,
-    "q242_mde" -> mdeQ,
-    "q243_srm" -> srmQ,
-    "q244_event_paths" -> pathsQ,
-    "q245_volume_trend" -> volumeTrendQ,
-    "q247_trend_store" -> trendStoreQ,
-    "q256_cusum" -> cusumQ,
-    "q258_seasonal" -> seasonalQ,
-    "q253_rfm" -> rfmQ,
-    "q133_sink_roundtrip" -> sinkRoundtripQ,
-    "q132_pipeline_funnel" -> pipelineFunnelQ,
-    "q118_ref_integrity" -> refIntegrityQ,
-    "q117_expectations" -> expectationsQ,
-    "q116_anomaly_flags" -> anomalyQ,
-    "q113_cdc_apply" -> cdcQ,
-    "q110_rolling_active" -> rollingActiveQ,
-    "q109_retention" -> retentionQ,
-    "q108_scd2_merge" -> scd2Q,
-    "q107_snapshot_diff" -> snapshotDiffQ,
-    "q94_jsonl_export" -> jsonlExport,
-    "q93_multimodal_resize" -> resizePlanQ,
-    "q86_hopping_window" -> hoppingQ,
-    "q75_funnel" -> funnel,
-    "q76_interval_join" -> intervalJoin,
-    "q52_multimodal_frames" -> multimodalFrames,
-    "q51_session_window_builtin" -> sessionWindowBuiltin,
-    "q41_asof_attribution" -> asofAttribution,
-    "q38_from_json" -> fromJson,
-    "q33_json_extract" -> jsonExtract,
-    "q34_sessionize" -> sessionizeQ,
-    "q35_tumbling_hourly" -> tumbling,
-    "q36_multimodal_decode" -> multimodal)
-
   /** q280's oracle — the full bottom-k quantile-sketch chain; shared
     * verbatim by q281 (streamed must equal one-shot by the bottom-k
     * merge identity).
@@ -2012,16 +1935,16 @@ object EventStoreQueries {
       |SELECT hamming, count(*) AS n_pairs
       |FROM pr WHERE hamming <= 6 GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q336_audio_fp_store" -> oracleSqlQ336,
-    "q339_video_fp_store" -> oracleSqlQ339,
-    "q234_ewma_store" -> ewmaOracle,
+  val all: Seq[Query] = Seq(
+    Query("q336_audio_fp_store", audioFpStoreQ, oracleSqlQ336),
+    Query("q339_video_fp_store", videoFpStoreQ, oracleSqlQ339),
+    Query("q234_ewma_store", ewmaStoreQ, ewmaOracle),
     // q247: mergeable daily counts fold exactly -> streamed must
     // equal the one-shot q245 trend verbatim.
-    "q247_trend_store" -> oracleSqlTrend,
+    Query("q247_trend_store", trendStoreQ, oracleSqlTrend),
     // q253: recency/frequency/monetary all exact integers; ntile ties
     // pinned by user id; 5 = best on every axis.
-    "q253_rfm" ->
+    Query("q253_rfm", rfmQ,
       """WITH per AS (SELECT user_id,
         |    CAST(date_diff('day', CAST(max(ts) AS DATE),
         |      DATE '2024-01-31') AS BIGINT) AS recency_days,
@@ -2041,10 +1964,10 @@ object EventStoreQueries {
         |  r_score, f_score, m_score,
         |  concat(CAST(r_score AS VARCHAR), CAST(f_score AS VARCHAR),
         |    CAST(m_score AS VARCHAR)) AS segment
-        |FROM sc ORDER BY user_id""".stripMargin,
+        |FROM sc ORDER BY user_id""".stripMargin),
     // q243: per-arm GOF term (o·k − N)²/(N·k) nano-floored over exact
     // counts.
-    "q243_srm" ->
+    Query("q243_srm", srmQ,
       s"""WITH $userMetricCte,
         |a AS (SELECT arm, CAST(count(*) AS BIGINT) AS o FROM um GROUP BY 1),
         |t AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
@@ -2056,10 +1979,10 @@ object EventStoreQueries {
         |  FROM a CROSS JOIN t)
         |SELECT n AS n_items, k AS n_arms, k - 1 AS dof,
         |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS chi2
-        |FROM s GROUP BY 1, 2, 3""".stripMargin,
+        |FROM s GROUP BY 1, 2, 3""".stripMargin),
     // q244: two leads off one per-user window, exact path counts,
     // top-20 on (n DESC, path).
-    "q244_event_paths" ->
+    Query("q244_event_paths", pathsQ,
       """WITH s AS (SELECT event_type,
         |    lead(event_type, 1) OVER w AS t1,
         |    lead(event_type, 2) OVER w AS t2
@@ -2071,29 +1994,29 @@ object EventStoreQueries {
         |r AS (SELECT path, n,
         |    row_number() OVER (ORDER BY n DESC, path) AS rank FROM p)
         |SELECT CAST(rank AS INTEGER) AS rank, path, n
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
+        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin),
     // q245: epoch-day indexes and counts are native integers — the
     // OLS sums are exact with no quantization at all. Shared verbatim
     // by q247 (streamed must equal one-shot).
-    "q245_volume_trend" -> oracleSqlTrend,
+    Query("q245_volume_trend", volumeTrendQ, oracleSqlTrend),
     // q256: the CUSUM numerator n·cum − t·total is an exact long; the
     // single division and the integer peak compare keep both engines
     // bit-identical (|devn| ≥ 1 ⇒ |cusum| ≥ 1/n, so no -0.0 rounding).
-    "q256_cusum" -> cusumOracle,
+    Query("q256_cusum", cusumQ, cusumOracle),
     // q264: the streamed store folds the same exact daily counts —
     // streamed must equal one-shot, so q256's oracle verbatim.
-    "q264_cusum_store" -> cusumOracle,
+    Query("q264_cusum_store", cusumStoreQ, cusumOracle),
     // q258: dense zero-filled hourly grid; detrended values stay the
     // exact integer 25·x − Σwindow; trend/seasonal/residual divide
     // once in mirrored expressions; + 0e0 normalizes round()'s -0.0
     // on the two signed outputs (the q148 rule).
-    "q258_seasonal" -> seasonalOracle,
+    Query("q258_seasonal", seasonalQ, seasonalOracle),
     // q274: the streamed store folds the same exact hourly counts —
     // streamed must equal one-shot, so q258's oracle verbatim.
-    "q274_seasonal_store" -> seasonalOracle,
+    Query("q274_seasonal_store", seasonalStoreQ, seasonalOracle),
     // q241: pooled theta/rho2 from exact sums, per-arm adjustment one
     // float expression.
-    "q241_cuped" ->
+    Query("q241_cuped", cupedQ,
       s"""WITH $userMetricCte,
         |t AS (SELECT CAST(count(*) AS BIGINT) AS n,
         |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -2122,10 +2045,10 @@ object EventStoreQueries {
         |      * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))))
         |    / n_users, 6) AS adj_mean_y,
         |  ROUND(theta, 6) AS theta, ROUND(rho2, 6) AS rho2
-        |FROM th ORDER BY arm""".stripMargin,
+        |FROM th ORDER BY arm""".stripMargin),
     // q242: pooled sample variance exact; the z constant is one
     // parsed literal on both engines.
-    "q242_mde" ->
+    Query("q242_mde", mdeQ,
       s"""WITH $userMetricCte,
         |t AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
         |    CAST(SUM(y) AS BIGINT) AS sy,
@@ -2145,11 +2068,11 @@ object EventStoreQueries {
         |  ROUND(var_y, 6) AS var_y, ROUND(mde, 6) AS mde_abs,
         |  CASE WHEN sy > 0 THEN ROUND(mde / (CAST(sy AS DOUBLE)
         |    / CAST(n_users AS DOUBLE)), 6) END AS mde_rel
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // q229: gaps from truncated seconds but ORDERED by the full-
     // resolution (ts, event_id) chain on both engines; Σg/Σg² exact,
     // mean and Fano one float expression each.
-    "q229_interarrival" ->
+    Query("q229_interarrival", interArrivalQ,
       """WITH s AS (SELECT user_id, ts, event_id,
         |    epoch_us(ts)//1000000 AS sec FROM events),
         |g AS (SELECT user_id, sec - lag(sec) OVER (
@@ -2170,18 +2093,18 @@ object EventStoreQueries {
         |      / (CAST(n_gaps AS DOUBLE) * CAST(n_gaps - 1 AS DOUBLE)))
         |      / (CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)), 6)
         |  END AS fano
-        |FROM a ORDER BY user_id""".stripMargin,
+        |FROM a ORDER BY user_id""".stripMargin),
     // q226: the linear recurrence replayed as a recursive CTE — the
     // identical integer floor step (subtract-pmod form, exact for
     // either sign), identical (ts, v) chain order.
-    "q226_ewma" -> ewmaOracle,
-    "q263_holt" -> holtOracle,
-    "q265_forecast_skill" -> forecastSkillOracle,
+    Query("q226_ewma", ewmaQ, ewmaOracle),
+    Query("q263_holt", holtQ, holtOracle),
+    Query("q265_forecast_skill", forecastSkillQ, forecastSkillOracle),
     // q269: the q268 duration chain split by md5 arm; per-time (O−E)
     // and V terms are one mirrored float expression over exact
     // integer products, nano-quantized at birth; χ² squares by
     // explicit self-multiplication; + 0e0 on the signed oe_a.
-    "q269_log_rank" -> {
+    Query("q269_log_rank", logRankQ, {
       val h = md5l("CAST(u AS VARCHAR)")
       s"""WITH s0 AS (SELECT user_id AS u,
         |    min(epoch_us(ts)//1000000) AS t0
@@ -2235,11 +2158,11 @@ object EventStoreQueries {
         |      / (CAST(sv AS DOUBLE) / 1000000000e0), 6)
         |  END AS chi2
         |FROM tot CROSS JOIN ag""".stripMargin
-    },
+    }),
     // q268: durations/at-risk/tallies exact longs; each KM factor's
     // ln is of an exact rational quantized to nanos at birth, the
     // product is an exact SUM in log space, exp/round once per row.
-    "q268_kaplan_meier" ->
+    Query("q268_kaplan_meier", kmQ,
       """WITH s0 AS (SELECT user_id AS u,
         |    min(epoch_us(ts)//1000000) AS t0
         |  FROM events WHERE event_type = 'signup' GROUP BY 1),
@@ -2281,10 +2204,10 @@ object EventStoreQueries {
         |  CASE WHEN z = 1 THEN 0e0 ELSE
         |    ROUND(exp(CAST(cum AS DOUBLE) / 1000000000e0), 6)
         |  END AS survival
-        |FROM cu ORDER BY t_sec""".stripMargin,
+        |FROM cu ORDER BY t_sec""".stripMargin),
     // q277: Spark percentile == DuckDB quantile_cont (q42 precedent);
     // observed hours only.
-    "q277_hour_profile" ->
+    Query("q277_hour_profile", hourProfileQ,
       """WITH hc AS (SELECT epoch_us(ts)//1000000//3600*3600 AS b,
         |    CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY 1),
         |h AS (SELECT CAST((b // 3600) % 24 AS INTEGER) AS hour, cnt
@@ -2294,10 +2217,10 @@ object EventStoreQueries {
         |  ROUND(quantile_cont(cnt, 0.1e0), 6) AS p10,
         |  ROUND(quantile_cont(cnt, 0.5e0), 6) AS p50,
         |  ROUND(quantile_cont(cnt, 0.9e0), 6) AS p90
-        |FROM h GROUP BY 1 ORDER BY hour""".stripMargin,
+        |FROM h GROUP BY 1 ORDER BY hour""".stripMargin),
     // q275: sample variance · n(n−1) = n·Σx² − (Σx)² exactly; D is
     // one division of exact longs.
-    "q275_dispersion" ->
+    Query("q275_dispersion", dispersionQ,
       """WITH dd AS (SELECT event_type AS "group",
         |    epoch_us(date_trunc('day', ts))//1000000//86400 AS d
         |  FROM events),
@@ -2311,15 +2234,15 @@ object EventStoreQueries {
         |        AS DOUBLE)
         |      / CAST((count(*) - 1) * SUM(c) AS DOUBLE), 6)
         |  END AS dispersion
-        |FROM c GROUP BY 1 ORDER BY "group"""".stripMargin,
+        |FROM c GROUP BY 1 ORDER BY "group"""".stripMargin),
     // q276: deviations devn = n·x − Σx exact (the n² factor cancels
     // in the ratio); numerator/denominator exact longs, one division
     // per lag; + 0e0 on the signed acf.
-    "q276_acf" -> acfOracle,
+    Query("q276_acf", acfQ, acfOracle),
     // q266: S and tie-corrected Var·18 exact longs; z one mirrored
     // float expression (+ 0e0 against round()'s -0.0); the Theil–Sen
     // median is a rank-k order statistic under (slope, d1, d2).
-    "q266_mann_kendall" ->
+    Query("q266_mann_kendall", mannKendallQ,
       """WITH dd AS (SELECT event_type AS "group",
         |    epoch_us(date_trunc('day', ts))//1000000//86400 AS d
         |  FROM events),
@@ -2355,17 +2278,16 @@ object EventStoreQueries {
         |      / sqrt(CAST(var18 AS DOUBLE) / 18e0), 6) + 0e0
         |  END AS z,
         |  ROUND(ts, 6) + 0e0 AS ts_slope
-        |FROM v ORDER BY "group"""".stripMargin,
+        |FROM v ORDER BY "group"""".stripMargin),
     // q216: q213's oracle verbatim — the folded bin counts must
     // reproduce the one-shot index exactly.
-    "q216_psi_store" -> StatsQueries.oracleSql("q213_psi"),
+    Query("q216_psi_store", psiStoreQ, StatsQueries.psiOracle),
     // q324: q322's oracle verbatim — the folded store counts must
     // reproduce the one-shot W₁ readout exactly (streamed ≡ one-shot).
-    "q324_wasserstein_store" ->
-      StatsQueries.oracleSql("q322_wasserstein_drift"),
+    Query("q324_wasserstein_store", wassersteinStoreQ, StatsQueries.wassersteinOracle),
     // q211: each stage a filtered min-aggregate gated on the previous
     // stage's first-touch time; conversions one division vs stage 1.
-    "q211_event_funnel" ->
+    Query("q211_event_funnel", eventFunnelQ,
       """WITH s1 AS (SELECT user_id, min(ts) AS t FROM events
         |  WHERE event_type = 'signup' GROUP BY 1),
         |s2 AS (SELECT e.user_id, min(e.ts) AS t FROM events e
@@ -2385,10 +2307,10 @@ object EventStoreQueries {
         |  CASE WHEN (SELECT count(*) FROM s1) > 0 THEN
         |    ROUND(CAST(n_users AS DOUBLE) / (SELECT count(*) FROM s1), 6)
         |  END AS conversion
-        |FROM c ORDER BY stage""".stripMargin,
+        |FROM c ORDER BY stage""".stripMargin),
     // q212: lead() under the same (ts, event_id) order, exact pair
     // counts, one division per prev type.
-    "q212_event_transitions" ->
+    Query("q212_event_transitions", transitionsQ,
       """WITH nx AS (SELECT event_type AS prev_type,
         |    lead(event_type) OVER (PARTITION BY user_id
         |      ORDER BY ts, event_id) AS next_type
@@ -2400,12 +2322,12 @@ object EventStoreQueries {
         |SELECT p.prev_type, p.next_type, p.n,
         |  ROUND(CAST(p.n AS DOUBLE) / t.tot, 6) AS prob
         |FROM p JOIN t USING (prev_type)
-        |ORDER BY p.prev_type, p.next_type""".stripMargin,
+        |ORDER BY p.prev_type, p.next_type""".stripMargin),
     // q181: the q47 deterministic-HLL closed form over the whole
     // documents.text column — the folded store (with its overlapping
     // re-delivery) must be indistinguishable from the one-shot batch
     // sketch.
-    "q181_hll_store" ->
+    Query("q181_hll_store", hllStoreQ,
       s"""WITH hp AS (SELECT ${md5l("text")} AS h
         |            FROM documents WHERE text IS NOT NULL),
         |rp AS (SELECT h % 4096 AS bucket,
@@ -2424,19 +2346,19 @@ object EventStoreQueries {
         |        ELSE (0.7213e0 / (1e0 + 1.079e0 / 4096e0) * 4096e0 * 4096e0)
         |            * 562949953421312e0 / CAST(z_int AS DOUBLE) END, 6)
         |    AS hll_estimate
-        |FROM zp""".stripMargin,
+        |FROM zp""".stripMargin),
     // q172: q165's oracle verbatim — the folded store must read out
     // exactly like the one-shot batch profile.
-    "q172_profile_store" -> columnProfileOracle,
+    Query("q172_profile_store", profileStoreQ, columnProfileOracle),
     // q186: q185's oracle verbatim — the streamed importance model
     // must score exactly like the one-shot DSIR fit.
-    "q186_dsir_store" -> StatsQueries.dsirOracle,
+    Query("q186_dsir_store", dsirStoreQ, StatsQueries.dsirOracle),
     // q196: q187's oracle verbatim — the folded funnel counters must
     // render exactly like the one-shot accounting.
-    "q196_funnel_store" -> TextQueries.qualityFunnelOracle,
+    Query("q196_funnel_store", funnelStoreQ, TextQueries.qualityFunnelOracle),
     // q194: per-event decay terms quantize to nanos in the identical
     // float expression over exact integer seconds; sums are exact.
-    "q194_decayed_engagement" ->
+    Query("q194_decayed_engagement", decayedQ,
       """WITH e AS (SELECT user_id, epoch_us(ts)//1000000 AS s,
         |    CAST(value AS DOUBLE) AS v FROM events
         |  WHERE ts IS NOT NULL AND value IS NOT NULL),
@@ -2447,30 +2369,30 @@ object EventStoreQueries {
         |  FROM e CROSS JOIN t)
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST((SUM(term_nano) + 500) // 1000 AS BIGINT) AS decayed_micros
-        |FROM n GROUP BY 1 ORDER BY user_id""".stripMargin,
+        |FROM n GROUP BY 1 ORDER BY user_id""".stripMargin),
     // q164/q292: the polls' union covers every non-null-ts record of
     // the %20 subset exactly once after PK dedup, so DuckDB aggregates
     // the raw table directly; a dedup failure double-counts the overlap
     // window's exact-integer sums and flips the hash. q292 runs the
     // SAME ingest contract over the live HTTP transport, hence the
     // shared oracle (the q280/q281 pattern: two paths, one truth).
-    "q164_feed_bronze" -> feedBronzeOracle,
-    "q292_feed_http_bronze" -> feedBronzeOracle,
+    Query("q164_feed_bronze", feedBronzeQ, feedBronzeOracle),
+    Query("q292_feed_http_bronze", feedHttpBronzeQ, feedBronzeOracle),
     // q301 is the same contract again as a rate-capped polling STREAM
     // (checkpointed record position instead of the sink watermark) —
     // third path, same truth.
-    "q301_feed_http_stream" -> feedBronzeOracle,
+    Query("q301_feed_http_stream", feedHttpStreamQ, feedBronzeOracle),
     // q280/q281: DuckDB replays the bottom-k sketch's closed-form
     // membership exactly — md5 bottom-256 per type (single-stage ==
     // the salted two-stage, an algebraic identity), ranked readout at
     // ceil(q·m); q281 shares it verbatim (streamed ≡ one-shot).
-    "q280_quantile_sketch" -> oracleSqlQuantile,
-    "q281_quantile_store" -> oracleSqlQuantile,
+    Query("q280_quantile_sketch", quantileSketchQ, oracleSqlQuantile),
+    Query("q281_quantile_store", quantileStoreQ, oracleSqlQuantile),
     // q279: DuckDB replays the evolution boundary directly — quality
     // exists exactly for rows at/after the poll-2 horizon (the field
     // was added there and the overlap re-delivery deduped), NULL
     // before; integer sums CAST back from DuckDB's HUGEINT.
-    "q279_schema_evolution" ->
+    Query("q279_schema_evolution", schemaEvolutionQ,
       """WITH r AS (SELECT event_id, event_type,
         |    strftime(ts, '%Y-%m-%dT%H:%M:%S') AS c,
         |    CAST(round(value * 1e6) AS BIGINT) AS value_us
@@ -2482,12 +2404,12 @@ object EventStoreQueries {
         |  CAST(coalesce(SUM(CASE WHEN c >= '2024-01-20T00:00:00'
         |    THEN event_id % 5 END), 0) AS BIGINT) AS quality_sum,
         |  min(c) AS min_cursor, max(c) AS max_cursor
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
     // q163: DuckDB computes the same cursor-bounded per-type aggregate
     // straight from the parquet table the payloads were rendered from;
     // value sums as fixed-point BIGINTs (q148's order-invariance rule),
     // the cursor bound replayed on the same second-resolution string.
-    "q163_feed_source" ->
+    Query("q163_feed_source", feedSourceQ,
       """SELECT event_type,
         |  count(*) AS n,
         |  CAST(SUM(CAST(round(value * 1e6) AS BIGINT)) AS BIGINT) AS value_sum_us,
@@ -2496,12 +2418,12 @@ object EventStoreQueries {
         |FROM events
         |WHERE event_id % 20 = 0
         |  AND strftime(ts, '%Y-%m-%dT%H:%M:%S') >= '2024-01-16T00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
     // q285: DuckDB replays the cursor bound straight from the parquet
     // table the server's corpus was rendered from; the live path's
     // probe/pagination/parsing must reproduce it exactly — a lost or
     // doubled page flips the exact-integer sums.
-    "q285_feed_http" ->
+    Query("q285_feed_http", feedHttpQ,
       """SELECT event_type,
         |  count(*) AS n,
         |  CAST(SUM(CAST(round(value * 1e6) AS BIGINT)) AS BIGINT) AS value_sum_us,
@@ -2511,30 +2433,30 @@ object EventStoreQueries {
         |FROM events
         |WHERE event_id % 20 = 0
         |  AND strftime(ts, '%Y-%m-%dT%H:%M:%S') >= '2024-01-18T00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
     // q326: q290's oracle verbatim — the folded store's hash table
     // must reproduce the one-shot pair histogram exactly (streamed ≡
     // one-shot; decode-at-ingest changes where the codec runs, never
     // the words).
-    "q326_image_hash_store" -> oracleSqlQ290,
+    Query("q326_image_hash_store", imageHashStoreQ, oracleSqlQ290),
     // q290: the 9x8 fixture raster is closed-form, so DuckDB rebuilds
     // the dHash words bit by bit (Σ bit·2^b over 32-bit halves), bands
     // them identically, and replays the pair histogram; the Spark side
     // must reach the same words THROUGH the real PNG encode+decode.
-    "q290_image_phash" -> oracleSqlQ290,
+    Query("q290_image_phash", imagePhashQ, oracleSqlQ290),
     // q162: the PNG fixture's dimensions are derived from the doc, so
     // a decode that parses the real container must recover them; the
     // flag certifies the imageio branch ran, not the stub.
-    "q162_image_decode" ->
+    Query("q162_image_decode", imageDecodeQ,
       """SELECT doc_id,
         |  CAST(8 + doc_id % 24 AS INTEGER) AS width,
         |  CAST(8 + octet_length(encode(text)) % 24 AS INTEGER) AS height,
         |  3 AS channels, true AS real_decode
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // q189: the WAV fixture is fully predictable — frame count from
     // utf8 length, byte size closed-form (uncompressed PCM), energy as
     // the exact integer sum of squared synthesized samples.
-    "q189_audio_decode" ->
+    Query("q189_audio_decode", audioDecodeQ,
       """WITH d AS (SELECT doc_id,
         |    64 + (octet_length(encode(text)) % 192) AS n FROM documents),
         |s AS (SELECT doc_id, n, CAST(SUM(v * v) AS BIGINT) AS sum_sq FROM (
@@ -2546,12 +2468,12 @@ object EventStoreQueries {
         |  CAST(n AS INTEGER) AS n_samples,
         |  CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
         |  sum_sq, true AS real_decode
-        |FROM s ORDER BY doc_id""".stripMargin,
+        |FROM s ORDER BY doc_id""".stripMargin),
     // q278: the animated-GIF fixture is fully predictable — frame
     // count / dims / per-frame constant gray all closed-form from the
     // doc, the pixel sum is gray·w·h (constant raster), sampled frame
     // index mirrors the evenly-spaced integer division.
-    "q278_video_frames" ->
+    Query("q278_video_frames", videoFramesQ,
       """WITH d AS (SELECT doc_id,
         |    CAST(2 + doc_id % 5 AS BIGINT) AS nf,
         |    CAST(8 + doc_id % 16 AS INTEGER) AS w,
@@ -2566,11 +2488,11 @@ object EventStoreQueries {
         |  CAST(((doc_id * 31 + frame_idx * 17) % 256) * w * h AS BIGINT)
         |    AS pixel_sum,
         |  true AS real_decode
-        |FROM f ORDER BY doc_id, sample_idx""".stripMargin,
+        |FROM f ORDER BY doc_id, sample_idx""".stripMargin),
     // q157: q145's grid CTE + one more 24-bucket window; sample
     // stddev (NULL under 2 rows) and the cut on ROUNDED z in both
     // engines.
-    "q157_grid_anomaly" ->
+    Query("q157_grid_anomaly", gridAnomalyQ,
       """WITH obs AS (
         |  SELECT user_id, epoch_us(ts)//1000000//3600*3600 AS b,
         |         count(*) AS n, round(avg(value), 6) AS v
@@ -2606,11 +2528,11 @@ object EventStoreQueries {
         |  round((interp_value - m)/sd, 6) AS z
         |FROM zz WHERE sd > 0
         |  AND abs(round((interp_value - m)/sd, 6)) > 2.5e0
-        |ORDER BY user_id, bucket_sec""".stripMargin,
+        |ORDER BY user_id, bucket_sec""".stripMargin),
     // q156: the same lag → flag → running-sum chain definitionally;
     // second deltas are exact integer µs divisions, so no float time
     // math on either side.
-    "q156_session_features" ->
+    Query("q156_session_features", sessionFeaturesQ,
       """WITH f AS (SELECT event_id, user_id, ts,
         |    lag(ts) OVER w AS prev_ts,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -2629,14 +2551,14 @@ object EventStoreQueries {
         |    - min(epoch_us(ts)//1000000) OVER ws AS secs_since_start
         |FROM g WINDOW ws AS (PARTITION BY user_id, session_idx
         |  ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin),
     // q152: definitional per-dim mean/variance over the full corpus on
     // the FIXED-POINT coordinates (q = round(x*1e6), Pca.quantize) —
     // the store's merged integer sums are exact and order-invariant,
     // so this is bit-identical to the one-shot computation (same
     // association as q148/q149: mean = Σq/1e6/n, var = Σq²/1e12/n −
     // mean·mean).
-    "q152_moment_store" ->
+    Query("q152_moment_store", momentStoreQ,
       """WITH t AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |u AS (SELECT CAST(gs.i - 1 AS INTEGER) AS dim,
         |    CAST(round(v[gs.i]*1e6) AS BIGINT) AS q
@@ -2646,10 +2568,10 @@ object EventStoreQueries {
         |  round(CAST(sum(q*q) AS DOUBLE)/1e12/count(*)
         |    - CAST(sum(q) AS DOUBLE)/1e6/count(*)
         |      *(CAST(sum(q) AS DOUBLE)/1e6/count(*)), 6) AS variance
-        |FROM u GROUP BY dim ORDER BY dim""".stripMargin,
+        |FROM u GROUP BY dim ORDER BY dim""".stripMargin),
     // q151: q146's oracle VERBATIM — the store-backed streaming path
     // must be indistinguishable from the one-shot batch gap report.
-    "q151_cadence_store" ->
+    Query("q151_cadence_store", cadenceStoreQ,
       """WITH obs AS (SELECT DISTINCT user_id,
         |    epoch_us(ts)//1000000//3600*3600 AS b FROM events),
         |d AS (SELECT user_id, b,
@@ -2659,12 +2581,12 @@ object EventStoreQueries {
         |  count(*) AS n_present,
         |  (max(b) - min(b))//3600 + 1 - count(*) AS n_missing,
         |  coalesce(max(nb - b - 3600), 0) AS max_gap_sec
-        |FROM d GROUP BY 1 ORDER BY user_id""".stripMargin,
+        |FROM d GROUP BY 1 ORDER BY user_id""".stripMargin),
     // q145: same grid ∪ observations + one window definitionally —
     // buckets are epoch-second floors, the grid is generate_series
     // over each user's bucket span, fills read off the same
     // (bucket, side) ordering with obs rows sorted first.
-    "q145_resample" ->
+    Query("q145_resample", resampleQ,
       """WITH obs AS (
         |  SELECT user_id, epoch_us(ts)//1000000//3600*3600 AS b,
         |         count(*) AS n, round(avg(value), 6) AS v
@@ -2696,11 +2618,11 @@ object EventStoreQueries {
         |      THEN fv + (nv - fv) * (b - fb) / (nb - fb)
         |    ELSE fv END, 6) AS interp_value
         |FROM w WHERE side = 1
-        |ORDER BY user_id, bucket_sec""".stripMargin,
+        |ORDER BY user_id, bucket_sec""".stripMargin),
     // q146: cadence report from observed buckets alone — expected =
     // span/step + 1, longest gap from the lead() delta between
     // successive present buckets.
-    "q146_gap_report" ->
+    Query("q146_gap_report", gapReportQ,
       """WITH obs AS (SELECT DISTINCT user_id,
         |    epoch_us(ts)//1000000//3600*3600 AS b FROM events),
         |d AS (SELECT user_id, b,
@@ -2710,21 +2632,21 @@ object EventStoreQueries {
         |  count(*) AS n_present,
         |  (max(b) - min(b))//3600 + 1 - count(*) AS n_missing,
         |  coalesce(max(nb - b - 3600), 0) AS max_gap_sec
-        |FROM d GROUP BY 1 ORDER BY user_id""".stripMargin,
+        |FROM d GROUP BY 1 ORDER BY user_id""".stripMargin),
     // q133: the store round-trip must reproduce the source table
     // exactly — the oracle aggregates `documents` directly, so the
     // hash match is over WHAT SURVIVED the staged appends, key dedup,
     // compaction, and healed read.
-    "q133_sink_roundtrip" ->
+    Query("q133_sink_roundtrip", sinkRoundtripQ,
       """SELECT source, count(*) AS docs,
         |  CAST(sum(len(text)) AS BIGINT) AS chars,
         |  min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
     // q132: q127's clean rules + q20's dedup (keyed on md5(text)) +
     // token totals, per source — the funnel every stage's own oracle
     // already verifies in isolation, composed. Counts CAST to BIGINT
     // (DuckDB sums INTEGER into HUGEINT); the share division is last.
-    "q132_pipeline_funnel" ->
+    Query("q132_pipeline_funnel", pipelineFunnelQ,
       """WITH t AS (SELECT doc_id, source, text,
         |  regexp_split_to_array(text, '\s+') AS toks FROM documents),
         |m AS (SELECT doc_id, source, text,
@@ -2755,8 +2677,8 @@ object EventStoreQueries {
         |LEFT JOIN keptagg k USING (source)
         |LEFT JOIN canonagg c USING (source)
         |CROSS JOIN tot t
-        |ORDER BY b.source""".stripMargin,
-    "q117_expectations" ->
+        |ORDER BY b.source""".stripMargin),
+    Query("q117_expectations", expectationsQ,
       """WITH s AS (SELECT
         |  CAST(sum(CASE WHEN coalesce(l_quantity > 0, false) THEN 0 ELSE 1 END) AS BIGINT) AS c0,
         |  CAST(sum(CASE WHEN coalesce(l_extendedprice >= 0, false) THEN 0 ELSE 1 END) AS BIGINT) AS c1,
@@ -2767,14 +2689,14 @@ object EventStoreQueries {
         |UNION ALL SELECT 'price_nonneg', c1, c1 = 0 FROM s
         |UNION ALL SELECT 'qty_positive', c0, c0 = 0 FROM s
         |UNION ALL SELECT 'shipdate_in_range', c3, c3 = 0 FROM s
-        |ORDER BY check_name""".stripMargin,
-    "q118_ref_integrity" ->
+        |ORDER BY check_name""".stripMargin),
+    Query("q118_ref_integrity", refIntegrityQ,
       """SELECT CAST(count(*) AS BIGINT) AS n_orphans
         |FROM lineitem l LEFT JOIN
         |  (SELECT o_orderkey FROM orders WHERE o_orderkey % 5 != 0) o
         |  ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderkey IS NULL""".stripMargin,
-    "q116_anomaly_flags" ->
+        |WHERE o.o_orderkey IS NULL""".stripMargin),
+    Query("q116_anomaly_flags", anomalyQ,
       """WITH x AS (SELECT event_id, user_id, value,
         |    avg(value) OVER w AS mu, stddev_samp(value) OVER w AS sd
         |  FROM events
@@ -2784,16 +2706,16 @@ object EventStoreQueries {
         |  ROUND((value - mu) / sd, 6) AS z,
         |  abs(ROUND((value - mu) / sd, 6)) > 3 AS is_anomaly
         |FROM x WHERE sd IS NOT NULL AND sd > 0
-        |ORDER BY event_id""".stripMargin,
-    "q113_cdc_apply" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q113_cdc_apply", cdcQ,
       """SELECT c_custkey, c_mktsegment,
         |  CASE WHEN c_custkey % 7 = 0 THEN c_acctbal + 100.0e0
         |       ELSE c_acctbal END AS c_acctbal,
         |  CAST(CASE WHEN c_custkey % 7 = 0 THEN 1 ELSE 0 END AS BIGINT)
         |    AS last_seq
         |FROM customer WHERE c_custkey % 11 != 0
-        |ORDER BY c_custkey""".stripMargin,
-    "q107_snapshot_diff" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q107_snapshot_diff", snapshotDiffQ,
       s"""WITH prev AS (SELECT doc_id, ${docDigest("text")} AS h1
         |  FROM documents WHERE doc_id % 10 != 3),
         |nxt AS (SELECT doc_id,
@@ -2806,8 +2728,8 @@ object EventStoreQueries {
         |       WHEN h2 IS NULL THEN 'removed'
         |       ELSE 'changed' END AS status
         |FROM j WHERE h1 IS NULL OR h2 IS NULL OR h1 != h2
-        |ORDER BY doc_id""".stripMargin,
-    "q108_scd2_merge" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q108_scd2_merge", scd2Q,
       """SELECT c_custkey, c_mktsegment, c_acctbal,
         |  CAST(1 AS INTEGER) AS version,
         |  (c_custkey % 7 != 0) AS is_current
@@ -2816,28 +2738,28 @@ object EventStoreQueries {
         |SELECT c_custkey, c_mktsegment, c_acctbal + 100.0e0,
         |  CAST(2 AS INTEGER), true
         |FROM customer WHERE c_custkey % 7 = 0
-        |ORDER BY c_custkey, version""".stripMargin,
-    "q109_retention" ->
+        |ORDER BY c_custkey, version""".stripMargin),
+    Query("q109_retention", retentionQ,
       """WITH act AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
         |  FROM events),
         |f AS (SELECT u, min(d) AS cohort_d FROM act GROUP BY u)
         |SELECT cohort_d, CAST(d - cohort_d AS INTEGER) AS offset_days,
         |  count(*) AS n_users
         |FROM act JOIN f USING (u)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q110_rolling_active" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q110_rolling_active", rollingActiveQ,
       """WITH act AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d
         |  FROM events),
         |days AS (SELECT DISTINCT d AS target_d FROM act)
         |SELECT target_d, count(DISTINCT u) AS active_users
         |FROM days JOIN act ON act.d BETWEEN target_d - 6 AND target_d
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q94_jsonl_export" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q94_jsonl_export", jsonlExport,
       """SELECT doc_id,
         |  CAST(to_json(struct_pack(doc_id := doc_id, lang := lang,
         |    source := source, n_chars := n_chars)) AS VARCHAR) AS jsonl
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q93_multimodal_resize" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q93_multimodal_resize", resizePlanQ,
       """WITH m AS (SELECT doc_id,
         |    CAST(64 + octet_length(encode(text)) % 512 AS INTEGER) AS src_w,
         |    CAST(64 + ascii(substr(text, 1, 1)) % 512 AS INTEGER) AS src_h
@@ -2848,8 +2770,8 @@ object EventStoreQueries {
         |  CAST(GREATEST(1, floor(src_w * sc)) AS INTEGER) AS dst_w,
         |  CAST(GREATEST(1, floor(src_h * sc)) AS INTEGER) AS dst_h,
         |  ROUND(sc, 6) AS scale
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q86_hopping_window" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q86_hopping_window", hoppingQ,
       """WITH b AS (SELECT ts, value,
         |    date_trunc('hour', ts)
         |      + (CAST(minute(ts) AS BIGINT) // 15) * INTERVAL 15 MINUTE AS bucket
@@ -2859,8 +2781,8 @@ object EventStoreQueries {
         |      WHERE ts < bucket - o.o * INTERVAL 15 MINUTE + INTERVAL 60 MINUTE)
         |SELECT window_start, count(*) AS n_events,
         |  ROUND(sum(value), 6) AS total_value
-        |FROM w GROUP BY window_start ORDER BY window_start""".stripMargin,
-    "q76_interval_join" ->
+        |FROM w GROUP BY window_start ORDER BY window_start""".stripMargin),
+    Query("q76_interval_join", intervalJoin,
       """WITH g AS (SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |         OR ts - lag(ts) OVER w > INTERVAL 240 MINUTE THEN 1 ELSE 0 END AS ns
@@ -2874,8 +2796,8 @@ object EventStoreQueries {
         |FROM events p JOIN iv ON p.user_id = iv.user_id
         |  AND p.ts >= iv.session_start AND p.ts <= iv.session_end
         |WHERE p.event_type = 'purchase'
-        |ORDER BY p.event_id""".stripMargin,
-    "q75_funnel" ->
+        |ORDER BY p.event_id""".stripMargin),
+    Query("q75_funnel", funnel,
       """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
         |           WHERE event_type = 'view' GROUP BY user_id),
         |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
@@ -2888,16 +2810,16 @@ object EventStoreQueries {
         |      GROUP BY e.user_id)
         |SELECT (SELECT count(*) FROM v) AS n_view,
         |  (SELECT count(*) FROM c) AS n_view_click,
-        |  (SELECT count(*) FROM p) AS n_full_funnel""".stripMargin,
-    "q52_multimodal_frames" ->
+        |  (SELECT count(*) FROM p) AS n_full_funnel""".stripMargin),
+    Query("q52_multimodal_frames", multimodalFrames,
       """SELECT doc_id, CAST(f.i AS INTEGER) AS frame_idx,
         |  CAST((f.i * octet_length(encode(text))) // 4 AS INTEGER) AS frame_offset,
         |  ascii(substr(text,
         |    CAST((f.i * octet_length(encode(text))) // 4 AS INTEGER) + 1, 1))
         |    AS frame_hash
         |FROM documents, (SELECT unnest(generate_series(0, 3)) AS i) f
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "q51_session_window_builtin" ->
+        |ORDER BY doc_id, frame_idx""".stripMargin),
+    Query("q51_session_window_builtin", sessionWindowBuiltin,
       """WITH g AS (SELECT user_id, ts, event_id, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS ns
@@ -2906,25 +2828,25 @@ object EventStoreQueries {
         |        ROWS UNBOUNDED PRECEDING) AS sid FROM g)
         |SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
         |  COUNT(*) AS n_events, ROUND(SUM(value), 6) AS total_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "q41_asof_attribution" ->
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin),
+    Query("q41_asof_attribution", asofAttribution,
       """SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
         |  c.event_id AS click_id, c.ts AS click_ts
         |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY purchase_id""".stripMargin,
-    "q38_from_json" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Query("q38_from_json", fromJson,
       """SELECT event_type, count(*) AS n_events,
         |  CAST(min(json_extract_string(props, '$.k') :: INTEGER) AS INTEGER) AS min_k,
         |  CAST(max(json_extract_string(props, '$.k') :: INTEGER) AS INTEGER) AS max_k,
         |  ROUND(avg(json_extract_string(props, '$.k') :: INTEGER), 6) AS avg_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q33_json_extract" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q33_json_extract", jsonExtract,
       """SELECT event_id, event_type,
         |  CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q34_sessionize" ->
+        |FROM events ORDER BY event_id""".stripMargin),
+    Query("q34_sessionize", sessionizeQ,
       """WITH g AS (SELECT user_id, ts, event_id, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS ns
@@ -2933,16 +2855,20 @@ object EventStoreQueries {
         |        ROWS UNBOUNDED PRECEDING) AS sid FROM g)
         |SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
         |  COUNT(*) AS n_events, ROUND(SUM(value), 6) AS total_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "q35_tumbling_hourly" ->
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin),
+    Query("q35_tumbling_hourly", tumbling,
       """SELECT date_trunc('hour', ts) AS hour_start, COUNT(*) AS n_events,
         |  ROUND(SUM(value), 6) AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q36_multimodal_decode" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q36_multimodal_decode", multimodal,
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
         |  CAST(64 + octet_length(encode(text)) % 512 AS INTEGER) AS width,
         |  CAST(64 + ascii(substr(text, 1, 1)) % 512 AS INTEGER) AS height,
         |  3 AS channels
-        |FROM documents ORDER BY doc_id""".stripMargin)
+        |FROM documents ORDER BY doc_id""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** North-star extension queries (BASELINE.json): the LLM-training-data
   * pipeline operators — dedup, similarity search, text analysis,
   * sessionization, JSON extraction, multimodal plumbing — over the
@@ -12,14 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * production default).
   *
   * Registration is split by domain ([[DedupQueries]], [[AnnQueries]],
-  * [[TextQueries]], [[EventStoreQueries]], [[StatsQueries]]); this
-  * object re-aggregates every domain map, so the driver contract
-  * (`SparkEntry.queries`/`oracleSql`) and external callers are
-  * unchanged. Domain key sets are disjoint by construction
-  * (QueriesSmokeSpec asserts it), so the `++` order is immaterial.
+  * [[TextQueries]], [[EventStoreQueries]], [[StatsQueries]]), each one
+  * `all: Seq[Query]` list; this object concatenates them and derives
+  * the name-keyed maps. A name registered twice would silently keep
+  * one binding in those maps — QueriesSmokeSpec asserts every name is
+  * registered exactly once.
   */
 object ExtensionQueries {
-  type Q = (SparkSession, String) => DataFrame
+  type Q = Query.Q
 
   /** The per-domain registries, in one place for suite-wide checks. */
   val domains: Map[String, (Map[String, Q], Map[String, String])] = Map(
@@ -29,7 +27,10 @@ object ExtensionQueries {
     "events" -> ((EventStoreQueries.queries, EventStoreQueries.oracleSql)),
     "stats" -> ((StatsQueries.queries, StatsQueries.oracleSql)))
 
-  val queries: Map[String, Q] = domains.values.map(_._1).reduce(_ ++ _)
+  val all: Seq[Query] = DedupQueries.all ++ AnnQueries.all ++ TextQueries.all ++
+    EventStoreQueries.all ++ StatsQueries.all
 
-  val oracleSql: Map[String, String] = domains.values.map(_._2).reduce(_ ++ _)
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

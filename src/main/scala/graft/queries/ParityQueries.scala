@@ -995,66 +995,11 @@ object ParityQueries {
         quarter(col("o_orderdate")).as("order_quarter"))
       .orderBy("o_orderkey")
 
-  val queries: Map[String, Q] = Map(
-    "q53_outer_join" -> outerJoin,
-    "q54_string_funcs" -> stringFuncs,
-    "q55_math_funcs" -> mathFuncs,
-    "q56_date_funcs" -> dateFuncs,
-    "q48_semi_join" -> semiJoin,
-    "q49_scalar_subquery" -> scalarSubquery,
-    "q50_having" -> havingAgg,
-    "q18_range_window" -> rangeWindow,
-    "q19_cube" -> cubeAgg,
-    "q47_approx_distinct" -> approxDistinct,
-    "q45_moving_avg_scaled" -> movingAvgScaled,
-    "q15_ordered_export" -> orderedExport,
-    "q16_gold_composite" -> goldComposite,
-    "q17_sql_pricing" -> sqlPricingSummary,
-    "q262_regional_revenue" -> regionalRevenueQ,
-    "q270_market_share" -> marketShareQ,
-    "q283_min_cost_supplier" -> minCostSupplierQ,
-    "q284_lonely_failures" -> lonelyFailureQ,
-    "q287_cust_distribution" -> custDistributionQ,
-    "q288_dormant_rich" -> dormantRichQ,
-    "q293_disjunctive_revenue" -> disjunctiveRevenueQ,
-    "q299_big_order_customers" -> bigOrderCustomersQ,
-    "q300_promising_suppliers" -> promisingSuppliersQ,
-    "q303_order_priority_check" -> orderPriorityCheckQ,
-    "q304_important_parts" -> importantPartsQ,
-    "q305_top_supplier" -> topSupplierQ,
-    "q306_part_supplier_count" -> partSupplierCountQ,
-    "q308_shipping_priority" -> shippingPriorityQ,
-    "q309_forecast_revenue" -> forecastRevenueQ,
-    "q310_nation_volume" -> nationVolumeQ,
-    "q311_product_profit" -> productProfitQ,
-    "q312_returned_items" -> returnedItemsQ,
-    "q313_promo_share" -> promoShareQ,
-    "q294_grouping_sets" -> groupingSetsQ,
-    "q295_unpivot" -> unpivotQ,
-    "q271_small_qty_revenue" -> smallQtyRevenueQ,
-    "q01_scan_filter" -> scanFilter,
-    "q02_project_arith" -> projectArith,
-    "q03_ratio_guard" -> ratioGuard,
-    "q04_dim_time" -> dimTime,
-    "q05_star_join" -> starJoin,
-    "q06_anti_join" -> antiJoin,
-    "q07_moving_avg" -> movingAvg,
-    "q08_watermark_probe" -> watermarkProbe,
-    "q09_summary_stats" -> summaryStats,
-    "q10_incremental_window" -> incrementalWindow,
-    "q11_except" -> exceptOp,
-    "q12_union" -> unionOp,
-    "q13_topk" -> topK,
-    "q14_rollup" -> rollupAgg,
-    "q39_intersect" -> intersectOp,
-    "q60_union_all" -> unionAllOp,
-    "q61_except_all" -> exceptAllOp)
-
-  val oracleSql: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // q299: Q18-shape; quantities are integral doubles so per-row
     // BIGINT casts make every sum exact (DuckDB's rounding cast and
     // Spark's ANSI truncating cast agree on integral values).
-    "q299_big_order_customers" ->
+    Query("q299_big_order_customers", bigOrderCustomersQ,
       """SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice,
         |  CAST(SUM(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
         |FROM customer c
@@ -1065,9 +1010,9 @@ object ParityQueries {
         |  GROUP BY l_orderkey
         |  HAVING SUM(CAST(l_quantity AS BIGINT)) > 200)
         |GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_totalprice
-        |ORDER BY o.o_totalprice DESC, o.o_orderkey""".stripMargin,
+        |ORDER BY o.o_totalprice DESC, o.o_orderkey""".stripMargin),
     // q303: Q4-shape; returnflag-R stands in for commit<receipt.
-    "q303_order_priority_check" ->
+    Query("q303_order_priority_check", orderPriorityCheckQ,
       """SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
         |FROM orders o
         |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
@@ -1076,10 +1021,10 @@ object ParityQueries {
         |    SELECT 1 FROM lineitem l
         |    WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
         |GROUP BY o.o_orderpriority
-        |ORDER BY o.o_orderpriority""".stripMargin,
+        |ORDER BY o.o_orderpriority""".stripMargin),
     // q304: Q11-shape; exact-integer 1.2x-average comparison, pv
     // MATERIALIZED (referenced three times).
-    "q304_important_parts" ->
+    Query("q304_important_parts", importantPartsQ,
       """WITH pv AS MATERIALIZED (
         |  SELECT l_partkey,
         |    CAST(SUM(CAST(floor(l_extendedprice * (1e0 - l_discount)
@@ -1088,9 +1033,9 @@ object ParityQueries {
         |SELECT l_partkey, value_e4 FROM pv
         |WHERE value_e4 * (SELECT count(*) FROM pv) * 5
         |      > 6 * (SELECT SUM(value_e4) FROM pv)
-        |ORDER BY value_e4 DESC, l_partkey""".stripMargin,
+        |ORDER BY value_e4 DESC, l_partkey""".stripMargin),
     // q305: Q15-shape; rev MATERIALIZED (main scan + the MAX scalar).
-    "q305_top_supplier" ->
+    Query("q305_top_supplier", topSupplierQ,
       """WITH rev AS MATERIALIZED (
         |  SELECT l_suppkey,
         |    CAST(SUM(CAST(floor(l_extendedprice * (1e0 - l_discount)
@@ -1102,9 +1047,9 @@ object ParityQueries {
         |SELECT s.s_suppkey, s.s_name, r.total_rev_e4
         |FROM supplier s JOIN rev r ON r.l_suppkey = s.s_suppkey
         |WHERE r.total_rev_e4 = (SELECT max(total_rev_e4) FROM rev)
-        |ORDER BY s.s_suppkey""".stripMargin,
+        |ORDER BY s.s_suppkey""".stripMargin),
     // q306: Q16-shape; NOT IN over non-null keys.
-    "q306_part_supplier_count" ->
+    Query("q306_part_supplier_count", partSupplierCountQ,
       """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)
         |SELECT p.p_brand, p.p_size,
         |  CAST(count(DISTINCT ps.l_suppkey) AS BIGINT) AS supplier_cnt
@@ -1113,9 +1058,9 @@ object ParityQueries {
         |  AND ps.l_suppkey NOT IN (
         |    SELECT s_suppkey FROM supplier WHERE s_nationkey = 0)
         |GROUP BY p.p_brand, p.p_size
-        |ORDER BY supplier_cnt DESC, p.p_brand, p.p_size""".stripMargin,
+        |ORDER BY supplier_cnt DESC, p.p_brand, p.p_size""".stripMargin),
     // q308: Q3-shape; top-10 ordered by the exact integer revenue.
-    "q308_shipping_priority" ->
+    Query("q308_shipping_priority", shippingPriorityQ,
       """SELECT l.l_orderkey,
         |  CAST(SUM(CAST(floor(l.l_extendedprice * (1e0 - l.l_discount)
         |    * 10000e0 + 0.5e0) AS BIGINT)) AS BIGINT) AS revenue_e4,
@@ -1128,9 +1073,9 @@ object ParityQueries {
         |  AND l.l_shipdate > TIMESTAMP '1998-06-01'
         |GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
         |ORDER BY revenue_e4 DESC, l.l_orderkey
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin),
     // q309: Q6-shape; one pushed-filter scan, e4-exact revenue.
-    "q309_forecast_revenue" ->
+    Query("q309_forecast_revenue", forecastRevenueQ,
       """SELECT CAST(count(*) AS BIGINT) AS n_items,
         |  round(CAST(SUM(CAST(floor(l_extendedprice * l_discount
         |      * 10000e0 + 0.5e0) AS BIGINT)) AS DOUBLE) / 10000e0, 6)
@@ -1139,11 +1084,11 @@ object ParityQueries {
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
         |  AND l_discount BETWEEN 0.03e0 AND 0.07e0
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin),
     // q310: Q7-shape; nation joined twice, disjunctive pair predicate.
     // DuckDB year() yields BIGINT where Spark yields INT — but the
     // GROUP BY key here is computed identically; cast for the dtype.
-    "q310_nation_volume" ->
+    Query("q310_nation_volume", nationVolumeQ,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  CAST(year(l.l_shipdate) AS INTEGER) AS l_year,
         |  CAST(SUM(CAST(floor(l.l_extendedprice * (1e0 - l.l_discount)
@@ -1159,10 +1104,10 @@ object ParityQueries {
         |  AND l.l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l.l_shipdate < TIMESTAMP '1998-01-01'
         |GROUP BY n1.n_name, n2.n_name, year(l.l_shipdate)
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
     // q311: Q9-shape; retailprice-surrogate supply cost, half-up
     // quantization identical for negative profits.
-    "q311_product_profit" ->
+    Query("q311_product_profit", productProfitQ,
       """SELECT n.n_name AS nation,
         |  CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
         |  CAST(SUM(CAST(floor((l.l_extendedprice * (1e0 - l.l_discount)
@@ -1175,9 +1120,9 @@ object ParityQueries {
         |JOIN nation n ON n.n_nationkey = s.s_nationkey
         |WHERE p.p_name LIKE '%red%'
         |GROUP BY n.n_name, year(o.o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin,
+        |ORDER BY nation, o_year DESC""".stripMargin),
     // q312: Q10-shape; top-20 returned-revenue customers.
-    "q312_returned_items" ->
+    Query("q312_returned_items", returnedItemsQ,
       """SELECT c.c_custkey, c.c_name,
         |  CAST(SUM(CAST(floor(l.l_extendedprice * (1e0 - l.l_discount)
         |    * 10000e0 + 0.5e0) AS BIGINT)) AS BIGINT) AS revenue_e4,
@@ -1191,9 +1136,9 @@ object ParityQueries {
         |  AND l.l_returnflag = 'R'
         |GROUP BY c.c_custkey, c.c_name, c.c_acctbal, n.n_name
         |ORDER BY revenue_e4 DESC, c.c_custkey
-        |LIMIT 20""".stripMargin,
+        |LIMIT 20""".stripMargin),
     // q313: Q14-shape; both sums exact e4 integers, ONE final division.
-    "q313_promo_share" ->
+    Query("q313_promo_share", promoShareQ,
       """SELECT
         |  round(100e0 * CAST(SUM(CASE WHEN p.p_type = 'PROMO'
         |      THEN CAST(floor(l.l_extendedprice * (1e0 - l.l_discount)
@@ -1205,10 +1150,10 @@ object ParityQueries {
         |  CAST(count(*) AS BIGINT) AS n_items
         |FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         |WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1998-01-01'""".stripMargin,
+        |  AND l.l_shipdate < TIMESTAMP '1998-01-01'""".stripMargin),
     // q300: Q20-shape; the ×2 integer comparison replaces the 0.5
     // factor, every quantity sum travels as an exact BIGINT.
-    "q300_promising_suppliers" ->
+    Query("q300_promising_suppliers", promisingSuppliersQ,
       """WITH ps AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |    SUM(CAST(l_quantity AS BIGINT)) AS qty96
@@ -1225,10 +1170,10 @@ object ParityQueries {
         |        FROM lineitem l2
         |        WHERE l2.l_partkey = ps.ps_partkey
         |          AND l2.l_suppkey = ps.ps_suppkey))
-        |ORDER BY s.s_suppkey""".stripMargin,
+        |ORDER BY s.s_suppkey""".stripMargin),
     // q262: revenue quantized to exact e4 longs at birth (floor(x+0.5)
     // mirrored), summed exactly, divided once.
-    "q262_regional_revenue" ->
+    Query("q262_regional_revenue", regionalRevenueQ,
       """WITH li AS (SELECT l_orderkey, l_suppkey,
         |    CAST(floor(l_extendedprice * (1e0 - l_discount) * 10000e0
         |      + 0.5e0) AS BIGINT) AS rev_e4 FROM lineitem),
@@ -1243,11 +1188,11 @@ object ParityQueries {
         |  AND c.c_nationkey = s.s_nationkey
         |JOIN nation n ON n.n_nationkey = s.s_nationkey
         |JOIN region r ON r.r_regionkey = n.n_regionkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // q270: e4-quantized revenue reported in MILLIONS (/1e10) to stay
     // under the round(_,6) exactness cliff; the share is one
     // exact-integer division per year.
-    "q270_market_share" ->
+    Query("q270_market_share", marketShareQ,
       """WITH li AS (SELECT l_orderkey, l_suppkey,
         |    CAST(floor(l_extendedprice * (1e0 - l_discount) * 10000e0
         |      + 0.5e0) AS BIGINT) AS rev_e4 FROM lineitem),
@@ -1261,11 +1206,11 @@ object ParityQueries {
         |FROM li JOIN o ON o.o_orderkey = li.l_orderkey
         |JOIN supplier s ON s.s_suppkey = li.l_suppkey
         |JOIN nation n ON n.n_nationkey = s.s_nationkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // q283/q284: the SAME ANSI statement runs in both engines (no
     // arithmetic beyond stored-value compares and integer counts) —
     // the oracle is the query text itself over the raw tables.
-    "q283_min_cost_supplier" ->
+    Query("q283_min_cost_supplier", minCostSupplierQ,
       """SELECT DISTINCT p.p_partkey, p.p_name, sp.s_name, n.n_name,
         |  l.l_extendedprice AS min_price
         |FROM lineitem l
@@ -1281,8 +1226,8 @@ object ParityQueries {
         |    JOIN nation n2 ON n2.n_nationkey = s2.s_nationkey
         |    WHERE l2.l_partkey = p.p_partkey
         |      AND n2.n_regionkey = r.r_regionkey)
-        |ORDER BY p.p_partkey, sp.s_name""".stripMargin,
-    "q284_lonely_failures" ->
+        |ORDER BY p.p_partkey, sp.s_name""".stripMargin),
+    Query("q284_lonely_failures", lonelyFailureQ,
       """SELECT sp.s_name, n.n_name, count(*) AS numwait
         |FROM supplier sp
         |JOIN nation n ON n.n_nationkey = sp.s_nationkey
@@ -1300,10 +1245,10 @@ object ParityQueries {
         |      AND l3.l_suppkey <> l1.l_suppkey
         |      AND l3.l_returnflag = 'R')
         |GROUP BY sp.s_name, n.n_name
-        |ORDER BY numwait DESC, sp.s_name""".stripMargin,
+        |ORDER BY numwait DESC, sp.s_name""".stripMargin),
     // q287: the same ANSI statement (integer counts only); q288 the
     // same modulo DuckDB's HUGEINT sum needing a BIGINT cast.
-    "q287_cust_distribution" ->
+    Query("q287_cust_distribution", custDistributionQ,
       """SELECT c_count, count(*) AS custdist
         |FROM (
         |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -1313,8 +1258,8 @@ object ParityQueries {
         |   AND o.o_orderpriority <> '1-URGENT'
         |  GROUP BY c.c_custkey) t
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q288_dormant_rich" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q288_dormant_rich", dormantRichQ,
       """WITH pos AS (
         |  SELECT c_custkey, c_nationkey % 5 AS cntrycode,
         |    CAST(round(c_acctbal * 100) AS BIGINT) AS cents
@@ -1329,10 +1274,10 @@ object ParityQueries {
         |    WHERE o.o_custkey = pos.c_custkey
         |      AND o.o_orderdate >= TIMESTAMP '1999-01-01 00:00:00')
         |GROUP BY cntrycode
-        |ORDER BY cntrycode""".stripMargin,
+        |ORDER BY cntrycode""".stripMargin),
     // q293: identical statement modulo DuckDB's HUGEINT sum cast;
     // revenue e4-quantized exact integers, one final division.
-    "q293_disjunctive_revenue" ->
+    Query("q293_disjunctive_revenue", disjunctiveRevenueQ,
       """SELECT count(*) AS n_items,
         |  round(CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
         |      * 10000e0 + 0.5e0) AS BIGINT)) AS DOUBLE) / 10000e0, 6)
@@ -1343,10 +1288,10 @@ object ParityQueries {
         |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25
         |       AND l.l_quantity BETWEEN 10 AND 20)
         |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35
-        |       AND l.l_quantity BETWEEN 20 AND 36)""".stripMargin,
+        |       AND l.l_quantity BETWEEN 20 AND 36)""".stripMargin),
     // q294: DuckDB runs the same GROUPING SETS; grouping() flags
     // disambiguate grouped-out NULLs, sums CAST from HUGEINT.
-    "q294_grouping_sets" ->
+    Query("q294_grouping_sets", groupingSetsQ,
       """SELECT o_orderstatus, o_orderpriority,
         |  CAST(grouping(o_orderstatus) AS INTEGER) AS g_status,
         |  CAST(grouping(o_orderpriority) AS INTEGER) AS g_prio,
@@ -1356,10 +1301,10 @@ object ParityQueries {
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
         |  (o_orderstatus), ())
-        |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin,
+        |ORDER BY g_status, g_prio, o_orderstatus, o_orderpriority""".stripMargin),
     // q295: the melt replayed engine-portably as a dense status ×
     // priority grid left-joined to the counts (stack's NULL -> 0).
-    "q295_unpivot" ->
+    Query("q295_unpivot", unpivotQ,
       """WITH c AS (SELECT o_orderstatus, o_orderpriority, count(*) AS n
         |  FROM orders GROUP BY 1, 2),
         |st AS (SELECT DISTINCT o_orderstatus FROM orders),
@@ -1370,10 +1315,10 @@ object ParityQueries {
         |FROM st CROSS JOIN pr
         |LEFT JOIN c ON c.o_orderstatus = st.o_orderstatus
         |           AND c.o_orderpriority = pr.o_orderpriority
-        |ORDER BY 1, 2""".stripMargin,
+        |ORDER BY 1, 2""".stripMargin),
     // q271: threshold compare on cross-multiplied exact integers
     // (5·qty·cnt < Σqty), revenue e4-quantized, one division.
-    "q271_small_qty_revenue" ->
+    Query("q271_small_qty_revenue", smallQtyRevenueQ,
       """WITH li AS (SELECT l_partkey,
         |    CAST(round(l_quantity, 0) AS BIGINT) AS qty,
         |    CAST(floor(l_extendedprice * 10000e0 + 0.5e0) AS BIGINT)
@@ -1384,13 +1329,13 @@ object ParityQueries {
         |  ROUND(CAST(SUM(li.price_e4) AS DOUBLE) / 70000e0, 6)
         |    AS avg_yearly
         |FROM li JOIN pp ON pp.l_partkey = li.l_partkey
-        |WHERE li.qty * pp.cnt * 5 < pp.sumqty""".stripMargin,
+        |WHERE li.qty * pp.cnt * 5 < pp.sumqty""".stripMargin),
     // q47: the same deterministic HLL as Sketches.hllDistinct — md5-derived
     // 60-bit hash, low 12 bits route to 4096 registers, rank from the exact
     // bit length of the remainder, register sum as an exact integer
     // Σ 2^(49-rho), constants in e-notation (DuckDB would otherwise parse
     // 0.7213 as DECIMAL and diverge), small-range linear-counting branch.
-    "q47_approx_distinct" ->
+    Query("q47_approx_distinct", approxDistinct,
       """WITH hp AS (SELECT CAST(concat('0x', substr(md5(CAST(l_partkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
         |            FROM lineitem WHERE l_partkey IS NOT NULL),
         |rp AS (SELECT h % 4096 AS bucket,
@@ -1429,72 +1374,72 @@ object ParityQueries {
         |  count(DISTINCT l_orderkey) AS exact_orders,
         |  (SELECT ROUND(e, 6) FROM ep) AS hll_parts,
         |  (SELECT ROUND(e, 6) FROM eo) AS hll_orders
-        |FROM lineitem""".stripMargin,
-    "q53_outer_join" ->
+        |FROM lineitem""".stripMargin),
+    Query("q53_outer_join", outerJoin,
       """SELECT c_custkey, o_orderkey, o_totalprice
         |FROM customer LEFT JOIN
         |  (SELECT * FROM orders WHERE o_orderstatus = 'P') o
         |  ON c_custkey = o_custkey
-        |ORDER BY c_custkey, o_orderkey NULLS FIRST""".stripMargin,
-    "q54_string_funcs" ->
+        |ORDER BY c_custkey, o_orderkey NULLS FIRST""".stripMargin),
+    Query("q54_string_funcs", stringFuncs,
       """SELECT doc_id,
         |  upper(substr(text, 1, 10)) AS head_upper,
         |  concat(lang, ':', source) AS lang_source,
         |  text LIKE '%table%' AS mentions_table,
         |  regexp_extract(text, '^(\w+)', 1) AS first_word,
         |  CAST(length(text) AS INTEGER) AS len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q55_math_funcs" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q55_math_funcs", mathFuncs,
       """SELECT l_orderkey, l_linenumber,
         |  ROUND(sqrt(l_extendedprice), 6) AS sqrt_price,
         |  ROUND(pow(l_discount, 2), 6) AS disc_sq,
         |  abs(l_quantity - 25) AS qty_dev,
         |  CAST(ceil(l_tax * 100) AS BIGINT) AS tax_pct_ceil,
         |  CAST(floor(l_extendedprice / 1000) AS BIGINT) AS price_k
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q56_date_funcs" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q56_date_funcs", dateFuncs,
       """SELECT o_orderkey,
         |  CAST(o_orderdate AS DATE) AS order_date,
         |  CAST(o_orderdate AS DATE) + 90 AS due_date,
         |  CAST(DATE '2002-01-01' - CAST(o_orderdate AS DATE) AS INTEGER) AS age_days,
         |  CAST(EXTRACT(YEAR FROM o_orderdate) AS INTEGER) AS order_year,
         |  CAST(EXTRACT(QUARTER FROM o_orderdate) AS INTEGER) AS order_quarter
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q48_semi_join" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q48_semi_join", semiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |              WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-    "q49_scalar_subquery" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q49_scalar_subquery", scalarSubquery,
       """SELECT o_orderkey, o_totalprice FROM orders
         |WHERE o_totalprice > round(1.8 * (SELECT avg(o_totalprice) FROM orders), 2)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q50_having" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q50_having", havingAgg,
       """SELECT l_suppkey, count(*) AS n_items, sum(l_quantity) AS sum_qty
         |FROM lineitem GROUP BY l_suppkey
-        |HAVING count(*) > 620 ORDER BY l_suppkey""".stripMargin,
-    "q18_range_window" ->
+        |HAVING count(*) > 620 ORDER BY l_suppkey""".stripMargin),
+    Query("q18_range_window", rangeWindow,
       """SELECT user_id, ts, event_id,
         |  ROUND(SUM(value) OVER w, 6) AS hour_sum,
         |  COUNT(*) OVER w AS hour_n
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts
         |             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, ts, event_id""".stripMargin,
-    "q19_cube" ->
+        |ORDER BY user_id, ts, event_id""".stripMargin),
+    Query("q19_cube", cubeAgg,
       """SELECT l_returnflag, l_linestatus,
         |  count(*) AS n_items, sum(l_quantity) AS sum_qty
         |FROM lineitem
         |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q45_moving_avg_scaled" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q45_moving_avg_scaled", movingAvgScaled,
       """SELECT event_id, ts, value,
         |  ROUND(AVG(value) OVER w, 6) AS avg_value,
         |  ROUND(STDDEV(value) OVER w, 6) AS stddev_value
         |FROM events
         |WINDOW w AS (ORDER BY ts, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY ts, event_id""".stripMargin,
-    "q15_ordered_export" ->
+        |ORDER BY ts, event_id""".stripMargin),
+    Query("q15_ordered_export", orderedExport,
       """SELECT event_id, ts, strftime(ts, '%Y-%m-%dT%H:%M') AS cursor_str, value,
         |  CAST(EXTRACT(HOUR FROM ts) AS INTEGER) AS hour,
         |  CAST(EXTRACT(DOW FROM ts) AS INTEGER) AS day_of_week,
@@ -1503,8 +1448,8 @@ object ParityQueries {
         |       WHEN EXTRACT(MONTH FROM ts) IN (3,4,5) THEN 1
         |       WHEN EXTRACT(MONTH FROM ts) IN (6,7,8) THEN 2
         |       ELSE 3 END AS INTEGER) AS season
-        |FROM events ORDER BY ts, event_id""".stripMargin,
-    "q16_gold_composite" ->
+        |FROM events ORDER BY ts, event_id""".stripMargin),
+    Query("q16_gold_composite", goldComposite,
       """WITH dim AS (
         |  SELECT DISTINCT ts AS time_id,
         |    CAST(EXTRACT(HOUR FROM ts) AS INTEGER) AS hour,
@@ -1529,8 +1474,8 @@ object ParityQueries {
         |  FROM ts_feats
         |  WINDOW w AS (ORDER BY time_id, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW))
         |SELECT * FROM aggregated WHERE time_id > TIMESTAMP '2024-01-10'
-        |ORDER BY time_id, event_id""".stripMargin,
-    "q17_sql_pricing" ->
+        |ORDER BY time_id, event_id""".stripMargin),
+    Query("q17_sql_pricing", sqlPricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  sum(l_quantity) AS sum_qty,
         |  round(avg(l_quantity), 6) AS avg_qty,
@@ -1539,26 +1484,26 @@ object ParityQueries {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q01_scan_filter" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q01_scan_filter", scanFilter,
       """SELECT l_orderkey, l_linenumber, l_quantity, l_shipdate
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_quantity > 45
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q02_project_arith" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q02_project_arith", projectArith,
       """SELECT l_orderkey, l_linenumber,
         |  l_extendedprice AS gross_price,
         |  l_extendedprice * (1 - l_discount) AS net_price,
         |  l_extendedprice * (1 - l_discount) * (1 + l_tax) AS charged_price
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q03_ratio_guard" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q03_ratio_guard", ratioGuard,
       """SELECT l_orderkey, l_linenumber,
         |  CASE WHEN l_extendedprice > 0 THEN l_quantity / l_extendedprice ELSE 0 END
         |    AS qty_price_ratio,
         |  CASE WHEN l_discount > 0 THEN l_tax / l_discount ELSE 1 END
         |    AS tax_discount_ratio
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q04_dim_time" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q04_dim_time", dimTime,
       """SELECT DISTINCT ts AS time_id,
         |  CAST(ts AS DATE) AS date,
         |  CAST(EXTRACT(HOUR FROM ts) AS INTEGER) AS hour,
@@ -1570,72 +1515,76 @@ object ParityQueries {
         |       WHEN EXTRACT(MONTH FROM ts) IN (6,7,8) THEN 2
         |       ELSE 3 END AS INTEGER) AS season
         |FROM events WHERE ts IS NOT NULL
-        |ORDER BY time_id""".stripMargin,
-    "q05_star_join" ->
+        |ORDER BY time_id""".stripMargin),
+    Query("q05_star_join", starJoin,
       """SELECT c_mktsegment, o_orderpriority,
         |  count(*) AS n_items, sum(l_quantity) AS sum_qty
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment, o_orderpriority
-        |ORDER BY c_mktsegment, o_orderpriority""".stripMargin,
-    "q06_anti_join" ->
+        |ORDER BY c_mktsegment, o_orderpriority""".stripMargin),
+    Query("q06_anti_join", antiJoin,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-        |ORDER BY c_custkey""".stripMargin,
-    "q07_moving_avg" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q07_moving_avg", movingAvg,
       """SELECT event_id, ts, value,
         |  ROUND(AVG(value) OVER w, 6) AS avg_value,
         |  ROUND(STDDEV(value) OVER w, 6) AS stddev_value
         |FROM events
         |WINDOW w AS (ORDER BY ts, event_id ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-        |ORDER BY ts, event_id""".stripMargin,
-    "q08_watermark_probe" ->
-      "SELECT COALESCE(MAX(ts), TIMESTAMP '1970-01-01') AS watermark FROM events",
-    "q09_summary_stats" ->
+        |ORDER BY ts, event_id""".stripMargin),
+    Query("q08_watermark_probe", watermarkProbe,
+      "SELECT COALESCE(MAX(ts), TIMESTAMP '1970-01-01') AS watermark FROM events"),
+    Query("q09_summary_stats", summaryStats,
       """SELECT count(*) AS n_rows, count(DISTINCT user_id) AS n_users,
-        |  MIN(ts) AS min_ts, MAX(ts) AS max_ts FROM events""".stripMargin,
-    "q10_incremental_window" ->
+        |  MIN(ts) AS min_ts, MAX(ts) AS max_ts FROM events""".stripMargin),
+    Query("q10_incremental_window", incrementalWindow,
       """SELECT event_id, ts, avg_value FROM (
         |  SELECT event_id, ts,
         |    ROUND(AVG(value) OVER (ORDER BY ts, event_id
         |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) AS avg_value
         |  FROM events)
         |WHERE ts > TIMESTAMP '2024-01-15'
-        |ORDER BY ts, event_id""".stripMargin,
-    "q11_except" ->
+        |ORDER BY ts, event_id""".stripMargin),
+    Query("q11_except", exceptOp,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
         |EXCEPT
         |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY custkey""".stripMargin,
-    "q12_union" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q12_union", unionOp,
       """SELECT o_custkey AS custkey FROM orders
         |UNION
         |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0
-        |ORDER BY custkey""".stripMargin,
-    "q13_topk" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q13_topk", topK,
       """SELECT o_orderkey, o_totalprice, o_orderdate FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q14_rollup" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin),
+    Query("q14_rollup", rollupAgg,
       """SELECT l_returnflag, l_linestatus,
         |  count(*) AS n_items, sum(l_quantity) AS sum_qty
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q39_intersect" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q39_intersect", intersectOp,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
         |INTERSECT
         |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY custkey""".stripMargin,
-    "q60_union_all" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q60_union_all", unionAllOp,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
         |UNION ALL
         |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0
-        |ORDER BY custkey""".stripMargin,
-    "q61_except_all" ->
+        |ORDER BY custkey""".stripMargin),
+    Query("q61_except_all", exceptAllOp,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'
         |EXCEPT ALL
         |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY custkey""".stripMargin)
+        |ORDER BY custkey""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

@@ -9,21 +9,20 @@ import graft.functions.Md5Family
 import graft.operators.{Dedup, PairStore}
 
 /** One session-shared persisted store: built ONCE per (JVM, sf dir) on
-  * first use and then READ by every query named in `consumers` — the
-  * ingest-once discipline (q326) applied to the suite's indexes and
-  * pair graphs. Store reads answer exactly like the one-shot inline
-  * operators (each store's spec pins it), so every consumer keeps its
-  * one-shot DuckDB oracle. Builds are BuildTiming-accounted
-  * (amortizable `build_s`), and Bench and Verify [[SharedStore.prewarm]]
-  * them outside any timed window or wave.
+  * first use and then READ by every query whose [[Query]] entry lists
+  * it in `needs` — the ingest-once discipline (q326) applied to the
+  * suite's indexes and pair graphs. Store reads answer exactly like the
+  * one-shot inline operators (each store's spec pins it), so every
+  * consumer keeps its one-shot DuckDB oracle. Builds are
+  * BuildTiming-accounted (amortizable `build_s`), and Bench and Verify
+  * [[SharedStore.prewarm]] them outside any timed window or wave.
   *
-  * `consumers` is the declaration both mains prewarm from:
-  * QueriesSmokeSpec fails when a declared name is not registered, or
-  * when an undeclared query builds a shared store.
+  * The store names no queries: a query declares the stores it reads in
+  * its own entry, and QueriesSmokeSpec fails when a query builds a
+  * store it does not declare.
   */
 final class SharedStore private (
     val label: String,
-    val consumers: Set[String],
     tempPrefix: String,
     leaf: String,
     build: (SparkSession, String, String) => Unit) {
@@ -53,7 +52,6 @@ object SharedStore {
     * phrase search alike. Its fresh build is q161's timed entry.
     */
   val textIndex: SharedStore = new SharedStore("index",
-    Set("q140_text_index", "q144_phrase_search", "q338_index_hybrid"),
     "graft_shared_tidx", "idx",
     (s, dir, root) => TextQueries.buildCorpusIndex(s, dir, root))
 
@@ -63,10 +61,6 @@ object SharedStore {
     * argument). Its fresh build is q334's timed entry.
     */
   val pairStore: SharedStore = new SharedStore("pair-store",
-    Set("q57_dedup_clusters", "q59_canonical_corpus", "q74_embedding_dedup",
-      "q120_source_dedup_report", "q130_incremental_canon",
-      "q142_cluster_split", "q171_quality_canonical", "q180_ensemble_split",
-      "q325_temporal_leakage", "q329_pair_store", "q333_cluster_balance"),
     "graft_shared_pairs", "store",
     (s, dir, root) => {
       val docs = Tables.documents(s, dir)
@@ -88,7 +82,6 @@ object SharedStore {
     * timed entry.
     */
   val epochStore: SharedStore = new SharedStore("epoch-store",
-    Set("q91_split_leakage", "q92_source_overlap"),
     "graft_epoch_store", "store",
     (s, dir, root) => {
       val docs = Tables.documents(s, dir)
@@ -102,14 +95,13 @@ object SharedStore {
   /** Every shared store, in prewarm order. */
   val all: Seq[SharedStore] = Seq(textIndex, pairStore, epochStore)
 
-  /** Build, for the tables under `dir`, every store that one of the
-    * `selected` queries consumes. A failed build is logged under `tag`
-    * and skipped: its consumers then build on first use, or fail on
-    * their own.
+  /** Build, for the tables under `dir`, each of `stores`. A failed
+    * build is logged under `tag` and skipped: its consumers then build
+    * on first use, or fail on their own.
     */
-  def prewarm(spark: SparkSession, dir: String, selected: Seq[String],
+  def prewarm(spark: SparkSession, dir: String, stores: Set[SharedStore],
       tag: String): Unit =
-    all.filter(st => selected.exists(st.consumers)).foreach { st =>
+    all.filter(stores).foreach { st =>
       try st.path(spark, dir)
       catch { case e: Throwable =>
         System.err.println(s"[$tag] ${st.label} prewarm failed: $e") }

@@ -13,7 +13,7 @@ import graft.streaming.StreamingPower
   *
   * Split from the former ExtensionQueries monolith (round 7) — query
   * bodies, registration names, and oracle SQL are unchanged;
-  * [[ExtensionQueries]] re-aggregates every domain map.
+  * [[ExtensionQueries]] concatenates every domain's `all` list.
   */
 object StatsQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -451,7 +451,7 @@ object StatsQueries {
       "value", "event_type", "click", "view", lo = 0.0, hi = 320.0,
       bins = 32)
 
-  private val wassersteinOracle: String =
+  lazy val wassersteinOracle: String =
     """WITH ev AS (
       |  SELECT CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_a,
       |    least(greatest(CAST(floor(value / 10e0) AS BIGINT), 0), 31)
@@ -1127,79 +1127,6 @@ object StatsQueries {
       li.filter(col("l_linestatus") === "O"), col("l_partkey"))
   }
 
-  val queries: Map[String, Q] = Map(
-    "q291_record_linkage" -> linkageQ,
-    "q296_bradley_terry" -> bradleyTerryQ,
-    "q297_fdr_slices" -> fdrSlicesQ,
-    "q298_hll_setops" -> hllSetOpsQ,
-    "q257_benford" -> benfordQ,
-    "q259_conformal" -> conformalQ,
-    "q260_woe_iv" -> woeIvQ,
-    "q246_neyman" -> neymanQ,
-    "q225_rendezvous" -> rendezvousQ,
-    "q227_join_size" -> joinSizeQ,
-    "q228_curriculum" -> curriculumQ,
-    "q231_water_fill" -> waterFillQ,
-    "q233_trimmed_mean" -> trimmedMeanQ,
-    "q236_bootstrap_ci" -> bootstrapQ,
-    "q237_padding" -> paddingQ,
-    "q238_table_fingerprint" -> fingerprintQ,
-    "q219_adjusted_rand" -> ariQ,
-    "q220_mutual_info" -> miQ,
-    "q221_spearman" -> spearmanQ,
-    "q222_gini" -> giniQ,
-    "q209_embedding_audit" -> embAuditQ,
-    "q210_key_skew" -> skewReportQ,
-    "q213_psi" -> psiQ,
-    "q214_ks_test" -> ksQ,
-    "q215_chi2" -> chi2Q,
-    "q328_split_balance" -> splitBalanceQ,
-    "q333_cluster_balance" -> clusterBalanceQ,
-    "q217_cat_psi" -> catPsiQ,
-    "q165_column_profile" -> columnProfileQ,
-    "q185_dsir_sample" -> dsirQ,
-    "q190_hist_match" -> histMatchQ,
-    "q193_k_anonymity" -> kAnonQ,
-    "q195_data_card" -> dataCardQ,
-    "q154_robust_calibration" -> robustCalibrationQ,
-    "q150_score_calibration" -> scoreCalibrationQ,
-    "q314_isotonic" -> isotonicQ,
-    "q315_auc_by_dow" -> aucQ,
-    "q316_calibration_store" -> calibrationStoreQ,
-    "q317_gains_table" -> gainsQ,
-    "q321_sinkhorn_mix" -> sinkhornQ,
-    "q322_wasserstein_drift" -> wassersteinQ,
-    "q323_calibration_error" -> calibrationErrorQ,
-    "q135_bucketed_join" -> bucketedJoinQ,
-    "q134_weighted_sample" -> weightedSampleQ,
-    "q128_cap_groups_tokens" -> capTokensQ,
-    "q121_chunk_pack" -> chunkPackQ,
-    "q119_winsorize" -> winsorizeQ,
-    "q103_mix_report" -> mixReport,
-    "q101_grouped_quantiles" -> groupedQuantilesQ,
-    "q100_mixture_pipeline" -> mixturePipeline,
-    "q96_zorder_stats" -> zorderStatsQ,
-    "q97_epoch_shuffle" -> epochShuffleQ,
-    "q95_temperature_sample" -> temperatureQ,
-    "q88_histogram_quantiles" -> histQuantiles,
-    "q89_count_min" -> countMin,
-    "q327_join_size_sketch" -> joinSizeSketchQ,
-    "q332_join_size_store" -> joinSizeStoreQ,
-    "q83_chunk" -> chunkQ,
-    "q85_zorder" -> zorderQ,
-    "q72_shard_pack" -> shardPack,
-    "q77_normalize" -> normalizeQ,
-    "q79_skew_profile" -> skewProfile,
-    "q81_cap_groups" -> capGroupsQ,
-    "q82_cap_groups_exact" -> capGroupsExactQ,
-    "q63_hash_split" -> hashSplit,
-    "q68_linear_count_distinct" -> linearCount,
-    "q69_salted_join" -> saltedJoin,
-    "q70_stratified_sample" -> stratified,
-    "q43_pivot" -> pivotQ,
-    "q44_rank_windows" -> rankWindows,
-    "q42_percentiles" -> percentiles)
-
   // q185: bucket counts exact; each bucket's log-ratio quantizes to
   // nanos in the identical float expression; per-doc importance is
   // an exact integer sum; the Gumbel score is one per-doc float
@@ -1437,13 +1364,37 @@ object StatsQueries {
            |    ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS chi2
            |  FROM s$sfx GROUP BY 1, 2, 3, 4, 5)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q296_bradley_terry" -> bradleyTerryOracle,
-    "q298_hll_setops" -> hllSetOpsOracle,
+  /** q213's oracle, shared verbatim by q216's folded store. */
+  lazy val psiOracle: String =
+    """WITH f AS (SELECT event_type = 'click' AS is_a, value
+      |  FROM events WHERE event_type IN ('click', 'view')),
+      |b AS (SELECT LEAST(GREATEST(
+      |    CAST(floor((value - 0e0) / 50e0) AS BIGINT), 0), 9) AS bin,
+      |    is_a FROM f),
+      |c AS (SELECT bin,
+      |    CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+      |    CAST(SUM(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS cb
+      |  FROM b GROUP BY 1),
+      |t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
+      |    CAST(SUM(cb) AS BIGINT) AS nb FROM c),
+      |s AS (SELECT na, nb, CAST(floor(
+      |    (((ca + 1) / CAST(na + 10 AS DOUBLE))
+      |      - ((cb + 1) / CAST(nb + 10 AS DOUBLE)))
+      |    * ln(((ca + 1) / CAST(na + 10 AS DOUBLE))
+      |      / ((cb + 1) / CAST(nb + 10 AS DOUBLE)))
+      |    * 1000000000e0 + 0.5e0) AS BIGINT) AS tn
+      |  FROM c CROSS JOIN t)
+      |SELECT na AS n_a, nb AS n_b,
+      |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS psi
+      |FROM s GROUP BY 1, 2""".stripMargin
+
+  val all: Seq[Query] = Seq(
+    Query("q296_bradley_terry", bradleyTerryQ, bradleyTerryOracle),
+    Query("q298_hll_setops", hllSetOpsQ, hllSetOpsOracle),
     // q297: pooled-rate z per source, A-S 26.2.17 tail (the same fixed
     // Horner chain as StatTests.normalUpperTail), ppm p-values, BH
     // step-up as the exact integer comparison p_ppm·m <= rank·50000.
-    "q297_fdr_slices" ->
+    Query("q297_fdr_slices", fdrSlicesQ,
       """WITH g AS MATERIALIZED (
         |  SELECT source, count(*) AS n,
         |    CAST(SUM(CASE WHEN n_chars < 500 THEN 1 ELSE 0 END)
@@ -1475,12 +1426,12 @@ object StatsQueries {
         |SELECT source, n, hits, round(z, 6) AS z, p_ppm, p_rank,
         |  CAST(CASE WHEN p_rank <= kstar THEN 1 ELSE 0 END
         |    AS INTEGER) AS rejected
-        |FROM r, k ORDER BY source""".stripMargin,
+        |FROM r, k ORDER BY source""".stripMargin),
     // q291: dirt, blocking, u = Σn²/N² (exact ints, one double
     // division — long/long divides as double in BOTH engines), log2
     // weights summed in fixed order, ppm-rounded once; disagree mass
     // written (1e0 - m) so the double matches Scala's 1.0 - m exactly.
-    "q291_record_linkage" ->
+    Query("q291_record_linkage", linkageQ,
       """WITH cust AS MATERIALIZED (
         |  SELECT c_custkey, upper(c_name) AS name_n, c_nationkey,
         |    c_mktsegment,
@@ -1526,11 +1477,11 @@ object StatsQueries {
         |      ELSE log2((1e0 - 0.95e0) / (1e0 - u_bal)) END) * 1e6)
         |    AS BIGINT) AS score_ppm
         |FROM pat, un, us, ub
-        |ORDER BY 1, 2, 3""".stripMargin,
+        |ORDER BY 1, 2, 3""".stripMargin),
     // q257: digit via exact BIGINT-to-string; expected shares through
     // ln of fixed small rationals (the q73/q230 transcendental), dev
     // squared by explicit self-multiplication (never pow — CLAUDE.md).
-    "q257_benford" ->
+    Query("q257_benford", benfordQ,
       """WITH obs AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice)
         |      AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit,
         |    CAST(count(*) AS BIGINT) AS observed
@@ -1550,11 +1501,11 @@ object StatsQueries {
         |  ROUND((CAST(observed AS DOUBLE) - n * p)
         |    * (CAST(observed AS DOUBLE) - n * p) / (n * p), 6)
         |    AS chi2_contrib
-        |FROM x ORDER BY digit""".stripMargin,
+        |FROM x ORDER BY digit""".stripMargin),
     // q260: exact counts, ln of the exact rational g·B/(b·G); + 0e0
     // normalizes round()'s -0.0 on woe (iv_contrib is ≥ 0 by sign
     // agreement of its factors).
-    "q260_woe_iv" ->
+    Query("q260_woe_iv", woeIvQ,
       """WITH binned AS (SELECT
         |    CAST(least(floor(o_totalprice / 75000e0), 7) AS INTEGER)
         |      AS bin,
@@ -1578,11 +1529,11 @@ object StatsQueries {
         |        - CAST(n_bad AS DOUBLE) / CAST(b AS DOUBLE))
         |      * ln(CAST(n_good * b AS DOUBLE)
         |        / CAST(n_bad * g AS DOUBLE)), 6) END AS iv_contrib
-        |FROM per CROSS JOIN tot ORDER BY bin""".stripMargin,
+        |FROM per CROSS JOIN tot ORDER BY bin""".stripMargin),
     // q259: md5-ppm calibration split; median and q-hat are exact
     // rank-k order statistics (value at rank k is tie-order-free);
     // the coverage compare runs on identical doubles in both engines.
-    "q259_conformal" -> {
+    Query("q259_conformal", conformalQ, {
       val h = md5l("CAST(o_orderkey AS VARCHAR)")
       s"""WITH base AS (SELECT c.c_mktsegment AS "group",
         |    o.o_orderkey AS id, o.o_totalprice AS v,
@@ -1618,11 +1569,11 @@ object StatsQueries {
         |  LEFT JOIN qh ON qh."group" = cn."group"
         |  JOIN ev ON ev."group" = cn."group"
         |ORDER BY cn."group"""".stripMargin
-    },
-    "q231_water_fill" -> waterFillOracle,
+    }),
+    Query("q231_water_fill", waterFillQ, waterFillOracle),
     // q246: weights nano-quantized at birth; the proportional split
     // and largest-remainder rounding are exact integer arithmetic.
-    "q246_neyman" ->
+    Query("q246_neyman", neymanQ,
       """WITH st AS (SELECT lang AS "group", CAST(count(*) AS BIGINT) AS n,
         |    CAST(SUM(n_chars) AS BIGINT) AS sx,
         |    CAST(SUM(n_chars * n_chars) AS BIGINT) AS sxx
@@ -1651,10 +1602,10 @@ object StatsQueries {
         |SELECT "group", n AS n_rows, ROUND(sd, 6) AS sd, weight_nano,
         |  CAST(alloc AS BIGINT) AS alloc,
         |  CAST(alloc > n AS INTEGER) AS capped
-        |FROM f ORDER BY "group"""".stripMargin,
+        |FROM f ORDER BY "group"""".stripMargin),
     // q237: both strategies rank in one total order; batch rollups
     // are exact integers, waste one division.
-    "q237_padding" ->
+    Query("q237_padding", paddingQ,
       s"""WITH rws AS (SELECT doc_id AS id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n
         |  FROM documents),
@@ -1673,11 +1624,11 @@ object StatsQueries {
         |  CASE WHEN SUM(mx * c) > 0 THEN
         |    ROUND(CAST(SUM(mx * c) - SUM(tok) AS DOUBLE)
         |      / CAST(SUM(mx * c) AS DOUBLE), 6) END AS waste
-        |FROM b GROUP BY 1 ORDER BY strategy""".stripMargin,
+        |FROM b GROUP BY 1 ORDER BY strategy""".stripMargin),
     // q238: duplicates fold to (row_hash, count) BEFORE the xor so
     // even-multiplicity copies cannot cancel; chr(31)/chr(1) mirror
     // the Spark unicode-escape separator/sentinel bytes.
-    "q238_table_fingerprint" ->
+    Query("q238_table_fingerprint", fingerprintQ,
       s"""WITH h AS (SELECT ${md5l(
              "concat_ws(chr(31), coalesce(CAST(doc_id AS VARCHAR), chr(1)), " +
              "coalesce(lang, chr(1)), coalesce(source, chr(1)), " +
@@ -1691,10 +1642,10 @@ object StatsQueries {
         |SELECT CAST(SUM(c) AS BIGINT) AS n_rows,
         |  CAST(count(*) AS BIGINT) AS n_distinct_rows,
         |  CAST(bit_xor(f) AS BIGINT) AS fingerprint
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     // q236: multipliers from two md5 bits per (id, replica); replica
     // means exact floored nanos; CI ranks 5 / 196 of 200.
-    "q236_bootstrap_ci" ->
+    Query("q236_bootstrap_ci", bootstrapQ,
       s"""WITH rws AS (SELECT CAST(doc_id AS VARCHAR) AS id,
         |    CAST(n_chars AS BIGINT) AS x FROM documents
         |  WHERE n_chars IS NOT NULL),
@@ -1722,10 +1673,10 @@ object StatsQueries {
         |  ROUND(CAST(t.sx AS DOUBLE) / t.n_rows, 6) AS mean,
         |  ROUND(lo / 1000000000e0, 6) AS ci_lo,
         |  ROUND(hi / 1000000000e0, 6) AS ci_hi
-        |FROM t CROSS JOIN ci""".stripMargin,
+        |FROM t CROSS JOIN ci""".stripMargin),
     // q233: ⌊n·5/100⌋ dropped each side by the (value, id) order;
     // the kept sum is exact, the mean one division.
-    "q233_trimmed_mean" ->
+    Query("q233_trimmed_mean", trimmedMeanQ,
       """WITH r AS (SELECT lang AS "group", CAST(n_chars AS BIGINT) AS x,
         |    doc_id,
         |    row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
@@ -1736,10 +1687,10 @@ object StatsQueries {
         |  FROM r WHERE r > n * 5 // 100 AND r <= n - n * 5 // 100)
         |SELECT "group", n, CAST(count(*) AS BIGINT) AS n_trimmed,
         |  ROUND(CAST(SUM(x) AS DOUBLE) / count(*), 6) AS trimmed_mean
-        |FROM k GROUP BY 1, 2 ORDER BY "group"""".stripMargin,
+        |FROM k GROUP BY 1, 2 ORDER BY "group"""".stripMargin),
     // q227: exact Σ ca·cb join size from the two count tables; top
     // key = the (product, key) struct-max (ties to the larger key).
-    "q227_join_size" ->
+    Query("q227_join_size", joinSizeQ,
       """WITH lc AS (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS ca
         |  FROM orders WHERE o_orderkey IS NOT NULL GROUP BY 1),
         |rc AS (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS cb
@@ -1761,9 +1712,9 @@ object StatsQueries {
         |  CASE WHEN m.est_rows > 0 THEN
         |    (tp.p * m.n_keys_matched + m.est_rows - 1) // m.est_rows
         |  END AS suggested_salt
-        |FROM lt CROSS JOIN rt CROSS JOIN m CROSS JOIN tp""".stripMargin,
+        |FROM lt CROSS JOIN rt CROSS JOIN m CROSS JOIN tp""".stripMargin),
     // q228: per-bin hash order + the pure-arithmetic round-robin rank.
-    "q228_curriculum" ->
+    Query("q228_curriculum", curriculumQ,
       s"""WITH b AS (SELECT doc_id,
         |    CAST(least(n_chars // 256, 9) + 1 AS BIGINT) AS bin
         |  FROM documents),
@@ -1773,10 +1724,10 @@ object StatsQueries {
         |      AS BIGINT) AS pos
         |  FROM b)
         |SELECT doc_id, bin, pos, (pos - 1) * 10 + bin AS global_rank
-        |FROM r ORDER BY global_rank""".stripMargin,
+        |FROM r ORDER BY global_rank""".stripMargin),
     // q225: per-(doc, shard) md5 weights; the winner is the (h DESC,
     // s DESC) head — exactly array_max's struct order on (h, s).
-    "q225_rendezvous" ->
+    Query("q225_rendezvous", rendezvousQ,
       s"""WITH sh AS (SELECT doc_id, gs.s,
         |    ${md5l("concat(CAST(doc_id AS VARCHAR), ':', CAST(gs.s AS VARCHAR))")} AS h
         |  FROM documents CROSS JOIN
@@ -1792,11 +1743,11 @@ object StatsQueries {
         |SELECT p8.doc_id, CAST(p8.s AS INTEGER) AS shard,
         |  CAST(p9.s AS INTEGER) AS shard_next,
         |  CAST(p8.s <> p9.s AS INTEGER) AS moved
-        |FROM p8 JOIN p9 USING (doc_id) ORDER BY doc_id""".stripMargin,
+        |FROM p8 JOIN p9 USING (doc_id) ORDER BY doc_id""".stripMargin),
     // q219: every pair-count component an exact integer sum (DuckDB
     // `//` == Spark `div` on non-negatives); components combine in
     // one identical float expression.
-    "q219_adjusted_rand" ->
+    Query("q219_adjusted_rand", ariQ,
       """WITH cells AS (SELECT lang AS a, source AS b,
         |    CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1, 2),
         |s AS (SELECT CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS s,
@@ -1816,11 +1767,11 @@ object StatsQueries {
         |        * CAST(pa + pb AS DOUBLE)
         |        - 2e0 * CAST(pa AS DOUBLE) * CAST(pb AS DOUBLE)), 6)
         |  END AS ari
-        |FROM s CROSS JOIN ra CROSS JOIN rb""".stripMargin,
+        |FROM s CROSS JOIN ra CROSS JOIN rb""".stripMargin),
     // q220: observed-cell MI terms and marginal-entropy terms each one
     // float expression over exact counts, floored to nanos at birth;
     // empty cells contribute exactly 0.
-    "q220_mutual_info" ->
+    Query("q220_mutual_info", miQ,
       """WITH cells AS (SELECT lang AS a, source AS b,
         |    CAST(count(*) AS BIGINT) AS o FROM documents GROUP BY 1, 2),
         |rws AS (SELECT a, CAST(SUM(o) AS BIGINT) AS rt FROM cells GROUP BY 1),
@@ -1849,11 +1800,11 @@ object StatsQueries {
         |  CASE WHEN ha_nano > 0 AND hb_nano > 0
         |    THEN ROUND(mi_nano / sqrt(CAST(ha_nano AS DOUBLE)
         |      * CAST(hb_nano AS DOUBLE)), 6) END AS nmi
-        |FROM t CROSS JOIN mi CROSS JOIN ha CROSS JOIN hb""".stripMargin,
+        |FROM t CROSS JOIN mi CROSS JOIN ha CROSS JOIN hb""".stripMargin),
     // q221: doubled average ranks (2·min_rank + tie_count − 1) keep
     // ties integer; the Pearson fold over them is exact-integer sums
     // combined in one identical float expression.
-    "q221_spearman" ->
+    Query("q221_spearman", spearmanQ,
       """WITH b AS (SELECT n_chars AS x,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS y
         |  FROM documents WHERE n_chars IS NOT NULL),
@@ -1880,11 +1831,11 @@ object StatsQueries {
         |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  END AS rho
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // q222: Σ i·x_i is tie-order invariant (equal values swap equal
     // products), so the unqualified per-group ORDER BY x window is
     // deterministic; both sums exact longs, G one float expression.
-    "q222_gini" ->
+    Query("q222_gini", giniQ,
       """WITH v AS (SELECT source AS "group", CAST(n_chars AS BIGINT) AS x
         |  FROM documents WHERE n_chars IS NOT NULL),
         |r AS (SELECT "group", x, row_number()
@@ -1897,34 +1848,13 @@ object StatsQueries {
         |    ROUND((2e0 * CAST(s1 AS DOUBLE)
         |      - CAST(n + 1 AS DOUBLE) * CAST(total AS DOUBLE))
         |      / (CAST(n AS DOUBLE) * CAST(total AS DOUBLE)), 6) END AS gini
-        |FROM a ORDER BY "group"""".stripMargin,
+        |FROM a ORDER BY "group"""".stripMargin),
     // q213: the smoothed per-bin term is one float expression over
     // exact counts, floored to nanos at birth; sum exact.
-    "q213_psi" ->
-      """WITH f AS (SELECT event_type = 'click' AS is_a, value
-        |  FROM events WHERE event_type IN ('click', 'view')),
-        |b AS (SELECT LEAST(GREATEST(
-        |    CAST(floor((value - 0e0) / 50e0) AS BIGINT), 0), 9) AS bin,
-        |    is_a FROM f),
-        |c AS (SELECT bin,
-        |    CAST(SUM(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(SUM(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |  FROM b GROUP BY 1),
-        |t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na,
-        |    CAST(SUM(cb) AS BIGINT) AS nb FROM c),
-        |s AS (SELECT na, nb, CAST(floor(
-        |    (((ca + 1) / CAST(na + 10 AS DOUBLE))
-        |      - ((cb + 1) / CAST(nb + 10 AS DOUBLE)))
-        |    * ln(((ca + 1) / CAST(na + 10 AS DOUBLE))
-        |      / ((cb + 1) / CAST(nb + 10 AS DOUBLE)))
-        |    * 1000000000e0 + 0.5e0) AS BIGINT) AS tn
-        |  FROM c CROSS JOIN t)
-        |SELECT na AS n_a, nb AS n_b,
-        |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS psi
-        |FROM s GROUP BY 1, 2""".stripMargin,
+    Query("q213_psi", psiQ, psiOracle),
     // q217: numeric PSI's discipline with the union of observed
     // categories as bins; smoothing denominator n + ncat.
-    "q217_cat_psi" ->
+    Query("q217_cat_psi", catPsiQ,
       """WITH f AS (SELECT lang, source FROM documents
         |  WHERE source IN ('src0', 'src1')),
         |c AS (SELECT lang AS category,
@@ -1945,10 +1875,10 @@ object StatsQueries {
         |  FROM c CROSS JOIN t)
         |SELECT na AS n_a, nb AS n_b, ncat AS n_categories,
         |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS psi
-        |FROM s GROUP BY 1, 2, 3""".stripMargin,
+        |FROM s GROUP BY 1, 2, 3""".stripMargin),
     // q214: max |cum_a*nb - cum_b*na| in exact integers over distinct
     // stored values (no arithmetic on the doubles), one division.
-    "q214_ks_test" ->
+    Query("q214_ks_test", ksQ,
       """WITH f AS (SELECT value, event_type FROM events
         |  WHERE event_type IN ('click', 'view')),
         |c AS (SELECT value AS v,
@@ -1967,14 +1897,14 @@ object StatsQueries {
         |SELECT t.na AS n_a, t.nb AS n_b,
         |  ROUND(CAST(MAX(abs(m.cum_a * t.nb - m.cum_b * t.na)) AS BIGINT)
         |    / CAST(t.na * t.nb AS DOUBLE), 6) AS d_stat
-        |FROM m CROSS JOIN t GROUP BY 1, 2""".stripMargin,
+        |FROM m CROSS JOIN t GROUP BY 1, 2""".stripMargin),
     // q215: chi2 cell terms (O*N - r*c)^2 / (N*r*c) floored to nanos
     // at birth over the FULL rows x cols grid (absent cells count).
     // q333: q142's recursive-CC cluster split (md5-of-cluster bands)
     // + the same chi2 chain per governance feature — the Spark side
     // reads the pair store, whose pairs are the one-shot mining
     // exactly, so the oracle mines inline.
-    "q333_cluster_balance" ->
+    Query("q333_cluster_balance", clusterBalanceQ,
       s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -2003,10 +1933,11 @@ object StatsQueries {
         |${chi2ChainSql("source", "s")}
         |SELECT * FROM fl UNION ALL SELECT * FROM fs
         |ORDER BY feature""".stripMargin,
+      needs = Set(SharedStore.pairStore)),
     // q328: the q325 rank split + the q215 chi2 chain once per
     // governance feature, UNION ALL'd (absent grid cells contribute
     // rc/N, nano-quantized terms — the q215 discipline verbatim).
-    "q328_split_balance" -> {
+    Query("q328_split_balance", splitBalanceQ, {
       def chain(f: String, sfx: String) = chi2ChainSql(f, sfx)
       s"""WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
         |sp AS (SELECT doc_id,
@@ -2021,8 +1952,8 @@ object StatsQueries {
         |${chain("source", "s")}
         |SELECT * FROM fl UNION ALL SELECT * FROM fs
         |ORDER BY feature""".stripMargin
-    },
-    "q215_chi2" ->
+    }),
+    Query("q215_chi2", chi2Q,
       """WITH cells AS (SELECT lang AS r, source AS c,
         |    CAST(count(*) AS BIGINT) AS o FROM documents GROUP BY 1, 2),
         |rws AS (SELECT r, CAST(SUM(o) AS BIGINT) AS rt
@@ -2044,10 +1975,10 @@ object StatsQueries {
         |SELECT n AS n_items, nr AS n_rows_cat, nc AS n_cols_cat,
         |  (nr - 1) * (nc - 1) AS dof,
         |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS chi2
-        |FROM s GROUP BY 1, 2, 3, 4""".stripMargin,
+        |FROM s GROUP BY 1, 2, 3, 4""".stripMargin),
     // q209: per-element pico quantization before the sum, one float
     // sqrt per row on the exact integer, one division per label.
-    "q209_embedding_audit" ->
+    Query("q209_embedding_audit", embAuditQ,
       """WITH v AS (SELECT label, CAST(embedding AS DOUBLE[]) AS e
         |  FROM embeddings),
         |p0 AS (SELECT label, len(e) AS dim, e,
@@ -2071,10 +2002,10 @@ object StatsQueries {
         |  CAST(SUM(CASE WHEN bad THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
         |  ROUND(CAST(SUM(nm) AS BIGINT) / (count(*) * 1000000e0), 6)
         |    AS mean_norm
-        |FROM nr GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM nr GROUP BY 1 ORDER BY 1""".stripMargin),
     // q210: quantiles by position over the frequency-of-frequency
     // cumulative counts; salting factor one ceil-division of ints.
-    "q210_key_skew" ->
+    Query("q210_key_skew", skewReportQ,
       """WITH kf AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS f
         |  FROM lineitem GROUP BY 1),
         |fof AS (SELECT f, CAST(count(*) AS BIGINT) AS nk FROM kf GROUP BY 1),
@@ -2096,11 +2027,11 @@ object StatsQueries {
         |  (t.max_freq * t.n_keys + t.n_rows - 1) // t.n_rows
         |    AS suggested_salt
         |FROM c CROSS JOIN t
-        |GROUP BY t.n_rows, t.n_keys, t.max_freq""".stripMargin,
-    "q185_dsir_sample" -> dsirOracle,
+        |GROUP BY t.n_rows, t.n_keys, t.max_freq""".stripMargin),
+    Query("q185_dsir_sample", dsirQ, dsirOracle),
     // q195: exact counts per provenance slice; both engines hash the
     // identical md5 hex for the within-source duplicate mass.
-    "q195_data_card" ->
+    Query("q195_data_card", dataCardQ,
       """WITH b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |    CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens,
         |    CAST(SUM(n_chars) AS BIGINT) AS n_chars_total,
@@ -2113,19 +2044,19 @@ object StatsQueries {
         |  WHERE c > 1 GROUP BY 1)
         |SELECT b.source, b.n_docs, b.n_tokens, b.n_chars_total, b.n_langs,
         |  coalesce(d.n_dup_docs, 0) AS n_dup_docs, b.mean_chars
-        |FROM b LEFT JOIN d USING (source) ORDER BY source""".stripMargin,
+        |FROM b LEFT JOIN d USING (source) ORDER BY source""".stripMargin),
     // q193: pure exact-integer class-size histogram.
-    "q193_k_anonymity" ->
+    Query("q193_k_anonymity", kAnonQ,
       """WITH g AS (SELECT lang, source, least(n_chars // 64, 9) AS lb,
         |    count(*) AS k FROM documents GROUP BY 1, 2, 3)
         |SELECT k AS group_size, CAST(count(*) AS BIGINT) AS n_groups,
         |  CAST(SUM(k) AS BIGINT) AS n_rows,
         |  CAST(k < 5 AS INTEGER) AS below_k
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
     // q190: counts exact; density ratio quantizes to nanos in one
     // identical float expression; normalization divides quantized
     // integers; accept = md5(id) % 1e6 < acc_ppm — pure id function.
-    "q190_hist_match" ->
+    Query("q190_hist_match", histMatchQ,
       s"""WITH d AS (SELECT doc_id, source,
         |    least(n_chars // 64, 9) AS bucket FROM documents),
         |rb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_raw
@@ -2153,15 +2084,15 @@ object StatsQueries {
         |  GROUP BY 1)
         |SELECT acc.bucket, acc.n_ref, acc.n_raw, acc.acc_ppm,
         |  coalesce(k.n_kept, 0) AS n_kept
-        |FROM acc LEFT JOIN k USING (bucket) ORDER BY bucket""".stripMargin,
+        |FROM acc LEFT JOIN k USING (bucket) ORDER BY bucket""".stripMargin),
     // q165: the shared columnProfileOracle (q172's merged store must
     // read out identically, so the SQL lives in QueryHelpers).
-    "q165_column_profile" -> columnProfileOracle,
+    Query("q165_column_profile", columnProfileQ, columnProfileOracle),
     // q154: interpolated medians at 0.5 are bit-identical across both
     // engines' quantile conventions; the ntile tie-break on
     // (score, id) pins bin membership; 1.4826e0 per the float-constant
     // rule.
-    "q154_robust_calibration" ->
+    Query("q154_robust_calibration", robustCalibrationQ,
       """WITH med AS (SELECT lang, quantile_cont(n_chars, 0.5e0) AS med
         |  FROM documents GROUP BY 1),
         |dev AS (SELECT d.doc_id, d.lang, d.n_chars, m.med,
@@ -2175,11 +2106,11 @@ object StatsQueries {
         |  CAST(ntile(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
         |    AS INTEGER) AS bin
         |FROM dev JOIN mad USING (lang)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // q150: same two windows over the group partitioning; z guarded to
     // NULL when the sample stddev is 0/undefined; percent_rank is the
     // ANSI (rank-1)/(n-1) in both engines.
-    "q150_score_calibration" ->
+    Query("q150_score_calibration", scoreCalibrationQ,
       """SELECT doc_id, lang, n_chars,
         |  round(CASE WHEN stddev_samp(n_chars) OVER wg > 0
         |    THEN (n_chars - avg(n_chars) OVER wg)
@@ -2188,26 +2119,26 @@ object StatsQueries {
         |    AS pct_rank
         |FROM documents
         |WINDOW wg AS (PARTITION BY lang)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin),
     // q135: the oracle is the PLAIN join — the bucketed layout must
     // change the plan, never the answer.
-    "q135_bucketed_join" ->
+    Query("q135_bucketed_join", bucketedJoinQ,
       """SELECT c_mktsegment, count(*) AS orders,
         |  CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
         |    AS revenue_cents
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
     // q134: same E-S keys from the same md5-derived uniforms; the
     // float key exists only inside the ORDER BY (continuous → no
     // cross-engine ties), the output is integers.
-    "q314_isotonic" -> isotonicOracle,
-    "q315_auc_by_dow" -> aucOracle,
-    "q316_calibration_store" -> isotonicOracle,
-    "q317_gains_table" -> gainsOracle,
-    "q321_sinkhorn_mix" -> sinkhornOracle,
-    "q322_wasserstein_drift" -> wassersteinOracle,
-    "q323_calibration_error" -> calibrationErrorOracle,
-    "q134_weighted_sample" ->
+    Query("q314_isotonic", isotonicQ, isotonicOracle),
+    Query("q315_auc_by_dow", aucQ, aucOracle),
+    Query("q316_calibration_store", calibrationStoreQ, isotonicOracle),
+    Query("q317_gains_table", gainsQ, gainsOracle),
+    Query("q321_sinkhorn_mix", sinkhornQ, sinkhornOracle),
+    Query("q322_wasserstein_drift", wassersteinQ, wassersteinOracle),
+    Query("q323_calibration_error", calibrationErrorQ, calibrationErrorOracle),
+    Query("q134_weighted_sample", weightedSampleQ,
       s"""WITH keyed AS (SELECT source, doc_id, n_chars,
         |  ln((${md5l("CAST(doc_id AS VARCHAR)")} + 1) / 1152921504606846976e0)
         |    / CAST(n_chars AS DOUBLE) AS k
@@ -2217,8 +2148,8 @@ object StatsQueries {
         |    CAST(row_number() OVER (PARTITION BY source
         |      ORDER BY k DESC, doc_id) AS INTEGER) AS rank
         |  FROM keyed)
-        |WHERE rank <= 3 ORDER BY source, rank""".stripMargin,
-    "q121_chunk_pack" ->
+        |WHERE rank <= 3 ORDER BY source, rank""".stripMargin),
+    Query("q121_chunk_pack", chunkPackQ,
       s"""WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks
         |           FROM documents),
         |c AS (SELECT doc_id, toks, len(toks) AS n,
@@ -2236,8 +2167,8 @@ object StatsQueries {
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t2)
         |SELECT chunk_key, n_tokens,
         |  CAST((cum - n_tokens) // 2000 AS INTEGER) AS shard_id
-        |FROM c2 ORDER BY chunk_key""".stripMargin,
-    "q119_winsorize" ->
+        |FROM c2 ORDER BY chunk_key""".stripMargin),
+    Query("q119_winsorize", winsorizeQ,
       """WITH s AS (SELECT min(value) AS lo, max(value) AS hi,
         |                  count(value) AS n FROM events),
         |b AS (SELECT CASE WHEN hi = lo THEN 0
@@ -2254,8 +2185,8 @@ object StatsQueries {
         |              min(CASE WHEN p = 0.95e0 THEN v END) AS qh FROM qv)
         |SELECT event_id, value,
         |  ROUND(LEAST(GREATEST(value, ql), qh), 6) AS value_w
-        |FROM events, th ORDER BY event_id""".stripMargin,
-    "q103_mix_report" ->
+        |FROM events, th ORDER BY event_id""".stripMargin),
+    Query("q103_mix_report", mixReport,
       s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |w AS (SELECT lang, n,
         |    CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000e0) AS BIGINT) AS w FROM c),
@@ -2277,8 +2208,8 @@ object StatsQueries {
         |SELECT lang, n_before, n_after,
         |  ROUND(n_before / tb, 6) AS frac_before,
         |  ROUND(n_after / ta, 6) AS frac_after
-        |FROM j, tt ORDER BY lang""".stripMargin,
-    "q101_grouped_quantiles" ->
+        |FROM j, tt ORDER BY lang""".stripMargin),
+    Query("q101_grouped_quantiles", groupedQuantilesQ,
       """WITH b AS (SELECT lang,
         |    CAST(LEAST(499, GREATEST(0,
         |      floor((CAST(n_chars AS DOUBLE) - 0e0) / 5000e0 * 500)))
@@ -2296,8 +2227,8 @@ object StatsQueries {
         |      GROUP BY 1, 2)
         |SELECT lang, percentile, bin,
         |  ROUND(0e0 + bin * 5000e0 / 500e0, 6) AS value_est
-        |FROM r ORDER BY lang, percentile""".stripMargin,
-    "q100_mixture_pipeline" ->
+        |FROM r ORDER BY lang, percentile""".stripMargin),
+    Query("q100_mixture_pipeline", mixturePipeline,
       s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |w AS (SELECT lang, n,
         |    CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000e0) AS BIGINT) AS w FROM c),
@@ -2315,8 +2246,8 @@ object StatsQueries {
         |SELECT doc_id, lang, h % 8 AS shard,
         |  CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS INTEGER)
         |    AS pos
-        |FROM h ORDER BY shard, pos""".stripMargin,
-    "q96_zorder_stats" ->
+        |FROM h ORDER BY shard, pos""".stripMargin),
+    Query("q96_zorder_stats", zorderStatsQ,
       s"""WITH z AS (SELECT CAST(${zTermsSql("l_partkey", "l_suppkey")} AS BIGINT) >> 14
         |    AS file, l_partkey AS x, l_suppkey AS y FROM lineitem),
         |s AS (SELECT file, count(*) AS n_rows,
@@ -2325,15 +2256,15 @@ object StatsQueries {
         |SELECT file, n_rows, x_min, x_max, y_min, y_max,
         |  (x_min <= 300 AND x_max >= 100) AS read_x,
         |  (y_min <= 20 AND y_max >= 10) AS read_y
-        |FROM s ORDER BY file""".stripMargin,
-    "q97_epoch_shuffle" ->
+        |FROM s ORDER BY file""".stripMargin),
+    Query("q97_epoch_shuffle", epochShuffleQ,
       s"""WITH h AS (SELECT doc_id,
         |    ${md5l("concat(CAST(doc_id AS VARCHAR), ':1')")} AS h FROM documents)
         |SELECT doc_id, h % 8 AS shard,
         |  CAST(row_number() OVER (PARTITION BY h % 8 ORDER BY h, doc_id) AS INTEGER)
         |    AS pos
-        |FROM h ORDER BY shard, pos""".stripMargin,
-    "q95_temperature_sample" ->
+        |FROM h ORDER BY shard, pos""".stripMargin),
+    Query("q95_temperature_sample", temperatureQ,
       s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |w AS (SELECT lang, n,
         |    CAST(floor(sqrt(CAST(n AS DOUBLE)) * 1000000e0) AS BIGINT) AS w FROM c),
@@ -2346,8 +2277,8 @@ object StatsQueries {
         |SELECT d.doc_id, d.lang, d.source, d.n_chars
         |FROM documents d JOIN r USING (lang)
         |WHERE ${md5l("CAST(d.doc_id AS VARCHAR)")} % 1000000 < r.ppm
-        |ORDER BY d.doc_id""".stripMargin,
-    "q88_histogram_quantiles" ->
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("q88_histogram_quantiles", histQuantiles,
       """WITH s AS (SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi,
         |                  count(*) AS n FROM lineitem),
         |b AS (SELECT CASE WHEN hi = lo THEN 0
@@ -2363,8 +2294,8 @@ object StatsQueries {
         |      FROM t JOIN c ON c.cum >= t.target GROUP BY percentile, lo, hi)
         |SELECT percentile, bin,
         |  ROUND(lo + bin * (hi - lo) / 1000.0e0, 6) AS value_est
-        |FROM r ORDER BY percentile""".stripMargin,
-    "q89_count_min" ->
+        |FROM r ORDER BY percentile""".stripMargin),
+    Query("q89_count_min", countMin,
       s"""WITH tok AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |hx AS (SELECT token, r,
         |    ${md5l("concat(token, '_', CAST(r AS VARCHAR))")} % 1024 AS c
@@ -2376,16 +2307,16 @@ object StatsQueries {
         |ex AS (SELECT token, count(*) AS exact_count FROM tok GROUP BY token)
         |SELECT token, est_count, exact_count
         |FROM est JOIN ex USING (token)
-        |ORDER BY est_count DESC, token LIMIT 20""".stripMargin,
+        |ORDER BY est_count DESC, token LIMIT 20""".stripMargin),
     // q332: the store-fed readout must equal the one-shot q327 exactly
     // (count-min is linear: per-batch sketches sum to the corpus
     // sketch), so it shares the oracle verbatim.
-    "q332_join_size_store" -> joinSizeSketchOracle,
+    Query("q332_join_size_store", joinSizeStoreQ, joinSizeSketchOracle),
     // q327: full sketch replay — same salted md5 cell hashes as q89,
     // per-row inner products, min over the depth grid (absent rows
     // count 0), exact Σ fa·fb beside it.
-    "q327_join_size_sketch" -> joinSizeSketchOracle,
-    "q83_chunk" ->
+    Query("q327_join_size_sketch", joinSizeSketchQ, joinSizeSketchOracle),
+    Query("q83_chunk", chunkQ,
       """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS toks
         |           FROM documents),
         |c AS (SELECT doc_id, toks, len(toks) AS n,
@@ -2396,22 +2327,22 @@ object StatsQueries {
         |  CAST(LEAST(64, n - gs.i * 48) AS INTEGER) AS n_chunk_tokens,
         |  array_to_string(toks[gs.i * 48 + 1 : gs.i * 48 + 64], ' ') AS chunk_text
         |FROM c, LATERAL (SELECT unnest(generate_series(0, n_chunks - 1)) AS i) gs
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    "q85_zorder" ->
+        |ORDER BY doc_id, chunk_id""".stripMargin),
+    Query("q85_zorder", zorderQ,
       s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
         |  CAST(${zTermsSql("l_partkey", "l_suppkey")} AS BIGINT) AS z
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q63_hash_split" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q63_hash_split", hashSplit,
       s"""WITH b AS (SELECT doc_id,
         |    ${md5l("CAST(doc_id AS VARCHAR)")} % 100 AS bucket FROM documents)
         |SELECT doc_id, bucket,
         |  CASE WHEN bucket < 80 THEN 'train'
         |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin),
     // q72: global-window rendering of the distributed prefix sum —
     // identical running totals, shards cut where a doc's START offset
     // crosses a budget boundary.
-    "q72_shard_pack" ->
+    Query("q72_shard_pack", shardPack,
       s"""WITH t AS (SELECT doc_id,
         |         CAST(len(regexp_split_to_array(text, '\\s+')) AS BIGINT) AS n_tokens,
         |         ${md5l("CAST(doc_id AS VARCHAR)")} AS h
@@ -2422,28 +2353,28 @@ object StatsQueries {
         |      FROM t)
         |SELECT doc_id, n_tokens,
         |  CAST((cum - n_tokens) // 10000 AS INTEGER) AS shard_id
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q68_linear_count_distinct" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("q68_linear_count_distinct", linearCount,
       s"""WITH b AS (SELECT DISTINCT ${md5l("CAST(user_id AS VARCHAR)")} % 4096 AS b
         |           FROM events WHERE user_id IS NOT NULL)
         |SELECT count(*) AS occupied_buckets,
         |  ROUND(-4096 * ln((4096 - count(*)) / 4096.0), 6) AS estimated_distinct
-        |FROM b""".stripMargin,
-    "q69_salted_join" ->
+        |FROM b""".stripMargin),
+    Query("q69_salted_join", saltedJoin,
       """SELECT o_orderkey, c_name, o_totalprice
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q70_stratified_sample" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q70_stratified_sample", stratified,
       s"""SELECT doc_id, lang, source, n_chars FROM documents
         |WHERE ${md5l("CAST(doc_id AS VARCHAR)")} % 100 <
         |  CASE WHEN lang = 'en' THEN 30 ELSE 80 END
-        |ORDER BY doc_id""".stripMargin,
-    "q82_cap_groups_exact" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q82_cap_groups_exact", capGroupsExactQ,
       s"""SELECT doc_id, lang, source, n_chars FROM documents
         |QUALIFY row_number() OVER (PARTITION BY lang
         |  ORDER BY ${md5l("CAST(doc_id AS VARCHAR)")}, doc_id) <= 100
-        |ORDER BY doc_id""".stripMargin,
-    "q128_cap_groups_tokens" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q128_cap_groups_tokens", capTokensQ,
       s"""WITH t AS (SELECT doc_id, lang,
         |    CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
         |    ${md5l("CAST(doc_id AS VARCHAR)")} AS h
@@ -2453,15 +2384,15 @@ object StatsQueries {
         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
         |  FROM t)
         |SELECT doc_id, lang, n_tokens, cum_tokens FROM c
-        |WHERE cum_tokens <= 5000 ORDER BY doc_id""".stripMargin,
-    "q81_cap_groups" ->
+        |WHERE cum_tokens <= 5000 ORDER BY doc_id""".stripMargin),
+    Query("q81_cap_groups", capGroupsQ,
       s"""WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
         |k AS (SELECT lang, LEAST(1000000, 100000000 // n) AS ppm FROM c)
         |SELECT d.doc_id, d.lang, d.source, d.n_chars
         |FROM documents d JOIN k USING (lang)
         |WHERE ${md5l("CAST(d.doc_id AS VARCHAR)")} % 1000000 < k.ppm
-        |ORDER BY d.doc_id""".stripMargin,
-    "q79_skew_profile" ->
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("q79_skew_profile", skewProfile,
       """WITH c AS (SELECT user_id, count(*) AS n_rows FROM events
         |           WHERE user_id IS NOT NULL GROUP BY user_id),
         |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS total FROM c),
@@ -2470,8 +2401,8 @@ object StatsQueries {
         |      FROM c CROSS JOIN t)
         |SELECT user_id, rank, n_rows,
         |  ROUND(CAST(n_rows AS DOUBLE) / CAST(total AS DOUBLE), 6) AS share
-        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin,
-    "q77_normalize" ->
+        |FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin),
+    Query("q77_normalize", normalizeQ,
       """SELECT doc_id,
         |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
         |       ' +', ' ', 'g')) AS norm_text,
@@ -2479,13 +2410,13 @@ object StatsQueries {
         |       '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS INTEGER) AS n_chars_norm,
         |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
         |       ' +', ' ', 'g')) <> text AS changed
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q43_pivot" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q43_pivot", pivotQ,
       """SELECT l_returnflag,
         |  sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS qty_f,
         |  sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q44_rank_windows" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q44_rank_windows", rankWindows,
       """SELECT user_id, event_id, value,
         |  CAST(row_number() OVER w AS INTEGER) AS rn,
         |  CAST(rank() OVER w AS INTEGER) AS rnk,
@@ -2495,10 +2426,14 @@ object StatsQueries {
         |  CAST(ntile(4) OVER w AS INTEGER) AS quartile
         |FROM events WHERE user_id < 20
         |WINDOW w AS (PARTITION BY user_id ORDER BY value DESC, event_id)
-        |ORDER BY user_id, rn""".stripMargin,
-    "q42_percentiles" ->
+        |ORDER BY user_id, rn""".stripMargin),
+    Query("q42_percentiles", percentiles,
       """SELECT event_type, count(*) AS n,
         |  ROUND(quantile_cont(value, 0.5), 6) AS med,
         |  ROUND(quantile_cont(value, 0.9), 6) AS p90
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

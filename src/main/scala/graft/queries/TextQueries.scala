@@ -12,7 +12,7 @@ import graft.queries.QueryHelpers._
   *
   * Split from the former ExtensionQueries monolith (round 7) — query
   * bodies, registration names, and oracle SQL are unchanged;
-  * [[ExtensionQueries]] re-aggregates every domain map.
+  * [[ExtensionQueries]] concatenates every domain's `all` list.
   */
 object TextQueries {
   type Q = (SparkSession, String) => DataFrame
@@ -806,64 +806,6 @@ object TextQueries {
   private val heapsQ: Q = (s, dir) =>
     TextAnalysis.heapsFit(Tables.documents(s, dir), "doc_id", "text")
 
-  val queries: Map[String, Q] = Map(
-    "q261_selection_parity" -> selectionParityQ,
-    "q267_heaps_fit" -> heapsQ,
-    "q272_pii_by_source" -> piiBySourceQ,
-    "q273_bpe_fertility" -> bpeFertilityQ,
-    "q179_nfc_normalize" -> nfcQ,
-    "q223_zipf_fit" -> zipfQ,
-    "q230_pmi" -> pmiQ,
-    "q239_langid_eval" -> langidEvalQ,
-    "q240_boundary_select" -> boundarySelectQ,
-    "q250_gopher_rules" -> gopherRulesQ,
-    "q254_gopher_by_source" -> gopherBySourceQ,
-    "q182_top_ngram" -> topNgramQ,
-    "q184_train_logistic" -> trainLogisticQ,
-    "q187_quality_funnel" -> qualityFunnelQ,
-    "q188_text_delete" -> textDeleteQ,
-    "q192_bpe_train" -> bpeTrainQ,
-    "q178_rank_eval" -> rankEvalQ,
-    "q177_source_quality" -> sourceQualityQ,
-    "q176_ndcg" -> ndcgQ,
-    "q168_trigram_lm" -> trigramLmQ,
-    "q200_ppl_buckets" -> pplBucketsQ,
-    "q205_calibration_curve" -> calibCurveQ,
-    "q206_roc_auc" -> rocAucQ,
-    "q208_ngram_novelty" -> noveltyQ,
-    "q218_ece" -> eceQ,
-    "q166_char_entropy" -> charEntropyQ,
-    "q161_text_index_build" -> textIndexBuildQ,
-    "q158_source_top_terms" -> sourceTopTermsQ,
-    "q153_vocab_overlap" -> vocabOverlapQ,
-    "q144_phrase_search" -> phraseSearchQ,
-    "q143_heavy_hitters" -> heavyHittersQ,
-    "q141_hybrid_rrf" -> hybridRrfQ,
-    "q338_index_hybrid" -> indexHybridQ,
-    "q140_text_index" -> textIndexQ,
-    "q139_bm25" -> bm25Q,
-    "q307_bm25_pruned" -> bm25PrunedQ,
-    "q318_rm3_expansion" -> rm3Q,
-    "q114_corpus_stats" -> corpusStatsQ,
-    "q112_bpe_merges" -> bpeQ,
-    "q105_span_corrupt" -> spanQ,
-    "q104_mask_tokens" -> maskQ,
-    "q98_linear_quality" -> linearQualityQ,
-    "q90_scrub" -> scrubQ,
-    "q84_regex_tokens" -> regexTokensQ,
-    "q87_bigram_logprob" -> bigramLp,
-    "q73_unigram_logprob" -> unigramLp,
-    "q65_token_histogram" -> tokenHistogram,
-    "q67_repetition" -> repetitionQ,
-    "q46_tfidf_top_terms" -> tfidf,
-    "q37_vocab" -> vocab,
-    "q28_text_stats" -> textStats,
-    "q29_token_counts" -> tokenCounts,
-    "q30_quality_score" -> quality,
-    "q31_langid" -> langId,
-    "q32_fingerprint" -> fingerprint,
-    "q331_cjk_tokens" -> cjkTokensQ)
-
   /** q184's oracle: the same two GD steps unrolled as CTEs. Margins
     * are exact BIGINT sums of micro-weights; per-doc error/logloss
     * quantize to nanos in the IDENTICAL float expression before the
@@ -1162,11 +1104,11 @@ object TextQueries {
         |      AS flag_lines
         |  FROM m)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q192_bpe_train" -> bpeTrainOracle,
+  val all: Seq[Query] = Seq(
+    Query("q192_bpe_train", bpeTrainQ, bpeTrainOracle),
     // q273: the q192 training chain's c5 IS the merged corpus — read
     // fertility off it per language; exact sums, one division each.
-    "q273_bpe_fertility" ->
+    Query("q273_bpe_fertility", bpeFertilityQ,
       s"""WITH $bpeChainCtes,
         |fin AS (SELECT doc_id,
         |    CAST(len(string_split(_t, ' ')) AS BIGINT) AS ntb FROM c5),
@@ -1182,11 +1124,11 @@ object TextQueries {
         |    AS tokens_per_word,
         |  ROUND(CAST(SUM(n_chars) AS DOUBLE) / CAST(SUM(ntb) AS DOUBLE),
         |    6) AS chars_per_token
-        |FROM j GROUP BY 1 ORDER BY lang""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY lang""".stripMargin),
     // q250: every flag compares exact integers (cross-multiplied
     // ratios); mean_word_len is reporting-only. Chain shared with the
     // q254 per-source rollup.
-    "q250_gopher_rules" ->
+    Query("q250_gopher_rules", gopherRulesQ,
       s"""WITH $gopherCtes
         |SELECT doc_id, n_words, n_word_chars,
         |  CASE WHEN n_words > 0 THEN
@@ -1197,10 +1139,10 @@ object TextQueries {
         |  flag_stopwords, flag_lines,
         |  CAST(flag_words + flag_word_len + flag_symbols + flag_alpha
         |    + flag_stopwords + flag_lines = 6 AS INTEGER) AS pass
-        |FROM f ORDER BY doc_id""".stripMargin,
+        |FROM f ORDER BY doc_id""".stripMargin),
     // q254: the q250 chain rolled up per source; exact counts, one
     // division.
-    "q254_gopher_by_source" ->
+    Query("q254_gopher_by_source", gopherBySourceQ,
       s"""WITH $gopherCtes,
         |j AS (SELECT f.*, d.source FROM f
         |  JOIN documents d USING (doc_id))
@@ -1218,11 +1160,11 @@ object TextQueries {
         |      + flag_symbols + flag_alpha + flag_stopwords + flag_lines
         |      = 6 THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6)
         |    AS pass_rate
-        |FROM j GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM j GROUP BY 1 ORDER BY source""".stripMargin),
 
     // q272: q90's regex chain rolled up per source; exact counts, one
     // division (matches on the ORIGINAL text, as scrub counts them).
-    "q272_pii_by_source" ->
+    Query("q272_pii_by_source", piiBySourceQ,
       """WITH s AS (SELECT d.doc_id, d.source,
         |    CAST(len(regexp_extract_all(text, 'https?://[^ ]+'))
         |      AS BIGINT) AS u,
@@ -1248,11 +1190,11 @@ object TextQueries {
         |  CAST(SUM(en) AS BIGINT) AS entities,
         |  ROUND(CAST(SUM(CASE WHEN ch THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*), 6) AS exposure_rate
-        |FROM s GROUP BY 1 ORDER BY source""".stripMargin,
+        |FROM s GROUP BY 1 ORDER BY source""".stripMargin),
     // q267: cumulative token/vocab series exact longs; the log-log
     // OLS mirrors q223 (micros so product sums stay in long range);
     // stride keeps the point set ~200 at any corpus size.
-    "q267_heaps_fit" ->
+    Query("q267_heaps_fit", heapsQ,
       """WITH td AS (SELECT doc_id,
         |    unnest(regexp_split_to_array(text, '\s+')) AS t
         |  FROM documents),
@@ -1309,11 +1251,11 @@ object TextQueries {
         |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  END AS r2
-        |FROM st CROSS JOIN vo CROSS JOIN a""".stripMargin,
+        |FROM st CROSS JOIN vo CROSS JOIN a""".stripMargin),
     // q261: the q250 chain joined to lang; rates are one division of
     // exact longs, the reference is the (rate DESC, group) argmax,
     // di/flag from cross-multiplied exact integers.
-    "q261_selection_parity" ->
+    Query("q261_selection_parity", selectionParityQ,
       s"""WITH $gopherCtes,
         |j AS (SELECT f.doc_id, d.lang,
         |    CASE WHEN flag_words + flag_word_len + flag_symbols
@@ -1335,11 +1277,11 @@ object TextQueries {
         |  CASE WHEN s_ref > 0 THEN
         |    CAST(n_selected * n_ref * 10 < n * s_ref * 8 AS INTEGER)
         |  END AS flag_disparate
-        |FROM per CROSS JOIN ref ORDER BY "group"""".stripMargin,
+        |FROM per CROSS JOIN ref ORDER BY "group"""".stripMargin),
     // q230: document-presence counts exact; PMI per pair one float
     // expression floored to nanos; (df DESC, tok) vocab cut and the
     // binary tok_a < tok_b pair order match Spark's.
-    "q230_pmi" ->
+    Query("q230_pmi", pmiQ,
       """WITH dt AS (SELECT DISTINCT id, tok FROM (
         |    SELECT doc_id AS id, unnest(string_split(text, ' ')) AS tok
         |    FROM documents)),
@@ -1357,11 +1299,11 @@ object TextQueries {
         |  ROUND(CAST(floor(ln(CAST(n_ab AS DOUBLE) * CAST(n AS DOUBLE)
         |      / (CAST(df_a AS DOUBLE) * CAST(df_b AS DOUBLE)))
         |    * 1000000000e0 + 0.5e0) AS BIGINT) / 1000000000e0, 6) AS pmi
-        |FROM p CROSS JOIN tot ORDER BY tok_a, tok_b""".stripMargin,
+        |FROM p CROSS JOIN tot ORDER BY tok_a, tok_b""".stripMargin),
     // q223: ln(rank)/ln(count) quantize to integer micros at birth
     // (nanos would overflow the product sums); the OLS sums are exact
     // integers, slope/intercept/r2 one float expression each.
-    "q223_zipf_fit" ->
+    Query("q223_zipf_fit", zipfQ,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) AS t
         |  FROM documents),
         |c AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1),
@@ -1399,23 +1341,23 @@ object TextQueries {
         |        * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
         |          - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
         |  END AS r2
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin),
     // q188: q139's chain over the survivor corpus — compaction re-fit
     // the stats, so the deleted index must answer exactly like the
     // inline operator on what remains.
-    "q188_text_delete" ->
+    Query("q188_text_delete", textDeleteQ,
       s"""WITH ${bm25CtesWhere(" AND doc_id % 7 <> 0")}
         |SELECT query_id, rank, doc AS doc_id, score FROM
         |  (SELECT query_id, doc, score,
         |     CAST(row_number() OVER (PARTITION BY query_id
         |       ORDER BY score DESC, doc) AS INTEGER) AS rank
         |   FROM sc)
-        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
-    "q187_quality_funnel" -> qualityFunnelOracle,
-    "q184_train_logistic" -> trainLogisticOracle,
+        |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
+    Query("q187_quality_funnel", qualityFunnelQ, qualityFunnelOracle),
+    Query("q184_train_logistic", trainLogisticQ, trainLogisticOracle),
     // q240: one more scoring pass against w2, distributed top-20 by
     // (|margin|, doc_id) — margins exact micro integers.
-    "q240_boundary_select" ->
+    Query("q240_boundary_select", boundarySelectQ,
       s"""WITH $logisticChainCtes,
         |m3 AS (SELECT f.doc_id, CAST(SUM(w.w_micro) AS BIGINT)
         |    AS margin_micro
@@ -1423,10 +1365,10 @@ object TextQueries {
         |r AS (SELECT doc_id, margin_micro, row_number() OVER (
         |    ORDER BY abs(margin_micro), doc_id) AS rank FROM m3)
         |SELECT CAST(rank AS INTEGER) AS rank, doc_id, margin_micro
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
+        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin),
     // q239: the q31 heuristic chain feeding the q203 confusion rollup;
     // classes binarized en/unk on both sides.
-    "q239_langid_eval" ->
+    Query("q239_langid_eval", langidEvalQ,
       """WITH tt AS (SELECT doc_id, regexp_split_to_array(text, '\s+')
         |    AS toks FROM documents),
         |m AS (SELECT doc_id,
@@ -1465,11 +1407,11 @@ object TextQueries {
         |FROM cls LEFT JOIN tp ON tp.class = cls.class
         |  LEFT JOIN nt ON nt.class = cls.class
         |  LEFT JOIN np ON np.class = cls.class
-        |ORDER BY cls.class""".stripMargin,
+        |ORDER BY cls.class""".stripMargin),
     // q182: the fraction is ONE division of exact integers
     // (count * chars(gram) / chars(doc)), so no float order varies;
     // top-gram ties break lexicographically in both engines.
-    "q182_top_ngram" ->
+    Query("q182_top_ngram", topNgramQ,
       """WITH toks AS (SELECT doc_id, len(text) AS n_chars,
         |    string_split(text, ' ') AS t FROM documents
         |  WHERE text IS NOT NULL AND len(text) > 0),
@@ -1486,22 +1428,22 @@ object TextQueries {
         |  CAST(cnt AS BIGINT) AS n_occurrences,
         |  ROUND(CAST(cnt * len(gram) AS DOUBLE) / n_chars, 6)
         |    AS top_gram_char_frac
-        |FROM r WHERE rk = 1 ORDER BY doc_id, n""".stripMargin,
+        |FROM r WHERE rk = 1 ORDER BY doc_id, n""".stripMargin),
     // q176: q139's BM25 chain + q141's dense-cosine tier as graded
     // relevance; each position's discounted gain floors to integer
     // nano-units in the IDENTICAL expression order before the exact
     // sums, one final division per query.
     // q179: the JDK and DuckDB both implement Unicode-standard NFC,
     // which is what makes the normalization pass oracle-checkable.
-    "q179_nfc_normalize" ->
+    Query("q179_nfc_normalize", nfcQ,
       """SELECT doc_id, nfc_normalize(text) AS text_nfc,
         |  CASE WHEN text <> nfc_normalize(text) THEN 1 ELSE 0 END AS changed,
         |  CAST(len(text) AS INTEGER) AS n_chars_raw,
         |  CAST(len(nfc_normalize(text)) AS INTEGER) AS n_chars_nfc
-        |FROM documents ORDER BY doc_id""".stripMargin,
+        |FROM documents ORDER BY doc_id""".stripMargin),
     // q178: q139's BM25 chain + the dense top-5 as the relevant set;
     // counts/min-rank exact integers, two final divisions.
-    "q178_rank_eval" ->
+    Query("q178_rank_eval", rankEvalQ,
       s"""WITH $bm25Ctes,
         |bm AS (SELECT query_id, doc, rank FROM
         |  (SELECT query_id, doc,
@@ -1531,11 +1473,11 @@ object TextQueries {
         |    / least(n_rel, 10), 6) AS recall_at_k,
         |  round(1e0 / first_rel_rank, 6) AS rr
         |FROM tot t LEFT JOIN h USING (query_id)
-        |ORDER BY t.query_id""".stripMargin,
+        |ORDER BY t.query_id""".stripMargin),
     // q177: the three per-doc signal oracles verbatim as derived
     // tables, joined per doc, each 6dp signal lifted to exact integer
     // micros before the per-source mean (order-invariant).
-    "q177_source_quality" ->
+    Query("q177_source_quality", sourceQualityQ,
       s"""WITH ent AS (SELECT * FROM ($charEntropyOracle)),
         |lm AS (SELECT * FROM ($trigramLmOracle)),
         |rep AS (SELECT * FROM ($repetitionOracle)),
@@ -1554,8 +1496,8 @@ object TextQueries {
         |    AS mean_logprob,
         |  round((CAST(sum(rm) AS DOUBLE) / 1000000e0) / count(*), 6)
         |    AS mean_repetition
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q176_ndcg" ->
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q176_ndcg", ndcgQ,
       s"""WITH $bm25Ctes,
         |bm AS (SELECT query_id, doc, rank FROM
         |  (SELECT query_id, doc,
@@ -1592,16 +1534,16 @@ object TextQueries {
         |  round(CAST(coalesce(inano, 0) AS DOUBLE) / 1000000000e0, 6) AS idcg,
         |  CASE WHEN coalesce(inano, 0) > 0
         |    THEN round(CAST(dnano AS DOUBLE) / inano, 6) END AS ndcg
-        |FROM dn d LEFT JOIN idn USING (query_id) ORDER BY query_id""".stripMargin,
+        |FROM dn d LEFT JOIN idn USING (query_id) ORDER BY query_id""".stripMargin),
     // q168: counts replayed from the same single-space tokenization
     // (q87's rendering), the interpolation evaluated in the IDENTICAL
     // left-associated expression order with e0 float constants, each
     // position floored to nano-nats before the exact integer sum.
-    "q168_trigram_lm" -> trigramLmOracle,
+    Query("q168_trigram_lm", trigramLmQ, trigramLmOracle),
     // q208: the q142 shingle CTE shape (whole-text sentinel for short
     // docs), string grams exact where the Spark side moves xxhash64
     // gram keys — same-distribution equivalence as q57's hashed pairs.
-    "q208_ngram_novelty" ->
+    Query("q208_ngram_novelty", noveltyQ,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
         |  FROM documents),
         |sh AS (SELECT doc_id, CASE WHEN len(t) >= 3
@@ -1616,9 +1558,9 @@ object TextQueries {
         |    AS n_unique,
         |  ROUND(CAST(SUM(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*), 6) AS novelty
-        |FROM gr JOIN d USING (gram) GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM gr JOIN d USING (gram) GROUP BY 1 ORDER BY 1""".stripMargin),
     // q205: decile bins over exact p_micro; both ratios one division.
-    "q205_calibration_curve" ->
+    Query("q205_calibration_curve", calibCurveQ,
       s"""WITH $scoredPassCtes,
         |b AS (SELECT LEAST(p_micro // 100000, 9) AS bin, p_micro, pass
         |      FROM d)
@@ -1628,10 +1570,10 @@ object TextQueries {
         |    AS mean_p,
         |  ROUND(CAST(SUM(CASE WHEN pass THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*), 6) AS pos_rate
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin),
     // q218: per-bin weighted |acc - conf| gaps floored to nanos at
     // birth over exact integers; sum exact, one division at the end.
-    "q218_ece" ->
+    Query("q218_ece", eceQ,
       s"""WITH $scoredPassCtes,
         |bb AS (SELECT LEAST(p_micro // 100000, 9) AS bin,
         |    CAST(count(*) AS BIGINT) AS n,
@@ -1645,10 +1587,10 @@ object TextQueries {
         |  FROM bb CROSS JOIN tt)
         |SELECT n_items, CAST(count(*) AS BIGINT) AS bins_used,
         |  ROUND(CAST(SUM(tn) AS BIGINT) / 1000000000e0, 6) AS ece
-        |FROM s GROUP BY 1""".stripMargin,
+        |FROM s GROUP BY 1""".stripMargin),
     // q206: Mann-Whitney over distinct-score groups; 2R stays integer
     // via p*(2*cum + c + 1), AUC is one exact division.
-    "q206_roc_auc" ->
+    Query("q206_roc_auc", rocAucQ,
       s"""WITH $scoredPassCtes,
         |bs AS (SELECT p_micro AS scv, CAST(count(*) AS BIGINT) AS c,
         |    CAST(SUM(CASE WHEN pass THEN 1 ELSE 0 END) AS BIGINT) AS p
@@ -1663,10 +1605,10 @@ object TextQueries {
         |  CASE WHEN n_pos > 0 AND n_items - n_pos > 0 THEN
         |    ROUND(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE)
         |      / (2 * n_pos * (n_items - n_pos)), 6) END AS auc
-        |FROM ag""".stripMargin,
+        |FROM ag""".stripMargin),
     // q200: q168's LM as a CTE, ntile(3) per lang on the identical
     // (avg_logprob DESC, doc_id) order.
-    "q200_ppl_buckets" ->
+    Query("q200_ppl_buckets", pplBucketsQ,
       s"""WITH lm AS (SELECT * FROM ($trigramLmOracle)),
         |j AS (SELECT d.doc_id, d.lang, lm.n_trigrams, lm.avg_logprob,
         |        CAST(ntile(3) OVER (PARTITION BY d.lang
@@ -1675,14 +1617,14 @@ object TextQueries {
         |SELECT doc_id, lang, n_trigrams, avg_logprob, tier,
         |  CASE WHEN tier = 1 THEN 'head' WHEN tier = 3 THEN 'tail'
         |       ELSE 'middle' END AS ppl_bucket
-        |FROM j ORDER BY doc_id""".stripMargin,
+        |FROM j ORDER BY doc_id""".stripMargin),
     // q166: characters via the LATERAL generate_series + substr walk
     // (see charEntropyOracle).
-    "q166_char_entropy" -> charEntropyOracle,
+    Query("q166_char_entropy", charEntropyQ, charEntropyOracle),
     // q161: the built index's committed postings must reproduce the
     // raw corpus exactly — doc count, summed doc length (q139's
     // string_split tokenization), distinct (doc, token) postings.
-    "q161_text_index_build" ->
+    Query("q161_text_index_build", textIndexBuildQ,
       """WITH c AS (SELECT doc_id, len(string_split(text, ' ')) AS dl
         |  FROM documents WHERE source <> 'src0'),
         |p AS (SELECT DISTINCT doc_id, token FROM
@@ -1691,10 +1633,10 @@ object TextQueries {
         |SELECT 2 AS n_batches, count(*) AS n_docs,
         |  CAST(sum(dl) AS BIGINT) AS sum_dl,
         |  (SELECT count(*) FROM p) AS n_postings
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin),
     // q158: definitional per-group counts + rank on (cnt DESC, token);
     // share divides exact integers, float only at the end.
-    "q158_source_top_terms" ->
+    Query("q158_source_top_terms", sourceTopTermsQ,
       """WITH t AS (SELECT source AS g, u.tok FROM documents,
         |  LATERAL (SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok) u
         |  WHERE u.tok <> ''),
@@ -1704,11 +1646,11 @@ object TextQueries {
         |      ORDER BY cnt DESC, token) AS INTEGER) AS rank,
         |    round(cnt/sum(cnt) OVER (PARTITION BY g), 6) AS share FROM c)
         |SELECT g AS source, rank, token, cnt, share FROM r WHERE rank <= 5
-        |ORDER BY source, rank""".stripMargin,
+        |ORDER BY source, rank""".stripMargin),
     // q153: definitional distinct-token pair join; counts exact
     // integers, only the final Jaccard divides (BIGINT/BIGINT is
     // float division in both engines).
-    "q153_vocab_overlap" ->
+    Query("q153_vocab_overlap", vocabOverlapQ,
       """WITH st AS (SELECT DISTINCT source AS g, t.tok FROM documents,
         |  LATERAL (SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok) t
         |  WHERE t.tok <> ''),
@@ -1719,12 +1661,12 @@ object TextQueries {
         |  round(n_shared/(sa.n + sb.n - n_shared), 6) AS jaccard
         |FROM px JOIN sz sa ON px.source_a = sa.g
         |  JOIN sz sb ON px.source_b = sb.g
-        |ORDER BY source_a, source_b""".stripMargin,
+        |ORDER BY source_a, source_b""".stripMargin),
     // q144: the same base = pos - tok_idx alignment the index query
     // runs, replayed definitionally over raw token positions: a base
     // covered by every phrase token index is one (overlap-counting)
     // occurrence.
-    "q144_phrase_search" ->
+    Query("q144_phrase_search", phraseSearchQ,
       """WITH probes AS (SELECT doc_id AS query_id,
         |    array_to_string(string_split(text, ' ')[2:4], ' ') AS phrase
         |  FROM documents WHERE source = 'src0' AND doc_id % 50 = 0),
@@ -1743,38 +1685,41 @@ object TextQueries {
         |FROM cov JOIN plen USING (query_id)
         |WHERE cov = plen
         |GROUP BY 1, 2 ORDER BY query_id, doc_id""".stripMargin,
+      needs = Set(SharedStore.textIndex)),
     // q143: the Spark side is exact by construction (MG candidates are
     // a superset, the verify pass re-counts exactly), so the oracle is
     // the definitional count/threshold.
-    "q143_heavy_hitters" ->
+    Query("q143_heavy_hitters", heavyHittersQ,
       """WITH t AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         |n AS (SELECT count(*) AS n FROM t),
         |c AS (SELECT token, count(*) AS cnt FROM t GROUP BY 1)
         |SELECT token, cnt, ROUND(CAST(cnt AS DOUBLE) / n.n, 6) AS share
-        |FROM c, n WHERE cnt * 200 > n.n ORDER BY token""".stripMargin,
-    "q141_hybrid_rrf" -> hybridRrfOracle,
-    "q338_index_hybrid" -> indexHybridOracle,
-    "q140_text_index" -> bm25Oracle,
-    "q139_bm25" -> bm25Oracle,
-    "q307_bm25_pruned" -> bm25PrunedOracle,
-    "q318_rm3_expansion" -> rm3Oracle,
-    "q114_corpus_stats" ->
+        |FROM c, n WHERE cnt * 200 > n.n ORDER BY token""".stripMargin),
+    Query("q141_hybrid_rrf", hybridRrfQ, hybridRrfOracle),
+    Query("q338_index_hybrid", indexHybridQ, indexHybridOracle,
+      needs = Set(SharedStore.textIndex)),
+    Query("q140_text_index", textIndexQ, bm25Oracle,
+      needs = Set(SharedStore.textIndex)),
+    Query("q139_bm25", bm25Q, bm25Oracle),
+    Query("q307_bm25_pruned", bm25PrunedQ, bm25PrunedOracle),
+    Query("q318_rm3_expansion", rm3Q, rm3Oracle),
+    Query("q114_corpus_stats", corpusStatsQ,
       """SELECT CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
         |  CAST(count(DISTINCT text) AS BIGINT) AS distinct_texts,
         |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
         |  CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
         |  ROUND(avg(len(string_split(text, ' '))), 6) AS avg_doc_tokens
-        |FROM documents""".stripMargin,
-    "q112_bpe_merges" ->
+        |FROM documents""".stripMargin),
+    Query("q112_bpe_merges", bpeQ,
       """WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
         |p AS (SELECT array_to_string(t[i:i+1], ' ') AS merge_pair
         |  FROM toks, LATERAL (SELECT unnest(generate_series(1, len(t) - 1)) AS i) gs
         |  WHERE len(t) >= 2)
         |SELECT merge_pair, count(*) AS n_occurrences
         |FROM p GROUP BY merge_pair
-        |ORDER BY n_occurrences DESC, merge_pair LIMIT 50""".stripMargin,
-    "q105_span_corrupt" -> {
+        |ORDER BY n_occurrences DESC, merge_pair LIMIT 50""".stripMargin),
+    Query("q105_span_corrupt", spanQ, {
       def st(j: String) =
         s"${md5l(s"concat(CAST(doc_id AS VARCHAR), ':', CAST($j AS VARCHAR), ':s')")} % 100 < 5"
       val cov = s"(${st("i - 1")} OR (i >= 2 AND ${st("i - 2")})" +
@@ -1791,8 +1736,8 @@ object TextQueries {
         |  CAST(len(cov) AS INTEGER) AS n_masked,
         |  array_to_string(ct, ' ') AS corrupted_text
         |FROM m ORDER BY doc_id""".stripMargin
-    },
-    "q104_mask_tokens" ->
+    }),
+    Query("q104_mask_tokens", maskQ,
       s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |m AS (SELECT doc_id, toks,
         |    [CASE WHEN ${md5l("concat(CAST(doc_id AS VARCHAR), ':', CAST(i - 1 AS VARCHAR))")}
@@ -1806,8 +1751,8 @@ object TextQueries {
         |SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens,
         |  CAST(len(hits) AS INTEGER) AS n_masked,
         |  array_to_string(mt, ' ') AS masked_text
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q98_linear_quality" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q98_linear_quality", linearQualityQ,
       s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
         |    FROM documents),
         |v AS (SELECT DISTINCT token FROM toks),
@@ -1821,8 +1766,8 @@ object TextQueries {
         |  ROUND(1.0e0 / (1.0e0 + exp(-(CAST(sw AS DOUBLE) / 1000000e0
         |    / CAST(n_tokens AS DOUBLE)))), 6) AS p_keep,
         |  sw >= 0 AS keep
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q90_scrub" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q90_scrub", scrubQ,
       """WITH s AS (SELECT doc_id, text,
         |    regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
         |      'https?://[^ ]+', '<URL>', 'g'),
@@ -1837,8 +1782,8 @@ object TextQueries {
         |  CAST(len(regexp_extract_all(text, '[0-9]{4,}')) AS INTEGER) AS n_numbers,
         |  CAST(len(regexp_extract_all(text, '\bcustomer\b')) AS INTEGER) AS n_entities,
         |  scrubbed_text <> text AS changed
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q84_regex_tokens" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q84_regex_tokens", regexTokensQ,
       """WITH r AS (SELECT doc_id,
         |    regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]') AS sub,
         |    len(regexp_split_to_array(text, '\s+')) AS n_ws
@@ -1854,8 +1799,8 @@ object TextQueries {
         |       - len(list_filter(sub, x -> regexp_matches(x, '^[0-9]+$'))) AS INTEGER)
         |    AS n_punct,
         |  ROUND(CAST(len(sub) AS DOUBLE) / n_ws, 6) AS fertility
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q87_bigram_logprob" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q87_bigram_logprob", bigramLp,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |bgs AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 2
         |    THEN [array_to_string(t[i:i+1], ' ') FOR i IN generate_series(1, len(t)-1)]
@@ -1873,8 +1818,8 @@ object TextQueries {
         |  ROUND((CAST(sum(tn) AS BIGINT) / 1000000000e0) / count(*), 6)
         |    AS avg_logprob
         |FROM t
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q73_unigram_logprob" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q73_unigram_logprob", unigramLp,
       """WITH tok AS (SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS token
         |             FROM documents),
         |c AS (SELECT token, count(*) AS tf FROM tok GROUP BY token),
@@ -1887,17 +1832,17 @@ object TextQueries {
         |  ROUND((CAST(sum(tn) AS BIGINT) / 1000000000e0) / count(*), 6)
         |    AS avg_logprob
         |FROM t
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q65_token_histogram" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q65_token_histogram", tokenHistogram,
       """WITH n AS (SELECT len(regexp_split_to_array(text, '\s+')) AS n_tokens
         |           FROM documents)
         |SELECT CAST(LEAST(FLOOR(n_tokens / 50.0), 9) AS INTEGER) AS bucket,
         |  count(*) AS n_docs,
         |  CAST(min(n_tokens) AS INTEGER) AS min_tokens,
         |  CAST(max(n_tokens) AS INTEGER) AS max_tokens
-        |FROM n GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q67_repetition" -> repetitionOracle,
-    "q32_fingerprint" ->
+        |FROM n GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Query("q67_repetition", repetitionQ, repetitionOracle),
+    Query("q32_fingerprint", fingerprint,
       s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
         |sh AS (SELECT doc_id, text, CASE WHEN len(t) >= 3
         |  THEN [array_to_string(t[i:i+2], ' ') FOR i IN generate_series(1, len(t)-2)]
@@ -1905,8 +1850,8 @@ object TextQueries {
         |g AS (SELECT doc_id, text, unnest(grams) AS g FROM sh)
         |SELECT doc_id, ${md5l("text")} AS text_hash,
         |  min(${md5l("g")}) AS min_shingle_hash
-        |FROM g GROUP BY doc_id, text ORDER BY doc_id""".stripMargin,
-    "q46_tfidf_top_terms" ->
+        |FROM g GROUP BY doc_id, text ORDER BY doc_id""".stripMargin),
+    Query("q46_tfidf_top_terms", tfidf,
       """WITH tf AS (
         |  SELECT doc_id AS doc, unnest(string_split(text, ' ')) AS token
         |  FROM documents),
@@ -1923,24 +1868,24 @@ object TextQueries {
         |         AS INTEGER) AS term_rank
         |  FROM scored)
         |SELECT doc AS doc_id, term_rank, token, tfidf
-        |FROM ranked WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin,
-    "q37_vocab" ->
+        |FROM ranked WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin),
+    Query("q37_vocab", vocab,
       """SELECT token, count(*) AS n
         |FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-        |GROUP BY token ORDER BY n DESC, token LIMIT 100""".stripMargin,
-    "q28_text_stats" ->
+        |GROUP BY token ORDER BY n DESC, token LIMIT 100""".stripMargin),
+    Query("q28_text_stats", textStats,
       """SELECT lang, source, count(*) AS n_docs,
         |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
         |  ROUND(avg(n_chars), 6) AS avg_chars,
         |  ROUND(avg(len(regexp_split_to_array(text, '\s+'))), 6) AS avg_tokens
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
+        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin),
     // q331: the mixed-script corpus derivation (md5-indexed fixed CJK
     // alphabet for odd doc_ids), the exact-integer no-space routing
     // decision, and both tokenizations — char bigrams via the
     // generate_series comprehension, ws via regexp split — replayed
     // end-to-end. The UTF-8 alphabet literals are interpolated from the
     // SAME Scala constants the Spark side uses.
-    "q331_cjk_tokens" -> {
+    Query("q331_cjk_tokens", cjkTokensQ, {
       val alpha = CjkAlphabet.map(c => s"'$c'").mkString("[", ",", "]")
       s"""WITH mixed AS (SELECT doc_id,
         |    CASE WHEN doc_id % 2 = 1 THEN
@@ -1967,8 +1912,8 @@ object TextQueries {
         |  ROUND(CAST(list_aggregate(list_transform(toks, x -> length(x)), 'sum')
         |      AS DOUBLE) / len(toks), 6) AS mean_token_len
         |FROM tk ORDER BY doc_id""".stripMargin
-    },
-    "q29_token_counts" ->
+    }),
+    Query("q29_token_counts", tokenCounts,
       """SELECT doc_id,
         |  CAST(len(regexp_split_to_array(text, '\s+')) AS INTEGER) AS n_tokens,
         |  CAST(len(list_distinct(regexp_split_to_array(text, '\s+'))) AS INTEGER) AS n_distinct,
@@ -1977,8 +1922,8 @@ object TextQueries {
         |  ROUND(CAST(list_aggregate(list_transform(regexp_split_to_array(text, '\s+'),
         |          x -> length(x)), 'sum') AS DOUBLE)
         |        / len(regexp_split_to_array(text, '\s+')), 6) AS mean_token_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q30_quality_score" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q30_quality_score", quality,
       """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS toks FROM documents),
         |m AS (SELECT doc_id,
         |  CAST(len(list_filter(toks, x -> x IN
@@ -1990,8 +1935,8 @@ object TextQueries {
         |SELECT doc_id, ROUND(stop_ratio, 6) AS stopword_ratio, ROUND(ttr, 6) AS ttr,
         |  ROUND(len_score, 6) AS length_score,
         |  ROUND(0.4 * len_score + 0.3 * stop_ratio + 0.3 * ttr, 6) AS quality_score
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q31_langid" ->
+        |FROM m ORDER BY doc_id""".stripMargin),
+    Query("q31_langid", langId,
       """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') AS toks FROM documents),
         |m AS (SELECT doc_id,
         |  CAST(len(list_filter(toks, x -> x IN
@@ -2000,5 +1945,9 @@ object TextQueries {
         |FROM t)
         |SELECT doc_id, ROUND(r, 6) AS en_stopword_ratio,
         |  CASE WHEN r >= 0.05 THEN 'en' ELSE 'unk' END AS predicted_lang
-        |FROM m ORDER BY doc_id""".stripMargin)
+        |FROM m ORDER BY doc_id""".stripMargin))
+
+  val queries: Map[String, Q] = Query.builds(all)
+
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+import graft.functions.{Md5Family, Native}
 
 /** The spark.sql.extensions integration path: a session built with
   * GraftSparkExtensions resolves the graft native functions from plain
@@ -33,10 +36,59 @@ class ExtensionsSpec extends SparkSpecBase {
       val nfc = s2.sql("SELECT graft_nfc('e\u0301')")
         .head.getString(0)
       assert(nfc == "\u00e9" && nfc.length == 1)
+      val dot = s2.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
+        .head.getDouble(0)
+      assert(dot == 11.0)
+      val top = s2.sql("SELECT graft_topgram(array('a', 'b', 'a'), 1) AS t")
+        .selectExpr("t.g", "t.c").head
+      assert(top.getString(0) == "a" && top.getLong(1) == 2L)
+      // the general form with the constants graft_minhash16 fixes
+      val sigN = s2.sql("SELECT graft_minhash(array(1L, 2L), array(3L, 4L), " +
+        s"16, ${Md5Family.Ring}L) = graft_minhash16(array(1L, 2L), array(3L, 4L))")
+        .head.getBoolean(0)
+      assert(sigN)
+      val hit = s2.sql("SELECT graft_bloom_might_contain((SELECT " +
+        "graft_bloom_agg(xxhash64(id), 3L, 1024L) FROM range(3)), xxhash64(2L))")
+        .head.getBoolean(0)
+      assert(hit)
+      // every row of the table is called above
+      assert(Native.all.map(_.name).toSet == Set("graft_cosine", "graft_minhash16",
+        "graft_nfc", "graft_dot", "graft_topgram", "graft_minhash",
+        "graft_bloom_agg", "graft_bloom_might_contain"))
     } finally {
       SparkSession.setActiveSession(shared)
       SparkSession.setDefaultSession(shared)
     }
+  }
+
+  test("the Scala helpers register each native function once per session") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.{MinhashExpressions, TextExpressions, VectorExpressions}
+    // a new session starts from a fresh registry without the table
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val ids = Native.all.map(f => FunctionIdentifier(f.name))
+    assert(!ids.exists(reg.functionExists))
+    val df = s.sql("SELECT array(1.0d, 2.0d) AS v, array(1L, 2L) AS h, " +
+      "'e\u0301' AS t, array('a', 'b', 'a') AS toks")
+    val helpers: Seq[(String, () => Column)] = Seq(
+      "graft_cosine" -> (() => VectorExpressions.cosineFast(s)(col("v"), col("v"))),
+      "graft_dot" -> (() => VectorExpressions.dotFast(s)(col("v"), col("v"))),
+      "graft_minhash" -> (() =>
+        MinhashExpressions.minhashFast(s)(col("h"), col("h"), 16, Md5Family.Ring)),
+      "graft_nfc" -> (() => TextExpressions.nfcFast(s)(col("t"))),
+      "graft_topgram" -> (() => TextExpressions.topGramFast(s)(col("toks"), lit(1))))
+    helpers.foreach { case (name, helper) =>
+      val id = FunctionIdentifier(name)
+      df.select(helper().as("r")).collect()
+      assert(ids.forall(reg.functionExists), s"$name: table not installed")
+      val builder = reg.lookupFunctionBuilder(id).get
+      val info = reg.lookupFunction(id).get
+      df.select(helper().as("r")).collect()
+      assert(reg.lookupFunctionBuilder(id).get eq builder, s"$name re-registered")
+      assert(reg.lookupFunction(id).get eq info, s"$name re-registered")
+    }
+    assert(df.select(TextExpressions.nfcFast(s)(col("t"))).head.getString(0) == "\u00e9")
   }
 
   test("NFC normalization: composition, idempotence, dedup-equality repair") {

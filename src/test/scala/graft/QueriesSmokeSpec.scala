@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.SharedStore
+import graft.queries.{ExtensionQueries, SharedStore}
 
 /** Every registered query runs and returns rows at sf0.001, and every
   * oracle key refers to a real query — the structural contract the
@@ -11,11 +11,12 @@ class QueriesSmokeSpec extends SparkSpecBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** The queries whose entries declare a shared store in `needs`. */
   private lazy val declared: Set[String] =
-    SharedStore.all.flatMap(_.consumers).toSet
+    SparkEntry.all.filter(_.needs.nonEmpty).map(_.name).toSet
 
   /** A second path to the sf0.001 tables with the same base name. The
-    * queries no shared store declares as a consumer read through it,
+    * queries that declare no shared store in `needs` read through it,
     * so a store built for it betrays an undeclared consumer.
     */
   private lazy val alias: String = {
@@ -26,12 +27,17 @@ class QueriesSmokeSpec extends SparkSpecBase {
 
   /** Every registered query built ONCE at sf0.001 — its executed plan,
     * then its row count — so the store builds and checkpoints its
-    * construction runs are paid once for every check below.
+    * construction runs are paid once for every check below. Built as
+    * Verify builds them: in waves of 4 concurrent queries, checkpoints
+    * released at each barrier.
     */
   private lazy val built: Seq[(String, String, Long)] = {
     val before = queryScratchDirs()
-    val out = SparkEntry.queries.toSeq.map { case (name, fn) =>
-      val df = fn(spark, if (declared(name)) sf("sf0.001") else alias)
+    // read on the wave threads, so forced here: this lazy val holds the
+    // spec's lock, which their own lazy initializers would wait on
+    val (s, consumers, aliasDir) = (spark, declared, alias)
+    val out = GraftSession.inWaves(s, 4, SparkEntry.queries.toSeq) { case (name, fn) =>
+      val df = fn(s, if (consumers(name)) sf("sf0.001") else aliasDir)
       (name, df.queryExecution.executedPlan.toString, df.count())
     }
     leftScratch = queryScratchDirs() -- before
@@ -72,8 +78,9 @@ class QueriesSmokeSpec extends SparkSpecBase {
 
   test("only the declared consumers build the session-shared stores") {
     // Bench and Verify prewarm exactly the stores the selected queries
-    // declare; an undeclared consumer would pay the build inside its
-    // timed window (and stall Verify's wave-mates at the barrier)
+    // declare in `needs`; an undeclared consumer would pay the build
+    // inside its timed window (and stall Verify's wave-mates at the
+    // barrier)
     assert(built.nonEmpty)
     SharedStore.all.foreach { st =>
       assert(!st.isBuilt(alias), s"a query not declared in SharedStore " +
@@ -93,6 +100,14 @@ class QueriesSmokeSpec extends SparkSpecBase {
     assert(relErr(r.getLong(1), r.getDouble(3)) < 0.1, "orders estimate off")
   }
 
+  test("every query name is registered exactly once") {
+    // a name listed twice would keep only one of its builders in the
+    // derived maps, silently
+    val names = SparkEntry.all.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"query names registered more than once: $dups")
+  }
+
   test("every oracle key has a query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
@@ -106,10 +121,9 @@ class QueriesSmokeSpec extends SparkSpecBase {
   }
 
   test("domain registries are disjoint and cover the extension surface") {
-    // ExtensionQueries aggregates the per-domain maps with ++, which
-    // silently keeps the LAST binding on a key collision — disjointness
-    // is what makes the aggregation order immaterial
-    val doms = graft.queries.ExtensionQueries.domains.toSeq
+    // a name in two domains' lists would keep only one binding in the
+    // derived maps
+    val doms = ExtensionQueries.domains.toSeq
     for {
       Seq((na, (qa, _)), (nb, (qb, _))) <- doms.combinations(2)
     } {
@@ -120,6 +134,6 @@ class QueriesSmokeSpec extends SparkSpecBase {
       assert(q.keySet == o.keySet, s"domain $n query/oracle key mismatch")
     }
     val union = doms.map(_._2._1.keySet).reduce(_ ++ _)
-    assert(union == graft.queries.ExtensionQueries.queries.keySet)
+    assert(union == ExtensionQueries.queries.keySet)
   }
 }
