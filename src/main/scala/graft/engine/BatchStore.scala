@@ -8,11 +8,11 @@ import Generations.fsOf
 
 /** Shared maintenance for the `batch_id=N` micro-batch stores
   * (`StreamingPower`'s sketch and count stores, CDC changelog, dedup
-  * index; TextIndex and PairStore generations): each step writes its
-  * batch dir directly and gates retries on that dir's `_SUCCESS`, so a
-  * long-running stream accretes a directory per micro-batch forever —
-  * the same small-file flaw, and the same staged-swap cure, as
-  * `AnnIndex.compact` / `IdempotentSink.compact`.
+  * index; TextIndex, AnnIndex enc and PairStore generations): each step
+  * writes its batch dir directly and gates retries on that dir's
+  * `_SUCCESS`, so a long-running stream accretes a directory per
+  * micro-batch forever — the same small-file flaw, and the same
+  * staged-swap cure, as `IdempotentSink.compact`.
   *
   * [[compact]] folds every committed generation into ONE at the MAX
   * folded id. Engine batch ids are strictly increasing, so ids below
@@ -25,8 +25,9 @@ import Generations.fsOf
   * Such a store is one [[Mergeable]]: its fold is written once and is
   * both the compaction hook and the read-side merge, so folding is
   * invisible to readers by construction. No caller outside the engine
-  * and `TextIndex` (whose fold applies tombstones) passes a merge hook
-  * to [[compact]] itself.
+  * and the two deletable stores, `TextIndex` and `AnnIndex` (whose
+  * folds apply their `Tombstones`), passes a merge hook to [[compact]]
+  * itself.
   *
   * Crash discipline is `StagedSwap`'s: the folded generation is
   * staged beside the store, its per-dir `_SUCCESS` marker — created
@@ -72,10 +73,11 @@ object BatchStore {
 
   /** [[compact]] returning TRUE iff the folded generation was
     * COMMITTED (the swap's renames completed): callers whose merge
-    * hook has side conditions (TextIndex draining the tombstones its
-    * fold applied) branch on the signal instead of re-scanning the
-    * store to verify — a no-op or race-aborted fold returns false and
-    * the caller must leave its pending state (tombstones) in place.
+    * hook has side conditions (TextIndex and AnnIndex draining the
+    * tombstones their folds applied) branch on the signal instead of
+    * re-scanning the store to verify — a no-op or race-aborted fold
+    * returns false and the caller must leave its pending state
+    * (tombstones) in place.
     */
   private[graft] def compactWithSignal(spark: SparkSession, path: String,
       merge: DataFrame => DataFrame = identity,
@@ -87,8 +89,8 @@ object BatchStore {
     if (!fs.exists(p)) return false
     val batches = committedBatches(spark, path)
     // `force` folds even a lone generation — callers whose merge hook
-    // must rewrite rows regardless of batch count (e.g. TextIndex
-    // applying tombstone deletes) opt in; the plain fold is a no-op on
+    // must rewrite rows regardless of batch count (the indexes applying
+    // tombstone deletes) opt in; the plain fold is a no-op on
     // a single batch by definition
     if (batches.isEmpty || (batches.size <= 1 && !force)) return false
     val genId = batches.max
@@ -98,12 +100,13 @@ object BatchStore {
           .filter(col("batch_id").isin(batches: _*))
           .drop("batch_id"))
         .withColumn("batch_id", lit(genId))
-      // stores with a pruning sub-layout under each generation (e.g.
-      // TextIndex's tok_bucket) keep it through the fold, so partition
-      // pruning survives compaction — and are CLUSTERED by it before the
-      // partitioned write (the appendBatch discipline): a merge hook
-      // that shuffles (TextIndex's tombstone anti-join) otherwise leaves
-      // every reduce task holding rows of every sub-partition value, and
+      // stores with a pruning sub-layout under each generation
+      // (TextIndex's tok_bucket, AnnIndex's list_id) keep it through the
+      // fold, so partition pruning survives compaction — and are
+      // CLUSTERED by it before the partitioned write (the appendBatch
+      // discipline): a merge hook that shuffles (a tombstone anti-join)
+      // otherwise leaves every reduce task holding rows of every
+      // sub-partition value, and
       // the write fans out tasks x values small files per fold — the
       // small-file problem compaction exists to fix, reintroduced by
       // the fold itself.

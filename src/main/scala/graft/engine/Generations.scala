@@ -7,11 +7,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** The `<prefix>N` generation dirs every append-style store commits —
   * the directory stand-in for the reference's one incremental-load
   * cursor (`bronze_ingest.py:7-13`): `batch_id=N` (BatchStore and the
-  * stores built on it: TextIndex postings and stats, PairStore),
-  * `batch=N` (IdempotentSink, AnnIndex enc and dead, TextIndex dead)
-  * and `epoch=N` (EpochStore). This is the one definition of a
-  * generation, so every reader and writer of a store agrees on which
-  * generations exist and which are committed.
+  * stores built on it: TextIndex postings and stats, AnnIndex enc,
+  * PairStore), `batch=N` (IdempotentSink, and `Tombstones`, the indexes'
+  * delete sets) and `epoch=N` (EpochStore). This is the one definition
+  * of a generation, so every reader and writer of a store agrees on
+  * which generations exist and which are committed.
   *
   * A generation is a dir directly under the store root named `prefix`
   * followed by a decimal id. It is COMMITTED once parquet's `_SUCCESS`

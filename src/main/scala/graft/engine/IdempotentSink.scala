@@ -31,9 +31,7 @@ import Generations.fsOf
   * set — and staging dirs are invisible to them (leading-dot names are
   * filtered by the file index). `heal` resolves a crashed writer:
   * staging without `_SUCCESS` rolls back (delete), staging with it
-  * rolls forward (finish the rename). Same recipe as the streaming
-  * index (`StreamingPower.dedupStepAgainstIndex`) and
-  * `PartitionedSink.compact`'s swap.
+  * rolls forward (finish the rename).
   *
   * COMMIT METADATA: each staged generation also carries a small `_meta`
   * file — row count, every key column's min and max (timestamps as

@@ -21,9 +21,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * dir must pass to roll forward, matching the store's read gate:
   * [[rootSuccess]] where commit is dir presence (IdempotentSink,
   * PartitionedSink), [[generationSuccess]] where readers gate per
-  * generation dir (BatchStore, AnnIndex enc) and [[marker]] for the
-  * canonical label store's `_applied`. Single writer per store, as for
-  * every mutation here; readers may heal concurrently (see [[publish]]).
+  * generation dir (BatchStore, which AnnIndex enc is) and [[marker]]
+  * for the canonical label store's `_applied`. Single writer per store,
+  * as for every mutation here; readers may heal concurrently (see
+  * [[publish]]).
   */
 object StagedSwap {
   /** A store's commit-marker test on a staged dir. */

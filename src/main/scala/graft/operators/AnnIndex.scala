@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{Generations, StagedSwap}
+import graft.engine.{BatchStore, Generations, StagedSwap, Tombstones}
 import graft.engine.Generations.fsOf
 import graft.functions.VectorFunctions._
 
@@ -20,7 +20,9 @@ import graft.functions.VectorFunctions._
   *  - `coarse/` — (list_id, centroid), nlists rows;
   *  - `sub/`    — (m, code_id, c), numSub·numCodes rows;
   *  - `enc/`    — (neighbor_id, m, code_id) PARTITIONED BY
-  *    (batch, list_id).
+  *    (batch_id, list_id), a `BatchStore` whose generations are the
+  *    encoded batches;
+  *  - `dead/`   — the `Tombstones` of deleted vector ids.
   *
   * The `list_id` partitioning is what makes the IVF promise PHYSICAL:
   * a query filters the enc scan to its probes' nprobe lists, so
@@ -32,13 +34,12 @@ import graft.functions.VectorFunctions._
   * `appendBatch` encodes NEW vectors against the PERSISTED codebooks
   * (quantizing a batch never retrains — the standard IVF maintenance
   * contract; [[build]]/[[buildLearned]] retrain from scratch). Each
-  * batch owns an `enc/batch=<id>/` directory whose parquet `_SUCCESS`
+  * batch owns an `enc/batch_id=<id>/` directory whose parquet `_SUCCESS`
   * gates it: a retried batch id is a NO-OP once committed and an
   * overwrite of only its own directory otherwise — duplicate enc rows
   * would double ADC distance sums, so append idempotency is a
-  * correctness property here, not just hygiene (same recipe as the
-  * streaming dedup index). Single-writer-per-index, like every batch
-  * sink here.
+  * correctness property here, not just hygiene. Single-writer-per-index,
+  * like every batch sink here.
   *
   * CRASH DISCIPLINE (all three mutations leave only complete states):
   *  - build: enc is deleted FIRST, then codebooks republished — old
@@ -48,16 +49,14 @@ import graft.functions.VectorFunctions._
   *    `_SUCCESS`), so a retrying `indexStream` rebuilds instead of
   *    wedging on partial codebooks;
   *  - append: gated by the batch dir's own `_SUCCESS` (above);
-  *  - compact: whole-`enc/` staged swap, recovered by [[healEnc]].
+  *  - compact: whole-`enc/` staged swap (`BatchStore.compactWithSignal`),
+  *    recovered by `BatchStore.heal`, which every reader runs first.
   */
 object AnnIndex {
   private def coarsePath(path: String) = s"$path/coarse"
   private def subPath(path: String) = s"$path/sub"
   private def encPath(path: String) = s"$path/enc"
-  private def deadPath(path: String) = s"$path/dead"
   private def metaPath(path: String) = s"$path/train_meta"
-  // enc and dead generations alike
-  private val Prefix = "batch="
 
   /** Derive seeded codebooks from the corpus, encode it, and publish
     * the three index tables. Re-running on an existing index is a full
@@ -134,7 +133,7 @@ object AnnIndex {
       // a rebuild starts a fresh corpus generation — tombstones refer
       // to the PREVIOUS generation's membership and must not suppress
       // re-indexed ids
-      new Path(deadPath(path)))
+      Tombstones.dir(path))
       .foreach(fs.delete(_, true))
     // The three artifact publishes (coarse codebook, sub codebook,
     // train_meta) are independent single-row/tiny writes to disjoint
@@ -184,19 +183,12 @@ object AnnIndex {
       return Double.PositiveInfinity
     val nTrain = spark.read.parquet(metaPath(path)).head().getLong(0)
     if (nTrain <= 0L) return Double.PositiveInfinity
-    healEnc(spark, path)
-    val batches = committedBatches(spark, path)
-    if (batches.isEmpty) return 0.0
-    val live = spark.read.parquet(encPath(path))
-      .filter(col("batch").isin(batches: _*))
-      .select("neighbor_id").distinct()
-    val deadB = committedDeadBatches(spark, path)
-    val nLive =
-      (if (deadB.isEmpty) live
-       else live.join(deadIds(spark, path, deadB)
-           .withColumnRenamed("vec_id", "neighbor_id"),
-         Seq("neighbor_id"), "left_anti"))
-        .count()
+    BatchStore.heal(spark, encPath(path))
+    if (BatchStore.committedBatches(spark, encPath(path)).isEmpty) return 0.0
+    val nLive = Tombstones.snapshot(spark, path)
+      .mask(BatchStore.read(spark, encPath(path)).select("neighbor_id").distinct(),
+        "neighbor_id")
+      .count()
     math.max(0.0, (nLive - nTrain).toDouble / nTrain)
   }
 
@@ -212,7 +204,7 @@ object AnnIndex {
     appendedFraction(spark, path) >= maxAppendedFraction
 
   /** Encode a new batch with the index's PERSISTED codebooks and
-    * publish it under its own `batch=<id>` directory (idempotent per
+    * publish it under its own `batch_id=<id>` directory (idempotent per
     * batch id; see object doc). Default id: one past the highest
     * committed batch.
     */
@@ -222,44 +214,32 @@ object AnnIndex {
     val spark = batch.sparkSession
     require(exists(spark, path),
       s"no committed codebooks at $path — build the index first")
-    healEnc(spark, path)
+    BatchStore.heal(spark, encPath(path))
     val cents = spark.read.parquet(coarsePath(path)).localCheckpoint()
     val sub = spark.read.parquet(subPath(path)).localCheckpoint()
     val enc = new Path(encPath(path))
-    val id = if (batchId >= 0) batchId else Generations.nextId(fsOf(spark, enc), enc, Prefix)
+    val id = if (batchId >= 0) batchId
+      else Generations.nextId(fsOf(spark, enc), enc, BatchStore.Prefix)
     writeEnc(batch, cents, sub, path, dim, numSub, id)
   }
 
-  /** TOMBSTONE delete: the ids land under `dead/batch=M` (parquet's
-    * per-dir `_SUCCESS` is the commit marker, the same per-batch-dir
-    * gate the enc reads use) and every [[query]] anti-joins the live
-    * tombstone set — a delete is visible immediately without touching
-    * the encoded generations. [[compact]] applies tombstones
-    * PHYSICALLY (folds enc minus dead) and then drains exactly the
-    * tombstone dirs it snapshotted, so the live set stays bounded by
-    * deletes-since-last-compaction, never corpus scale. Idempotent per
-    * batch id like [[appendBatch]]; a rebuild clears all tombstones
-    * (previous-generation membership). Deleting an id and later
-    * re-appending it (after a compaction drained the tombstone) makes
-    * it visible again — tombstones mask, they don't retire ids.
+  /** TOMBSTONE delete (`Tombstones`): the ids land as one tombstone
+    * batch and every [[query]] masks the live tombstone set — a delete
+    * is visible immediately without touching the encoded generations.
+    * [[compact]] applies tombstones PHYSICALLY (folds enc minus dead)
+    * and then drains exactly the tombstone dirs it snapshotted, so the
+    * live set stays bounded by deletes-since-last-compaction, never
+    * corpus scale. Idempotent per batch id like [[appendBatch]]; a
+    * rebuild clears all tombstones (previous-generation membership).
+    * Deleting an id and later re-appending it (after a compaction
+    * drained the tombstone) makes it visible again — tombstones mask,
+    * they don't retire ids.
     */
   def delete(ids: DataFrame, path: String,
       batchId: Long = -1L): Unit = graft.engine.BuildTiming.timed {
-    val spark = ids.sparkSession
-    require(exists(spark, path),
+    require(exists(ids.sparkSession, path),
       s"no committed codebooks at $path — build the index first")
-    val dead = new Path(deadPath(path))
-    val fs = fsOf(spark, dead)
-    // auto-allocated MANUAL ids live above TextIndex.ManualDeleteBase,
-    // disjoint from deleteStream's engine batch ids (count from 0): a
-    // shared namespace would let a manual batch=0 trip the stream's
-    // committed-retry guard and silently drop the stream's tombstones.
-    val id = if (batchId >= 0) batchId
-      else math.max(Generations.nextId(fs, dead, Prefix), TextIndex.ManualDeleteBase)
-    Generations.gate(fs, dead, Prefix, id)(dir =>
-      ids.select(col("vec_id").cast("long").as("vec_id")).distinct()
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(dir.toString))
+    Tombstones.add(ids.select(col("vec_id")), path, batchId)
   }
 
   /** [[delete]] as a streaming face: a stream of ids to forget (an
@@ -281,23 +261,8 @@ object AnnIndex {
       compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     Generations.stream(ids, checkpoint, compactEvery,
-      committedDeadBatches(_, path).size, compact(_, path))(
+      Tombstones.committed(_, path).size, compact(_, path))(
       (batch, id) => delete(batch, path, batchId = id))
-
-  /** Committed tombstone batch ids (the dead set is small by the
-    * compaction-drain contract).
-    */
-  private[graft] def committedDeadBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(deadPath(path))
-    Generations.committed(fsOf(spark, p), p, Prefix)
-  }
-
-  /** The live tombstoned id set (distinct, committed dirs only). */
-  private[operators] def deadIds(spark: SparkSession, path: String,
-      batches: Seq[Long]): DataFrame =
-    spark.read.parquet(deadPath(path))
-      .filter(col("batch").isin(batches: _*))
-      .select(col("vec_id")).distinct()
 
   /** True once the index's codebooks are COMMITTED — parquet's
     * `_SUCCESS` under both `coarse/` and `sub/`. A build killed
@@ -341,7 +306,7 @@ object AnnIndex {
       rebuildCorpus: DataFrame => DataFrame = null)
       : org.apache.spark.sql.streaming.StreamingQuery =
     Generations.stream(vectors, checkpoint, compactEvery,
-      committedBatches(_, path).size, compact(_, path)) { (batch, id) =>
+      BatchStore.committedBatches(_, encPath(path)).size, compact(_, path)) { (batch, id) =>
       val spark = batch.sparkSession
       if (!exists(spark, path))
         build(batch, path, dim, nlists, numSub, numCodes, batchId = id)
@@ -357,83 +322,27 @@ object AnnIndex {
       }
     }
 
-  /** Merge every committed `enc/batch=N` generation into ONE —
+  /** Merge every committed `enc/batch_id=N` generation into ONE —
     * the small-file remedy for a long-running `indexStream`, which
     * otherwise accretes a parquet directory per micro-batch forever
     * (thousands of tiny files per list; O(batches) listings at query
     * planning). Results are IDENTICAL before and after (spec-asserted):
     * compaction rewrites committed rows only, into the same
-    * (batch=0, list_id) layout, so partition pruning survives.
-    *
-    * Crash-safe publish (`StagedSwap.publish`): the merged generation
-    * is staged beside `enc/`, marked committed by a batch-level
-    * `_SUCCESS` (the READER gate — parquet's root marker alone doesn't
-    * make batch dirs readable), then swapped in by two atomic renames.
-    * A writer killed at ANY step is recovered by [[healEnc]], which
-    * every entry point runs first: staging committed → roll forward;
-    * otherwise → roll back to the intact old `enc/`. A fold aborted by
-    * a concurrent reader's heal drains no tombstone.
+    * (batch_id, list_id) layout at the MAX folded id, so partition
+    * pruning survives and a streaming retry of the last folded batch id
+    * stays a no-op. The fold is `BatchStore`'s staged swap with the
+    * snapshotted tombstones as its merge (`Tombstones.compact`), and
+    * those tombstones drain only once the fold COMMITTED: with no
+    * committed enc generation (a build killed inside its encode) the
+    * fold returns false and they stay, because the retried append
+    * rewrites that generation with the deleted ids in it.
     */
   def compact(spark: SparkSession,
       path: String): Unit = graft.engine.BuildTiming.timed {
-    healEnc(spark, path)
-    val enc = new Path(encPath(path))
-    val fs = fsOf(spark, enc)
-    if (!fs.exists(enc)) return
-    val batches = committedBatches(spark, path)
-    // SNAPSHOT the tombstone dirs to apply: deletes landing after this
-    // point are untouched by the post-swap drain below, so they are
-    // never lost (their rows survive the fold and the tombstone stays
-    // live until the next compaction)
-    val deadBatches = committedDeadBatches(spark, path)
-    if (batches.size <= 1 && deadBatches.isEmpty) return
-    // the merged generation takes the MAX folded id, NOT 0: a
-    // streaming writer killed between its append commit and the
-    // engine's checkpoint commit will RE-DELIVER that last batch id,
-    // and only its dir still existing (as the compacted generation)
-    // keeps the retry a no-op — folding to 0 would re-append the
-    // retried rows beside their compacted copies and double ADC sums
-    val genId = batches.max
-    val committed = StagedSwap.publish(fs, enc) { staging =>
-      val kept = spark.read.parquet(encPath(path))
-        .filter(col("batch").isin(batches: _*))
-        .withColumn("batch", lit(genId))
-      // apply tombstones physically: the folded generation simply
-      // doesn't contain dead rows
-      val folded =
-        if (deadBatches.isEmpty) kept
-        else kept.join(
-          deadIds(spark, path, deadBatches)
-            .withColumnRenamed("vec_id", "neighbor_id").localCheckpoint(),
-          Seq("neighbor_id"), "left_anti")
-      // cluster by list_id before the partitioned write (the BatchStore
-      // fold discipline): the tombstone anti-join shuffles, after which
-      // every task holds rows of every list — an unclustered write fans
-      // out tasks x nlists small files per fold
-      folded.repartition(col("list_id"))
-        .write.mode(SaveMode.Overwrite).partitionBy("batch", "list_id")
-        .parquet(staging.toString)
-      // reader gate: batch-level _SUCCESS (parquet only marks the root)
-      Generations.markCommitted(fs, staging, Prefix, genId)
-    }
-    if (!committed) return
-    // drain ONLY the snapshotted tombstone dirs — their rows are gone
-    // from the folded generation. A crash before this point leaves
-    // them live, which is harmless (the anti-join masks rows that no
-    // longer exist); deletes that arrived mid-compaction keep their
-    // dirs and stay effective.
-    deadBatches.foreach(b =>
-      fs.delete(Generations.dir(new Path(deadPath(path)), Prefix, b), true))
-  }
-
-  /** Recover `enc/` around an interrupted [[compact]] swap
-    * (`StagedSwap.heal`): the staging rolls forward only once its
-    * merged batch dir carries the reader-gate `_SUCCESS`.
-    */
-  private[graft] def healEnc(spark: SparkSession, path: String): Unit = {
-    val enc = new Path(encPath(path))
-    StagedSwap.heal(fsOf(spark, enc), enc,
-      StagedSwap.generationSuccess(Prefix))
+    Tombstones.compact(spark, path)(dead =>
+      BatchStore.compactWithSignal(spark, encPath(path),
+        merge = dead.mask(_, "neighbor_id"),
+        subPartitionCols = Seq("list_id"), force = !dead.isEmpty))
   }
 
   /** `query` + exact-cosine re-ranking: the PQ shortlist (k·candMult
@@ -452,16 +361,10 @@ object AnnIndex {
     Similarity.rerankExact(corpus, probes, shortlist, k)
   }
 
-  /** Committed `enc/` generation ids. */
-  private[graft] def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new Path(encPath(path))
-    Generations.committed(fsOf(spark, p), p, Prefix)
-  }
-
   private def writeEnc(vectors: DataFrame, cents: DataFrame, sub: DataFrame,
       path: String, dim: Int, numSub: Int, batchId: Long): Unit = {
     val enc = new Path(encPath(path))
-    Generations.gate(fsOf(vectors.sparkSession, enc), enc, Prefix, batchId) { batchDir =>
+    Generations.gate(fsOf(vectors.sparkSession, enc), enc, BatchStore.Prefix, batchId) { batchDir =>
       val codes = Similarity.pqEncodeWithCodebook(vectors, dim, numSub, sub)
       val lists = Similarity.nearestListIds(
         vectors.select(col("vec_id").as("neighbor_id"),
@@ -551,17 +454,11 @@ object AnnIndex {
     // instead of a raw PATH_NOT_FOUND from inside the enc read
     require(exists(spark, path),
       s"no committed codebooks at $path — build the index first")
-    healEnc(spark, path)
-    val all = spark.read.parquet(encPath(path))
-      .filter(col("batch").isin(committedBatches(spark, path): _*))
-      .select("list_id", "neighbor_id")
-      .dropDuplicates("list_id", "neighbor_id")
-    val deadBatches = committedDeadBatches(spark, path)
-    if (deadBatches.isEmpty) all
-    else all.join(
-      deadIds(spark, path, deadBatches)
-        .withColumnRenamed("vec_id", "neighbor_id").localCheckpoint(),
-      Seq("neighbor_id"), "left_anti")
+    Tombstones.snapshot(spark, path).mask(
+      BatchStore.read(spark, encPath(path))
+        .select("list_id", "neighbor_id")
+        .dropDuplicates("list_id", "neighbor_id"),
+      "neighbor_id")
   }
 
   def query(spark: SparkSession, path: String, probes: DataFrame, k: Int,
@@ -571,7 +468,6 @@ object AnnIndex {
   private def queryImpl(spark: SparkSession, path: String, probes: DataFrame,
       k: Int, dim: Int, nprobe: Int, numSub: Int,
       eligible: Option[DataFrame]): DataFrame = {
-    healEnc(spark, path)
     val cents = spark.read.parquet(coarsePath(path)).localCheckpoint()
     val sub = spark.read.parquet(subPath(path)).localCheckpoint()
     val probeLists = Similarity.nearestLists(
@@ -581,25 +477,18 @@ object AnnIndex {
       .select("list_id", "query_id")
       .localCheckpoint()
     // |probes|·nprobe ids — driver-collected to a literal IN so the
-    // filter lands as a static PartitionFilter on the scan; batches
-    // are filtered to COMMITTED ones (parquet _SUCCESS), so a writer
-    // killed mid-append is invisible to readers
+    // filter lands as a static PartitionFilter on the scan;
+    // `BatchStore.read` keeps COMMITTED batches only (parquet
+    // _SUCCESS), so a writer killed mid-append is invisible to readers
     val probed = probeLists.select("list_id").distinct()
       .collect().map(_.get(0))
-    val encAll = spark.read.parquet(encPath(path))
-      .filter(col("batch").isin(committedBatches(spark, path): _*))
-      .filter(col("list_id").isin(probed: _*))
-      .drop("batch")
     // mask tombstoned ids (bounded by deletes-since-last-compaction —
-    // compact() drains the set — and checkpointed per the broadcast
-    // discipline: never a raw file-scan plan on a broadcast side)
-    val deadBatches = committedDeadBatches(spark, path)
-    val encLive =
-      if (deadBatches.isEmpty) encAll
-      else encAll.join(
-        deadIds(spark, path, deadBatches)
-          .withColumnRenamed("vec_id", "neighbor_id").localCheckpoint(),
-        Seq("neighbor_id"), "left_anti")
+    // compact() drains the set)
+    val encLive = Tombstones.snapshot(spark, path).mask(
+      BatchStore.read(spark, encPath(path))
+        .filter(col("list_id").isin(probed: _*))
+        .drop("batch_id"),
+      "neighbor_id")
     // pre-filter: eligible ids cut the candidate set BEFORE the ADC
     // aggregate — a shuffled semi-join (see queryFiltered's contract)
     val enc = eligible match {

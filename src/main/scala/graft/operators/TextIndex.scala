@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{BatchStore, Generations}
+import graft.engine.{BatchStore, Generations, Tombstones}
 
 /** Persisted inverted text index with BM25 queries — the text-retrieval
   * sibling of `AnnIndex`: build/append once, query many times, without
@@ -34,46 +34,23 @@ import graft.engine.{BatchStore, Generations}
   * tok_bucket pruning sub-layout and summing stats to one row.
   */
 object TextIndex {
-  /** Floor for auto-allocated manual-delete tombstone ids — keeps the
-    * manual and streaming-engine id ranges disjoint (engine batch ids
-    * count from 0 and stay far below 2^40 for any real stream).
-    */
-  private[operators] val ManualDeleteBase: Long = 1L << 40
-
   private def postingsPath(path: String) = path + "/postings"
   private def statsPath(path: String) = path + "/stats"
-  private def deadPath(path: String) = path + "/dead"
-  private val DeadPrefix = "batch="
 
-  /** TOMBSTONE delete (the `AnnIndex.delete` shape): doc ids to forget
-    * land under `dead/batch=M` (parquet's own per-dir `_SUCCESS` is
-    * the commit marker), idempotent per batch id. Queries mask the
-    * live tombstone set; `compact` folds the postings minus the dead
-    * docs and re-fits the stats. Until that compaction, corpus
-    * statistics (df, n_docs, avgdl) still reflect the pre-delete
-    * corpus — exactly Lucene's deleted-docs-until-merge semantics, and
-    * what makes the mask equal a deep-rank filter of the pre-delete
-    * ranking (surviving docs' scores are unchanged).
+  /** TOMBSTONE delete (`Tombstones`, the `AnnIndex.delete` shape): doc
+    * ids to forget land as one tombstone batch, idempotent per batch
+    * id. Queries mask the live tombstone set; `compact` folds the
+    * postings minus the dead docs and re-fits the stats. Until that
+    * compaction, corpus statistics (df, n_docs, avgdl) still reflect
+    * the pre-delete corpus — exactly Lucene's deleted-docs-until-merge
+    * semantics, and what makes the mask equal a deep-rank filter of the
+    * pre-delete ranking (surviving docs' scores are unchanged).
     */
   def delete(ids: DataFrame, idCol: String, path: String,
       batchId: Long = -1L): Unit = graft.engine.BuildTiming.timed {
-    val spark = ids.sparkSession
-    require(committedBatches(spark, path).nonEmpty,
+    require(committedBatches(ids.sparkSession, path).nonEmpty,
       s"no committed index at $path — build it first")
-    val dead = new Path(deadPath(path))
-    val fs = Generations.fsOf(spark, dead)
-    // auto-allocated MANUAL ids live above ManualDeleteBase, DISJOINT
-    // from deleteStream's engine batch ids (which count from 0): were
-    // they shared, a manual batch=0 would make the stream's batch 0 hit
-    // the committed-retry guard and silently drop its tombstones.
-    // Callers passing an EXPLICIT batchId own that discipline (the
-    // engine-id contract) and must not mix manual ids into it.
-    val id = if (batchId >= 0) batchId
-      else math.max(Generations.nextId(fs, dead, DeadPrefix), ManualDeleteBase)
-    Generations.gate(fs, dead, DeadPrefix, id)(dir =>
-      ids.select(col(idCol).cast("long").as("doc")).distinct()
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(dir.toString))
+    Tombstones.add(ids.select(col(idCol)), path, batchId)
   }
 
   /** [[delete]] as a streaming face (a takedown/unsubscribe feed):
@@ -94,32 +71,22 @@ object TextIndex {
       checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
     Generations.stream(ids, checkpoint, compactEvery,
-      committedDeadBatches(_, path).size, compact(_, path))(
+      Tombstones.committed(_, path).size, compact(_, path))(
       (batch, id) => delete(batch, idCol, path, batchId = id))
 
-  /** Committed tombstone batch ids — per-dir `_SUCCESS` probes (the
-    * dead set stays small by the compaction-drain contract).
-    */
-  private[graft] def committedDeadBatches(spark: SparkSession,
-      path: String): Seq[Long] = {
-    val p = new Path(deadPath(path))
-    Generations.committed(Generations.fsOf(spark, p), p, DeadPrefix)
-  }
-
-  private def deadDocs(spark: SparkSession, path: String,
-      batches: Seq[Long]): DataFrame = {
-    val dead = new Path(deadPath(path))
-    spark.read
-      .parquet(batches.map(Generations.dir(dead, DeadPrefix, _).toString): _*)
-      .select(col("doc")).distinct()
-  }
-
   /** Committed generations: batches whose postings AND stats both
-    * carry their `_SUCCESS` marker.
+    * carry their `_SUCCESS` marker, after healing both sub-stores (a
+    * compaction killed between its swap renames leaves one of them
+    * parked in its backup until a heal restores it).
     */
-  def committedBatches(spark: SparkSession, path: String): Seq[Long] =
+  def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
+    heal(spark, path)
     BatchStore.committedBatches(spark, postingsPath(path))
       .intersect(BatchStore.committedBatches(spark, statsPath(path)))
+  }
+
+  private def heal(spark: SparkSession, path: String): Unit =
+    Seq(postingsPath(path), statsPath(path)).foreach(BatchStore.heal(spark, _))
 
   /** Idempotently add one batch of documents to the index. Gated on
     * the stats marker (written last): a committed batch id is a no-op,
@@ -132,6 +99,10 @@ object TextIndex {
   def appendBatch(docs: DataFrame, idCol: String, textCol: String,
       path: String, batchId: Long, buckets: Int = 64,
       withPositions: Boolean = true): Unit = graft.engine.BuildTiming.timed {
+    // heal FIRST: writing a generation into a sub-store whose live dir
+    // sits in its swap backup would recreate the dir, and the next heal
+    // would then drop the backup with every earlier generation in it
+    heal(docs.sparkSession, path)
     val stats = new Path(statsPath(path))
     Generations.gate(Generations.fsOf(docs.sparkSession, stats), stats,
       BatchStore.Prefix, batchId) { statsDir =>
@@ -214,11 +185,7 @@ object TextIndex {
     // tombstone mask on the SCORED side only: df/n_docs/avgdl keep the
     // pre-delete corpus until compaction (Lucene semantics), so a
     // masked ranking == the pre-delete ranking minus the dead docs
-    val deadB = committedDeadBatches(spark, path)
-    val live =
-      if (deadB.isEmpty) postings
-      else postings.join(deadDocs(spark, path, deadB).localCheckpoint(),
-        Seq("doc"), "left_anti")
+    val live = Tombstones.snapshot(spark, path).mask(postings, "doc")
     // nano-quantized long accumulation — must mirror
     // TextAnalysis.bm25ScoreTermsDf exactly (shared oracle verbatim)
     val scored = live
@@ -267,15 +234,10 @@ object TextIndex {
     val postings = spark.read.parquet(postingsPath(path))
     require(postings.columns.contains("positions"),
       s"index at $path was built withPositions=false — phrase search needs a positional index")
-    val deadB = committedDeadBatches(spark, path)
-    val pruned = postings
+    val live = Tombstones.snapshot(spark, path).mask(postings
       .filter(col("batch_id").isin(committed: _*))
       .filter(col("tok_bucket").isin(probeBuckets: _*))
-      .filter(col("token").isin(probeTokens: _*))
-    val live =
-      if (deadB.isEmpty) pruned
-      else pruned.join(deadDocs(spark, path, deadB).localCheckpoint(),
-        Seq("doc"), "left_anti")
+      .filter(col("token").isin(probeTokens: _*)), "doc")
     // coverage as a BIT MASK, not countDistinct: bit_or pre-combines
     // map-side (countDistinct planned an Expand + a second shuffle
     // carrying one row per posting OCCURRENCE — 31 MB at sf0.1, the
@@ -323,64 +285,52 @@ object TextIndex {
     * stats sum to a single row — constant size no matter how many
     * batches have passed.
     *
-    * Tombstones: the dead batches are SNAPSHOTTED at entry (a delete
-    * landing mid-compaction stays live for the next one — the
-    * `AnnIndex.compact` contract); the fold drops their docs from the
-    * postings, stats are RE-FIT exactly from the folded postings (the
-    * stale-until-merge window ends here), and only the snapshotted
-    * tombstone dirs drain — and only after verifying their docs
-    * actually left the committed postings, so a skipped or
-    * race-aborted fold (`BatchStore.compact` may abort quietly) can
-    * never lose a delete.
+    * Tombstones (`Tombstones.compact`): the fold drops the snapshotted
+    * dead docs from the postings, stats are RE-FIT exactly from the
+    * folded postings (the stale-until-merge window ends here), and the
+    * snapshotted tombstones drain only on this store's proof that their
+    * docs are gone, so a skipped or race-aborted fold
+    * (`BatchStore.compact` may abort quietly) can never lose a delete.
     */
   def compact(spark: SparkSession,
       path: String): Unit = graft.engine.BuildTiming.timed {
-    val deadB = committedDeadBatches(spark, path) // snapshot at entry
-    if (deadB.isEmpty) {
-      // postings and stats are sibling sub-stores with independent
-      // commit gates (readers intersect their committed ids), so the
-      // two folds are independent chains — overlap them
-      graft.engine.Par.inParallel(
-        () => BatchStore.compact(spark, postingsPath(path),
-          subPartitionCols = Seq("tok_bucket")),
-        () => BatchStore.compact(spark, statsPath(path),
-          merge = df => df.agg(sum("n_docs").as("n_docs"),
-            sum("sum_dl").as("sum_dl"))))
-    } else {
-      // ONE checkpointed tombstone set feeds the fold's mask and the
-      // drain decision (previously three separate checkpoint jobs)
-      val dead = deadDocs(spark, path, deadB).localCheckpoint()
-      val folded = BatchStore.compactWithSignal(spark, postingsPath(path),
-        merge = df => df.join(dead, Seq("doc"), "left_anti"),
-        subPartitionCols = Seq("tok_bucket"), force = true)
-      // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
-      // from the committed postings instead of summing stale rows — only
-      // from a COMMITTED fold: after a skipped or aborted one the old
-      // postings still hold the dead docs, and stats re-fit from them
-      // would publish counts that disagree with the live tombstones
-      if (folded) {
-        val committed = BatchStore.committedBatches(spark, postingsPath(path))
-        val statsDf = spark.read.parquet(postingsPath(path))
-          .filter(col("batch_id").isin(committed: _*))
-          .select(col("doc"), col("dl")).distinct()
-          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-          .localCheckpoint()
-        BatchStore.compact(spark, statsPath(path), merge = _ => statsDf,
-          force = true)
-      }
-      // drain gate: a tombstone may only drop once its docs are gone.
-      // The fold's COMMIT signal is the proof: a committed fold's
-      // generation is exactly anti-join(previous committed postings,
-      // dead), so the dead docs cannot be present — the verification
-      // rescan of the whole store is redundant. A postings store with
-      // no committed generation holds no doc at all, so its tombstones
-      // drain too (the fold has nothing to fold there and returns
-      // false). A race-aborted fold returns false and the tombstones
-      // stay live for the next compaction, exactly as before.
-      if (folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty) {
-        val dp = new Path(deadPath(path))
-        val fs = Generations.fsOf(spark, dp)
-        deadB.foreach(b => fs.delete(Generations.dir(dp, DeadPrefix, b), true))
+    Tombstones.compact(spark, path) { dead =>
+      if (dead.isEmpty) {
+        // postings and stats are sibling sub-stores with independent
+        // commit gates (readers intersect their committed ids), so the
+        // two folds are independent chains — overlap them
+        graft.engine.Par.inParallel(
+          () => BatchStore.compact(spark, postingsPath(path),
+            subPartitionCols = Seq("tok_bucket")),
+          () => BatchStore.compact(spark, statsPath(path),
+            merge = df => df.agg(sum("n_docs").as("n_docs"),
+              sum("sum_dl").as("sum_dl"))))
+        false
+      } else {
+        val folded = BatchStore.compactWithSignal(spark, postingsPath(path),
+          merge = dead.mask(_, "doc"),
+          subPartitionCols = Seq("tok_bucket"), force = true)
+        // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
+        // from the committed postings instead of summing stale rows — only
+        // from a COMMITTED fold: after a skipped or aborted one the old
+        // postings still hold the dead docs, and stats re-fit from them
+        // would publish counts that disagree with the live tombstones
+        if (folded) {
+          val committed = BatchStore.committedBatches(spark, postingsPath(path))
+          val statsDf = spark.read.parquet(postingsPath(path))
+            .filter(col("batch_id").isin(committed: _*))
+            .select(col("doc"), col("dl")).distinct()
+            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+            .localCheckpoint()
+          BatchStore.compact(spark, statsPath(path), merge = _ => statsDf,
+            force = true)
+        }
+        // drain proof: a committed fold's generation is exactly
+        // anti-join(previous committed postings, dead), so the dead docs
+        // cannot be present. A postings store with no committed
+        // generation holds no doc at all, so its tombstones drain too
+        // (the fold has nothing to fold there and returns false).
+        folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty
       }
     }
   }

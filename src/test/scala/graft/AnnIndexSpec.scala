@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Tables, Tombstones}
 import graft.operators.{AnnIndex, Similarity}
 
 /** The persisted IVF+PQ index: I/O round-trip equals the inline
@@ -114,22 +114,45 @@ class AnnIndexSpec extends SparkSpecBase {
     // the auto-allocated MANUAL id lives at/above 2^40, disjoint from
     // deleteStream's engine batch ids (count from 0) — and a retried
     // delete batch id is a no-op
-    val manualId = AnnIndex.committedDeadBatches(spark, dir) match {
+    val manualId = Tombstones.committed(spark, dir) match {
       case Seq(id) => assert(id >= (1L << 40),
         "manual tombstone id collided with the engine-id namespace"); id
       case other => fail(s"expected one tombstone batch, got $other")
     }
     AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"),
       dir, batchId = manualId)
-    assert(AnnIndex.committedDeadBatches(spark, dir) == Seq(manualId))
+    assert(Tombstones.committed(spark, dir) == Seq(manualId))
     // compaction drops the rows physically and drains the tombstones
     AnnIndex.compact(spark, dir)
-    assert(AnnIndex.committedDeadBatches(spark, dir).isEmpty,
+    assert(Tombstones.committed(spark, dir).isEmpty,
       "compaction did not drain applied tombstones")
     assert(gotNow() == expect, "compaction changed the masked ranking")
     // a tombstone for rows already gone is harmless
     AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"), dir)
     assert(gotNow() == expect, "stale tombstone changed results")
+  }
+
+  test("compact keeps live tombstones when enc holds no committed generation") {
+    import org.apache.hadoop.fs.Path
+    val dir = tempDir("graft_annnoenc") + "/idx"
+    AnnIndex.build(emb, dir, dim = 64)
+    AnnIndex.delete(emb.filter(col("vec_id") % 7 === 0).select("vec_id"), dir)
+    val live = Tombstones.committed(spark, dir)
+    // a build killed inside its encode once the codebooks had committed:
+    // the enc generation never got its commit marker
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(s"$dir/enc")).filter(_.isDirectory)
+      .foreach(g => assert(fs.delete(new Path(g.getPath, "_SUCCESS"), false)))
+    AnnIndex.compact(spark, dir)
+    assert(Tombstones.committed(spark, dir) == live,
+      "compact drained tombstones that no fold applied")
+    // the retried encode rewrites that generation with the deleted ids
+    // in it: only the kept tombstones still hide them
+    AnnIndex.appendBatch(emb, dir, dim = 64, batchId = 0L)
+    val got = AnnIndex.query(spark, dir, emb.filter(col("vec_id") < 10), k = 5, dim = 64)
+      .collect()
+    assert(got.nonEmpty && got.forall(_.getLong(2) % 7 != 0),
+      "a deleted id came back with the retried append")
   }
 
   test("delete stream: batched tombstones mask like one batch delete; compactEvery drains them") {
@@ -159,7 +182,7 @@ class AnnIndexSpec extends SparkSpecBase {
       .collect().map(key).toSeq
     assert(streamed == oneShot, "streamed deletes diverged from batch delete")
     // compactEvery = 2 applied + drained the tombstones physically
-    assert(AnnIndex.committedDeadBatches(spark, dir).isEmpty,
+    assert(Tombstones.committed(spark, dir).isEmpty,
       "delete stream did not compact its tombstones away")
   }
 
@@ -247,7 +270,7 @@ class AnnIndexSpec extends SparkSpecBase {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/enc"))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
+      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
     assert(batchDirs.length == 1,
       s"auto-compaction left ${batchDirs.toSeq} generations")
     // completeness is exact at the index level: every ingested vector
@@ -323,8 +346,8 @@ class AnnIndexSpec extends SparkSpecBase {
     // merged generation keeps the MAX folded id (2), so a streaming
     // retry of the last engine batch still reads as committed
     val batchDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/enc"))
-      .map(_.getPath.getName).filter(_.startsWith("batch="))
-    assert(batchDirs.toSeq == Seq("batch=2"),
+      .map(_.getPath.getName).filter(_.startsWith("batch_id="))
+    assert(batchDirs.toSeq == Seq("batch_id=2"),
       s"compaction left multiple generations: ${batchDirs.toSeq}")
     // the last-batch retry is a no-op against the compacted generation
     AnnIndex.appendBatch(probes.withColumn("vec_id", col("vec_id") + 20000L),
@@ -359,10 +382,10 @@ class AnnIndexSpec extends SparkSpecBase {
       // here hold batches 0 and 1, so the merged generation is 1)
       val staging = new Path(s"$dir/enc._compacting")
       spark.read.parquet(s"$dir/enc")
-        .withColumn("batch", lit(1L))
+        .withColumn("batch_id", lit(1L))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("batch", "list_id").parquet(staging.toString)
-      fs.create(new Path(staging, "batch=1/_SUCCESS")).close()
+        .partitionBy("batch_id", "list_id").parquet(staging.toString)
+      fs.create(new Path(staging, "batch_id=1/_SUCCESS")).close()
       staging
     }
     // state 1: killed BEFORE the first rename (staging complete, enc
@@ -383,7 +406,7 @@ class AnnIndexSpec extends SparkSpecBase {
     // backup-only state (staging lost) must roll back to the backup
     val (d3, r3) = freshIndex("c")
     val st3 = stageCompacted(d3)
-    fs.delete(new Path(st3, "batch=1/_SUCCESS"), false)
+    fs.delete(new Path(st3, "batch_id=1/_SUCCESS"), false)
     assert(fs.rename(new Path(s"$d3/enc"), new Path(s"$d3/enc._old")))
     val h3 = AnnIndex.query(spark, d3, probes, k = 5, dim = 64).collect().map(key)
     assert(h3.sameElements(r3), "uncommitted staging did not roll back to backup")

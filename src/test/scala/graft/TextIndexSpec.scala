@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{Tables, Tombstones}
 import graft.operators.{TextAnalysis, TextIndex}
 
 /** The persisted inverted text index: I/O-equality with the inline
@@ -41,6 +41,23 @@ class TextIndexSpec extends SparkSpecBase {
     val got = TextIndex.query(spark, path, probes, "query_id", "qtext", k = 10)
       .collect().map(key)
     assert(inline.nonEmpty && got.toSeq == inline.toSeq)
+  }
+
+  test("an append after a compaction killed between its swap renames keeps every generation") {
+    val path = tempDir("graft_tidx_swapkill") + "/idx"
+    Seq(0L, 1L).foreach(b => TextIndex.appendBatch(corpus.filter(col("doc_id") % 3 === b),
+      "doc_id", "text", path, batchId = b))
+    // the postings fold's first rename parked the live dir in its backup
+    val postings = new Path(path + "/postings")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(postings, graft.engine.StagedSwap.backup(postings)))
+    TextIndex.appendBatch(corpus.filter(col("doc_id") % 3 === 2),
+      "doc_id", "text", path, batchId = 2L)
+    assert(TextIndex.committedBatches(spark, path) == Seq(0L, 1L, 2L),
+      "the append recreated the postings beside their backup and lost earlier generations")
+    val got = TextIndex.query(spark, path, probes, "query_id", "qtext", k = 10)
+      .collect().map(key)
+    assert(got.toSeq == inline.toSeq)
   }
 
   test("a retried append is a no-op; a half-written batch heals on retry") {
@@ -205,16 +222,16 @@ class TextIndexSpec extends SparkSpecBase {
     // the auto-allocated MANUAL id lives at/above 2^40, disjoint from
     // deleteStream's engine batch ids (count from 0) — and a retried
     // tombstone batch id is a no-op
-    val manualId = TextIndex.committedDeadBatches(spark, path) match {
+    val manualId = Tombstones.committed(spark, path) match {
       case Seq(id) => assert(id >= (1L << 40),
         "manual tombstone id collided with the engine-id namespace"); id
       case other => fail(s"expected one tombstone batch, got $other")
     }
     TextIndex.delete(deadIds, "doc_id", path, batchId = manualId)
-    assert(TextIndex.committedDeadBatches(spark, path) == Seq(manualId))
+    assert(Tombstones.committed(spark, path) == Seq(manualId))
     // compact: folds minus dead, RE-FITS stats, drains the tombstones
     TextIndex.compact(spark, path)
-    assert(TextIndex.committedDeadBatches(spark, path).isEmpty,
+    assert(Tombstones.committed(spark, path).isEmpty,
       "compaction should drain applied tombstones")
     val survivors = corpus.filter(col("doc_id") % 7 =!= 0)
     val inlineSurv = TextAnalysis.bm25TopK(survivors, "doc_id", "text",
@@ -236,7 +253,7 @@ class TextIndexSpec extends SparkSpecBase {
     TextIndex.delete(corpus.filter(col("doc_id") % 7 === 0)
       .select("doc_id"), "doc_id", path)
     TextIndex.compact(spark, path) // one batch + tombstones must still fold
-    assert(TextIndex.committedDeadBatches(spark, path).isEmpty)
+    assert(Tombstones.committed(spark, path).isEmpty)
     val inlineSurv = TextAnalysis.bm25TopK(
       corpus.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
       probes, "query_id", "qtext", k = 10).collect().map(key)
@@ -261,9 +278,9 @@ class TextIndexSpec extends SparkSpecBase {
 
   test("tombstones drain when the postings store holds no committed generation") {
     val path = uncommittedPostingsWithTombstones("drain")
-    assert(TextIndex.committedDeadBatches(spark, path).nonEmpty)
+    assert(Tombstones.committed(spark, path).nonEmpty)
     TextIndex.compact(spark, path)
-    assert(TextIndex.committedDeadBatches(spark, path).isEmpty,
+    assert(Tombstones.committed(spark, path).isEmpty,
       "tombstones against an empty postings store never drain")
   }
 
