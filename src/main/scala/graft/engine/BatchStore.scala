@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import Generations.fsOf
@@ -29,6 +29,10 @@ import Generations.fsOf
   * folds apply their `Tombstones`), passes a merge hook to [[compact]]
   * itself.
   *
+  * A generation that spans several roots (TextIndex, PairStore) is a
+  * [[Group]]'s: it commits with its gate root, written last — the
+  * reference's one-transaction load (`bronze_ingest.py:7-11`).
+  *
   * Crash discipline is `StagedSwap`'s: the folded generation is
   * staged beside the store, its per-dir `_SUCCESS` marker — created
   * LAST — is the commit point, and the swap is two atomic renames.
@@ -55,11 +59,23 @@ object BatchStore {
     * count-min rows corrupt totals, they don't just waste work). Every
     * report reader goes through here.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    heal(spark, path)
-    spark.read.parquet(path)
-      .filter(col("batch_id").isin(committedBatches(spark, path): _*))
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    Group(path, Nil).view(spark).read(path)
+
+  /** The committed generations strictly BEFORE `batchId`, batch id
+    * dropped — the standing side of an increment (`None` when there is
+    * none). A fold keeps the MAX folded id and ids are never reissued,
+    * so the bound holds across folds, and no crashed attempt feeds a
+    * retry.
+    */
+  def before(spark: SparkSession, path: String, batchId: Long): Option[DataFrame] =
+    Group(path, Nil).view(spark).before(path, batchId)
+
+  /** Generations `ids` of the store at `path`, `batch_id` kept, as one
+    * static `isin` literal (a scan PartitionFilter).
+    */
+  private def readIds(spark: SparkSession, path: String, ids: Seq[Long]): DataFrame =
+    spark.read.parquet(path).filter(col("batch_id").isin(ids: _*))
 
   /** Fold committed generations into one (see object doc). Uncommitted
     * dirs are garbage pending their retry's overwrite — dropped.
@@ -95,10 +111,7 @@ object BatchStore {
     if (batches.isEmpty || (batches.size <= 1 && !force)) return false
     val genId = batches.max
     StagedSwap.publish(fs, p) { staging =>
-      val folded = merge(
-        spark.read.parquet(path)
-          .filter(col("batch_id").isin(batches: _*))
-          .drop("batch_id"))
+      val folded = merge(readIds(spark, path, batches).drop("batch_id"))
         .withColumn("batch_id", lit(genId))
       // stores with a pruning sub-layout under each generation
       // (TextIndex's tok_bucket, AnnIndex's list_id) keep it through the
@@ -139,15 +152,11 @@ object BatchStore {
     * write `rows` over the dir (a partial earlier attempt is
     * overwritten). `rows` is by-name, so a committed retry computes
     * nothing, and a step that reads its own store first does so inside
-    * it.
+    * it. A one-root [[Group]].
     */
   def commitStep(spark: SparkSession, path: String, batchId: Long)(
-      rows: => DataFrame): Unit = {
-    heal(spark, path)
-    val p = new Path(path)
-    Generations.gate(fsOf(spark, p), p, Prefix, batchId)(dir =>
-      rows.write.mode("overwrite").parquet(dir.toString))
-  }
+      rows: => DataFrame): Unit =
+    Group(path, Nil).append(spark, batchId)(_ => Seq(rows.write))
 
   /** A mergeable micro-batch store: `fold` maps any union of the
     * store's rows (batch id dropped) to the same schema, and folding
@@ -184,5 +193,91 @@ object BatchStore {
         committedBatches(_, path).size, compact(_, path)) { (batch, batchId) =>
         append(batch.sparkSession, path, batchId)(rows(batch))
       }
+  }
+
+  /** One generation written across several `batch_id=N` roots: the
+    * `dependents` in order, then the `gate` LAST. The gate's committed
+    * ids G are the group's committed generations. Readers ([[View]]) see
+    * the gate's generations in G and a dependent's committed ones whose
+    * id is in G. Writers ([[append]], [[compact]]) heal every root first
+    * (a gate parked in its swap backup reads as G = ∅), then delete the
+    * dependent generations outside G — orphans of a writer killed before
+    * its gate committed, which a fold must not absorb into the
+    * generation their retry overwrites. Readers never delete: a
+    * concurrent writer's next generation is not in G yet. Single writer
+    * per group.
+    */
+  final case class Group(gate: String, dependents: Seq[String]) {
+    private def roots: Seq[String] = dependents :+ gate
+
+    /** Heal every root, then take G. */
+    def view(spark: SparkSession): View = {
+      roots.foreach(heal(spark, _))
+      new View(spark, this, committedBatches(spark, gate))
+    }
+
+    /** G, ascending. */
+    def committed(spark: SparkSession): Seq[Long] = view(spark).ids
+
+    /** [[view]], then delete the orphans. */
+    private def settle(spark: SparkSession): View = {
+      val v = view(spark)
+      dependents.foreach { root =>
+        val p = new Path(root)
+        val fs = fsOf(spark, p)
+        Generations.ids(fs, p, Prefix).filterNot(v.ids.contains)
+          .foreach(id => fs.delete(Generations.dir(p, Prefix, id), true))
+      }
+      v
+    }
+
+    /** Commit generation `batchId`, a no-op when it is in G (so a
+      * committed retry builds nothing): `rows(view)` gives one writer per
+      * root, dependents then gate, and each overwrites its `batchId` dir.
+      */
+    def append(spark: SparkSession, batchId: Long)(
+        rows: View => Seq[DataFrameWriter[Row]]): Unit = {
+      val v = settle(spark)
+      if (!v.ids.contains(batchId)) {
+        val writers = rows(v)
+        require(writers.size == roots.size, s"one writer per root of $roots")
+        roots.zip(writers).foreach { case (root, w) =>
+          w.mode(SaveMode.Overwrite)
+            .parquet(Generations.dir(new Path(root), Prefix, batchId).toString)
+        }
+      }
+    }
+
+    /** Fold each dependent with `fold(root)`, then the gate — only once
+      * every dependent holds nothing but G's max id, the one generation
+      * the gate's fold leaves, so a kill between folds leaves dependents
+      * inside G and an aborted dependent fold hides no rows.
+      */
+    def compact(spark: SparkSession)(fold: String => Unit): Unit = {
+      val g = settle(spark).ids
+      dependents.foreach(fold)
+      if (g.nonEmpty && dependents.forall(committedBatches(spark, _).forall(_ == g.max)))
+        fold(gate)
+    }
+  }
+
+  /** A [[Group]]'s G as of one moment, so every root read through it
+    * agrees on G.
+    */
+  final class View private[BatchStore] (spark: SparkSession, group: Group,
+      val ids: Seq[Long]) {
+    /** The generations of `root` readers see. */
+    def visible(root: String): Seq[Long] =
+      if (root == group.gate) ids
+      else committedBatches(spark, root).filter(ids.contains)
+
+    /** `root`'s visible generations, `batch_id` kept. */
+    def read(root: String): DataFrame = readIds(spark, root, visible(root))
+
+    /** [[BatchStore.before]] over `root`'s visible generations. */
+    def before(root: String, batchId: Long): Option[DataFrame] = {
+      val earlier = visible(root).filter(_ < batchId)
+      if (earlier.isEmpty) None else Some(readIds(spark, root, earlier).drop("batch_id"))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{BatchStore, BuildTiming, Generations}
@@ -34,8 +33,8 @@ import graft.functions.HashFamily
   * never re-tokenized or re-projected.
   *
   * Layout — five `BatchStore` roots under one path, each with the
-  * per-dir `_SUCCESS` contract (committed-skip retries, staged-swap
-  * [[compact]], heal at every entry point):
+  * per-dir `_SUCCESS` contract (staged-swap [[compact]], heal at every
+  * entry point):
   * {{{
   *   path/grams       (doc, g)                  hashed-shingle index rows
   *   path/sizes       (doc, n)                  distinct-shingle counts
@@ -43,12 +42,12 @@ import graft.functions.HashFamily
   *   path/text_pairs  (doc_a, doc_b, score)     mined Jaccard pairs
   *   path/emb_pairs   (doc_a, doc_b, score)     mined cosine pairs
   * }}}
-  * Commit ORDER inside a step is load-bearing: the batch's PAIRS land
-  * first, its per-doc STATE rows last — the state dir is the retry
-  * gate, so a crash between the two re-mines (overwriting the pair dir
-  * idempotently) instead of losing the batch from the standing index.
-  * Standing reads filter `batch_id < current`, so a half-committed
-  * crash leftover can never feed its own retry's mining.
+  * Each signal is one `BatchStore.Group`: `grams` gates `sizes` and
+  * `text_pairs`, `sig` gates `emb_pairs`. A step writes the PAIRS
+  * first and the gate's STATE rows last, so a crash in between leaves
+  * dirs no reader sees and the next writer deletes, and the retry
+  * re-mines. Standing reads take the group's generations below the
+  * current id, so a crashed attempt never feeds its own retry's mining.
   */
 object PairStore {
   private def grams(p: String) = s"$p/grams"
@@ -57,65 +56,14 @@ object PairStore {
   private def textPairs(p: String) = s"$p/text_pairs"
   private def embPairs(p: String) = s"$p/emb_pairs"
 
-  private def committed(spark: SparkSession, root: String, batchId: Long): Boolean = {
-    val p = new Path(root)
-    Generations.isCommitted(Generations.fsOf(spark, p), p, BatchStore.Prefix, batchId)
-  }
-
-  /** Drop batch dirs in the DEPENDENT stores (pairs, intermediate
-    * state like sizes) newer than the GATE store's newest committed
-    * dir. A crash inside a step's commit sequence (pairs → sizes →
-    * grams; the gate lands LAST) leaves ORPHAN generations in the
-    * earlier stores; the retry gate correctly re-mines them — but if a
-    * compaction ran in between, an orphan id would have been folded
-    * into that store's max generation, and the retry's overwrite of
-    * that dir would destroy every previously folded row (pairs lost
-    * outright; a sizes loss additionally empties the retry's standing
-    * side so its new×standing pairs silently vanish). Dropping orphans
-    * at every mutation entry point keeps the retry's overwrite target
-    * and any fold disjoint; the dropped rows are exactly what the
-    * retry re-computes, so nothing is lost.
-    *
-    * HEALS every root first: a crash mid-swap of the GATE store's own
-    * compaction (root renamed to backup, second rename pending) would
-    * otherwise read as zero committed gate batches and the drop would
-    * delete every committed dependent dir — permanent loss, since the
-    * gate's heal then restores the state and those docs are never
-    * re-mined. Heal-before-drop is the same order [[appendDocs]]
-    * always had; this puts it inside the drop so the compaction entry
-    * points inherit it too.
+  /** The text signal: the `grams` gate, written last, over its sizes
+    * and mined pairs.
     */
-  private def dropOrphans(spark: SparkSession, gateRoot: String,
-      dependentRoots: Seq[String]): Unit = {
-    (gateRoot +: dependentRoots).foreach(BatchStore.heal(spark, _))
-    val gateMax = BatchStore.committedBatches(spark, gateRoot)
-      .foldLeft(-1L)(math.max)
-    dependentRoots.foreach { root =>
-      val p = new Path(root)
-      val fs = Generations.fsOf(spark, p)
-      BatchStore.committedBatches(spark, root)
-        .filter(_ > gateMax)
-        .foreach(b => fs.delete(Generations.dir(p, BatchStore.Prefix, b), true))
-    }
-  }
+  private def textGroup(p: String) =
+    BatchStore.Group(grams(p), Seq(textPairs(p), sizes(p)))
 
-  /** Committed generations strictly BEFORE `batchId` — the standing
-    * side of an increment. Post-compaction the folded generation keeps
-    * the MAX folded id and ids are never reissued, so the strict
-    * filter is correct across folds; `empty` supplies the schema when
-    * no earlier generation exists.
-    */
-  private def standing(spark: SparkSession, root: String, batchId: Long,
-      empty: DataFrame): DataFrame = {
-    BatchStore.heal(spark, root)
-    if (!BatchStore.committedBatches(spark, root).exists(_ < batchId)) empty
-    else BatchStore.read(spark, root)
-      .filter(col("batch_id") < batchId).drop("batch_id")
-  }
-
-  private def writeBatch(df: DataFrame, root: String, batchId: Long): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(Generations.dir(new Path(root), BatchStore.Prefix, batchId).toString)
+  /** The embedding signal: the `sig` gate over its mined pairs. */
+  private def embGroup(p: String) = BatchStore.Group(sig(p), Seq(embPairs(p)))
 
   /** Append one DOC batch: mines the n-gram-Jaccard pairs touching the
     * batch (new×new ∪ new×standing via the persisted gram index) into
@@ -128,52 +76,48 @@ object PairStore {
       path: String, batchId: Long, k: Int = 3, threshold: Double = 0.5,
       gramHash: Option[HashFamily] = Some(graft.functions.XxHash64Family)): Unit =
     BuildTiming.timed {
-      val spark = batch.sparkSession
-      dropOrphans(spark, grams(path), Seq(textPairs(path), sizes(path)))
-      if (!committed(spark, grams(path), batchId)) { // committed retry = no-op
-      // the exploded batch index feeds both mining join sides, the
-      // size table, and its own persist — checkpoint or it shingles 4×
-      val gNew = Dedup.shingleIndex(batch, idCol, textCol, k,
-        maxDf = Int.MaxValue, gramHash = gramHash).localCheckpoint()
-      val nNew = gNew.groupBy("doc").agg(count(lit(1)).as("n"))
-        .localCheckpoint()
-      val gOld0 = standing(spark, grams(path), batchId, gNew.limit(0))
-      // Bloom-prefilter the STANDING gram scan to (probably) batch
-      // grams before its shuffle: the standing index is corpus-scale
-      // (the store's fat table) while a batch touches only its own
-      // gram vocabulary — without this, every increment shuffles the
-      // whole standing index. Map-side codegen might_contain; false
-      // positives are dropped by the exact equi-join below, so the
-      // mined pairs are unchanged (BloomJoin's contract).
-      val gOld = gOld0.filter(BloomJoin.probeColumn(gNew, "g", col("g")))
-      val nOld = standing(spark, sizes(path), batchId, nNew.limit(0))
-      // pairs touching the batch, each exactly once: anchor ∈ new;
-      // other ∈ standing (batches are doc-disjoint) or new with
-      // anchor < other
-      val aNew = gNew.select(col("doc").as("da"), col("g"))
-      val hits = aNew
-        .join(gOld.select(col("doc").as("db"), col("g")), Seq("g"))
-        .select(least(col("da"), col("db")).as("doc_a"),
-          greatest(col("da"), col("db")).as("doc_b"))
-        .unionByName(aNew
-          .join(gNew.select(col("doc").as("db"), col("g")), Seq("g"))
-          .filter(col("da") < col("db"))
-          .select(col("da").as("doc_a"), col("db").as("doc_b")))
-      val common = hits.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
-      val allN = nOld.unionByName(nNew)
-      val mined = common
-        .join(allN.select(col("doc").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
-        .join(allN.select(col("doc").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
-        .withColumn("score", round(col("common").cast("double")
-          / (col("n_a") + col("n_b") - col("common")), 6))
-        .filter(col("score") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("score"))
-      // pairs FIRST (a retry re-mines and overwrites them — idempotent),
-      // state LAST (the retry gate: a crash in between must re-mine,
-      // never lose the batch from the standing index)
-      writeBatch(mined, textPairs(path), batchId)
-      writeBatch(nNew, sizes(path), batchId)
-      writeBatch(gNew, grams(path), batchId)
+      textGroup(path).append(batch.sparkSession, batchId) { standing =>
+        // the exploded batch index feeds both mining join sides, the
+        // size table, and its own persist — checkpoint or it shingles 4×
+        val gNew = Dedup.shingleIndex(batch, idCol, textCol, k,
+          maxDf = Int.MaxValue, gramHash = gramHash).localCheckpoint()
+        val nNew = gNew.groupBy("doc").agg(count(lit(1)).as("n"))
+          .localCheckpoint()
+        val gOld0 = standing.before(grams(path), batchId).getOrElse(gNew.limit(0))
+        // Bloom-prefilter the STANDING gram scan to (probably) batch
+        // grams before its shuffle: the standing index is corpus-scale
+        // (the store's fat table) while a batch touches only its own
+        // gram vocabulary — without this, every increment shuffles the
+        // whole standing index. Map-side codegen might_contain; false
+        // positives are dropped by the exact equi-join below, so the
+        // mined pairs are unchanged (BloomJoin's contract).
+        val gOld = gOld0.filter(BloomJoin.probeColumn(gNew, "g", col("g")))
+        val nOld = standing.before(sizes(path), batchId).getOrElse(nNew.limit(0))
+        // pairs touching the batch, each exactly once: anchor ∈ new;
+        // other ∈ standing (batches are doc-disjoint) or new with
+        // anchor < other
+        val aNew = gNew.select(col("doc").as("da"), col("g"))
+        val hits = aNew
+          .join(gOld.select(col("doc").as("db"), col("g")), Seq("g"))
+          .select(least(col("da"), col("db")).as("doc_a"),
+            greatest(col("da"), col("db")).as("doc_b"))
+          .unionByName(aNew
+            .join(gNew.select(col("doc").as("db"), col("g")), Seq("g"))
+            .filter(col("da") < col("db"))
+            .select(col("da").as("doc_a"), col("db").as("doc_b")))
+        val common = hits.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
+        val allN = nOld.unionByName(nNew)
+        val mined = common
+          .join(allN.select(col("doc").as("doc_a"), col("n").as("n_a")), Seq("doc_a"))
+          .join(allN.select(col("doc").as("doc_b"), col("n").as("n_b")), Seq("doc_b"))
+          .withColumn("score", round(col("common").cast("double")
+            / (col("n_a") + col("n_b") - col("common")), 6))
+          .filter(col("score") >= threshold)
+          .select(col("doc_a"), col("doc_b"), col("score"))
+        // pairs FIRST (a retry re-mines and overwrites them — idempotent),
+        // the grams gate LAST (a crash in between must re-mine, never lose
+        // the batch from the standing index)
+        Seq(mined.write, nNew.write, gNew.write)
       }
     }
 
@@ -190,34 +134,32 @@ object PairStore {
       tables: Int = 8, seed: Long = 42L): Unit =
     BuildTiming.timed {
       val spark = batch.sparkSession
-      dropOrphans(spark, sig(path), Seq(embPairs(path)))
-      if (!committed(spark, sig(path), batchId)) { // committed retry = no-op
-      val sNew = Similarity.lshSignatureRows(batch, bits, tables, seed)
-        .localCheckpoint() // both mining join sides + its own persist
-      val sOld = standing(spark, sig(path), batchId, sNew.limit(0))
-      val aNew = sNew.select(col("table"), col("bucket"), col("vec_id").as("ia"))
-      val cand = aNew
-        .join(sOld.select(col("table"), col("bucket"), col("vec_id").as("ib")),
-          Seq("table", "bucket"))
-        .select(least(col("ia"), col("ib")).as("doc_a"),
-          greatest(col("ia"), col("ib")).as("doc_b"))
-        .unionByName(aNew
-          .join(sNew.select(col("table"), col("bucket"), col("vec_id").as("ib")),
+      embGroup(path).append(spark, batchId) { standing =>
+        val sNew = Similarity.lshSignatureRows(batch, bits, tables, seed)
+          .localCheckpoint() // both mining join sides + its own persist
+        val sOld = standing.before(sig(path), batchId).getOrElse(sNew.limit(0))
+        val aNew = sNew.select(col("table"), col("bucket"), col("vec_id").as("ia"))
+        val cand = aNew
+          .join(sOld.select(col("table"), col("bucket"), col("vec_id").as("ib")),
             Seq("table", "bucket"))
-          .filter(col("ia") < col("ib"))
-          .select(col("ia").as("doc_a"), col("ib").as("doc_b")))
-        .dropDuplicates("doc_a", "doc_b")
-      val emb = vectors.select(col("vec_id"),
-        graft.functions.VectorFunctions.asDouble(col("embedding")).as("emb"))
-      val mined = cand
-        .join(emb.select(col("vec_id").as("doc_a"), col("emb").as("ea")), Seq("doc_a"))
-        .join(emb.select(col("vec_id").as("doc_b"), col("emb").as("eb")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          round(graft.functions.VectorExpressions.cosineFast(spark)(
-            col("ea"), col("eb")), 6).as("score"))
-        .filter(col("score") >= threshold)
-      writeBatch(mined, embPairs(path), batchId)
-      writeBatch(sNew, sig(path), batchId)
+          .select(least(col("ia"), col("ib")).as("doc_a"),
+            greatest(col("ia"), col("ib")).as("doc_b"))
+          .unionByName(aNew
+            .join(sNew.select(col("table"), col("bucket"), col("vec_id").as("ib")),
+              Seq("table", "bucket"))
+            .filter(col("ia") < col("ib"))
+            .select(col("ia").as("doc_a"), col("ib").as("doc_b")))
+          .dropDuplicates("doc_a", "doc_b")
+        val emb = vectors.select(col("vec_id"),
+          graft.functions.VectorFunctions.asDouble(col("embedding")).as("emb"))
+        val mined = cand
+          .join(emb.select(col("vec_id").as("doc_a"), col("emb").as("ea")), Seq("doc_a"))
+          .join(emb.select(col("vec_id").as("doc_b"), col("emb").as("eb")), Seq("doc_b"))
+          .select(col("doc_a"), col("doc_b"),
+            round(graft.functions.VectorExpressions.cosineFast(spark)(
+              col("ea"), col("eb")), 6).as("score"))
+          .filter(col("score") >= threshold)
+        Seq(mined.write, sNew.write)
       }
     }
 
@@ -231,30 +173,28 @@ object PairStore {
     val schema = StructType(Seq(
       StructField("doc_a", LongType), StructField("doc_b", LongType),
       StructField("score", DoubleType), StructField("signal", StringType)))
-    def readSignal(root: String, signal: String): DataFrame = {
-      BatchStore.heal(spark, root)
-      if (BatchStore.committedBatches(spark, root).isEmpty)
+    def readSignal(group: BatchStore.Group, root: String, signal: String): DataFrame = {
+      val committed = group.view(spark)
+      if (committed.visible(root).isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else BatchStore.read(spark, root).drop("batch_id")
+      else committed.read(root).drop("batch_id")
         .select(col("doc_a").cast("long"), col("doc_b").cast("long"),
           col("score").cast("double"), lit(signal).as("signal"))
     }
-    readSignal(textPairs(path), "ngram")
-      .unionByName(readSignal(embPairs(path), "emb"))
+    readSignal(textGroup(path), textPairs(path), "ngram")
+      .unionByName(readSignal(embGroup(path), embPairs(path), "emb"))
   }
 
-  /** Fold the TEXT signal's sub-stores (grams/sizes/text_pairs) into
-    * one generation each — what the text stream's own foreachBatch may
-    * call. Orphan pair/sizes dirs are dropped FIRST (after healing all
-    * three roots) so a crash-window orphan can never be folded into
-    * the generation a retry will overwrite.
+  /** Fold the TEXT signal's sub-stores (text_pairs/sizes, then the
+    * grams gate) into one generation each — what the text stream's own
+    * foreachBatch may call. The group drops orphan pair/sizes dirs
+    * first, so a crash-window orphan can never be folded into the
+    * generation a retry will overwrite.
     */
   def compactText(spark: SparkSession, path: String): Unit =
     BuildTiming.timed {
-      dropOrphans(spark, grams(path), Seq(textPairs(path), sizes(path)))
-      Seq(grams(path), sizes(path), textPairs(path))
-        .foreach(BatchStore.compact(spark, _))
+      textGroup(path).compact(spark)(BatchStore.compact(spark, _))
     }
 
   /** Fold the EMBEDDING signal's sub-stores (sig/emb_pairs) — the
@@ -262,8 +202,7 @@ object PairStore {
     */
   def compactEmbeddings(spark: SparkSession, path: String): Unit =
     BuildTiming.timed {
-      dropOrphans(spark, sig(path), Seq(embPairs(path)))
-      Seq(sig(path), embPairs(path)).foreach(BatchStore.compact(spark, _))
+      embGroup(path).compact(spark)(BatchStore.compact(spark, _))
     }
 
   /** Fold every sub-store (the `BatchStore.compact` staged-swap
@@ -290,7 +229,7 @@ object PairStore {
       storePath: String, checkpoint: String,
       compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
     Generations.stream(rows, checkpoint, compactEvery,
-      BatchStore.committedBatches(_, grams(storePath)).size,
+      textGroup(storePath).committed(_).size,
       compactText(_, storePath))(
       (batch, batchId) => appendDocs(batch, idCol, textCol, storePath, batchId))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{BatchStore, Generations, Tombstones}
@@ -23,19 +22,22 @@ import graft.engine.{BatchStore, Generations, Tombstones}
   * size and summed length per generation, folded by exact integer
   * addition, so avgdl is bit-stable under any append/compact order).
   *
-  * Commit discipline (CLAUDE.md store shape): a batch is visible only
-  * when BOTH its pieces carry parquet's `_SUCCESS` — stats is written
-  * LAST, and a retry of a batch whose stats marker is missing rewrites
-  * both pieces (overwrite), so a writer killed mid-append is invisible
-  * and the retry heals it. Batches must carry DISJOINT document sets
-  * (the streaming/idempotent-append contract everywhere else in the
-  * engine); compaction folds every committed generation into one at
-  * the MAX folded id via `BatchStore.compact`, preserving the
-  * tok_bucket pruning sub-layout and summing stats to one row.
+  * Commit discipline: postings and stats are one `BatchStore.Group`
+  * gated by stats, which each append writes LAST — a writer killed
+  * mid-append leaves postings no reader sees and the next writer
+  * deletes. Batches must carry DISJOINT document sets (the
+  * streaming/idempotent-append contract everywhere else in the
+  * engine); compaction folds postings, then stats, each into one
+  * generation at the MAX folded id, preserving the tok_bucket pruning
+  * sub-layout and summing stats to one row.
   */
 object TextIndex {
   private def postingsPath(path: String) = path + "/postings"
   private def statsPath(path: String) = path + "/stats"
+
+  /** The index's two roots: stats is the gate, written last. */
+  private def group(path: String) =
+    BatchStore.Group(statsPath(path), Seq(postingsPath(path)))
 
   /** TOMBSTONE delete (`Tombstones`, the `AnnIndex.delete` shape): doc
     * ids to forget land as one tombstone batch, idempotent per batch
@@ -74,23 +76,19 @@ object TextIndex {
       Tombstones.committed(_, path).size, compact(_, path))(
       (batch, id) => delete(batch, idCol, path, batchId = id))
 
-  /** Committed generations: batches whose postings AND stats both
-    * carry their `_SUCCESS` marker, after healing both sub-stores (a
-    * compaction killed between its swap renames leaves one of them
-    * parked in its backup until a heal restores it).
+  /** Committed generations: the batches whose stats generation
+    * committed (the group's gate), after healing both roots.
     */
-  def committedBatches(spark: SparkSession, path: String): Seq[Long] = {
-    heal(spark, path)
-    BatchStore.committedBatches(spark, postingsPath(path))
-      .intersect(BatchStore.committedBatches(spark, statsPath(path)))
-  }
+  def committedBatches(spark: SparkSession, path: String): Seq[Long] =
+    group(path).committed(spark)
 
-  private def heal(spark: SparkSession, path: String): Unit =
-    Seq(postingsPath(path), statsPath(path)).foreach(BatchStore.heal(spark, _))
+  /** The committed postings, `batch_id` kept. */
+  def postings(spark: SparkSession, path: String): DataFrame =
+    group(path).view(spark).read(postingsPath(path))
 
   /** Idempotently add one batch of documents to the index. Gated on
-    * the stats marker (written last): a committed batch id is a no-op,
-    * a half-written one is rewritten.
+    * the stats generation (written last): a committed batch id is a
+    * no-op, a half-written one is rewritten.
     *
     * `withPositions=false` builds the lean BM25-only store (~2× cheaper
     * append, smaller postings); `phraseSearch` then refuses the index.
@@ -99,13 +97,7 @@ object TextIndex {
   def appendBatch(docs: DataFrame, idCol: String, textCol: String,
       path: String, batchId: Long, buckets: Int = 64,
       withPositions: Boolean = true): Unit = graft.engine.BuildTiming.timed {
-    // heal FIRST: writing a generation into a sub-store whose live dir
-    // sits in its swap backup would recreate the dir, and the next heal
-    // would then drop the backup with every earlier generation in it
-    heal(docs.sparkSession, path)
-    val stats = new Path(statsPath(path))
-    Generations.gate(Generations.fsOf(docs.sparkSession, stats), stats,
-      BatchStore.Prefix, batchId) { statsDir =>
+    group(path).append(docs.sparkSession, batchId) { _ =>
       val toks =
         if (withPositions)
           docs.select(col(idCol).as("doc"),
@@ -120,23 +112,20 @@ object TextIndex {
           Seq(count(lit(1)).as("tf"),
             sort_array(collect_list(col("pos"))).as("positions"))
         else Seq(count(lit(1)).as("tf"))
-      toks.groupBy("doc", "dl", "token")
-        .agg(aggs.head, aggs.tail: _*)
-        .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(buckets)))
-        // cluster by bucket before the partitioned write: ONE file per
-        // bucket per batch. Without this every aggregate partition fans
-        // out to every bucket dir — buckets × shuffle-partitions small
-        // files per append, whose listing + footer reads come to
-        // dominate query latency (and at real scale become the classic
-        // small-file problem on the store).
-        .repartition(col("tok_bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("tok_bucket")
-        .parquet(Generations.dir(new Path(postingsPath(path)), BatchStore.Prefix, batchId)
-          .toString)
-      docs.agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col(textCol), " "))).as("sum_dl"))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(statsDir.toString)
+      Seq(toks.groupBy("doc", "dl", "token")
+          .agg(aggs.head, aggs.tail: _*)
+          .withColumn("tok_bucket", pmod(xxhash64(col("token")), lit(buckets)))
+          // cluster by bucket before the partitioned write: ONE file per
+          // bucket per batch. Without this every aggregate partition fans
+          // out to every bucket dir — buckets × shuffle-partitions small
+          // files per append, whose listing + footer reads come to
+          // dominate query latency (and at real scale become the classic
+          // small-file problem on the store).
+          .repartition(col("tok_bucket"))
+          .write.partitionBy("tok_bucket"),
+        docs.agg(count(lit(1)).as("n_docs"),
+            sum(size(split(col(textCol), " "))).as("sum_dl"))
+          .write)
     }
   }
 
@@ -151,10 +140,9 @@ object TextIndex {
       queryIdCol: String, queryTextCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75, buckets: Int = 64,
       docIdOut: String = "doc_id"): DataFrame = {
-    val committed = committedBatches(spark, path)
-    require(committed.nonEmpty, s"no committed batches at $path")
-    val statsRow = spark.read.parquet(statsPath(path))
-      .filter(col("batch_id").isin(committed: _*))
+    val index = group(path).view(spark)
+    require(index.ids.nonEmpty, s"no committed batches at $path")
+    val statsRow = index.read(statsPath(path))
       .agg(sum("n_docs").cast("double"), sum("sum_dl").cast("double"))
       .collect()(0)
     val nDocs = statsRow.getDouble(0)
@@ -174,8 +162,7 @@ object TextIndex {
     // scan's PartitionFilters behind an RDD scan — both consumers
     // re-run the pruned parquet read instead, which is the cheap,
     // scale-honest trade (probed buckets only).
-    val postings = spark.read.parquet(postingsPath(path))
-      .filter(col("batch_id").isin(committed: _*))
+    val postings = index.read(postingsPath(path))
       .filter(col("tok_bucket").isin(probeBuckets: _*))
       .filter(col("token").isin(probeTokens: _*))
     val qdf = qterms
@@ -219,8 +206,8 @@ object TextIndex {
   def phraseSearch(spark: SparkSession, path: String, queries: DataFrame,
       queryIdCol: String, phraseCol: String, buckets: Int = 64,
       docIdOut: String = "doc_id"): DataFrame = {
-    val committed = committedBatches(spark, path)
-    require(committed.nonEmpty, s"no committed batches at $path")
+    val index = group(path).view(spark)
+    require(index.ids.nonEmpty, s"no committed batches at $path")
     val qt = queries
       .select(col(queryIdCol).as("query_id"),
         posexplode(split(col(phraseCol), " ")).as(Seq("tok_idx", "token")))
@@ -231,11 +218,10 @@ object TextIndex {
       .select("token", "b").distinct().collect()
     val probeTokens = probed.map(_.getString(0)).toSeq
     val probeBuckets = probed.map(_.getLong(1)).distinct.toSeq
-    val postings = spark.read.parquet(postingsPath(path))
+    val postings = index.read(postingsPath(path))
     require(postings.columns.contains("positions"),
       s"index at $path was built withPositions=false — phrase search needs a positional index")
     val live = Tombstones.snapshot(spark, path).mask(postings
-      .filter(col("batch_id").isin(committed: _*))
       .filter(col("tok_bucket").isin(probeBuckets: _*))
       .filter(col("token").isin(probeTokens: _*)), "doc")
     // coverage as a BIT MASK, not countDistinct: bit_or pre-combines
@@ -281,13 +267,13 @@ object TextIndex {
   }
 
   /** Fold all committed generations into one (max folded id; see
-    * `BatchStore`): postings keep their tok_bucket pruning layout,
-    * stats sum to a single row — constant size no matter how many
-    * batches have passed.
+    * `BatchStore`): the group folds the postings first, keeping their
+    * tok_bucket pruning layout, then the stats, summed to a single row —
+    * constant size no matter how many batches have passed.
     *
-    * Tombstones (`Tombstones.compact`): the fold drops the snapshotted
-    * dead docs from the postings, stats are RE-FIT exactly from the
-    * folded postings (the stale-until-merge window ends here), and the
+    * Tombstones (`Tombstones.compact`): the postings fold drops the
+    * snapshotted dead docs, stats are RE-FIT exactly from the folded
+    * postings (the stale-until-merge window ends here), and the
     * snapshotted tombstones drain only on this store's proof that their
     * docs are gone, so a skipped or race-aborted fold
     * (`BatchStore.compact` may abort quietly) can never lose a delete.
@@ -295,43 +281,35 @@ object TextIndex {
   def compact(spark: SparkSession,
       path: String): Unit = graft.engine.BuildTiming.timed {
     Tombstones.compact(spark, path) { dead =>
-      if (dead.isEmpty) {
-        // postings and stats are sibling sub-stores with independent
-        // commit gates (readers intersect their committed ids), so the
-        // two folds are independent chains — overlap them
-        graft.engine.Par.inParallel(
-          () => BatchStore.compact(spark, postingsPath(path),
-            subPartitionCols = Seq("tok_bucket")),
-          () => BatchStore.compact(spark, statsPath(path),
-            merge = df => df.agg(sum("n_docs").as("n_docs"),
-              sum("sum_dl").as("sum_dl"))))
-        false
-      } else {
-        val folded = BatchStore.compactWithSignal(spark, postingsPath(path),
-          merge = dead.mask(_, "doc"),
-          subPartitionCols = Seq("tok_bucket"), force = true)
-        // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
-        // from the committed postings instead of summing stale rows — only
-        // from a COMMITTED fold: after a skipped or aborted one the old
-        // postings still hold the dead docs, and stats re-fit from them
-        // would publish counts that disagree with the live tombstones
-        if (folded) {
-          val committed = BatchStore.committedBatches(spark, postingsPath(path))
-          val statsDf = spark.read.parquet(postingsPath(path))
-            .filter(col("batch_id").isin(committed: _*))
+      var folded = false
+      group(path).compact(spark) { root =>
+        if (root == postingsPath(path))
+          folded = BatchStore.compactWithSignal(spark, root,
+            merge = dead.mask(_, "doc"), subPartitionCols = Seq("tok_bucket"),
+            force = !dead.isEmpty)
+        else if (dead.isEmpty)
+          BatchStore.compact(spark, root,
+            merge = _.agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))
+        else if (folded) {
+          // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
+          // from the committed postings instead of summing stale rows —
+          // only after a COMMITTED fold: after a skipped or aborted one
+          // the old postings still hold the dead docs, and stats re-fit
+          // from them would publish counts that disagree with the live
+          // tombstones
+          val refit = postings(spark, path)
             .select(col("doc"), col("dl")).distinct()
             .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
             .localCheckpoint()
-          BatchStore.compact(spark, statsPath(path), merge = _ => statsDf,
-            force = true)
+          BatchStore.compact(spark, root, merge = _ => refit, force = true)
         }
-        // drain proof: a committed fold's generation is exactly
-        // anti-join(previous committed postings, dead), so the dead docs
-        // cannot be present. A postings store with no committed
-        // generation holds no doc at all, so its tombstones drain too
-        // (the fold has nothing to fold there and returns false).
-        folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty
       }
+      // drain proof: a committed fold's generation is exactly
+      // anti-join(previous committed postings, dead), so the dead docs
+      // cannot be present. A postings store with no committed
+      // generation holds no doc at all, so its tombstones drain too
+      // (the fold has nothing to fold there and returns false).
+      folded || BatchStore.committedBatches(spark, postingsPath(path)).isEmpty
     }
   }
 

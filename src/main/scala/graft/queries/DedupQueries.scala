@@ -596,6 +596,39 @@ object DedupQueries {
       .select(col("signal"), col("doc_a"), col("doc_b"), col("score"))
       .orderBy("signal", "doc_a", "doc_b")
 
+  /** The [[SharedStore.pairStore]] build, q334's timed body: three
+    * doc-disjoint increments per signal. Each signal is its own store
+    * group with its own single writer, so the two chains mine
+    * concurrently (wall ≈ max(chain), not sum).
+    */
+  private[queries] def buildPairStore(s: SparkSession, dir: String, path: String): Unit = {
+    val docs = Tables.documents(s, dir)
+    val emb = Tables.embeddings(s, dir)
+    inParallel(
+      () => (0L to 2L).foreach { b =>
+        PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
+          "doc_id", "text", path, b)
+      },
+      () => (0L to 2L).foreach { b =>
+        PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
+          emb, path, b, threshold = 0.4)
+      })
+  }
+
+  /** The [[SharedStore.epochStore]] build, q337's timed body: both
+    * non-decomposable signals, rebuilt concurrently into DISJOINT epoch
+    * roots (wall ≈ max, not sum).
+    */
+  private[queries] def buildEpochStore(s: SparkSession, dir: String, path: String): Unit = {
+    val docs = Tables.documents(s, dir)
+    inParallel(
+      () => EpochStore.rebuild(s, s"$path/minhash_pairs", 0L,
+        Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family)),
+      () => EpochStore.rebuild(s, s"$path/capped_grams", 0L,
+        Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
+          gramHash = Some(Md5Family))))
+  }
+
   /** q334: the pair-store BUILD itself as a timed entry (the
     * q161_text_index_build pattern): with the [[SharedStore.pairStore]]
     * consumers all reading the prewarmed shared store, the mining cost
@@ -609,23 +642,7 @@ object DedupQueries {
   private val pairStoreBuildQ: Q = (s, dir) =>
     withScratch(s, "graft_q334_ps") { scratch =>
       val path = scratch + "/store"
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      // the two signals write DISJOINT store roots (grams/sizes/
-      // text_pairs vs sig/emb_pairs) and the store's single-writer
-      // discipline is PER SIGNAL — so the text and embedding chains mine
-      // concurrently (batch order stays sequential within each chain),
-      // the same overlap a production text stream + embedding stream
-      // would give. Wall time ≈ max(chain) instead of sum.
-      inParallel(
-        () => (0L to 2L).foreach { b =>
-          PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
-            "doc_id", "text", path, b)
-        },
-        () => (0L to 2L).foreach { b =>
-          PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
-            emb, path, b, threshold = 0.4)
-        })
+      buildPairStore(s, dir, path)
       PairStore.pairs(s, path)
         .groupBy("signal")
         .agg(count(lit(1)).as("n_pairs"),
@@ -650,15 +667,7 @@ object DedupQueries {
   private val epochStoreBuildQ: Q = (s, dir) =>
     withScratch(s, "graft_q337_es") { scratch =>
       val path = scratch + "/store"
-      val docs = Tables.documents(s, dir)
-      // the two signals publish to DISJOINT epoch roots with no ordering
-      // contract between them — rebuild concurrently (wall ≈ max, not sum)
-      inParallel(
-        () => EpochStore.rebuild(s, s"$path/minhash_pairs", 0L,
-          Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family)),
-        () => EpochStore.rebuild(s, s"$path/capped_grams", 0L,
-          Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
-            gramHash = Some(Md5Family))))
+      buildEpochStore(s, dir, path)
       val mh = EpochStore.read(s, s"$path/minhash_pairs")
         .select(Md5Family.hash(concat_ws("_", col("doc_a"), col("doc_b"),
           round(col("est_jaccard") * 1e6).cast("long"))).as("h"))

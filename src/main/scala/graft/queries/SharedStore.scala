@@ -3,10 +3,7 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.engine.{EpochStore, Tables, TempDirs}
-import graft.functions.Md5Family
-import graft.operators.{Dedup, PairStore}
+import graft.engine.TempDirs
 
 /** One session-shared persisted store: built ONCE per (JVM, sf dir) on
   * first use and then READ by every query whose [[Query]] entry lists
@@ -62,16 +59,7 @@ object SharedStore {
     */
   val pairStore: SharedStore = new SharedStore("pair-store",
     "graft_shared_pairs", "store",
-    (s, dir, root) => {
-      val docs = Tables.documents(s, dir)
-      val emb = Tables.embeddings(s, dir)
-      (0L to 2L).foreach { b =>
-        PairStore.appendDocs(docs.filter(col("doc_id") % 3 === b),
-          "doc_id", "text", root, b)
-        PairStore.appendEmbeddings(emb.filter(col("vec_id") % 3 === b),
-          emb, root, b, threshold = 0.4)
-      }
-    })
+    (s, dir, root) => DedupQueries.buildPairStore(s, dir, root))
 
   /** The EPOCH store for the pair signals that are NOT incrementally
     * decomposable and so can never join the PairStore: q21's MinHash-
@@ -83,14 +71,7 @@ object SharedStore {
     */
   val epochStore: SharedStore = new SharedStore("epoch-store",
     "graft_epoch_store", "store",
-    (s, dir, root) => {
-      val docs = Tables.documents(s, dir)
-      EpochStore.rebuild(s, s"$root/minhash_pairs", 0L,
-        Dedup.minhashLshPairs(docs, "doc_id", "text", hashes = Md5Family))
-      EpochStore.rebuild(s, s"$root/capped_grams", 0L,
-        Dedup.shingleIndex(docs, "doc_id", "text", k = 3, maxDf = 50,
-          gramHash = Some(Md5Family)))
-    })
+    (s, dir, root) => DedupQueries.buildEpochStore(s, dir, root))
 
   /** Every shared store, in prewarm order. */
   val all: Seq[SharedStore] = Seq(textIndex, pairStore, epochStore)

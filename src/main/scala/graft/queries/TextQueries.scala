@@ -567,11 +567,9 @@ object TextQueries {
     withScratch(s, "graft_q161_idx") { scratch =>
       val idx = scratch + "/idx"
       buildCorpusIndex(s, dir, idx)
-      val committed = TextIndex.committedBatches(s, idx)
-      s.read.parquet(idx + "/postings")
-        .filter(col("batch_id").isin(committed: _*))
+      TextIndex.postings(s, idx)
         .groupBy("doc").agg(max(col("dl")).as("dl"), count(lit(1)).as("nt"))
-        .agg(lit(committed.size).as("n_batches"),
+        .agg(lit(TextIndex.committedBatches(s, idx).size).as("n_batches"),
           count(lit(1)).as("n_docs"),
           sum(col("dl")).as("sum_dl"),
           sum(col("nt")).as("n_postings"))

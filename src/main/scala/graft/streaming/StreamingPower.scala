@@ -51,28 +51,22 @@ object StreamingPower {
     * the survivors to the index under a `batch_id=<id>` partition
     * directory. This is the body of the production daily/streaming dedup
     * loop — the batch cross-corpus operator (`Dedup.minhashLshJoin`)
-    * runs unchanged. First call bootstraps the index from the batch.
+    * runs unchanged. A call with no committed generation before its id
+    * bootstraps the index from the batch.
     *
     * Idempotency under foreachBatch retries: each batch owns its
     * partition directory. A retry after a fully-committed write
     * (`_SUCCESS` present) is a no-op; a retry after a PARTIAL write
-    * overwrites only that directory, and the partial files are excluded
-    * from `existing` (partition filter on batch_id) so a half-written
-    * attempt can never make the batch's own docs look like duplicates.
+    * overwrites only that directory. The index side is the committed
+    * generations before the batch (`BatchStore.before`), so neither a
+    * half-written attempt of this batch nor another crashed one can
+    * make the batch's docs look like duplicates.
     */
   def dedupStepAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
       indexPath: String, threshold: Double = 0.5, batchId: Long = 0L): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.col
     val spark = batch.sparkSession
-    graft.engine.BatchStore.commitStep(spark, indexPath, batchId) {
-      val root = new Path(indexPath)
-      val existing: Option[DataFrame] =
-        if (graft.engine.Generations.ids(graft.engine.Generations.fsOf(spark, root),
-            root, graft.engine.BatchStore.Prefix).isEmpty) None
-        else Some(spark.read.parquet(indexPath)
-          .filter(col("batch_id") =!= batchId).drop("batch_id"))
-      val vsIndex = existing match {
+    BatchStore.commitStep(spark, indexPath, batchId) {
+      val vsIndex = BatchStore.before(spark, indexPath, batchId) match {
         case None => batch
         case Some(idx) =>
           val dupIds = graft.operators.Dedup
@@ -99,9 +93,10 @@ object StreamingPower {
     * a staged whole-dir swap each step).
     *
     * Per step: (1) append the batch's docs; (2) near-dup pairs
-    * batch-vs-standing (`minhashLshJoin` — standing side EXCLUDES the
-    * batch's own generation, so a retry after a partial docs write can
-    * never pair the batch with itself) and within-batch
+    * batch-vs-standing (`minhashLshJoin` — the standing side is the
+    * committed generations before the batch, `BatchStore.before`, so a
+    * retry after a partial docs write can never pair the batch with
+    * itself, nor with another crashed batch's docs) and within-batch
     * (`minhashLshPairs`); (3) fold the pairs into the standing labels
     * — O(new edges); (4) publish the updated labels, committed by an
     * `_applied` marker (content: the batch id) created LAST inside the
@@ -130,19 +125,18 @@ object StreamingPower {
     //    skipping the marker is retry-neutral (empty redelivers empty)
     val batchDocs = batch.select(col(idCol), col(textCol)).localCheckpoint()
     if (batchDocs.isEmpty) return
-    graft.engine.BatchStore.commitStep(spark, docsPath, batchId)(batchDocs)
+    BatchStore.commitStep(spark, docsPath, batchId)(batchDocs)
     // 2. new pairs — within the batch, and batch vs the standing corpus
     val within = graft.operators.Dedup
       .minhashLshPairs(batchDocs, idCol, textCol, shingleK = shingleK,
         numPerm = numPerm, bands = bands, threshold = threshold)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val standing = spark.read.parquet(docsPath)
-      .filter(col("batch_id") =!= batchId).drop("batch_id")
-    val cross = graft.operators.Dedup
-      .minhashLshJoin(batchDocs, standing, idCol, textCol, shingleK = shingleK,
-        numPerm = numPerm, bands = bands, threshold = threshold)
-      .select(col("doc_new").as("a"), col("doc_old").as("b"))
-    val pairs = within.unionAll(cross)
+    val cross = BatchStore.before(spark, docsPath, batchId).map(standing =>
+      graft.operators.Dedup
+        .minhashLshJoin(batchDocs, standing, idCol, textCol, shingleK = shingleK,
+          numPerm = numPerm, bands = bands, threshold = threshold)
+        .select(col("doc_new").as("a"), col("doc_old").as("b")))
+    val pairs = cross.map(within.unionAll(_)).getOrElse(within)
     // 3. fold into the standing labels — the label table never
     //    shuffles corpus-scale (see assignToExistingClusters). The
     //    stored cluster_size is CARRIED so the fold re-counts only the

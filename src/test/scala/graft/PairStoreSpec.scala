@@ -87,6 +87,19 @@ class PairStoreSpec extends SparkSpecBase {
     assert(BatchStore.committedBatches(spark, s"$path/grams") === Seq(0L, 1L))
   }
 
+  test("pairs of a batch whose grams gate never committed stay invisible to readers") {
+    val path = tmp()
+    buildText(path, nBatches = 2)
+    // batch 1 killed after its pair and sizes dirs committed, before grams
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$path/grams/batch_id=1"), true))
+    val committed = tmp()
+    PairStore.appendDocs(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", committed, 0L)
+    def rows(p: String) = PairStore.pairs(spark, p).collect().map(_.toString).toSeq.sorted
+    assert(rows(path) === rows(committed))
+  }
+
   test("crash-window orphan + compaction + retry preserves every pair") {
     // the aliasing trap, in the narrowest window (only the grams gate
     // missing): pairs/batch_id=1 AND sizes/batch_id=1 committed, then

@@ -78,6 +78,41 @@ class TextIndexSpec extends SparkSpecBase {
     assert(got.toSeq == inline.toSeq)
   }
 
+  private def threeBatches(tag: String): String = {
+    val path = tempDir(s"graft_tidx$tag") + "/idx"
+    Seq(0L, 1L, 2L).foreach(b => TextIndex.appendBatch(corpus.filter(col("doc_id") % 3 === b),
+      "doc_id", "text", path, batchId = b))
+    path
+  }
+
+  private def top10(path: String) =
+    TextIndex.query(spark, path, probes, "query_id", "qtext", k = 10).collect().map(key).toSeq
+
+  test("a compaction killed between the postings and stats folds answers as before, scores included") {
+    val path = threeBatches("_foldkill")
+    val before = top10(path)
+    // the state such a kill leaves: the postings fold committed, the
+    // stats fold never ran
+    graft.engine.BatchStore.compact(spark, path + "/postings",
+      subPartitionCols = Seq("tok_bucket"))
+    assert(top10(path) == before)
+    TextIndex.compact(spark, path)
+    assert(top10(path) == before)
+  }
+
+  test("compact drops an append's orphan postings, so the append's retry loses nothing") {
+    val path = threeBatches("_orphan")
+    // appendBatch(2) killed after its postings committed: no stats dir
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(path + "/stats/batch_id=2"), true))
+    TextIndex.compact(spark, path)
+    TextIndex.appendBatch(corpus.filter(col("doc_id") % 3 === 2),
+      "doc_id", "text", path, batchId = 2L)
+    val oneShot = tempDir("graft_tidx_oneshot") + "/idx"
+    TextIndex.appendBatch(corpus, "doc_id", "text", oneShot, batchId = 0L)
+    assert(top10(path) == top10(oneShot))
+  }
+
   test("compaction folds to one generation with identical query results") {
     val path = buildTwoBatches("cmp")
     TextIndex.compact(spark, path)
