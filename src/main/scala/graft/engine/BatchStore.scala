@@ -248,16 +248,20 @@ object BatchStore {
       }
     }
 
-    /** Fold each dependent with `fold(root)`, then the gate — only once
-      * every dependent holds nothing but G's max id, the one generation
-      * the gate's fold leaves, so a kill between folds leaves dependents
-      * inside G and an aborted dependent fold hides no rows.
+    /** Fold each dependent with `foldDependent(root)`, then the gate
+      * with `foldGate` given the dependents' results — only once every
+      * dependent holds nothing but G's max id, the one generation the
+      * gate's fold leaves, so a kill between folds leaves dependents
+      * inside G and an aborted dependent fold hides no rows. Returns the
+      * dependents' results, in order.
       */
-    def compact(spark: SparkSession)(fold: String => Unit): Unit = {
+    def compact[T](spark: SparkSession)(foldDependent: String => T)(
+        foldGate: Seq[T] => Unit): Seq[T] = {
       val g = settle(spark).ids
-      dependents.foreach(fold)
+      val folds = dependents.map(foldDependent)
       if (g.nonEmpty && dependents.forall(committedBatches(spark, _).forall(_ == g.max)))
-        fold(gate)
+        foldGate(folds)
+      folds
     }
   }
 

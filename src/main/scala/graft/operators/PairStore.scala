@@ -194,7 +194,8 @@ object PairStore {
     */
   def compactText(spark: SparkSession, path: String): Unit =
     BuildTiming.timed {
-      textGroup(path).compact(spark)(BatchStore.compact(spark, _))
+      textGroup(path).compact(spark)(BatchStore.compact(spark, _))(
+        _ => BatchStore.compact(spark, grams(path)))
     }
 
   /** Fold the EMBEDDING signal's sub-stores (sig/emb_pairs) — the
@@ -202,7 +203,8 @@ object PairStore {
     */
   def compactEmbeddings(spark: SparkSession, path: String): Unit =
     BuildTiming.timed {
-      embGroup(path).compact(spark)(BatchStore.compact(spark, _))
+      embGroup(path).compact(spark)(BatchStore.compact(spark, _))(
+        _ => BatchStore.compact(spark, sig(path)))
     }
 
   /** Fold every sub-store (the `BatchStore.compact` staged-swap

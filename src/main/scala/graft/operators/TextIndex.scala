@@ -281,16 +281,13 @@ object TextIndex {
   def compact(spark: SparkSession,
       path: String): Unit = graft.engine.BuildTiming.timed {
     Tombstones.compact(spark, path) { dead =>
-      var folded = false
-      group(path).compact(spark) { root =>
-        if (root == postingsPath(path))
-          folded = BatchStore.compactWithSignal(spark, root,
-            merge = dead.mask(_, "doc"), subPartitionCols = Seq("tok_bucket"),
-            force = !dead.isEmpty)
-        else if (dead.isEmpty)
-          BatchStore.compact(spark, root,
+      val folded = group(path).compact(spark)(root =>
+          BatchStore.compactWithSignal(spark, root, merge = dead.mask(_, "doc"),
+            subPartitionCols = Seq("tok_bucket"), force = !dead.isEmpty)) { postingsFolded =>
+        if (dead.isEmpty)
+          BatchStore.compact(spark, statsPath(path),
             merge = _.agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))
-        else if (folded) {
+        else if (postingsFolded.forall(identity)) {
           // deletes shrank the corpus: recompute (n_docs, sum_dl) exactly
           // from the committed postings instead of summing stale rows —
           // only after a COMMITTED fold: after a skipped or aborted one
@@ -301,9 +298,9 @@ object TextIndex {
             .select(col("doc"), col("dl")).distinct()
             .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
             .localCheckpoint()
-          BatchStore.compact(spark, root, merge = _ => refit, force = true)
+          BatchStore.compact(spark, statsPath(path), merge = _ => refit, force = true)
         }
-      }
+      }.forall(identity)
       // drain proof: a committed fold's generation is exactly
       // anti-join(previous committed postings, dead), so the dead docs
       // cannot be present. A postings store with no committed

@@ -13,9 +13,9 @@ import graft.operators.{AnnIndex, Dedup, PairStore, TextIndex}
   * file-system call for every k until one run completes
   * (`HookFs.killedAt`). After each kill the read (which heals first)
   * must equal the state before the operation or the one-shot state
-  * after it; after the store's plain compaction and a retry of the
-  * operation, it must equal the one-shot state. Stores are tiny, so each
-  * k costs a few small Spark jobs.
+  * after it, and so must it after the store's plain compaction; after a
+  * retry of the operation it must equal the one-shot state. Stores are
+  * tiny, so each k costs a few small Spark jobs.
   */
 class StoreCrashSpec extends SparkSpecBase {
   /** `body` with logging off: every kill makes Spark log the failed
@@ -33,7 +33,7 @@ class StoreCrashSpec extends SparkSpecBase {
     * has completed, computed without running it where it can be.
     * `afterOp(k, path)` asserts what must hold after every attempt,
     * killed or not, and `afterDone(k, path)` what must hold once `op`
-    * has completed.
+    * has completed, and once the plain compaction after a kill has.
     */
   private final case class Window(name: String, build: String => Unit,
       op: String => Unit, read: String => Seq[Any], compact: String => Unit,
@@ -67,6 +67,11 @@ class StoreCrashSpec extends SparkSpecBase {
         assert(got == pre || got == want,
           s"k=$k: the read after the kill is neither the state before the op nor after it")
         w.compact(path)
+        val healed = w.read(path)
+        assert(healed == pre || healed == want,
+          s"k=$k: the read after the kill and a plain compact is neither the state " +
+            "before the op nor after it")
+        w.afterDone(k, path)
         w.op(path)
       }
       assert(w.read(path) == want, s"k=$k: the read differs from the one-shot state")
